@@ -7,19 +7,29 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F  # noqa: N812
 
 from universal_pdf_extractor_spark.io.fixtures import generate_transcripts
 from universal_pdf_extractor_spark.io.manifest import (
     PIPELINE_VERSION,
+    bucket_of,
     committed_groups,
     latest_run,
     manifest_path,
     run_history,
     run_with_resume,
 )
+from universal_pdf_extractor_spark.kernels.segment_extract import FALLBACK_SOURCES
 from universal_pdf_extractor_spark.schemas import TRANSCRIPTS_SCHEMA
+from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
 
 N_GROUPS = 4
+TABLES = ("turns", "records", "segments", "conversations", "detected_tables")
+# Spark jobs that one group of this module's corpus ran while the
+# manifest still recomputed its figures after the writes: a separate
+# input count, two groupBy collects for the engine events, and a
+# count+checksum job per table that recomputed it
+JOBS_PER_GROUP_RECOMPUTED = 32
 
 
 @pytest.fixture(scope="module")
@@ -51,8 +61,7 @@ def test_full_run_then_exact_resume(spark, corpus, tmp_path_factory):
     assert sum(m["engine_events"]["turns_by_path"].values()) == m["input_rows"]
     assert set(m["engine_events"]["turns_by_path"]) <= {"TEXT", "TOOL", "EMPTY"}
     assert set(m["engine_events"]["records_by_parser"]) <= \
-        {"column_path", "text_grid_table", "delim_table", "row_pattern",
-         "delim_table_rescue", "row_pattern_rescue"}
+        {"column_path", *FALLBACK_SOURCES}
     assert m["duration_sec"] > 0
 
     # outputs carry the run_id column; registry reconstructs is_latest
@@ -65,8 +74,7 @@ def test_full_run_then_exact_resume(spark, corpus, tmp_path_factory):
 
     # simulate a crash that lost group 2: drop its manifest + outputs
     os.remove(manifest_path(out, 2))
-    for table in ("turns", "records", "segments", "conversations",
-                  "detected_tables"):
+    for table in TABLES:
         shutil.rmtree(os.path.join(out, table, "bucket_group=2"), ignore_errors=True)
 
     s2 = run_with_resume(corpus, out, n_groups=N_GROUPS)
@@ -101,3 +109,104 @@ def test_noop_resume_keeps_writing_run_latest(spark, corpus, tmp_path_factory):
     # point at the run whose run_id actually appears on output rows
     assert [r["run_id"] for r in run_history(out)] == [s1["run_id"], s2["run_id"]]
     assert latest_run(out)["run_id"] == s1["run_id"]
+
+
+def _manifest(out, group):
+    with open(manifest_path(out, group)) as fh:
+        return json.load(fh)
+
+
+@pytest.fixture(scope="module")
+def one_group(spark, corpus, tmp_path_factory):
+    """The whole corpus as one group, run under a job group of its own:
+    (output dir, manifest, number of Spark jobs the group ran)."""
+    out = str(tmp_path_factory.mktemp("one_group"))
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-one-group", "run_with_resume, one group")
+    try:
+        run_with_resume(corpus, out, n_groups=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job ids arrive by event
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("manifest-one-group"))
+    return out, _manifest(out, 0), n_jobs
+
+
+def test_group_runs_fewer_jobs_than_recomputing(one_group):
+    # the manifest's figures ride on the write jobs: no table is
+    # computed a second time for its digest or its engine counts
+    assert one_group[2] < JOBS_PER_GROUP_RECOMPUTED
+
+
+def test_observed_metrics_match_recompute(spark, corpus, one_group):
+    out, m, _ = one_group
+    for table in TABLES:
+        df = spark.read.parquet(os.path.join(out, table, "bucket_group=0"))
+        h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
+        row = df.agg(F.count(F.lit(1)).alias("n"),
+                     F.coalesce(F.bit_xor(h), F.lit(0)).alias("x")).first()
+        assert m["outputs"][table] == {"rows": row["n"], "xor64": row["x"]}, table
+
+    turns = spark.read.parquet(os.path.join(out, "turns", "bucket_group=0"))
+    by_path = {r["extraction_path"]: r["count"]
+               for r in turns.groupBy("extraction_path").count().collect()}
+    assert m["engine_events"]["turns_by_path"] == by_path
+    records = spark.read.parquet(os.path.join(out, "records", "bucket_group=0"))
+    by_parser: dict = {}
+    for r in records.groupBy("fallback_used", "direction_source").count().collect():
+        key = r["direction_source"] if r["fallback_used"] else "column_path"
+        by_parser[key] = by_parser.get(key, 0) + r["count"]
+    assert m["engine_events"]["records_by_parser"] == by_parser
+
+    part = corpus.where(bucket_of(F.col("conv_id"), 1) == 0)
+    assert m["input_rows"] == part.count() == corpus.count()
+
+
+def test_failed_write_commits_no_manifest(spark, tmp_path_factory):
+    corpus = spark.createDataFrame(generate_transcripts(6), schema=TRANSCRIPTS_SCHEMA)
+    out = str(tmp_path_factory.mktemp("failed_write"))
+
+    def failing_segments(df, **kw):
+        outputs = run_pipeline(df, **kw)
+        seg = outputs["segments"]
+        outputs["segments"] = seg.withColumn("conv_id", F.when(
+            F.col("conv_id").isNotNull(), F.raise_error(F.lit("injected failure")))
+            .otherwise(F.col("conv_id")))
+        return outputs
+
+    with pytest.raises(Exception, match="injected failure"):
+        run_with_resume(corpus, out, n_groups=1, run_pipeline_fn=failing_segments)
+    assert committed_groups(out) == set()
+
+    s = run_with_resume(corpus, out, n_groups=1)
+    assert s["processed"] == [0]
+    assert _manifest(out, 0)["outputs"]["segments"]["rows"] > 0
+
+
+def test_empty_group_manifest(spark, tmp_path_factory):
+    # more groups than conversations: some bucket group holds no input
+    corpus = spark.createDataFrame(generate_transcripts(2), schema=TRANSCRIPTS_SCHEMA)
+    out = str(tmp_path_factory.mktemp("empty_group"))
+    run_with_resume(corpus, out, n_groups=3)
+    manifests = [_manifest(out, g) for g in range(3)]
+    empty = [m for m in manifests if m["input_rows"] == 0]
+    assert empty
+    for m in empty:
+        assert all(v == {"rows": 0, "xor64": 0} for v in m["outputs"].values())
+        assert m["engine_events"] == {"turns_by_path": {}, "records_by_parser": {}}
+    assert sum(m["input_rows"] for m in manifests) == corpus.count()
+
+
+def test_unknown_fallback_tier_fails_the_group(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("unknown_tier"))
+
+    def unknown_tier(df, **kw):
+        outputs = run_pipeline(df, **kw)
+        outputs["records"] = outputs["records"] \
+            .withColumn("fallback_used", F.lit(True)) \
+            .withColumn("direction_source", F.lit("not_a_tier"))
+        return outputs
+
+    with pytest.raises(ValueError, match="records rows outside the engines"):
+        run_with_resume(corpus, out, n_groups=1, run_pipeline_fn=unknown_tier)
+    assert committed_groups(out) == set()

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from universal_pdf_extractor_spark.datapipe.textstats import (
     duplicate_lines,
@@ -254,3 +256,31 @@ class TestSignatureEdgeCases:
         assert out[2][1] == 1          # '' tokenizes to one '' token
         assert out[3][1] == 4
         assert out[3][0] != 0
+
+
+# Boilerplate phrases whose spaces become a drawn separator, with
+# filler around them. The separators cover every C0 control plus the
+# Unicode whitespace that Python's \s matches and RE2's does not: the
+# batch predicate must agree with the scalar one on every row,
+# whichever regex engine the batch routes it to.
+_BOILERPLATE_PHRASES = ["opening balance", "brought forward", "b/f", "sort code",
+                        "page 1 of 2", "statement period", "total in", "iban"]
+_SEPARATORS = [chr(c) for c in range(0x20)] + [" ", "\x7f", "\x85", "\xa0", "\u2028"]
+_filler = st.text(alphabet=st.sampled_from(_SEPARATORS + list("ab1")), max_size=4)
+_rows = st.one_of(
+    st.none(),
+    st.builds(lambda pre, phrase, sep, post: pre + phrase.replace(" ", sep) + post,
+              _filler, st.sampled_from(_BOILERPLATE_PHRASES),
+              st.sampled_from(_SEPARATORS), _filler),
+    _filler)
+
+
+@given(st.lists(_rows, min_size=1, max_size=20))
+@settings(max_examples=300, deadline=None)
+def test_summary_row_batch_matches_scalar(texts):
+    from universal_pdf_extractor_spark.kernels.patterns import (
+        is_summary_row,
+        is_summary_row_batch,
+    )
+    batch = is_summary_row_batch(pd.Series(texts, dtype=object)).tolist()
+    assert batch == [is_summary_row(t) for t in texts]

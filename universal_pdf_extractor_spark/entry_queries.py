@@ -49,6 +49,7 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from .datapipe import dedup, similarity, textstats
 from .io.fixtures import n_convs_for_sf, transcripts_sdf
+from .kernels.segment_extract import FALLBACK_SOURCES
 from .stages.pipeline import run_pipeline
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2355,14 +2356,6 @@ def _records_descriptions_sql() -> str:
     """
 
 
-# every non-main-path direction_source the tiers can emit; the
-# "_rescue" variants mark cascade rescues on segments where neither
-# majority routing rule fired (segment_extract._fallback), which the
-# structured-tier oracles must never alias into their slices
-_FALLBACK_SOURCES = ["text_grid_table", "delim_table", "row_pattern",
-                     "delim_table_rescue", "row_pattern_rescue"]
-
-
 def _records_headerless_sql() -> str:
     """Generated oracle for the headerless main-path branch (see the
     engine-side docstring): all lines participate (no header strip),
@@ -2849,7 +2842,7 @@ def transcripts_records_amounts(spark, sf_dir):
     rec = out["records"]
     headered = _headered_segments(out["turns"])
     w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    return (rec.where((~F.col("direction_source").isin(_FALLBACK_SOURCES))
+    return (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
                       & F.col("amount").isNotNull())
             .join(headered, ["conv_id", "segment_index"])
             .select("conv_id", "segment_index",
@@ -2897,7 +2890,7 @@ def transcripts_records_descriptions(spark, sf_dir):
     main = _mainroute_segments(spark, turns)
 
     w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    return (rec.where((~F.col("direction_source").isin(_FALLBACK_SOURCES))
+    return (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
                       & F.col("amount").isNotNull())
             .join(slice_segs, ["conv_id", "segment_index"])
             .join(main, ["conv_id", "segment_index"])
@@ -3074,7 +3067,7 @@ def transcripts_records_headerless(spark, sf_dir):
     rec = out["records"]
     seg_slice = _headerless_uniform_segments(spark, out["turns"])
     w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    return (rec.where((~F.col("direction_source").isin(_FALLBACK_SOURCES))
+    return (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
                       & F.col("amount").isNotNull())
             .join(seg_slice, ["conv_id", "segment_index"])
             .select("conv_id", "segment_index",
@@ -3109,7 +3102,7 @@ def transcripts_records_directions(spark, sf_dir):
     rec = out["records"]
     cases = _solver_case_segments(spark, out["turns"])
     w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    r = (rec.where((~F.col("direction_source").isin(_FALLBACK_SOURCES))
+    r = (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
                    & F.col("amount").isNotNull())
          .join(cases, ["conv_id", "segment_index"]))
     is_case3 = F.col("case_type") == "case3"

@@ -4,9 +4,11 @@ The job splits the conversation key space into ``n_groups`` hash
 buckets (pmod(xxhash64(conv_id), n)) and processes one bucket group
 at a time: filter -> pipeline -> write outputs under
 ``<out>/<table>/bucket_group=<g>/`` -> commit a manifest JSON with
-input/output row counts and an order-insensitive XOR checksum per
-output table.  A re-run skips every group whose manifest is already
-committed — exact resume, mirroring the reference's
+input/output row counts, an order-insensitive XOR checksum per output
+table and per-engine row counts.  Every figure is a metric observed
+(``DataFrame.observe``) on the write jobs, so no output is computed
+twice and nothing is read back.  A re-run skips every group whose
+manifest is already committed — exact resume, mirroring the reference's
 delete-before-rewrite idempotency + per-document status machine
 (orchestrator.py:184-205, models/enums.py:15-25) at dataset scale.
 
@@ -29,8 +31,11 @@ import time
 import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F  # noqa: N812
+
+from ..kernels.segment_extract import FALLBACK_SOURCES
+from ..stages.tokenize import EXTRACTION_PATHS
 
 MANIFEST_DIR = "_manifests"
 RUNS_LOG = "runs.jsonl"
@@ -46,25 +51,16 @@ def bucket_of(conv_id_col, n_groups: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_groups))
 
 
-def count_and_checksum(df: DataFrame) -> tuple[int, int]:
-    """(row count, order-insensitive 64-bit checksum) in ONE job.
-
-    Computed from the (cached-lineage) frame rather than by re-reading
-    the freshly written parquet: the write either committed or raised,
-    so a read-back would verify the filesystem, not the data, and it
-    would cost two extra full scans per table per group (one for the
-    count, one for the checksum) — those are the scans this saves.
-    """
-    h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
-    row = df.select(h.alias("h")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(h)"), F.lit(0)).alias("x")).first()
-    return int(row["n"]), int(row["x"])
-
-
-def checksum(df: DataFrame) -> int:
-    """Order-insensitive 64-bit checksum over all columns."""
-    return count_and_checksum(df)[1]
+def _engine_events() -> dict:
+    """{table: (event, {engine: row predicate})}, observed on the table's
+    write: the cost/usage events analogue (cost_tracker.py, cost_events
+    DDL tables.py:576-603).  Fallback records keep their tier's
+    direction_source; main-path records roll up as column_path."""
+    fb = F.col("fallback_used")
+    return {"turns": ("turns_by_path", {
+                p: F.col("extraction_path") == p for p in EXTRACTION_PATHS}),
+            "records": ("records_by_parser", {"column_path": ~fb, **{
+                t: fb & (F.col("direction_source") == t) for t in FALLBACK_SOURCES}})}
 
 
 def manifest_path(out_dir: str, group: int) -> str:
@@ -130,7 +126,6 @@ def run_with_resume(transcripts: DataFrame,
                     n_groups: int = 8,
                     run_pipeline_fn=None,
                     tables: Optional[list[str]] = None,
-                    with_checksums: bool = True,
                     run_id: Optional[str] = None) -> dict:
     """Process bucket groups not yet committed; return a run summary.
 
@@ -164,45 +159,48 @@ def run_with_resume(transcripts: DataFrame,
             continue
         t0 = time.perf_counter()
         part = bucketed.where(F.col("_grp") == g).drop("_grp")
-        outputs = run_pipeline_fn(part, persist=True)
+        # every manifest figure is observed on a job that already runs:
+        # input_rows while the pipeline's first persisted frame is
+        # built, the rest on each table's write job
+        input_obs = Observation()
+        outputs = run_pipeline_fn(
+            part.observe(input_obs, F.count(F.lit(1)).alias("rows")), persist=True)
         cached = [outputs.pop(k) for k in list(outputs) if k.startswith("_")]
-        input_rows = part.count()
-        meta: dict = {"group": g, "input_rows": input_rows, "outputs": {},
+        events = _engine_events()
+        observed = {}
+        try:
+            for name in tables:
+                df = outputs[name].withColumn("run_id", F.lit(run_id))
+                # order-insensitive 64-bit checksum over all columns
+                h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
+                engines = events.get(name, ("", {}))[1]
+                observed[name] = Observation()
+                df.observe(observed[name], F.count(F.lit(1)).alias("rows"),
+                           F.coalesce(F.bit_xor(h), F.lit(0)).alias("xor64"),
+                           *[F.count_if(c).alias(k) for k, c in engines.items()]) \
+                  .write.mode("overwrite").parquet(
+                      os.path.join(out_dir, name, f"bucket_group={g}"))
+        finally:
+            for c in cached:
+                c.unpersist()
+        # read only once every write of the group returned.  An empty
+        # group's input observation completes with an empty row (adaptive
+        # execution drops the empty stage that held it), which
+        # Observation.get cannot convert
+        metrics = {name: obs.get for name, obs in observed.items()}
+        input_rows = input_obs.get["rows"] if input_obs._jo.getRow().length() else 0
+        meta: dict = {"group": g, "input_rows": input_rows,
+                      "outputs": {name: {"rows": m["rows"], "xor64": m["xor64"]}
+                                  for name, m in metrics.items()},
                       "run_id": run_id, "pipeline_version": PIPELINE_VERSION}
-        # cost/usage events analogue (cost_tracker.py, cost_events DDL
-        # tables.py:576-603): per-"engine" row counts measured from the
-        # cached lineage — TEXT/TOOL/EMPTY extraction paths and
-        # main-vs-fallback record parsers; duration_sec below is the
-        # latency dimension
-        if "turns" in outputs:
-            meta["engine_events"] = {"turns_by_path": {
-                r["extraction_path"]: r["n"]
-                for r in outputs["turns"].groupBy("extraction_path")
-                .agg(F.count(F.lit(1)).alias("n")).collect()}}
-        if "records" in outputs:
-            # per-tier rescue accounting: fallback rows keep their
-            # tier's direction_source (text_grid_table / delim_table /
-            # row_pattern), main-path rows roll up as column_path
-            by_parser: dict = {}
-            for r in (outputs["records"]
-                      .groupBy("fallback_used", "direction_source")
-                      .agg(F.count(F.lit(1)).alias("n")).collect()):
-                key = r["direction_source"] if r["fallback_used"] else "column_path"
-                by_parser[key] = by_parser.get(key, 0) + r["n"]
-            meta.setdefault("engine_events", {})["records_by_parser"] = by_parser
-        for name in tables:
-            df = outputs[name].withColumn("run_id", F.lit(run_id))
-            path = os.path.join(out_dir, name, f"bucket_group={g}")
-            df.write.mode("overwrite").parquet(path)
-            # metrics from the cached lineage in ONE job — no parquet
-            # read-back (see count_and_checksum)
-            if with_checksums:
-                rows, xor64 = count_and_checksum(df)
-                meta["outputs"][name] = {"rows": rows, "xor64": xor64}
-            else:
-                meta["outputs"][name] = {"rows": df.count()}
-        for c in cached:
-            c.unpersist()
+        for name, (event, engines) in events.items():
+            if name in metrics:
+                m = metrics[name]
+                counts = {k: m[k] for k in engines if m[k]}
+                if sum(counts.values()) != m["rows"]:
+                    raise ValueError(f"group {g}: {m['rows'] - sum(counts.values())} "
+                                     f"{name} rows outside the engines {list(engines)}")
+                meta.setdefault("engine_events", {})[event] = counts
         meta["duration_sec"] = round(time.perf_counter() - t0, 3)
         commit_manifest(out_dir, g, meta)
         summary["processed"].append(g)

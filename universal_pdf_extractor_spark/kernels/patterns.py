@@ -282,17 +282,21 @@ def is_summary_row(text: str) -> bool:
     return _SUMMARY_ROW_RE.search(t) is not None
 
 
+# ASCII characters Python re's \s matches and RE2's does not
+_PY_ONLY_SPACE = r"[\x0b\x1c-\x1f]"
+
+
 def _search_batch(lowered: pd.Series, pattern: str, py_re: "re.Pattern") -> pd.Series:
     """Vectorized boolean `search` over a lowered string Series.
 
     Fast path: pyarrow's RE2 engine (linear-time DFA — ~20x faster than
     Python re's backtracking scan over these wide alternations), used
-    ONLY for pure-ASCII rows.  On ASCII input the patterns' character
-    classes (\\s, \\d, \\w, \\b) mean the same thing under RE2 (ASCII
-    classes) and Python re (Unicode classes restricted to ASCII), so
-    the results are provably identical; rows containing any non-ASCII
-    byte take the Python re path, keeping batch/scalar parity exact for
-    every input (pinned by tests/test_textops.py / test_layout.py).
+    ONLY for rows where the two engines agree.  RE2's classes are
+    ASCII-only and its \\s is [\\t\\n\\f\\r ]; Python re's are Unicode,
+    so its \\s also takes \\x0b and \\x1c-\\x1f.  Rows with a non-ASCII
+    character or one of those five controls take the Python re path,
+    keeping batch/scalar parity exact for every input (pinned by
+    tests/test_textops.py / test_layout.py).
     """
     import numpy as np
 
@@ -303,11 +307,12 @@ def _search_batch(lowered: pd.Series, pattern: str, py_re: "re.Pattern") -> pd.S
         arr = pa.array(lowered, type=pa.string())
         res = pc.match_substring_regex(arr, pattern) \
             .to_numpy(zero_copy_only=False).astype(bool)
-        ascii_np = pc.string_is_ascii(arr).to_numpy(zero_copy_only=False)
-        nonascii = np.flatnonzero(~ascii_np)
-        if len(nonascii):
+        re2_ok = pc.and_(pc.string_is_ascii(arr),
+                         pc.invert(pc.match_substring_regex(arr, _PY_ONLY_SPACE)))
+        py_rows = np.flatnonzero(~re2_ok.to_numpy(zero_copy_only=False))
+        if len(py_rows):
             vals = lowered.to_numpy(dtype=object)
-            for i in nonascii:
+            for i in py_rows:
                 res[i] = py_re.search(vals[i]) is not None
         return pd.Series(res, index=lowered.index)
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark

@@ -225,6 +225,15 @@ def _cells_to_fields(row_cells: list[dict], col_map: dict, last_date,
     return date_val, last_date, desc, amount, direction, balance, evidence
 
 
+# every direction_source a fallback tier can emit (main-path rows carry
+# the solver's sources instead); the "_rescue" variants mark cascade
+# rescues on segments where neither majority routing rule fired
+# (analyse_segment's _fallback), which the structured-tier oracles must
+# never alias into their slices
+FALLBACK_SOURCES = ("text_grid_table", "delim_table", "row_pattern",
+                    "delim_table_rescue", "row_pattern_rescue")
+
+
 def _fallback_record(row_index: int, ln: dict, date_val, desc: str, amount,
                      direction: str, balance, evidence: list[dict],
                      source: str, conf_amount: float, conf_date_hi: float,

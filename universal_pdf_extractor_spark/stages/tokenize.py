@@ -138,6 +138,10 @@ def tokens_table(transcripts: DataFrame) -> DataFrame:
                       .mapInPandas(run, schema=out_schema)
 
 
+# the extraction_path values tokenize_stage assigns, in routing order
+EXTRACTION_PATHS = ("TEXT", "TOOL", "EMPTY")
+
+
 def tokenize_stage(transcripts: DataFrame) -> DataFrame:
     """transcripts -> + (extraction_path, payload, view columns)."""
     text_ok = F.col("text").isNotNull() & (F.col("text") != "")
