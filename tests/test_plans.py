@@ -5,7 +5,7 @@ cannot silently regress them:
 - tokenize is shuffle-free (pipelines inside the scan stage);
 - the whole tokenize -> segment -> extract chain introduces exactly
   ONE exchange (hash on conv_id), reused by both windows and the
-  grouped extraction UDF;
+  streamed extraction UDF;
 - column pruning reaches the parquet scan (a narrow projection reads
   only the needed transcript columns — `text` excluded when unused).
 """
@@ -13,10 +13,11 @@ cannot silently regress them:
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F  # noqa: N812
 
 from universal_pdf_extractor_spark.io.fixtures import generate_transcripts
 from universal_pdf_extractor_spark.schemas import TRANSCRIPTS_SCHEMA
-from universal_pdf_extractor_spark.stages.extract import extract_stage
+from universal_pdf_extractor_spark.stages.extract import extract_combined_stage
 from universal_pdf_extractor_spark.stages.segment import segment_stage
 from universal_pdf_extractor_spark.stages.tokenize import tokenize_stage
 
@@ -40,7 +41,7 @@ def test_tokenize_is_shuffle_free(transcripts):
 
 
 def test_single_exchange_feeds_windows_and_extract(transcripts):
-    rec = extract_stage(segment_stage(tokenize_stage(transcripts)))
+    rec = extract_combined_stage(segment_stage(tokenize_stage(transcripts)))
     plan = _plan(rec)
     assert plan.count("Exchange") == 1
     assert "hashpartitioning(conv_id" in plan
@@ -55,17 +56,26 @@ def test_column_pruning_reaches_scan(transcripts):
 
 
 def test_split_segments_grouping_is_equivalent(transcripts):
-    """Skew escape hatch: (conv_id, segment_index) grouping must yield
-    byte-identical records to conv_id grouping."""
+    """Skew escape hatch: repartitioning extraction on (conv_id,
+    segment_index) must yield the identical combined frame — record
+    rows and diag rows alike — from the same streamed UDF.  The split
+    path re-sorts what it shuffles, so it holds even for an input whose
+    rows arrive in reverse turn order with conversations interleaved."""
     seg = segment_stage(tokenize_stage(transcripts))
-    a = extract_stage(seg, split_segments=False).toPandas() \
-        .sort_values(["conv_id", "segment_index", "row_index"]).reset_index(drop=True)
-    b = extract_stage(seg, split_segments=True).toPandas() \
-        .sort_values(["conv_id", "segment_index", "row_index"]).reset_index(drop=True)
+    keys = ["row_type", "conv_id", "segment_index", "row_index"]
+    a = extract_combined_stage(seg).toPandas() \
+        .sort_values(keys).reset_index(drop=True)
+    shuffled = seg.orderBy(F.desc("turn_idx"), F.desc("conv_id"))
+    b = extract_combined_stage(shuffled, split_segments=True).toPandas() \
+        .sort_values(keys).reset_index(drop=True)
+    assert set(a["row_type"]) == {"record", "diag"}
     assert a.equals(b)
-    # and the split variant pays exactly one extra exchange
-    plan = _plan(extract_stage(seg, split_segments=True))
+    # the split variant pays exactly one extra exchange, in front of the
+    # same MapInPandas (no per-group Python round trips)
+    plan = _plan(extract_combined_stage(seg, split_segments=True))
     assert plan.count("Exchange") == 2
+    assert "MapInPandas" in plan
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_ngram_candidate_phase_hashed_and_reused(spark, tmp_path_factory):

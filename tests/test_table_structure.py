@@ -1,6 +1,7 @@
 """Column detection, row reconstruction, semantic mapping, and the
 full per-segment analysis chain on a synthetic statement page."""
 
+import copy
 from decimal import Decimal
 
 import numpy as np
@@ -10,7 +11,8 @@ from universal_pdf_extractor_spark.kernels.columns import (
     assign_token_to_column,
     detect_columns,
 )
-from universal_pdf_extractor_spark.kernels.layout import tokenize_turn
+from universal_pdf_extractor_spark.io.fixtures import generate_transcripts
+from universal_pdf_extractor_spark.kernels.layout import tokenize_turn, tokenize_turn_lines
 from universal_pdf_extractor_spark.kernels.peaks import (
     find_peaks_simple,
     gaussian_smooth_1d,
@@ -212,3 +214,23 @@ def test_analyse_segment_end_to_end_case3():
     assert records[0]["amount"] == Decimal("50.00")
     assert records[0]["posted_date"].isoformat() == "2024-01-02"
     assert records[0]["running_balance"] == Decimal("950.00")
+
+
+def test_analyse_segment_leaves_input_lines_unchanged():
+    """The line dicts belong to the caller: the once-per-line marker
+    memo must live beside the analysis, not in the shared line IR."""
+    segments = [_lines()]
+    corpus = generate_transcripts(12)
+    for _, conv in corpus.groupby("conv_id", sort=True):
+        seg = []
+        for turn_idx, text, tool in zip(conv["turn_idx"], conv["text"], conv["tool"]):
+            for ln in tokenize_turn_lines(text or tool or ""):
+                ln["turn_idx"] = int(turn_idx)
+                seg.append(ln)
+        segments.append(seg)
+    n_records = 0
+    for lines in segments:
+        before = copy.deepcopy(lines)
+        n_records += len(analyse_segment(lines)["records"])
+        assert lines == before
+    assert n_records > 0

@@ -3,8 +3,8 @@
 All variants are expressed as DataFrame plans that scale by shuffle
 keys with bounded cardinality:
 
-- exact:          one groupBy on a 256-bit content hash (never on the
-                  raw text — the hash is the shuffle key).
+- exact:          normalize_text is the canonical content key; the
+                  groupBy on it lives in entry_queries.dedup_exact_groups.
 - ngram-jaccard:  prefix-filtered set-similarity join (PPJoin-style,
                   lossless): only each document's rarest
                   |X|-ceil(t|X|)+1 shingles enter the self-join;
@@ -52,32 +52,6 @@ SIMHASH_BITS = 60  # hash60 provides 60 uniform bits (4 x 15-bit blocks)
 def normalize_text(col):
     """Whitespace-collapse + lowercase: canonical dedup key."""
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-def exact_duplicates(documents: DataFrame,
-                     id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Exact dedup groups: (keep_id, n_dups, dup_ids) per duplicated text.
-
-    Shuffles on sha2(text) so the wide text column never keys an
-    exchange; map-side partial aggregation applies.
-    """
-    normed = spread(
-        documents.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text")), "doc_id",
-    ).select(
-        F.col("doc_id"),
-        F.sha2(normalize_text(F.col("text")), 256).alias("content_hash"),
-    )
-    return (
-        normed.groupBy("content_hash")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("group_size"),
-            F.sort_array(F.collect_list("doc_id")).alias("member_ids"),
-        )
-        .where(F.col("group_size") > 1)
-    )
 
 
 def word_shingles(text_col, n: int = 3):

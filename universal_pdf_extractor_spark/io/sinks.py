@@ -27,7 +27,6 @@ def signed_amount_col(amount_col, direction_col):
 
 # Reference styled-workbook constants (api/documents.py:650-731)
 XLSX_AMOUNT_FORMAT = '£#,##0.00;[Red]-£#,##0.00;"-"'  # :731
-XLSX_DATE_FORMAT = "DD/MM/YYYY"                                 # :716
 XLSX_DEBIT_COLOR = "CC0000"                                     # :656
 XLSX_CREDIT_COLOR = "006600"                                    # :657
 

@@ -37,7 +37,6 @@ BANK_STATEMENT_WEIGHT = 0.12
 CLASSIFY_FLOOR = 0.3
 PROVIDER_MATCH_WEIGHT = 0.4
 PROVIDER_SCAN_PAGES = 3
-BOUNDARY_THRESHOLD = 0.8
 
 CONFIDENCE_PASS_THRESHOLD = 0.85
 CONFIDENCE_WARN_THRESHOLD = 0.70
@@ -135,34 +134,6 @@ def boundary_score(top_text: str) -> tuple[float, list[str]]:
         score += 0.4
         signals.append("PAGE_NUMBER_RESET")
     return score, signals
-
-
-def detect_segment_boundaries(top_texts: list[str]) -> list[dict]:
-    """Boundary list over a conversation's per-turn top texts."""
-    boundaries = [{"page_index": 0, "confidence": 1.0, "signals": ["FIRST_PAGE"]}]
-    for i in range(1, len(top_texts)):
-        score, signals = boundary_score(top_texts[i])
-        if score >= BOUNDARY_THRESHOLD:
-            boundaries.append({"page_index": i,
-                               "confidence": min(score / 2.0, 1.0),
-                               "signals": signals})
-    return boundaries
-
-
-def build_segments(boundaries: list[dict], total_pages: int) -> list[dict]:
-    """Boundaries -> [start, end] page ranges."""
-    segments = []
-    for i, boundary in enumerate(boundaries):
-        end_page = (boundaries[i + 1]["page_index"] - 1
-                    if i + 1 < len(boundaries) else total_pages - 1)
-        segments.append({
-            "segment_index": i,
-            "start_page": boundary["page_index"],
-            "end_page": end_page,
-            "boundary_confidence": boundary["confidence"],
-            "boundary_signals": boundary["signals"],
-        })
-    return segments
 
 
 def score_document(transactions: list[dict],

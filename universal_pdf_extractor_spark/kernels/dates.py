@@ -208,14 +208,6 @@ _DATE_LIKE_PATTERNS = [  # boolean use only -> non-capturing groups
     re.compile(r"\d{1,2}(?:JAN|FEB|MAR|APR|MAY|JUN|JUL|AUG|SEP|OCT|NOV|DEC)", re.IGNORECASE),
 ]
 
-# Single alternation usable as a Spark `rlike` literal (same 4 branches).
-DATE_LIKE_RLIKE = (
-    r"(\d{1,2}[/\-\.]\d{1,2}[/\-\.]\d{2,4}"
-    r"|\d{1,2}\s+(?i)(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)"
-    r"|\d{4}-\d{2}-\d{2}"
-    r"|\d{1,2}(JAN|FEB|MAR|APR|MAY|JUN|JUL|AUG|SEP|OCT|NOV|DEC))"
-)
-
 
 def is_date_like(text: str) -> bool:
     if text is None:

@@ -157,7 +157,7 @@ def tokenize_turn_lines(text: Optional[str]) -> list[dict]:
 
     Emits exactly :func:`tokenize_turn`'s ``lines`` (same text, y0/y1,
     line_index, token text/start/end/col0/col1) MINUS the fields that
-    path provably never reads before they are overwritten or at all:
+    path provably never reads before they are re-derived or at all:
     token x0/x1 (``_rescale_segment_geometry`` re-derives every x from
     col0/col1 over the segment-wide width as the first step of
     ``analyse_segment``), token y0/y1/confidence/line_origin, and line

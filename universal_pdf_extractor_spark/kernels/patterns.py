@@ -319,11 +319,6 @@ def _search_batch(lowered: pd.Series, pattern: str, py_re: "re.Pattern") -> pd.S
         return lowered.str.contains(py_re, regex=True)
 
 
-def is_balance_marker_batch(values: pd.Series) -> pd.Series:
-    s = values.fillna("").str.lower().str.strip()
-    return _search_batch(s, BALANCE_MARKER_RLIKE, _BALANCE_MARKER_RE)
-
-
 _BOILERPLATE_RLIKE = (f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
 
 

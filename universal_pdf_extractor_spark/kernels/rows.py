@@ -48,10 +48,15 @@ def reconstruct_rows(lines: list[dict],
                      columns: list[dict],
                      date_column_index: int = 0,
                      amount_column_indices: Optional[list[int]] = None,
-                     cells_per_line: Optional[list[list[dict]]] = None) -> list[dict]:
+                     cells_per_line: Optional[list[list[dict]]] = None,
+                     marker_flags: Optional[list[Optional[bool]]] = None) -> list[dict]:
     """Merge lines into transaction rows (sequential per segment).
 
     Row: {line_indices, cells, is_balance_marker, raw_text}.
+
+    marker_flags holds each line's balance-marker test, filled in on
+    first use; passes that share one list evaluate the marker regex
+    once per line.  The line dicts themselves are never written.
     """
     if not lines or not columns:
         return []
@@ -62,6 +67,8 @@ def reconstruct_rows(lines: list[dict],
 
     if cells_per_line is None:
         cells_per_line = precompute_cells(lines, columns)
+    if marker_flags is None:
+        marker_flags = [None] * len(lines)
 
     rows: list[dict] = []
     current: Optional[dict] = None
@@ -69,11 +76,9 @@ def reconstruct_rows(lines: list[dict],
     for i, line in enumerate(lines):
         cells = cells_per_line[i]
 
-        # memoized on the shared line dict: the preliminary and final
-        # passes would otherwise run the marker regex twice per line
-        is_marker = line.get("_is_bal")
+        is_marker = marker_flags[i]
         if is_marker is None:
-            is_marker = line["_is_bal"] = is_balance_marker(line["text"])
+            is_marker = marker_flags[i] = is_balance_marker(line["text"])
         if is_marker:
             if current:
                 rows.append(current)

@@ -393,7 +393,7 @@ def _split_columns_by_header(columns: list[dict], header_line: dict) -> list[dic
     return out
 
 
-def _rescale_segment_geometry(lines: list[dict]) -> None:
+def _rescale_segment_geometry(lines: list[dict]) -> list[dict]:
     """Re-normalize token/line x-geometry over a SEGMENT-wide width.
 
     tokenize_turn normalizes x by each turn's own max line length, so
@@ -403,8 +403,9 @@ def _rescale_segment_geometry(lines: list[dict]) -> None:
     where the reference's page-absolute pdfplumber coordinates would
     stay aligned (pdfplumber_engine.py coordinate contract).  Tokens
     carry their line-local char columns (layout.py col0/col1); when
-    present, x is re-derived as col/segment_width in place.  Segments
-    whose lines all came from one turn are unchanged (same width).
+    present, x is re-derived as col/segment_width on copies of the
+    line and token dicts, which belong to the caller.  Segments whose
+    lines all came from one turn keep their x (same width).
     y-geometry (per-turn line index ordering) is untouched.
     """
     width = 0
@@ -412,17 +413,19 @@ def _rescale_segment_geometry(lines: list[dict]) -> None:
         for t in ln["tokens"]:
             c1 = t.get("col1")
             if c1 is None:
-                return  # externally-supplied token table: keep its x
+                return lines  # externally-supplied token table: keep its x
             if c1 > width:
                 width = c1
     if width <= 0:
-        return
+        return lines
+    out = []
     for ln in lines:
-        for t in ln["tokens"]:
-            t["x0"] = t["col0"] / width
-            t["x1"] = t["col1"] / width
-        ln["x0"] = min(t["x0"] for t in ln["tokens"])
-        ln["x1"] = max(t["x1"] for t in ln["tokens"])
+        toks = [{**t, "x0": t["col0"] / width, "x1": t["col1"] / width}
+                for t in ln["tokens"]]
+        out.append({**ln, "tokens": toks,
+                    "x0": min(t["x0"] for t in toks),
+                    "x1": max(t["x1"] for t in toks)})
+    return out
 
 
 def _has_internal_gap(line: dict) -> bool:
@@ -662,7 +665,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
     if not lines:
         return empty
 
-    _rescale_segment_geometry(lines)
+    lines = _rescale_segment_geometry(lines)
 
     all_lines = lines  # pre-header-strip view for the fallback parsers
 
@@ -751,6 +754,9 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         lines = lines[header_idx + 1:]
 
     cells_per_line = precompute_cells(lines, columns)
+    # shared by the preliminary and final row passes, so the marker
+    # regex runs at most once per line
+    marker_flags: list = [None] * len(lines)
     # lazy: only evaluated when headers leave columns unassigned or the
     # balance-promotion gate needs row evidence (assign_column_roles);
     # fully-headered segments skip this whole preliminary pass
@@ -759,6 +765,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         date_column_index=0,
         amount_column_indices=[c["column_index"] for c in columns if c["column_index"] > 0],
         cells_per_line=cells_per_line,
+        marker_flags=marker_flags,
     )
     roles = assign_column_roles(columns, header_texts, preliminary_rows)
 
@@ -772,7 +779,8 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         return _fallback()
 
     rows = reconstruct_rows(lines, columns, date_col, amount_cols,
-                            cells_per_line=cells_per_line)
+                            cells_per_line=cells_per_line,
+                            marker_flags=marker_flags)
     transaction_rows = [r for r in rows if not r["is_balance_marker"]]
     if not transaction_rows:
         return _fallback()

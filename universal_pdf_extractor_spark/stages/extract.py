@@ -1,24 +1,19 @@
-"""Stage 4 — per-segment record extraction (grouped pandas UDF).
+"""Stage 4 — per-segment record extraction (one mapInPandas pass).
 
 The sequential parts of the reference pipeline — row reconstruction
 (table_extractor.py:243-321), role assignment ordering
 (semantic_mapper.py:167-281) and the balance-chain walks
 (balance_solver.py:172-245,390-430) — carry genuine running state, so
-they execute inside ONE ``applyInPandas`` grouped by conv_id,
-iterating that conversation's segments in order.  Everything upstream
-(tokenize, boundary scoring, segment ids) and downstream (scoring,
-joins, ordering) is native.
+they run in Python, one ``analyse_segment`` call per segment, inside
+ONE ``mapInPandas`` that streams many whole conversations per Arrow
+batch.  Everything upstream (tokenize, boundary scoring, segment ids)
+and downstream (scoring, joins, ordering) is native.
 
-Grouping by conv_id (not (conv_id, segment_index)) deliberately
-reuses the hash exchange introduced by the segment stage's window —
-the plan shows a single Exchange feeding both.  Conversations are
-bounded by MAX_TURNS in this corpus; for corpora with pathological
-conversation lengths, regroup by (conv_id, segment_index) instead
-(one extra shuffle, finer skew splitting) — see stages/pipeline.py.
-
-Output carries the reference `transactions` row shape
-(tables.py:298-382) plus per-segment opening/closing balances used to
-assemble the segments table without a second pass.
+That call yields both reference surfaces at once: the `transactions`
+rows (tables.py:298-382, plus the per-segment opening/closing
+balances used to assemble the segments table without a second pass)
+and the `detected_tables` diagnostics (tables.py:252-292), in one
+row_type-discriminated frame.
 """
 
 from __future__ import annotations
@@ -74,13 +69,12 @@ RECORDS_STAGE_SCHEMA = StructType([
     StructField("segment_closing_distinct", BooleanType(), False),
 ])
 
-_COLUMNS = [f.name for f in RECORDS_STAGE_SCHEMA.fields]
-
 # combined records+diagnostics output: ONE analyse_segment pass emits
 # both surfaces (discriminated by row_type), so materializing
-# detected_tables costs zero extra Python work — the separate
-# diagnostics stage used to re-run the entire extraction kernel
-# (~25% of pipeline wall at sf0.1)
+# detected_tables costs zero extra Python work.  Diagnostics follow the
+# reference's detected_tables row: which engine produced the table, its
+# column geometry, assigned roles and header line, with JSON columns
+# mirroring bbox_json / header_row_json / column_mapping_json
 _DIAG_FIELDS = [
     StructField("engine", StringType(), True),
     StructField("table_type", StringType(), True),
@@ -99,7 +93,7 @@ COMBINED_STAGE_SCHEMA = StructType(
     + _DIAG_FIELDS)
 
 _COMBINED_COLUMNS = [f.name for f in COMBINED_STAGE_SCHEMA.fields]
-RECORD_COLUMNS = _COLUMNS
+RECORD_COLUMNS = [f.name for f in RECORDS_STAGE_SCHEMA.fields]
 DIAG_COLUMNS = ["conv_id", "segment_index"] + [f.name for f in _DIAG_FIELDS]
 
 
@@ -115,14 +109,6 @@ def _conf(x: float) -> Decimal:
             _CONF_MEMO.clear()
         d = _CONF_MEMO[x] = Decimal(str(round(x, 4)))
     return d
-
-
-def _extract_conversation(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("turn_idx")
-    conv_id = pdf["conv_id"].iloc[0]
-    out_rows: list[dict] = []
-    _analyse_into(pdf, conv_id, out_rows)
-    return pd.DataFrame(out_rows, columns=_COLUMNS)
 
 
 def _segment_lines(seg: pd.DataFrame) -> list[dict]:
@@ -158,8 +144,7 @@ def _diag_row(conv_id: str, seg_idx: int, d: dict) -> dict:
 def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
                            out_rows: list[dict]) -> None:
     """Records AND diagnostics from one analyse_segment call per
-    segment (row_type-discriminated; missing columns filled by the
-    DataFrame constructor as NaN -> null)."""
+    segment (row_type-discriminated)."""
     for seg_idx, seg in pdf.groupby("segment_index", sort=True):
         result = analyse_segment(_segment_lines(seg))
         seg_idx = int(seg_idx)
@@ -210,54 +195,10 @@ def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
                              row_type="diag", evidence=[]))
 
 
-def _combined_stream(batches):
-    return _stream_conversations(batches, _analyse_combined_into,
-                                 _COMBINED_COLUMNS)
-
-
-def extract_combined_stage(turns_seg: DataFrame) -> DataFrame:
-    """turns(+segment_index) -> row_type-discriminated union of
-    extracted records and per-segment diagnostics, from ONE pass.
-    Same partition-layout contract as extract_stage."""
-    slim = turns_seg.select("conv_id", "turn_idx", "segment_index", "payload")
-    return slim.mapInPandas(_combined_stream, schema=COMBINED_STAGE_SCHEMA)
-
-
-def _analyse_into(pdf: pd.DataFrame, conv_id: str, out_rows: list[dict]) -> None:
-    for seg_idx, seg in pdf.groupby("segment_index", sort=True):
-        lines = _segment_lines(seg)
-        result = analyse_segment(lines)
-        for rec in result["records"]:
-            out_rows.append({
-                "conv_id": conv_id,
-                "segment_index": int(seg_idx),
-                "row_index": rec["row_index"],
-                "turn_idx": rec["turn_idx"],
-                "posted_date": rec["posted_date"],
-                "description_raw": rec["description_raw"],
-                "description_clean": rec["description_clean"],
-                "amount": rec["amount"],
-                "direction": rec["direction"],
-                "direction_source": rec["direction_source"],
-                "running_balance": rec["running_balance"],
-                "balance_confirmed": rec["balance_confirmed"],
-                "balance_tolerance_used": rec["balance_tolerance_used"],
-                "confidence_amount": _conf(rec["confidence_amount"]),
-                "confidence_date": _conf(rec["confidence_date"]),
-                "confidence_direction": _conf(rec["confidence_direction"]),
-                "fallback_used": result["fallback_used"],
-                "evidence": [(e["field"], e["turn_idx"], e["start"], e["end"])
-                             for e in rec["evidence"]],
-                "segment_opening_balance": result["opening_balance"],
-                "segment_closing_balance": result["closing_balance"],
-                "segment_closing_distinct": result["closing_balance_distinct"],
-            })
-
-
-def _stream_conversations(batches, analyse_into, columns):
-    """Secondary-sort mapInPandas body: many conversations per Arrow
-    batch, with the partition's trailing (possibly incomplete)
-    conversation buffered across batch boundaries."""
+def _stream_conversations(batches):
+    """mapInPandas body: many conversations per Arrow batch, with the
+    partition's trailing (possibly incomplete) conversation buffered
+    across batch boundaries."""
     leftover: pd.DataFrame | None = None
     for pdf in batches:
         if leftover is not None and len(leftover):
@@ -272,111 +213,43 @@ def _stream_conversations(batches, analyse_into, columns):
         split_at = len(pdf) - int(tail_mask.sum())
         complete, leftover = pdf.iloc[:split_at], pdf.iloc[split_at:]
         if len(complete):
-            out_rows: list[dict] = []
-            for conv_id, grp in complete.groupby("conv_id", sort=False):
-                analyse_into(grp, conv_id, out_rows)
-            yield pd.DataFrame(out_rows, columns=columns)
+            yield _analyse_batch(complete)
     if leftover is not None and len(leftover):
-        out_rows = []
-        for conv_id, grp in leftover.groupby("conv_id", sort=False):
-            analyse_into(grp, conv_id, out_rows)
-        yield pd.DataFrame(out_rows, columns=columns)
+        yield _analyse_batch(leftover)
 
 
-def _extract_stream(batches):
-    return _stream_conversations(batches, _analyse_into, _COLUMNS)
+def _analyse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    out_rows: list[dict] = []
+    for conv_id, grp in pdf.groupby("conv_id", sort=False):
+        _analyse_combined_into(grp, conv_id, out_rows)
+    return pd.DataFrame(out_rows, columns=_COMBINED_COLUMNS)
 
 
-def extract_stage(turns_seg: DataFrame, split_segments: bool = False,
-                  assume_layout: bool = True) -> DataFrame:
-    """turns(+segment_index) -> extracted records (one row per
-    reconstructed transaction row).
+def extract_combined_stage(turns_seg: DataFrame,
+                           split_segments: bool = False) -> DataFrame:
+    """turns(+segment_index) -> row_type-discriminated union of
+    extracted records and per-segment diagnostics, from ONE pass.
 
-    Default path: mapInPandas over the segment stage's output, which
-    the window has already hash-partitioned by conv_id AND sorted by
-    (conv_id, turn_idx) within partitions (WindowExec's required sort
-    covers partition keys then order keys).  That layout lets one
-    Arrow batch carry MANY whole conversations — versus
-    groupBy().applyInPandas, which pays one Python round trip per
-    conversation (tiny ~30-row batches dominated by overhead).  The
-    plan-shape test pins the no-extra-exchange property; the e2e
-    oracle test pins value equality.
+    The stream needs each conversation's rows contiguous and in
+    turn order within a partition.  The segment stage's window leaves
+    exactly that layout: hash-partitioned by conv_id and sorted by
+    (conv_id, turn_idx) (WindowExec's required sort covers partition
+    keys then order keys), so the default path adds no exchange and
+    one Arrow batch carries many whole conversations instead of one
+    Python round trip per group.
 
-    split_segments=True is the skew escape hatch: explicit repartition
-    on (conv_id, segment_index) + applyInPandas so giant documents
-    split at statement boundaries.  Results identical — analysis state
-    never crosses a segment boundary.
+    split_segments=True is the skew escape hatch: repartition on
+    (conv_id, segment_index) so giant documents split at statement
+    boundaries, then re-sort within partitions.  Each segment lands
+    whole in one partition and analysis state never crosses a segment
+    boundary, so the output is identical; the cost is one extra
+    exchange.
     """
     slim = turns_seg.select("conv_id", "turn_idx", "segment_index", "payload")
     if split_segments:
-        slim = slim.repartition("conv_id", "segment_index")
-        return slim.groupBy("conv_id", "segment_index").applyInPandas(
-            _extract_conversation, schema=RECORDS_STAGE_SCHEMA)
-    if not assume_layout:
-        # standalone use (input not produced by segment_stage in this
-        # plan): enforce co-location + contiguity explicitly
-        slim = slim.repartition("conv_id") \
+        slim = slim.repartition("conv_id", "segment_index") \
                    .sortWithinPartitions("conv_id", "turn_idx")
-    return slim.mapInPandas(_extract_stream, schema=RECORDS_STAGE_SCHEMA)
-
-
-# detected_tables analogue (tables.py:252-292): per-segment detection
-# diagnostics — which engine produced the table, its column geometry,
-# assigned roles and header line — the first table a user debugging a
-# bad extraction needs.  JSON columns mirror the reference's
-# bbox_json / header_row_json / column_mapping_json JSONB fields.
-DIAG_SCHEMA = StructType([
-    StructField("conv_id", StringType(), False),
-    StructField("segment_index", IntegerType(), False),
-    StructField("engine", StringType(), False),
-    StructField("table_type", StringType(), False),
-    StructField("row_count", IntegerType(), False),
-    StructField("column_count", IntegerType(), True),
-    StructField("bbox_json", StringType(), True),
-    StructField("header_json", StringType(), True),
-    StructField("column_mapping_json", StringType(), True),
-])
-
-_DIAG_COLUMNS = [f.name for f in DIAG_SCHEMA.fields]
-
-
-def _diagnose_into(pdf: pd.DataFrame, conv_id: str, out_rows: list[dict]) -> None:
-    import json
-
-    for seg_idx, seg in pdf.groupby("segment_index", sort=True):
-        d = analyse_segment(_segment_lines(seg))["diagnostics"]
-        out_rows.append({
-            "conv_id": conv_id,
-            "segment_index": int(seg_idx),
-            "engine": d["engine"],
-            "table_type": d["table_type"],
-            "row_count": int(d["row_count"]),
-            "column_count": (int(d["column_count"])
-                             if d.get("column_count") is not None else None),
-            "bbox_json": (json.dumps(d["bbox"], sort_keys=True)
-                          if d.get("bbox") is not None else None),
-            "header_json": (json.dumps(d["header"], sort_keys=True)
-                            if d.get("header") is not None else None),
-            "column_mapping_json": (json.dumps(d["column_mapping"], sort_keys=True)
-                                    if d.get("column_mapping") is not None else None),
-        })
-
-
-def detected_tables_stage(turns_seg: DataFrame,
-                          assume_layout: bool = True) -> DataFrame:
-    """turns(+segment_index) -> one diagnostics row per segment.
-
-    Same partition-layout contract as extract_stage (hash-partitioned
-    by conv_id, sorted by (conv_id, turn_idx)); a separate lazy plan so
-    the diagnostics pass only runs when this output is consumed.
-    """
-    slim = turns_seg.select("conv_id", "turn_idx", "segment_index", "payload")
-    if not assume_layout:
-        slim = slim.repartition("conv_id") \
-                   .sortWithinPartitions("conv_id", "turn_idx")
-    return slim.mapInPandas(
-        lambda batches: _stream_conversations(batches, _diagnose_into, _DIAG_COLUMNS),
-        schema=DIAG_SCHEMA)
+    return slim.mapInPandas(_stream_conversations, schema=COMBINED_STAGE_SCHEMA)
 
 
 def segments_table(turns_seg: DataFrame, records: DataFrame) -> DataFrame:

@@ -3,21 +3,23 @@
     transcripts
       -> tokenize_stage      (no shuffle; Arrow-batched layout kernel)
       -> segment_stage       (native rlike + window; shuffle #1 on conv_id)
-      -> extract_stage       (applyInPandas per conversation; REUSES
-                              the conv_id exchange - no new shuffle)
+      -> extract_combined_stage (mapInPandas over the window's
+                              layout, records + diagnostics in one
+                              pass; REUSES the conv_id exchange)
       -> classify_stage      (groupBy conv_id; reuses the exchange)
       -> conversations_table (agg over the small records frame)
 
 Outputs: turns (north-rule per-turn main content), records
-(transactions analogue), segments, conversations.
+(transactions analogue), segments, conversations, detected_tables.
 
 Scale notes (10^12 turns):
 - the fat `text` column is shuffled exactly once (the conv_id
   exchange); all conversation-level stages hang off that one exchange;
 - AQE handles skewed conversations at the exchange; for corpora with
-  unbounded conversation lengths switch EXTRACT grouping to
-  (conv_id, segment_index) — boundaries split giant documents the
-  same way the reference segments multi-statement PDFs;
+  unbounded conversation lengths pass split_segments=True, which
+  repartitions extraction on (conv_id, segment_index) — boundaries
+  split giant documents the same way the reference segments
+  multi-statement PDFs;
 - outputs are written partitioned by bucket(conv_id) with
   (conv_id, turn_idx) sort order; see io/manifest.py for resumable
   per-bucket writes.
@@ -25,6 +27,7 @@ Scale notes (10^12 turns):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -33,7 +36,6 @@ from .extract import (
     DIAG_COLUMNS,
     RECORD_COLUMNS,
     extract_combined_stage,
-    extract_stage,
     segments_table,
 )
 from .score import conversations_table
@@ -46,9 +48,14 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     """Assemble all output tables (lazily).
 
     persist=True caches the post-segmentation frame (the single
-    conv_id exchange) so forcing all four outputs does not recompute
-    tokenize+window per sink; callers unpersist via the returned
-    frame's ``.unpersist()`` (exposed as key "_turns_seg").
+    conv_id exchange) and the combined extraction frame, so forcing
+    every output runs tokenize+window and the extraction kernel once;
+    callers unpersist both, exposed as keys "_turns_seg" and
+    "_combined".
+
+    split_segments=True repartitions extraction on (conv_id,
+    segment_index), the skew escape hatch for giant conversations;
+    outputs are identical.
     """
     # NOTE: an exchange-before-tokenize layout (shuffling only raw
     # transcript columns) was tried and rejected: ArrowEvalPython does
@@ -61,30 +68,17 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     # cached/downstream frame free of it
     turns_seg = turns_seg.drop("top_text")
     if persist:
-        from pyspark import StorageLevel
         turns_seg = turns_seg.persist(StorageLevel.MEMORY_AND_DISK)
 
-    if split_segments:
-        # skew escape hatch keeps the dedicated record stage; the
-        # diagnostics pass stays separate on this path
-        combined = None
-        records_stage = extract_stage(turns_seg, split_segments=True)
-    else:
-        # ONE analyse_segment pass yields records AND per-segment
-        # diagnostics (row_type-discriminated): materializing
-        # detected_tables no longer re-runs the extraction kernel
-        combined = extract_combined_stage(turns_seg)
-        if persist:
-            from pyspark import StorageLevel
-            combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
-        records_stage = combined.where(F.col("row_type") == "record") \
-                                .select(*RECORD_COLUMNS)
-    if persist and combined is None:
-        # segments and conversations both aggregate the records frame;
-        # without this the extraction UDF (the most expensive stage)
-        # would execute once per consumer
-        from pyspark import StorageLevel
-        records_stage = records_stage.persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE analyse_segment pass yields records AND per-segment
+    # diagnostics (row_type-discriminated); persisted, it feeds the
+    # records, segments, conversations and detected_tables outputs
+    # without re-running the extraction kernel per consumer
+    combined = extract_combined_stage(turns_seg, split_segments=split_segments)
+    if persist:
+        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    records_stage = combined.where(F.col("row_type") == "record") \
+                            .select(*RECORD_COLUMNS)
     records = records_stage.drop("segment_opening_balance",
                                  "segment_closing_balance",
                                  "segment_closing_distinct")
@@ -113,12 +107,8 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
         "n_lines", "n_tokens", "mean_token_confidence", "segment_index",
         "boundary_score", "is_boundary", "boundary_confidence",
     )
-    if combined is not None:
-        detected = combined.where(F.col("row_type") == "diag") \
-                           .select(*DIAG_COLUMNS)
-    else:
-        from .extract import detected_tables_stage
-        detected = detected_tables_stage(turns_seg)
+    detected = combined.where(F.col("row_type") == "diag") \
+                       .select(*DIAG_COLUMNS)
     out = {
         "turns": turns_out,
         "records": records,
@@ -128,5 +118,5 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     }
     if persist:
         out["_turns_seg"] = turns_seg
-        out["_records_stage"] = combined if combined is not None else records_stage
+        out["_combined"] = combined
     return out
