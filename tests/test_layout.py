@@ -2,6 +2,7 @@
 
 import pandas as pd
 
+from universal_pdf_extractor_spark.kernels.classify import boundary_score
 from universal_pdf_extractor_spark.kernels.layout import (
     TOP_REGION_LINES,
     cluster_tokens_to_lines,
@@ -82,7 +83,9 @@ def test_batch_fast_path_matches_ir_route():
     batch = turn_view_batch(pd.Series(texts))
     for i, text in enumerate(texts):
         view = turn_view(text)
-        for key in ("raw_text", "top_text", "clean_text", "n_lines", "n_tokens"):
+        view["boundary_score"] = boundary_score(view["top_text"])[0]
+        for key in ("raw_text", "top_text", "clean_text", "n_lines", "n_tokens",
+                    "boundary_score"):
             assert batch.loc[i, key] == view[key], (i, key)
         rebuilt = [{"field": "content", "start": a, "end": b}
                    for a, b in zip(batch.loc[i, "span_starts"], batch.loc[i, "span_ends"])]

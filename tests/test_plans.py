@@ -7,7 +7,9 @@ cannot silently regress them:
   ONE exchange (hash on conv_id), reused by both windows and the
   streamed extraction UDF;
 - column pruning reaches the parquet scan (a narrow projection reads
-  only the needed transcript columns — `text` excluded when unused).
+  only the needed transcript columns — `text` excluded when unused);
+- every generated method of the conversations plan stays small enough
+  for HotSpot to JIT-compile it.
 """
 
 from __future__ import annotations
@@ -76,6 +78,31 @@ def test_split_segments_grouping_is_equivalent(transcripts):
     assert plan.count("Exchange") == 2
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
+
+
+# HotSpot's HugeMethodLimit: with the default -XX:+DontCompileHugeMethods
+# a larger method is never JIT-compiled and runs interpreted
+HUGE_METHOD_LIMIT = 8000
+
+
+def test_conversations_codegen_methods_are_jit_compilable(spark, transcripts):
+    """No whole-stage-codegen method in the conversations plan of
+    run_pipeline exceeds HUGE_METHOD_LIMIT bytes of bytecode.  AQE is
+    off so the executed plan is the whole codegen'd plan, not a stub
+    that plans its stages at run time."""
+    from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
+
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        conv = run_pipeline(transcripts)["conversations"]
+        stats = debug.codegenStringSeq(conv._jdf.queryExecution().executedPlan())
+        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    assert sizes
+    assert max(sizes) <= HUGE_METHOD_LIMIT, sizes
 
 
 def test_ngram_candidate_phase_hashed_and_reused(spark, tmp_path_factory):

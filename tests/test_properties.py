@@ -402,3 +402,83 @@ def test_bmp_header_prefix_fuzz(prefix):
 
     assert decode_bmp(b"BM" + prefix) is None \
         or decode_bmp(b"BM" + prefix) is not None  # no exception is the test
+
+
+# ── Spark stages == kernels.classify on non-ASCII text ──────────────
+
+from datetime import datetime
+
+from hypothesis import example
+
+# Unicode decimal digits (Python re's \d matches them all), every C0
+# control, Unicode spaces, and letters Python re.IGNORECASE folds onto
+# ASCII ones (long s ~ 's', Kelvin sign ~ 'k')
+_ODD_CHARS = (list("0123456789٠٣٤٩０２９०߀") + [chr(c) for c in range(32)]
+              + ["\xa0", "\u2028", "\u017f", "\u212a", " ", "-", ":", "/", "%"])
+# classifier, provider, currency, segmenter and customer vocabulary
+_VOCAB = ["sort code", "sort code: ", "statement period: ", "statement date: ",
+          "opening balance", "balance brought forward", "account number",
+          "page 1 of ", "from ", " to ", "jan", "barclays", "hsbc", "lloyds",
+          "monzo", "starling", "tsb", "20-", "40-", "04-00-04", "hire purchase",
+          "hp ", "apr ", "pcp", "car finance", "bank statement", "direct debit",
+          "overdraft", "£", "$", "€", "gbp", "usd", "eur", "SW1A 1AA", "Mr "]
+_turn_text = st.lists(st.one_of(st.sampled_from(_VOCAB), st.sampled_from(_ODD_CHARS)),
+                      max_size=25).map("".join)
+_conversation = st.lists(_turn_text, min_size=1, max_size=4)
+
+
+@given(st.lists(_conversation, min_size=1, max_size=5))
+@example([["hello\nsort code: 20-٣٣-٤٤"],
+          ["chatter", "statement period: ٣ jan"],
+          ["chatter", "ſort code 1"]])
+@settings(max_examples=12, deadline=None)
+def test_stages_equal_classify_kernels(spark, convs):
+    """tokenize -> segment and classify give exactly the
+    kernels.classify results on each conversation's joined raw text and
+    each turn's top-band text (the oracle's inputs), for text a regex
+    engine with ASCII-only classes would misread.  One Spark job per
+    drawn batch."""
+    from universal_pdf_extractor_spark.kernels.classify import (
+        boundary_score,
+        classify_document,
+        detect_currency,
+        detect_provider,
+    )
+    from universal_pdf_extractor_spark.kernels.customer import extract_customer_info
+    from universal_pdf_extractor_spark.kernels.layout import turn_view
+    from universal_pdf_extractor_spark.kernels.oracle import segment_index_per_turn
+    from universal_pdf_extractor_spark.schemas import TRANSCRIPTS_SCHEMA
+    from universal_pdf_extractor_spark.stages.classify import classify_stage
+    from universal_pdf_extractor_spark.stages.segment import segment_stage
+    from universal_pdf_extractor_spark.stages.tokenize import tokenize_stage
+
+    pdf = pd.DataFrame([
+        {"conv_id": f"c{i}", "turn_idx": j, "role": "user", "text": text,
+         "tool": None, "ts": datetime(2024, 1, 1)}
+        for i, turns in enumerate(convs) for j, text in enumerate(turns)])
+    pdf["turn_idx"] = pdf["turn_idx"].astype(np.int32)
+    seg = segment_stage(tokenize_stage(spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)))
+    got = seg.select("conv_id", "turn_idx", "boundary_score", "segment_index") \
+        .join(classify_stage(seg), "conv_id").toPandas()
+
+    for i, turns in enumerate(convs):
+        rows = got[got["conv_id"] == f"c{i}"].sort_values("turn_idx")
+        views = [turn_view(text) for text in turns]
+        tops = [v["top_text"] for v in views]
+        assert list(rows["boundary_score"]) == [boundary_score(t)[0] for t in tops], tops
+        assert list(rows["segment_index"]) == segment_index_per_turn(tops), tops
+
+        conv_text = "\n".join(v["raw_text"] for v in views if v["raw_text"])
+        row = rows.iloc[0]
+        family = classify_document([conv_text])
+        provider = detect_provider([conv_text])
+        assert row["doc_family"] == family["doc_family"], conv_text
+        assert row["doc_family_confidence"] == family["confidence"], conv_text
+        assert row["provider"] == provider["provider_name"], conv_text
+        if provider["provider_name"] is None:
+            assert pd.isna(row["provider_confidence"]), conv_text
+        else:
+            assert row["provider_confidence"] == provider["confidence"], conv_text
+        assert row["currency"] == detect_currency(conv_text), conv_text
+        for key, value in extract_customer_info(conv_text).items():
+            assert row[key] == value, (key, conv_text)

@@ -30,15 +30,16 @@ def test_stream_turns_matches_batch(spark, corpus_path, tmp_path_factory):
          .trigger(availableNow=True).start())
     q.awaitTermination(300)
 
-    got = (spark.sql("SELECT conv_id, turn_idx, clean_text, n_tokens "
-                     "FROM turns_stream")
+    cols = ["conv_id", "turn_idx", "clean_text", "n_tokens", "boundary_score"]
+    got = (spark.sql(f"SELECT {', '.join(cols)} FROM turns_stream")
            .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    exp = (tokenize_stage(spark.read.parquet(corpus_path))
-           .select("conv_id", "turn_idx", "clean_text", "n_tokens")
+    exp = (tokenize_stage(spark.read.parquet(corpus_path)).select(*cols)
            .toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
     assert len(got) == len(exp) > 0
     assert (got["clean_text"] == exp["clean_text"]).all()
     assert (got["n_tokens"] == exp["n_tokens"]).all()
+    assert (got["boundary_score"] == exp["boundary_score"]).all()
+    assert (exp["boundary_score"] > 0).any()
 
 
 def test_stream_session_rollup_runs(spark, corpus_path, tmp_path_factory):

@@ -54,11 +54,6 @@ def normalize_text(col):
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def word_shingles(text_col, n: int = 3):
-    """Word n-gram shingle array (distinct)."""
-    return shingles_of_words(F.split(normalize_text(text_col), " "), n)
-
-
 def shingles_of_words(words, n: int = 3):
     """Shingle expression over an already-split words array.
 

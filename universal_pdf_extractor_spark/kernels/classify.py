@@ -11,9 +11,10 @@ Parity with:
 - app/pipeline/confidence_scorer.py:26-148 (weighted score + hard
   gates + warnings + PASS/WARN/FAIL thresholds 0.85/0.70/0.50)
 
-These are all regular-expression folds over concatenated text, so the
-Spark stages evaluate them natively (rlike / when-chains); the Python
-forms here are the oracle used in equality tests.
+These functions are the only implementation: the Spark stages call
+them from the Arrow UDFs they already run (stages.classify per
+conversation, the tokenize view UDF per turn), and kernels.oracle
+calls them per conversation, so both keep Python `re` semantics.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ BANK_STATEMENT_WEIGHT = 0.12
 CLASSIFY_FLOOR = 0.3
 PROVIDER_MATCH_WEIGHT = 0.4
 PROVIDER_SCAN_PAGES = 3
+BOUNDARY_THRESHOLD = 0.8
 
 CONFIDENCE_PASS_THRESHOLD = 0.85
 CONFIDENCE_WARN_THRESHOLD = 0.70

@@ -39,6 +39,7 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 
+from .classify import boundary_score
 from .patterns import is_summary_row, is_summary_row_batch
 
 Y_START = 0.01
@@ -274,15 +275,18 @@ def turn_view_batch(texts: pd.Series) -> pd.DataFrame:
     Avoids materializing the token IR: line splitting, whitespace
     normalization, boilerplate flags and span offsets are computed
     with pandas/numpy column ops.  Must stay bit-identical to the IR
-    route (enforced by tests/test_layout.py).
+    route (enforced by tests/test_layout.py).  ``boundary_score`` is
+    the segmenter score of ``top_text`` (kernels.classify).
     """
     s = texts.fillna("").astype(str)
     n = len(s)
     if n == 0:
         return pd.DataFrame({
             "raw_text": pd.Series(dtype=str), "top_text": pd.Series(dtype=str),
-            "clean_text": pd.Series(dtype=str), "spans": pd.Series(dtype=object),
+            "clean_text": pd.Series(dtype=str),
+            "span_starts": pd.Series(dtype=object), "span_ends": pd.Series(dtype=object),
             "n_lines": pd.Series(dtype=np.int32), "n_tokens": pd.Series(dtype=np.int32),
+            "boundary_score": pd.Series(dtype=np.float64),
         })
 
     rows = np.repeat(np.arange(n), s.str.count("\n").to_numpy() + 1)
@@ -330,7 +334,9 @@ def turn_view_batch(texts: pd.Series) -> pd.DataFrame:
     idx = np.arange(n)
     out = pd.DataFrame(index=idx)
     out["raw_text"] = _grouped_join(nonempty_np, "\n")
-    out["top_text"] = [t.lower() for t in _grouped_join(nonempty_np & in_top_np, " ")]
+    top = [t.lower() for t in _grouped_join(nonempty_np & in_top_np, " ")]
+    out["top_text"] = top
+    out["boundary_score"] = [boundary_score(t)[0] for t in top]
     out["clean_text"] = _grouped_join(keep_np, "\n")
 
     # spans ride as two parallel int arrays — the Arrow/cache-compact

@@ -36,6 +36,7 @@ from decimal import Decimal
 from typing import Optional
 
 from .classify import (
+    BOUNDARY_THRESHOLD,
     boundary_score,
     classify_document,
     detect_currency,
@@ -46,8 +47,6 @@ from .customer import extract_customer_info
 from .dates import DEFAULT_TODAY
 from .layout import tokenize_turn, turn_view
 from .segment_extract import analyse_segment
-
-BOUNDARY_THRESHOLD = 0.8
 
 
 def segment_index_per_turn(top_texts: list[str]) -> list[int]:

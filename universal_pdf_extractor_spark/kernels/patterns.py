@@ -9,10 +9,13 @@ All pattern lists mirror the reference vocabularies exactly:
 - segmenter signal groups:        app/pipeline/segmenter.py:23-46
 - customer-info regexes:          app/pipeline/orchestrator.py:56-76
 
-Each list also gets a single combined alternation so the Spark side
-can evaluate it JVM-side with one ``rlike`` (boolean semantics of
-"any pattern matches" == one alternation matches).  The patterns are
-kept Java-regex compatible (no Python-only constructs).
+The pipeline stages evaluate these lists only through the kernels,
+in Python ``re``.  Some lists also get a single combined alternation
+(boolean semantics of "any pattern matches" == one alternation
+matches): the boilerplate pair drives the RE2 fast path of
+``is_summary_row_batch``, and ``entry_queries`` embeds the boilerplate
+and segmenter alternations in its oracle SQL and diagnostic queries,
+so those are kept free of Python-only constructs.
 """
 
 from __future__ import annotations
@@ -160,81 +163,6 @@ CUSTOMER_BOILERPLATE_PATTERN = (
 )
 
 
-# Mandatory literal per classifier/provider pattern: if the literal is
-# absent from the (lowered) text, the regex cannot match, so the Spark
-# stage guards each rlike with a cheap contains() prefilter.  Literals
-# are hand-checked substrings required by every alternative of the
-# pattern; patterns without a safe literal map to None (always probe).
-PATTERN_LITERALS: dict[str, str | None] = {
-    r"hire\s+purchase": "hire",
-    r"conditional\s+sale": "conditional",
-    # literals must be single words: \s+ in the pattern can match runs
-    # of spaces or newlines that a multi-word contains() would miss
-    r"personal\s+contract\s+(purchase|plan|hire)": "contract",
-    r"\bpcp\b": "pcp",
-    r"\bhp\b(?!\s*(sauce|printer))": "hp",
-    r"finance\s+agreement": "finance",
-    r"vehicle\s+registration": "vehicle",
-    r"settlement\s+figure": "settlement",
-    r"balloon\s+payment": "balloon",
-    r"guaranteed\s+minimum\s+future\s+value": "guaranteed",
-    r"optional\s+final\s+payment": "optional",
-    r"total\s+amount\s+payable": "payable",
-    r"annual\s+percentage\s+rate": "annual",
-    r"\bapr\b\s*[\d%]": "apr",
-    r"motor\s+finance": "motor",
-    r"vehicle\s+finance": "vehicle",
-    r"car\s+finance": "finance",
-    r"bank\s+statement": "statement",
-    r"current\s+account": "current",
-    r"savings\s+account": "savings",
-    r"sort\s+code": "sort",
-    r"account\s+number": "account",
-    r"direct\s+debit": "direct",
-    r"standing\s+order": "standing",
-    r"faster\s+payment": "faster",
-    r"\bbacs\b": "bacs",
-    r"\bchaps\b": "chaps",
-    r"overdraft": "overdraft",
-    r"brought\s+forward": "brought",
-    r"carried\s+forward": "carried",
-    r"opening\s+balance": "opening",
-    r"closing\s+balance": "closing",
-}
-
-# every provider pattern either names the provider or mentions a sort
-# code; providers themselves are literals
-PROVIDER_LITERALS: dict[str, str | None] = {
-    r"barclays": "barclays", r"barclays\s+bank": "barclays",
-    r"hsbc": "hsbc", r"hsbc\s+uk": "hsbc",
-    r"lloyds": "lloyds", r"lloyds\s+bank": "lloyds",
-    r"lloyds\s+banking\s+group": "lloyds",
-    r"natwest": "natwest", r"national\s+westminster": "national",
-    r"\brbs\b": "rbs", r"royal\s+bank\s+of\s+scotland": "royal",
-    r"santander": "santander", r"halifax": "halifax",
-    r"nationwide": "nationwide", r"nationwide\s+building\s+society": "nationwide",
-    r"\btsb\b": "tsb", r"tsb\s+bank": "tsb",
-    r"metro\s+bank": "metro",
-    r"monzo": "monzo", r"monzo\s+bank": "monzo",
-    r"starling": "starling", r"starling\s+bank": "starling",
-    r"revolut": "revolut",
-    r"allied\s+irish": "allied", r"\baib\b": "aib",
-    r"bank\s+of\s+ireland": "ireland", r"\bboi\b": "boi",
-    r"clydesdale": "clydesdale", r"virgin\s+money": "virgin",
-    r"co[\-\s]?operative\s+bank": "bank",
-    r"the\s+co[\-\s]?op\s+bank": "bank",
-}
-
-
-def pattern_literal(pattern: str) -> str | None:
-    """Best-effort mandatory literal for a pattern (None = no guard)."""
-    if pattern in PATTERN_LITERALS:
-        return PATTERN_LITERALS[pattern]
-    if pattern in PROVIDER_LITERALS:
-        return PROVIDER_LITERALS[pattern]
-    return None
-
-
 def _noncapturing(pattern: str) -> str:
     """Rewrite capturing groups to non-capturing (boolean use only).
 
@@ -254,7 +182,6 @@ SUMMARY_ROW_RLIKE = combine(SUMMARY_ROW_PATTERNS)
 STATEMENT_PERIOD_RLIKE = combine(STATEMENT_PERIOD_PATTERNS)
 OPENING_BALANCE_RLIKE = combine(OPENING_BALANCE_PATTERNS)
 ACCOUNT_HEADER_RLIKE = combine(ACCOUNT_HEADER_PATTERNS)
-PAGE_NUMBER_RLIKE = combine(PAGE_NUMBER_PATTERNS)
 
 _BALANCE_MARKER_RE = re.compile(BALANCE_MARKER_RLIKE)
 _SUMMARY_ROW_RE = re.compile(SUMMARY_ROW_RLIKE)

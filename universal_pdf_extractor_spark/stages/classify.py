@@ -1,97 +1,75 @@
-"""Stage 3 — conversation-level classification (native regex folds).
+"""Stage 3 — conversation-level classification (one Arrow UDF).
 
 Parity with the integrated reference path (orchestrator.py:316-345):
 classification, provider detection and customer-info extraction all
 run over ONE combined string — '\\n'.join of the non-empty per-turn
 raw_texts in turn order.
 
-- doc classifier (doc_classifier.py:62-105): per-keyword weighted
-  additions chained in pattern order (fp-order parity), capped at
-  1.0, argmax with a 0.3 floor;
-- provider detector (provider_detector.py:99-127): per-provider match
-  counts * 0.4 capped at 1.0; best score wins, first-seen provider
-  wins ties (greatest over (score, -order, name) structs);
-- customer info (orchestrator.py:79-146): postcode anchor + walk-back
-  block — a sequential scan, so it stays in a small pandas UDF over
-  the one-row-per-conversation frame.
+One scalar pandas UDF over that string makes, per conversation, the
+same four kernel calls as kernels/oracle.process_conversation:
 
-The groupBy(conv_id) reuses the segment stage's hash exchange when
-chained after it; classification itself adds no UDF over turn rows.
+- classify_document (doc_classifier.py:62-105): per-keyword weighted
+  additions chained in pattern order, capped at 1.0, argmax with a
+  0.3 floor;
+- detect_provider (provider_detector.py:99-127): per-provider match
+  counts * 0.4 capped at 1.0; best score wins, first-seen provider
+  wins ties;
+- detect_currency: most frequent currency marker, GBP default;
+- extract_customer_info (orchestrator.py:79-146): postcode anchor +
+  walk-back block over the first 50 lines.
+
+So the stage has Python `re` semantics (Unicode `\\d`, `\\s` and
+case folding), the reference's, with no second regex engine to keep
+in step.  The groupBy(conv_id) reuses the segment stage's hash
+exchange when chained after it.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..kernels.classify import (
-    BANK_STATEMENT_WEIGHT,
-    CLASSIFY_FLOOR,
-    CURRENCY_PATTERN_STRINGS,
-    MOTOR_FINANCE_WEIGHT,
-    PROVIDER_MATCH_WEIGHT,
+    classify_document,
+    detect_currency,
+    detect_provider,
 )
 from ..kernels.customer import extract_customer_info
-from ..kernels.patterns import (
-    BANK_STATEMENT_KEYWORDS,
-    MOTOR_FINANCE_KEYWORDS,
-    PROVIDER_PATTERNS,
-    _noncapturing,
-    pattern_literal,
-)
 
-_CUSTOMER_TYPE = StructType([
+_CLASSIFY_TYPE = StructType([
+    StructField("doc_family", StringType(), False),
+    StructField("doc_family_confidence", DoubleType(), False),
+    StructField("provider", StringType(), True),
+    StructField("provider_confidence", DoubleType(), True),
+    StructField("currency", StringType(), False),
     StructField("account_holder_name", StringType(), True),
     StructField("account_holder_address", StringType(), True),
     StructField("account_holder_postcode", StringType(), True),
 ])
 
 
-@pandas_udf(_CUSTOMER_TYPE)
-def _customer_udf(conv_text: pd.Series) -> pd.DataFrame:
-    rows = [extract_customer_info(t or "") for t in conv_text]
-    return pd.DataFrame(rows, index=conv_text.index)
+def _classify_one(text: str) -> dict:
+    family = classify_document([text])
+    provider = detect_provider([text])
+    return {
+        "doc_family": family["doc_family"],
+        "doc_family_confidence": family["confidence"],
+        "provider": provider["provider_name"],
+        # null when no provider matched, as in the SQL oracle
+        "provider_confidence": (provider["confidence"]
+                                if provider["provider_name"] else None),
+        "currency": detect_currency(text),
+        **extract_customer_info(text),
+    }
 
 
-def _guarded_match(text_col: Column, pattern: str) -> Column:
-    """rlike guarded by a cheap mandatory-literal contains() prefilter.
-
-    Semantically identical to a bare rlike: the literal is required by
-    every alternative of the pattern, so contains()==false implies the
-    regex cannot match; contains() is a fast JVM indexOf over text the
-    regex engine would otherwise scan position-by-position."""
-    lit = pattern_literal(pattern)
-    probe = text_col.rlike(_noncapturing(pattern))
-    if lit is None:
-        return probe
-    return text_col.contains(lit) & probe
-
-
-def _keyword_score(text_col: Column, patterns: list[str], weight: float) -> Column:
-    """Chained weighted additions in pattern order, capped at 1.0."""
-    score = F.lit(0.0)
-    for p in patterns:
-        score = score + F.when(_guarded_match(text_col, p), F.lit(weight)).otherwise(F.lit(0.0))
-    return F.least(score, F.lit(1.0))
-
-
-def _provider_best(text_col: Column) -> Column:
-    """greatest((score, -order, name)) -> first-seen wins ties."""
-    candidates = []
-    for order, (provider, patterns) in enumerate(PROVIDER_PATTERNS.items()):
-        matches = sum(
-            (F.when(_guarded_match(text_col, p), F.lit(1)).otherwise(F.lit(0))
-             for p in patterns),
-            start=F.lit(0),
-        )
-        score = F.least(matches.cast("double") * F.lit(PROVIDER_MATCH_WEIGHT), F.lit(1.0))
-        candidates.append(F.struct(score.alias("score"),
-                                   F.lit(-order).alias("neg_order"),
-                                   F.lit(provider).alias("name")))
-    return F.greatest(*candidates)
+@pandas_udf(_CLASSIFY_TYPE)
+def _classify_udf(conv_text: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame([_classify_one(t) for t in conv_text],
+                        index=conv_text.index)
 
 
 # Bounded classification scan: the reference classifies over a whole
@@ -143,62 +121,10 @@ def classify_stage(turns: DataFrame, extra_aggs: tuple = (),
                    extra_cols: tuple = ()) -> DataFrame:
     """turns -> one row per conversation with family/provider/customer
     (+ any ``extra_aggs`` passed through as ``extra_cols``)."""
-    # materialize the lowered text once: ~70 rlike probes reference it,
-    # and Catalyst does not CSE lower() across all of them
     conv = conversation_text(turns, extra_aggs=extra_aggs) \
-        .withColumn("_lowered", F.lower(F.col("conv_text")))
-    lowered = F.col("_lowered")
-
-    mf = _keyword_score(lowered, MOTOR_FINANCE_KEYWORDS, MOTOR_FINANCE_WEIGHT)
-    bs = _keyword_score(lowered, BANK_STATEMENT_KEYWORDS, BANK_STATEMENT_WEIGHT)
-
-    conv = conv.withColumn("_mf", mf).withColumn("_bs", bs)
-    conv = conv.withColumn(
-        "doc_family",
-        F.when((F.col("_bs") > F.col("_mf")) & (F.col("_bs") >= CLASSIFY_FLOOR),
-               F.lit("BANK_STATEMENT"))
-         .when((F.col("_mf") > F.col("_bs")) & (F.col("_mf") >= CLASSIFY_FLOOR),
-               F.lit("MOTOR_FINANCE"))
-         .otherwise(F.lit("UNKNOWN")),
-    ).withColumn(
-        "doc_family_confidence",
-        F.when(F.col("doc_family") == "BANK_STATEMENT", F.col("_bs"))
-         .when(F.col("doc_family") == "MOTOR_FINANCE", F.col("_mf"))
-         .otherwise(F.greatest(F.col("_bs"), F.col("_mf"))),
-    )
-
-    best = _provider_best(lowered)
-    conv = conv.withColumn("_best", best).withColumn(
-        "provider",
-        F.when(F.col("_best.score") > 0, F.col("_best.name")),
-    ).withColumn(
-        "provider_confidence",
-        F.when(F.col("_best.score") > 0, F.col("_best.score")),
-    )
-
-    # currency = most frequent marker, GBP default (detect_currency);
-    # greatest((count, -order, name)) gives the kernel's first-max rule
-    ccy_candidates = [
-        F.struct(F.regexp_count(lowered, F.lit(pat)).alias("n"),
-                 F.lit(-order).alias("neg_order"),
-                 F.lit(ccy).alias("name"))
-        for order, (ccy, pat) in enumerate(CURRENCY_PATTERN_STRINGS)
-    ]
-    best_ccy = F.greatest(*ccy_candidates)
-    conv = conv.withColumn(
-        "currency",
-        F.when(best_ccy["n"] > 0, best_ccy["name"]).otherwise(F.lit("GBP")))
-
-    # customer info only reads the first 50 lines (orchestrator.py:94-99);
-    # slice JVM-side so the UDF ships ~2KB per conversation, not the
-    # whole text — the kernel re-slices identically, so parity holds
-    head_text = F.array_join(F.slice(F.split(F.col("conv_text"), "\n"), 1, 50), "\n")
-    conv = conv.withColumn("_cust", _customer_udf(head_text))
+        .withColumn("_cls", _classify_udf(F.col("conv_text")))
     return conv.select(
-        "conv_id", "n_turns", "doc_family", "doc_family_confidence",
-        "provider", "provider_confidence", "currency",
-        F.col("_cust.account_holder_name").alias("account_holder_name"),
-        F.col("_cust.account_holder_address").alias("account_holder_address"),
-        F.col("_cust.account_holder_postcode").alias("account_holder_postcode"),
+        "conv_id", "n_turns",
+        *(F.col(f"_cls.{f.name}").alias(f.name) for f in _CLASSIFY_TYPE.fields),
         *extra_cols,
     )

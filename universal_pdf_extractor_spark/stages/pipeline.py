@@ -1,12 +1,14 @@
 """End-to-end pipeline assembly.
 
     transcripts
-      -> tokenize_stage      (no shuffle; Arrow-batched layout kernel)
-      -> segment_stage       (native rlike + window; shuffle #1 on conv_id)
+      -> tokenize_stage      (no shuffle; Arrow-batched layout kernel,
+                              boundary score included)
+      -> segment_stage       (one window; shuffle #1 on conv_id)
       -> extract_combined_stage (mapInPandas over the window's
                               layout, records + diagnostics in one
                               pass; REUSES the conv_id exchange)
-      -> classify_stage      (groupBy conv_id; reuses the exchange)
+      -> classify_stage      (groupBy conv_id, reusing the exchange,
+                              then one Arrow UDF over the joined text)
       -> conversations_table (agg over the small records frame)
 
 Outputs: turns (north-rule per-turn main content), records
@@ -64,9 +66,6 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     # two exchanges instead of one.
     turns = tokenize_stage(transcripts)
     turns_seg = segment_stage(turns)
-    # top_text is only consumed by the boundary score above — keep the
-    # cached/downstream frame free of it
-    turns_seg = turns_seg.drop("top_text")
     if persist:
         turns_seg = turns_seg.persist(StorageLevel.MEMORY_AND_DISK)
 

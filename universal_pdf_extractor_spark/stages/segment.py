@@ -1,4 +1,4 @@
-"""Stage 2 — segment-boundary detection (native regex + one window).
+"""Stage 2 — segment-boundary detection (one window).
 
 Parity with app/pipeline/segmenter.py:49-96: per turn, the top-15%
 band text is scored 1.0 per strong signal group (statement period /
@@ -9,12 +9,11 @@ the reference's boundary->range conversion (segmenter.py:99-119)
 expressed as a cumulative-sum window instead of a range join
 (SURVEY.md §2.8 J2).
 
-Everything is JVM-side: the strong/moderate signals are single
-`rlike` alternations over the (already lowered) top_text, the fp
-accumulation order of the score matches the reference's
-(+period, +opening, +account, +page) chain exactly, and the only
-shuffle is the hash exchange on conv_id — which the downstream
-per-conversation grouped stages reuse.
+The score itself arrives with the turn: the tokenize stage's Arrow
+UDF computes it with kernels.classify.boundary_score, in the same
+pass that builds the top-band text.  This stage only adds the window,
+whose hash exchange on conv_id the downstream per-conversation
+grouped stages reuse.
 """
 
 from __future__ import annotations
@@ -22,35 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..kernels.patterns import (
-    ACCOUNT_HEADER_RLIKE,
-    OPENING_BALANCE_RLIKE,
-    PAGE_NUMBER_RLIKE,
-    STATEMENT_PERIOD_RLIKE,
-)
-
-BOUNDARY_THRESHOLD = 0.8
-
-
-def boundary_score_col(top_text_col):
-    """Chained additions in the reference's signal order."""
-    t = top_text_col
-    return (
-        F.when(t.rlike(STATEMENT_PERIOD_RLIKE), F.lit(1.0)).otherwise(F.lit(0.0))
-        + F.when(t.rlike(OPENING_BALANCE_RLIKE), F.lit(1.0)).otherwise(F.lit(0.0))
-        + F.when(t.rlike(ACCOUNT_HEADER_RLIKE), F.lit(1.0)).otherwise(F.lit(0.0))
-        + F.when(t.rlike(PAGE_NUMBER_RLIKE), F.lit(0.4)).otherwise(F.lit(0.0))
-    )
+from ..kernels.classify import BOUNDARY_THRESHOLD
 
 
 def segment_stage(turns: DataFrame) -> DataFrame:
-    """turns -> + (boundary_score, is_boundary, boundary_confidence,
-    segment_index)."""
+    """turns (with boundary_score) -> + (is_boundary,
+    boundary_confidence, segment_index)."""
     w_order = Window.partitionBy("conv_id").orderBy("turn_idx")
     w_running = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-    df = turns.withColumn("boundary_score", boundary_score_col(F.col("top_text")))
-    df = df.withColumn("_pos", F.row_number().over(w_order))
+    df = turns.withColumn("_pos", F.row_number().over(w_order))
     df = df.withColumn(
         "is_boundary",
         (F.col("_pos") == 1) | (F.col("boundary_score") >= F.lit(BOUNDARY_THRESHOLD)),

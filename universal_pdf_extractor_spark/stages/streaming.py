@@ -7,8 +7,10 @@ scoring — is stateless per row, so the SAME stage functions run
 unchanged under ``readStream``:
 
     stream_turns: file-stream of transcript parquet -> per-turn
-        main-content rows, append mode (exactly the batch tokenize
-        stage + native boundary score; no state store needed).
+        main-content rows with their boundary score, append mode
+        (exactly the batch tokenize stage; no state store needed).
+    stream_segment_assignment: the batch segment window's running
+        boundary count, carried across micro-batches in GroupState.
     stream_conversation_activity: watermarked session windows over
         turn timestamps -> turns-per-conversation-session counts
         (late data beyond the watermark is dropped, the streaming
@@ -27,8 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernels.classify import BOUNDARY_THRESHOLD
 from ..schemas import TRANSCRIPTS_SCHEMA
-from .segment import boundary_score_col
 from .tokenize import tokenize_stage
 
 
@@ -38,9 +40,7 @@ def stream_turns(spark: SparkSession, input_path: str,
     stream = (spark.readStream.schema(TRANSCRIPTS_SCHEMA)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(input_path))
-    turns = tokenize_stage(stream)
-    return turns.withColumn("boundary_score", boundary_score_col(F.col("top_text"))) \
-                .drop("payload")
+    return tokenize_stage(stream).drop("payload")
 
 
 SEG_STATE_SCHEMA = StructType([
@@ -110,39 +110,16 @@ def stream_segment_assignment(spark: SparkSession, input_path: str,
     assignment (the batch cumsum window re-expressed over GroupState).
 
     Boundary semantics match segment_stage exactly: first turn of a
-    conversation, or any strong signal group matching in the top band
-    (score >= 0.8 <=> >= one 1.0 group).
+    conversation, or a boundary score >= 0.8 from the same tokenize
+    stage (a page-1 reset alone scores 0.4, so this is "a strong
+    signal group matched").
     """
-    from ..kernels.layout import TOP_REGION_LINES
-    from ..kernels.patterns import (
-        ACCOUNT_HEADER_RLIKE,
-        OPENING_BALANCE_RLIKE,
-        STATEMENT_PERIOD_RLIKE,
-    )
-    strong = (f"(?:{STATEMENT_PERIOD_RLIKE})|(?:{OPENING_BALANCE_RLIKE})"
-              f"|(?:{ACCOUNT_HEADER_RLIKE})")
     stream = (spark.readStream.schema(TRANSCRIPTS_SCHEMA)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(input_path))
-    # native top-band probe: only the boolean strong-signal matters
-    # here, so skip the full Arrow view UDF (raw/clean text, spans)
-    # and build top_text with column expressions — the same
-    # construction as layout.turn_view: whitespace-normalized
-    # non-empty lines among the first TOP_REGION_LINES original
-    # lines, ' '-joined, lowered (the transcripts oracle SQL derives
-    # top_text identically; equality with the UDF path is pinned by
-    # tests/test_streaming.py)
-    text_ok = F.col("text").isNotNull() & (F.col("text") != "")
-    tool_ok = F.col("tool").isNotNull() & (F.col("tool") != "")
-    payload = F.when(text_ok, F.col("text")) \
-               .when(tool_ok, F.col("tool")).otherwise(F.lit(""))
-    top_text = F.lower(F.array_join(F.filter(
-        F.transform(F.slice(F.split(payload, "\n"), 1, TOP_REGION_LINES),
-                    lambda l: F.trim(F.regexp_replace(l, r"\s+", " "))),
-        lambda l: l != ""), " "))
-    turns = stream.select(
+    turns = tokenize_stage(stream).select(
         "conv_id", "turn_idx",
-        top_text.rlike(strong).alias("strong_signal"))
+        (F.col("boundary_score") >= F.lit(BOUNDARY_THRESHOLD)).alias("strong_signal"))
     return turns.groupBy("conv_id").applyInPandasWithState(
         _assign_segments_stateful,
         outputStructType=SEG_OUT_SCHEMA,

@@ -4,7 +4,9 @@ Maps each transcript turn through the layout kernel
 (kernels/layout.py) with ONE Arrow round trip: a struct-returning
 scalar pandas UDF computes raw_text (reading-order reconstruction),
 clean_text + spans (boilerplate strip, the north-rule primary
-output), top_text (segmenter band) and token/line counts.
+output), the segment-boundary score of the top band (the
+kernels.classify scorer, so Python `re` semantics) and token/line
+counts.  The lowered top-band text itself stays inside the UDF.
 
 Engine selection mirrors the reference's text-layer probe
 (app/engines/pdfplumber_engine.py:169-185 routing,
@@ -25,6 +27,7 @@ from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
+    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -35,12 +38,12 @@ from ..kernels.layout import TOOL_TOKEN_CONFIDENCE, turn_view_batch
 
 VIEW_TYPE = StructType([
     StructField("raw_text", StringType(), False),
-    StructField("top_text", StringType(), False),
     StructField("clean_text", StringType(), False),
     StructField("span_starts", ArrayType(IntegerType()), False),
     StructField("span_ends", ArrayType(IntegerType()), False),
     StructField("n_lines", IntegerType(), False),
     StructField("n_tokens", IntegerType(), False),
+    StructField("boundary_score", DoubleType(), False),
 ])
 
 
@@ -161,12 +164,12 @@ def tokenize_stage(transcripts: DataFrame) -> DataFrame:
     return df.select(
         "conv_id", "turn_idx", "role", "ts", "extraction_path", "payload",
         F.col("view.raw_text").alias("raw_text"),
-        F.col("view.top_text").alias("top_text"),
         F.col("view.clean_text").alias("clean_text"),
         F.col("view.span_starts").alias("span_starts"),
         F.col("view.span_ends").alias("span_ends"),
         F.col("view.n_lines").alias("n_lines"),
         F.col("view.n_tokens").alias("n_tokens"),
+        F.col("view.boundary_score").alias("boundary_score"),
         # PageMetrics analogue (contracts.py:67-80): text-path tokens
         # carry fixed 0.95 (pdfplumber_engine.py:125,154); TOOL-path
         # turns carry the OCR-analogue tier 0.88 (see kernels.layout.
