@@ -18,6 +18,7 @@ from universal_pdf_extractor_spark.io.manifest import (
     manifest_path,
     run_history,
     run_with_resume,
+    table_digest,
 )
 from universal_pdf_extractor_spark.kernels.segment_extract import FALLBACK_SOURCES
 from universal_pdf_extractor_spark.schemas import TRANSCRIPTS_SCHEMA
@@ -30,6 +31,11 @@ TABLES = ("turns", "records", "segments", "conversations", "detected_tables")
 # input count, two groupBy collects for the engine events, and a
 # count+checksum job per table that recomputed it
 JOBS_PER_GROUP_RECOMPUTED = 32
+# Spark jobs one group of this corpus runs now that every figure is
+# observed on the writes and the segments table is read off the
+# extraction frame (12 while segments took two aggregates and a join).
+# A change here is a change in per-group JVM work
+JOBS_PER_GROUP = 10
 
 
 @pytest.fixture(scope="module")
@@ -136,15 +142,14 @@ def test_group_runs_fewer_jobs_than_recomputing(one_group):
     # the manifest's figures ride on the write jobs: no table is
     # computed a second time for its digest or its engine counts
     assert one_group[2] < JOBS_PER_GROUP_RECOMPUTED
+    assert one_group[2] == JOBS_PER_GROUP
 
 
 def test_observed_metrics_match_recompute(spark, corpus, one_group):
     out, m, _ = one_group
     for table in TABLES:
         df = spark.read.parquet(os.path.join(out, table, "bucket_group=0"))
-        h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
-        row = df.agg(F.count(F.lit(1)).alias("n"),
-                     F.coalesce(F.bit_xor(h), F.lit(0)).alias("x")).first()
+        row = df.agg(F.count(F.lit(1)).alias("n"), table_digest(df).alias("x")).first()
         assert m["outputs"][table] == {"rows": row["n"], "xor64": row["x"]}, table
 
     turns = spark.read.parquet(os.path.join(out, "turns", "bucket_group=0"))

@@ -312,3 +312,84 @@ def test_classify_char_cap_bounds_conversation_text(spark):
     assert full.startswith(capped) and len(capped) < len(full)
     assert capped.endswith("x" * 50)      # whole turns only, in order
     assert capped.count("turn") == 3      # 3 x ~59 chars fit under 200
+
+
+def _segments_reference(turns_seg, records_stage):
+    """The segments table as it was defined before the extraction pass
+    emitted it: segment turn ranges from a groupBy over the turns, left
+    joined to a per-segment aggregate of the records."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    ranges = turns_seg.groupBy("conv_id", "segment_index").agg(
+        F.min("turn_idx").cast("int").alias("start_turn"),
+        F.max("turn_idx").cast("int").alias("end_turn"))
+    rec_agg = records_stage.groupBy("conv_id", "segment_index").agg(
+        F.min_by("segment_opening_balance", "row_index").alias("opening_balance"),
+        F.min_by("segment_closing_balance", "row_index").alias("closing_balance"),
+        F.count(F.lit(1)).cast("int").alias("n_records"))
+    return (ranges.join(rec_agg, ["conv_id", "segment_index"], "left")
+            .withColumn("n_records", F.coalesce(F.col("n_records"), F.lit(0)).cast("int"))
+            .select("conv_id", "segment_index", "start_turn", "end_turn",
+                    "opening_balance", "closing_balance", "n_records"))
+
+
+def _edge_conversations() -> pd.DataFrame:
+    """A statement framed by EMPTY turns, and a chatter-only conversation
+    whose one segment yields no records."""
+    import numpy as np
+
+    lines = [
+        "Barclays Bank PLC",
+        f"{'Date':<13} {'Description':<40}{'Amount':>13}{'Balance':>14}",
+        f"{'':<13} {'Opening balance':<40}{'':>13}{'1000.00':>14}",
+        f"{'01/02/2024':<13} {'TESCO STORES':<40}{'10.00':>13}{'990.00':>14}",
+        f"{'02/02/2024':<13} {'COSTA COFFEE':<40}{'5.00':>13}{'985.00':>14}",
+        f"{'':<13} {'Closing balance':<40}{'':>13}{'985.00':>14}",
+    ]
+    texts = {"conv_framed": ["", "\n".join(lines), ""],
+             "conv_chatter": ["thanks, talk soon"]}
+    pdf = pd.DataFrame([
+        {"conv_id": conv_id, "turn_idx": t, "role": "user", "text": text,
+         "tool": None, "ts": pd.Timestamp("2024-01-01")}
+        for conv_id, turn_texts in texts.items() for t, text in enumerate(turn_texts)])
+    pdf["turn_idx"] = pdf["turn_idx"].astype(np.int32)
+    return pdf
+
+
+@pytest.mark.parametrize("split_segments", [False, True])
+def test_segments_equal_groupby_join_reference(spark, split_segments):
+    """The segments table read off the extraction pass's diag rows equals
+    the groupBy + left join definition, value for value and type for
+    type, on both extraction paths, including segments with no records
+    and segments whose first or last turn is EMPTY."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    from universal_pdf_extractor_spark.stages.extract import RECORD_COLUMNS
+
+    pdf = pd.concat([generate_transcripts(N_CONVS), _edge_conversations()],
+                    ignore_index=True)
+    out = run_pipeline(spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA),
+                       persist=True, split_segments=split_segments)
+    try:
+        records_stage = out["_combined"].where(F.col("row_type") == "record") \
+                                        .select(*RECORD_COLUMNS)
+        want = _segments_reference(out["_turns_seg"], records_stage)
+        got = out["segments"]
+        assert [(f.name, f.dataType) for f in got.schema] == \
+            [(f.name, f.dataType) for f in want.schema]
+
+        def key(r):
+            return r["conv_id"], r["segment_index"]
+        got_rows, want_rows = sorted(got.collect(), key=key), sorted(want.collect(), key=key)
+        assert got_rows == want_rows
+
+        turns = out["turns"].select("conv_id", "turn_idx", "segment_index",
+                                    "extraction_path").toPandas()
+        ends = turns.sort_values("turn_idx").groupby(["conv_id", "segment_index"]) \
+                    ["extraction_path"].agg(["first", "last"])
+        assert ((ends["first"] == "EMPTY") | (ends["last"] == "EMPTY")).any()
+        assert any(r["n_records"] == 0 for r in got_rows)
+        assert any(r["n_records"] > 0 for r in got_rows)
+    finally:
+        for k in ("_turns_seg", "_combined"):
+            out[k].unpersist()

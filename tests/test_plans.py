@@ -9,7 +9,9 @@ cannot silently regress them:
 - column pruning reaches the parquet scan (a narrow projection reads
   only the needed transcript columns — `text` excluded when unused);
 - every generated method of the conversations plan stays small enough
-  for HotSpot to JIT-compile it.
+  for HotSpot to JIT-compile it;
+- the segments table is a projection of the cached extraction frame,
+  with no join or aggregate of its own.
 """
 
 from __future__ import annotations
@@ -78,6 +80,36 @@ def test_split_segments_grouping_is_equivalent(transcripts):
     assert plan.count("Exchange") == 2
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def _node_names(plan) -> list[str]:
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _node_names(children.apply(i))
+    return names
+
+
+def test_segments_read_only_the_cached_extraction_frame(spark, transcripts):
+    """With persist=True the segments table is a filter and projection
+    of the persisted combined frame: no join, no aggregate, and no read
+    of anything else (the turns frame included)."""
+    from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
+
+    out = run_pipeline(transcripts, persist=True)
+    try:
+        qe = out["segments"]._jdf.queryExecution()
+        names = _node_names(qe.sparkPlan())
+        assert not [n for n in names if "Join" in n or "Aggregate" in n], names
+        assert names[-1] == "InMemoryTableScan", names
+        leaves = qe.withCachedData().collectLeaves()
+        cache = spark._jsparkSession.sharedState().cacheManager() \
+            .lookupCachedData(out["_combined"]._jdf).get().cachedRepresentation()
+        assert leaves.size() == 1
+        assert leaves.apply(0).cacheBuilder().equals(cache.cacheBuilder())
+    finally:
+        for k in ("_turns_seg", "_combined"):
+            out[k].unpersist()
 
 
 # HotSpot's HugeMethodLimit: with the default -XX:+DontCompileHugeMethods

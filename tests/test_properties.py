@@ -17,10 +17,16 @@ from hypothesis import strategies as st
 
 from universal_pdf_extractor_spark.kernels.amounts import (
     is_amount_like,
+    is_amount_like_batch,
     parse_amount,
     parse_amount_batch,
 )
-from universal_pdf_extractor_spark.kernels.dates import is_date_like, parse_date
+from universal_pdf_extractor_spark.kernels.dates import (
+    is_date_like,
+    is_date_like_batch,
+    parse_date,
+    parse_date_batch,
+)
 from universal_pdf_extractor_spark.kernels.solver import (
     find_best_tolerance,
     solve_case3_balance_inference,
@@ -164,11 +170,44 @@ _datish = st.one_of(
 def test_parse_date_batch_equals_per_row(texts):
     """parse_date_batch (fast path + ladder fallback) == per-row
     parse_date on mixed valid/garbage inputs."""
-    from universal_pdf_extractor_spark.kernels.dates import parse_date_batch
-
     batch = parse_date_batch(pd.Series(texts), today=TODAY)
     for raw, got in zip(texts, batch):
         assert got == parse_date(raw, today=TODAY).parsed_date, raw
+
+
+# Python re's \d and int() accept every Unicode decimal digit, and
+# str.strip() removes \x1c-\x1f, \x85 and \xa0 as well as ASCII blanks:
+# cells rendered in those digits and padded with those characters
+# (ASCII, Arabic-Indic, full-width and Devanagari zero-to-nine runs)
+_DIGIT_SETS = tuple("".join(chr(zero + i) for i in range(10))
+                    for zero in (0x30, 0x660, 0xFF10, 0x966))
+_PAD = st.text(st.sampled_from([chr(c) for c in range(32)] + ["\x85", "\xa0", " "]),
+               max_size=3)
+_cell_body = st.one_of(
+    st.builds(lambda d, fmt: d.strftime(fmt),
+              st.dates(min_value=date(1990, 1, 1), max_value=date(2030, 12, 28)),
+              st.sampled_from(["%d/%m/%Y", "%d/%m/%y", "%d-%m-%Y", "%d %b %Y",
+                               "%d %B", "%Y-%m-%d", "%d%b%y", "%dst %b %Y"])),
+    st.builds(lambda v, fmt: fmt.format(v),
+              st.decimals(min_value=Decimal("0.01"), max_value=Decimal("99999.99"), places=2),
+              st.sampled_from(["{}", "{:,}", "({})", "{} DR", "{}CR", "-{}", "{}-",
+                               "\u00a3{}", "31/02/{}"])))
+
+
+@given(st.lists(st.builds(lambda pre, body, digits, post:
+                          pre + body.translate(str.maketrans("0123456789", digits)) + post,
+                          _PAD, _cell_body, st.sampled_from(_DIGIT_SETS), _PAD),
+                min_size=1, max_size=30))
+@settings(max_examples=80, deadline=None)
+def test_batch_kernels_equal_scalar_on_unicode_digits(cells):
+    """is_amount_like_batch, is_date_like_batch and parse_date_batch
+    equal their scalar forms on dates and amounts written in non-ASCII
+    decimal digits amid control and Unicode whitespace."""
+    s = pd.Series(cells, dtype=object)
+    assert list(is_amount_like_batch(s)) == [is_amount_like(c) for c in cells]
+    assert list(is_date_like_batch(s)) == [is_date_like(c) for c in cells]
+    assert list(parse_date_batch(s, today=TODAY)) == \
+        [parse_date(c, today=TODAY).parsed_date for c in cells]
 
 
 @given(st.sampled_from(["NaN", "nan", "Infinity", "-Infinity", "inf",

@@ -5,7 +5,9 @@ buckets (pmod(xxhash64(conv_id), n)) and processes one bucket group
 at a time: filter -> pipeline -> write outputs under
 ``<out>/<table>/bucket_group=<g>/`` -> commit a manifest JSON with
 input/output row counts, an order-insensitive XOR checksum per output
-table and per-engine row counts.  Every figure is a metric observed
+table (``table_digest``: the XOR over rows of Spark's ``xxhash64`` of
+every column's typed value, 0 for an empty table) and per-engine row
+counts.  Every figure is a metric observed
 (``DataFrame.observe``) on the write jobs, so no output is computed
 twice and nothing is read back.  A re-run skips every group whose
 manifest is already committed — exact resume, mirroring the reference's
@@ -31,7 +33,7 @@ import time
 import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.segment_extract import FALLBACK_SOURCES
@@ -39,7 +41,7 @@ from ..stages.tokenize import EXTRACTION_PATHS
 
 MANIFEST_DIR = "_manifests"
 RUNS_LOG = "runs.jsonl"
-PIPELINE_VERSION = "0.2.0"
+PIPELINE_VERSION = "0.3.0"
 
 
 def engine_versions() -> dict:
@@ -49,6 +51,15 @@ def engine_versions() -> dict:
 
 def bucket_of(conv_id_col, n_groups: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_groups))
+
+
+def table_digest(df: DataFrame) -> Column:
+    """Order-insensitive 64-bit checksum aggregate over all of ``df``'s
+    columns: ``bit_xor`` of each row's ``xxhash64`` of the typed values
+    (dates, decimals and nested arrays hash natively, no string casts),
+    0 for an empty table."""
+    return F.coalesce(F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])),
+                      F.lit(0))
 
 
 def _engine_events() -> dict:
@@ -171,12 +182,10 @@ def run_with_resume(transcripts: DataFrame,
         try:
             for name in tables:
                 df = outputs[name].withColumn("run_id", F.lit(run_id))
-                # order-insensitive 64-bit checksum over all columns
-                h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
                 engines = events.get(name, ("", {}))[1]
                 observed[name] = Observation()
                 df.observe(observed[name], F.count(F.lit(1)).alias("rows"),
-                           F.coalesce(F.bit_xor(h), F.lit(0)).alias("xor64"),
+                           table_digest(df).alias("xor64"),
                            *[F.count_if(c).alias(k) for k, c in engines.items()]) \
                   .write.mode("overwrite").parquet(
                       os.path.join(out_dir, name, f"bucket_group={g}"))

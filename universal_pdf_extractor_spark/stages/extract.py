@@ -9,11 +9,13 @@ ONE ``mapInPandas`` that streams many whole conversations per Arrow
 batch.  Everything upstream (tokenize, boundary scoring, segment ids)
 and downstream (scoring, joins, ordering) is native.
 
-That call yields both reference surfaces at once: the `transactions`
-rows (tables.py:298-382, plus the per-segment opening/closing
-balances used to assemble the segments table without a second pass)
-and the `detected_tables` diagnostics (tables.py:252-292), in one
-row_type-discriminated frame.
+That call yields every per-segment surface at once, in one
+row_type-discriminated frame: the `transactions` rows
+(tables.py:298-382) and one diag row per segment.  The diag row holds
+the `detected_tables` diagnostics (tables.py:252-292) and the whole
+`document_segments` row (turn range, record count, opening/closing
+balances), as the reference writes both in the same per-document pass;
+``segments_table`` only selects it.
 """
 
 from __future__ import annotations
@@ -85,12 +87,20 @@ _DIAG_FIELDS = [
     StructField("column_mapping_json", StringType(), True),
 ]
 
+# the document_segments facts a diag row adds to the balances it shares
+# with the record rows; detected_tables does not select them
+_SEGMENT_FIELDS = [
+    StructField("start_turn", IntegerType(), True),
+    StructField("end_turn", IntegerType(), True),
+    StructField("n_records", IntegerType(), True),
+]
+
 COMBINED_STAGE_SCHEMA = StructType(
     [StructField("row_type", StringType(), False)]
     + [StructField(f.name, f.dataType, True) if f.name not in
        ("conv_id", "segment_index") else f
        for f in RECORDS_STAGE_SCHEMA.fields]
-    + _DIAG_FIELDS)
+    + _DIAG_FIELDS + _SEGMENT_FIELDS)
 
 _COMBINED_COLUMNS = [f.name for f in COMBINED_STAGE_SCHEMA.fields]
 RECORD_COLUMNS = [f.name for f in RECORDS_STAGE_SCHEMA.fields]
@@ -188,11 +198,23 @@ def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
                 "bbox_json": None,
                 "header_json": None,
                 "column_mapping_json": None,
+                "start_turn": None,
+                "end_turn": None,
+                "n_records": None,
             })
+        # the segment's document_segments row: its turn range covers
+        # every slim row, EMPTY turns included; balances only when the
+        # segment yielded records
+        n_records = len(result["records"])
         out_rows.append(dict(dict.fromkeys(_COMBINED_COLUMNS),
                              **_diag_row(conv_id, seg_idx,
                                          result["diagnostics"]),
-                             row_type="diag", evidence=[]))
+                             row_type="diag", evidence=[],
+                             start_turn=int(seg["turn_idx"].min()),
+                             end_turn=int(seg["turn_idx"].max()),
+                             n_records=n_records,
+                             segment_opening_balance=opening if n_records else None,
+                             segment_closing_balance=closing if n_records else None))
 
 
 def _stream_conversations(batches):
@@ -252,23 +274,12 @@ def extract_combined_stage(turns_seg: DataFrame,
     return slim.mapInPandas(_stream_conversations, schema=COMBINED_STAGE_SCHEMA)
 
 
-def segments_table(turns_seg: DataFrame, records: DataFrame) -> DataFrame:
-    """Per-segment ranges + balances (document_segments analogue)."""
-    ranges = turns_seg.groupBy("conv_id", "segment_index").agg(
-        F.min("turn_idx").cast("int").alias("start_turn"),
-        F.max("turn_idx").cast("int").alias("end_turn"),
-    )
-    # the segment markers are constant across a segment's records, but
-    # the pick is made order-explicit (min_by row_index) rather than
-    # relying on F.first()'s undefined choice
-    rec_agg = records.groupBy("conv_id", "segment_index").agg(
-        F.min_by("segment_opening_balance", "row_index").alias("opening_balance"),
-        F.min_by("segment_closing_balance", "row_index").alias("closing_balance"),
-        F.count(F.lit(1)).cast("int").alias("n_records"),
-    )
-    return (
-        ranges.join(rec_agg, ["conv_id", "segment_index"], "left")
-        .withColumn("n_records", F.coalesce(F.col("n_records"), F.lit(0)).cast("int"))
-        .select("conv_id", "segment_index", "start_turn", "end_turn",
-                "opening_balance", "closing_balance", "n_records")
-    )
+def segments_table(combined: DataFrame) -> DataFrame:
+    """Per-segment ranges + balances (document_segments analogue): the
+    diag row the extraction pass emits for each segment, so no
+    aggregate or join runs over the turns or the records."""
+    return combined.where(F.col("row_type") == "diag").select(
+        "conv_id", "segment_index", "start_turn", "end_turn",
+        F.col("segment_opening_balance").alias("opening_balance"),
+        F.col("segment_closing_balance").alias("closing_balance"),
+        "n_records")

@@ -5,14 +5,19 @@
                               boundary score included)
       -> segment_stage       (one window; shuffle #1 on conv_id)
       -> extract_combined_stage (mapInPandas over the window's
-                              layout, records + diagnostics in one
-                              pass; REUSES the conv_id exchange)
+                              layout, records + one diag row per
+                              segment in one pass; REUSES the conv_id
+                              exchange)
+      -> segments_table      (select of the diag rows: no aggregate,
+                              no join)
       -> classify_stage      (groupBy conv_id, reusing the exchange,
                               then one Arrow UDF over the joined text)
       -> conversations_table (agg over the small records frame)
 
 Outputs: turns (north-rule per-turn main content), records
 (transactions analogue), segments, conversations, detected_tables.
+The segments and detected_tables outputs are two projections of the
+same diag rows.
 
 Scale notes (10^12 turns):
 - the fat `text` column is shuffled exactly once (the conv_id
@@ -69,8 +74,8 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     if persist:
         turns_seg = turns_seg.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # ONE analyse_segment pass yields records AND per-segment
-    # diagnostics (row_type-discriminated); persisted, it feeds the
+    # ONE analyse_segment pass yields records AND one diag row per
+    # segment (row_type-discriminated); persisted, it feeds the
     # records, segments, conversations and detected_tables outputs
     # without re-running the extraction kernel per consumer
     combined = extract_combined_stage(turns_seg, split_segments=split_segments)
@@ -81,7 +86,7 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     records = records_stage.drop("segment_opening_balance",
                                  "segment_closing_balance",
                                  "segment_closing_distinct")
-    segments = segments_table(turns_seg, records_stage)
+    segments = segments_table(combined)
 
     # n_segments folds into classify's per-conversation aggregation:
     # one pass over the cached turns frame instead of two plus a join
