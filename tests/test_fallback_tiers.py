@@ -13,15 +13,12 @@ from datetime import date
 
 import pytest
 
-from universal_pdf_extractor_spark.kernels.layout import tokenize_turn
+from universal_pdf_extractor_spark.kernels.layout import segment_lines
 from universal_pdf_extractor_spark.kernels.segment_extract import analyse_segment
 
 
 def _lines(text: str) -> list[dict]:
-    _, lines = tokenize_turn(text)
-    for ln in lines:
-        ln["turn_idx"] = 0
-    return lines
+    return segment_lines([(0, text)])
 
 
 PIPE_TABLE = """Date | Description | Amount | Balance
@@ -137,14 +134,8 @@ class TestDiagnostics:
         # fixed-width statement from the corpus generator hits the
         # main histogram path with full geometry diagnostics
         from universal_pdf_extractor_spark.io.fixtures import conversation_payload
-        turns = conversation_payload(0)
-        seg_lines = []
-        for t in turns:
-            payload = t["text"] if t["text"] else (t["tool"] or "")
-            _, lns = tokenize_turn(payload)
-            for ln in lns:
-                ln["turn_idx"] = t["turn_idx"]
-                seg_lines.append(ln)
+        seg_lines = segment_lines((t["turn_idx"], t["text"] or t["tool"])
+                                  for t in conversation_payload(0))
         d = analyse_segment(seg_lines)["diagnostics"]
         assert d["engine"] == "column_histogram"
         assert d["table_type"] == "TRANSACTION_TABLE"

@@ -5,7 +5,7 @@ import pandas as pd
 from universal_pdf_extractor_spark.kernels.classify import boundary_score
 from universal_pdf_extractor_spark.kernels.layout import (
     TOP_REGION_LINES,
-    cluster_tokens_to_lines,
+    segment_lines,
     tokenize_turn,
     turn_view,
     turn_view_batch,
@@ -42,12 +42,51 @@ def test_blank_lines_skipped():
     _, lines = tokenize_turn(SAMPLE)
     assert len(lines) == 6  # blank line produces no line
     assert [ln["line_index"] for ln in lines] == list(range(6))
+    # one line per non-blank source line; distinct lines sit LINE_PITCH
+    # apart, more than the reference's 0.005 y-clustering tolerance, so
+    # its clustering would keep them apart too
+    assert [ln["text"] for ln in lines] == [
+        " ".join(raw.split()) for raw in SAMPLE.split("\n") if raw.strip()]
+    gaps = [b["y0"] - a["y0"] for a, b in zip(lines, lines[1:])]
+    assert min(gaps) > 0.005
 
 
-def test_cluster_identity_on_synthetic_coords():
-    tokens, lines = tokenize_turn(SAMPLE)
-    clustered = cluster_tokens_to_lines(tokens)
-    assert [ln["text"] for ln in clustered] == [ln["text"] for ln in lines]
+def test_segment_lines_match_tokenize_turn():
+    """segment_lines keeps tokenize_turn's lines and token offsets, tags
+    each line with its turn, and puts x at char column over the
+    segment's longest token end."""
+    turns = [
+        (3, SAMPLE),
+        (4, "narrow\n\n  chatter  turn"),      # other width, blank line
+        (5, ""),
+        (6, None),
+        (7, "café  naïve  über\n  Überweisung   12,50 €"),
+    ]
+    got = segment_lines(turns)
+
+    expected = []
+    for turn_idx, text in turns:
+        for ln in tokenize_turn(text)[1]:
+            expected.append((turn_idx, ln))
+    assert len(got) == len(expected)
+
+    def column(text: str, offset: int) -> int:
+        return offset - (text.rfind("\n", 0, offset) + 1)
+
+    texts = dict(turns)
+    width = max(column(texts[t], tok["end"])
+                for t, ln in expected for tok in ln["tokens"])
+    assert width == len("Date        Description         Paid Out   Paid In    Balance")
+    for g, (turn_idx, e) in zip(got, expected):
+        assert g["turn_idx"] == turn_idx
+        for key in ("text", "y0", "y1", "line_index"):
+            assert g[key] == e[key], key
+        assert len(g["tokens"]) == len(e["tokens"])
+        for gt, et in zip(g["tokens"], e["tokens"]):
+            assert (gt["text"], gt["start"], gt["end"]) \
+                == (et["text"], et["start"], et["end"])
+            assert gt["x0"] == column(texts[turn_idx], gt["start"]) / width
+            assert gt["x1"] == column(texts[turn_idx], gt["end"]) / width
 
 
 def test_spans_point_into_original_text():

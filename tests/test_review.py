@@ -138,13 +138,17 @@ class TestExactLadderParity:
                              dhi if i >= undated else 0.30,
                              dirhi if i >= unk else 0.40,
                              "UNKNOWN" if i < unk else "DEBIT", False,
-                             Decimal(f"{10 + i}.50"), 0))
+                             Decimal(f"{10 + i}.50"), 0,
+                             None, None, False))
         return spark.createDataFrame(
             rows, "conv_id string, direction_source string, "
                   "confidence_amount double, confidence_date double, "
                   "confidence_direction double, direction string, "
                   "balance_confirmed boolean, amount decimal(15,2), "
-                  "segment_index int")
+                  "segment_index int, "
+                  "segment_opening_balance decimal(15,2), "
+                  "segment_closing_balance decimal(15,2), "
+                  "segment_closing_distinct boolean")
 
     def test_statuses_and_gates_match_double_ladder(self, spark, record_frame):
         exact = (score_records_exact(record_frame)
@@ -157,7 +161,8 @@ class TestExactLadderParity:
             F.lit("GBP").alias("currency"),
             F.lit(None).cast("string").alias("account_holder_name"),
             F.lit(None).cast("string").alias("account_holder_address"),
-            F.lit(None).cast("string").alias("account_holder_postcode"))
+            F.lit(None).cast("string").alias("account_holder_postcode"),
+            F.lit(1).alias("n_segments"))
         prod = (conversations_table(conv_meta, record_frame)
                 .toPandas().set_index("conv_id").sort_index())
         assert list(exact.index) == list(prod.index)

@@ -12,7 +12,7 @@ from universal_pdf_extractor_spark.kernels.columns import (
     detect_columns,
 )
 from universal_pdf_extractor_spark.io.fixtures import generate_transcripts
-from universal_pdf_extractor_spark.kernels.layout import tokenize_turn, tokenize_turn_lines
+from universal_pdf_extractor_spark.kernels.layout import segment_lines, tokenize_turn
 from universal_pdf_extractor_spark.kernels.peaks import (
     find_peaks_simple,
     gaussian_smooth_1d,
@@ -202,8 +202,7 @@ def test_analyse_segment_end_to_end_case3():
     sign-based direction (positive -> CREDIT 0.90,
     orchestrator.py:761-780); the solver only fills UNKNOWN rows and
     contributes balance_confirmed (orchestrator.py:617-624)."""
-    lines = _lines()
-    result = analyse_segment(lines)
+    result = analyse_segment(segment_lines([(0, PAGE)]))
     records = result["records"]
     assert result["opening_balance"] == Decimal("1000.00")
     assert len(records) == len(_ROWS)
@@ -219,15 +218,13 @@ def test_analyse_segment_end_to_end_case3():
 def test_analyse_segment_leaves_input_lines_unchanged():
     """The line dicts belong to the caller: the once-per-line marker
     memo must live beside the analysis, not in the shared line IR."""
-    segments = [_lines()]
+    segments = [segment_lines([(0, PAGE)])]
     corpus = generate_transcripts(12)
     for _, conv in corpus.groupby("conv_id", sort=True):
-        seg = []
-        for turn_idx, text, tool in zip(conv["turn_idx"], conv["text"], conv["tool"]):
-            for ln in tokenize_turn_lines(text or tool or ""):
-                ln["turn_idx"] = int(turn_idx)
-                seg.append(ln)
-        segments.append(seg)
+        segments.append(segment_lines(
+            (turn_idx, text or tool)
+            for turn_idx, text, tool in zip(conv["turn_idx"], conv["text"],
+                                            conv["tool"])))
     n_records = 0
     for lines in segments:
         before = copy.deepcopy(lines)

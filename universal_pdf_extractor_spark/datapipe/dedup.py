@@ -92,9 +92,14 @@ def ngram_jaccard_pairs(documents: DataFrame,
     # repartition barrier: shingle construction (split + slice + join +
     # distinct over every document) is the dominant narrow stage, and
     # this subtree feeds FOUR plan branches (df counts, prefix ranking,
-    # and both verification sides).  Materializing it behind one
-    # hash(doc_id) exchange lets every branch ReusedExchange the
-    # computed arrays instead of re-deriving them from the scan.
+    # and both verification sides).  On an input with at least
+    # defaultParallelism scan partitions (``spread`` is the identity),
+    # the barrier's hash(doc_id) exchange lets every branch
+    # ReusedExchange the computed arrays instead of re-deriving them
+    # from the scan.  On a single-file input it does not: ``spread``
+    # already hash-partitioned on doc_id with the same count, Spark
+    # drops the barrier's exchange as redundant, and each branch
+    # recomputes the shingles above ``spread``'s exchange (4x).
     # ``spread`` first: a single-file input plans as ONE scan task, and
     # the shingle projection would otherwise run below the barrier on
     # one core (guide §2: the exchange must sit ABOVE the expensive
@@ -311,7 +316,11 @@ def minhash_lsh_pairs(documents: DataFrame,
     # computed array instead of inlining the md5 pipeline per extract
     # (CollapseProject), and (b) the self-join's two sides share ONE
     # signature computation via ReusedExchange instead of scanning +
-    # hashing the corpus twice
+    # hashing the corpus twice.  (b) holds when the input has at least
+    # defaultParallelism scan partitions; on a single-file input the
+    # signatures' doc_id aggregate already sits on ``spread``'s
+    # hash(doc_id) exchange of the same count, Spark drops this one as
+    # redundant, and each join side computes the signatures (2x)
     sigs = barrier(sigs, "doc_id")
 
     # band bucket key: minhash values pair-packed into BIGINTs
@@ -417,7 +426,11 @@ def simhash_near_dups(documents: DataFrame,
     verify hamming distance exactly."""
     # barrier after the fingerprint fold: the self-join's two sides and
     # the 4-way block explode all reuse ONE fingerprint computation via
-    # ReusedExchange instead of re-deriving the 60 per-bit counts
+    # ReusedExchange instead of re-deriving the 60 per-bit counts.
+    # That holds when the input has at least defaultParallelism scan
+    # partitions; on a single-file input ``spread``'s hash(doc_id)
+    # exchange of the same count makes this one redundant, Spark drops
+    # it, and each join side computes the fingerprints (2x)
     fps = barrier(simhash_fingerprints(documents, id_col, text_col),
                   "doc_id")
     blocked = fps.select(

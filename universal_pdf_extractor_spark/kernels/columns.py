@@ -19,15 +19,12 @@ import numpy as np
 from .peaks import find_peaks_simple, gaussian_smooth_1d
 
 N_BINS = 120
-MIN_COLUMN_OCCUPANCY = 0.08
-OCCUPANCY_LADDER = (MIN_COLUMN_OCCUPANCY, 0.05, 0.03)
+OCCUPANCY_LADDER = (0.08, 0.05, 0.03)
 PEAK_DISTANCE = 4
 SMOOTH_SIGMA = 1.5
 
 
-def detect_columns(lines: list[dict],
-                   min_column_occupancy: float = MIN_COLUMN_OCCUPANCY,
-                   n_bins: int = N_BINS) -> list[dict]:
+def detect_columns(lines: list[dict]) -> list[dict]:
     """Histogram/peak column detection over a segment's lines."""
     if not lines:
         return []
@@ -50,7 +47,7 @@ def detect_columns(lines: list[dict],
     if len(x_positions) < 5:
         return []
 
-    hist, bin_edges = np.histogram(np.asarray(x_positions), bins=n_bins, range=(0.0, 1.0))
+    hist, bin_edges = np.histogram(np.asarray(x_positions), bins=N_BINS, range=(0.0, 1.0))
     smoothed = gaussian_smooth_1d(hist.astype(float), sigma=SMOOTH_SIGMA)
 
     # zero-pad both edges before peak finding: scipy-style find_peaks
@@ -59,9 +56,8 @@ def detect_columns(lines: list[dict],
     # have a page margin, so their leftmost column is never edge-bin)
     padded = np.concatenate(([0.0], smoothed, [0.0]))
 
-    ladder = [min_column_occupancy] + [o for o in OCCUPANCY_LADDER[1:]]
     peaks = np.array([], dtype=np.int64)
-    for occupancy in ladder:
+    for occupancy in OCCUPANCY_LADDER:
         threshold = max(len(lines) * occupancy, 2.0)
         peaks = find_peaks_simple(padded, height=threshold, distance=PEAK_DISTANCE) - 1
         if len(peaks) >= 3:  # date, description, amount at minimum
@@ -106,25 +102,7 @@ def _assign_with_containment(token: dict, columns: list[dict]) -> tuple[int, boo
     return columns[distances.index(min(distances))]["column_index"], False
 
 
-def make_column_assigner(columns: list[dict]):
-    """Memoized token->(column, contained) lookup for one layout.
-
-    Fixed-width statement layouts repeat token x-spans across rows, so
-    the (x0, x1) -> column mapping hits the cache almost always."""
-    cache: dict[tuple, tuple[int, bool]] = {}
-
-    def assign(token: dict) -> tuple[int, bool]:
-        key = (token["x0"], token["x1"])
-        col = cache.get(key)
-        if col is None:
-            col = _assign_with_containment(token, columns)
-            cache[key] = col
-        return col
-
-    return assign
-
-
-def assign_line_to_cells(line: dict, columns: list[dict], assigner=None,
+def assign_line_to_cells(line: dict, columns: list[dict],
                          cache: dict | None = None) -> list[dict]:
     """Group a line's tokens into per-column cells.
 
@@ -136,26 +114,22 @@ def assign_line_to_cells(line: dict, columns: list[dict], assigner=None,
     envelope bbox + mean confidence (table_extractor.py:205-211) stay
     omitted: nothing downstream reads them.
 
-    ``cache`` is the (x0, x1) -> (column, contained) memo dict of
-    make_column_assigner, inlined here to skip a Python call per token
-    on the hot path; ``assigner`` remains supported for callers that
-    hold the closure.
+    ``cache`` memoizes (x0, x1) -> (column, contained) across the
+    lines of one layout: fixed-width statements repeat token x-spans
+    across rows, so the lookup hits the cache almost always.
     """
-    if cache is None and assigner is None:
-        assigner = lambda t: _assign_with_containment(t, columns)  # noqa: E731
+    if cache is None:
+        cache = {}
     cell_tokens: dict[int, list[dict]] = {}
     prev_tok = None
     prev_col = None
-    cache_get = cache.get if cache is not None else None
+    cache_get = cache.get
     for token in line["tokens"]:
-        if cache_get is not None:
-            key = (token["x0"], token["x1"])
-            hit = cache_get(key)
-            if hit is None:
-                hit = cache[key] = _assign_with_containment(token, columns)
-            col, contained = hit
-        else:
-            col, contained = assigner(token)
+        key = (token["x0"], token["x1"])
+        hit = cache_get(key)
+        if hit is None:
+            hit = cache[key] = _assign_with_containment(token, columns)
+        col, contained = hit
         # word-adjacency tie-break on the fallback path only: a token
         # whose center lies in NO column but that sits a single space
         # after its neighbour belongs to the neighbour's visual word

@@ -8,23 +8,35 @@ app/schemas/contracts.py:90-98).  In the transcripts graft a turn is
 a page: deterministic synthetic coordinates are derived from the turn
 text itself (original line number -> y, character offset -> x) so
 every downstream geometric heuristic keeps its exact thresholds.
+Each non-blank source line is one line by construction, so no
+y-clustering step exists.
+
+Two functions share the tokenization and the y-geometry:
+  - :func:`tokenize_turn`, the per-turn token IR (the reference IR the
+    vectorized ``turn_view_batch`` and ``tokens_table`` are pinned
+    against);
+  - :func:`segment_lines`, the only function that builds the lines the
+    segment analysis reads, with x decided over the whole segment.
 
 Geometry constants (all in [0,1] "page" space):
   line i (0-based, counting ORIGINAL lines incl. blanks):
       y0 = Y_START + i * LINE_PITCH,  y1 = y0 + LINE_HEIGHT
-  token at chars [a, b):  x0 = X_MARGIN + (a / W) * X_SPAN,
-                          x1 = X_MARGIN + (b / W) * X_SPAN
+  tokenize_turn, token at chars [a, b):
+      x0 = X_MARGIN + (a / W) * X_SPAN,  x1 = X_MARGIN + (b / W) * X_SPAN
       with W = max(PAGE_WIDTH_CHARS, longest line in the turn);
       the 5% margin mirrors real page margins and keeps the leftmost
       column's histogram bin off index 0, where no local maximum can
-      exist (scipy and our peak finder agree on that edge rule)
-All bbox values rounded to 6 dp like the reference engine
-(pdfplumber_engine.py:120-123).
+      exist (scipy and our peak finder agree on that edge rule);
+      bbox values rounded to 6 dp like the reference engine
+      (pdfplumber_engine.py:120-123)
+  segment_lines, token at chars [a, b):
+      x0 = a / S,  x1 = b / S  (unrounded)
+      with S = the longest token end over every turn of the segment
 
 Derived properties used downstream:
   - same-line tokens share y0 exactly; distinct lines differ by
-    LINE_PITCH (0.012) > y_tolerance (0.005) -> line clustering is
-    the identity on original lines;
+    LINE_PITCH (0.012) > the reference's y_tolerance (0.005), so its
+    line clustering would be the identity on original lines;
   - adjacent-line gap (0.004) <= 1.8 * LINE_HEIGHT (0.0144) -> the
     continuation-merge heuristic fires for adjacent lines and breaks
     across a skipped line (gap 0.016), mirroring real pages;
@@ -34,6 +46,7 @@ Derived properties used downstream:
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 from typing import Optional
 
 import numpy as np
@@ -48,7 +61,6 @@ LINE_HEIGHT = 0.008
 PAGE_WIDTH_CHARS = 100.0
 X_MARGIN = 0.05
 X_SPAN = 0.9
-Y_TOLERANCE = 0.005          # text-path line clustering tolerance
 TOP_REGION_Y = 0.15          # segmenter header-scan band
 TOP_REGION_LINES = 12        # lines with y0 < 0.15 under the constants above
 TOKEN_CONFIDENCE = 0.95      # PDF-text-path default confidence
@@ -97,7 +109,8 @@ def _page_width(text_lines: list[str]) -> float:
 def tokenize_turn(text: Optional[str]) -> tuple[list[dict], list[dict]]:
     """Turn text -> (tokens, lines) IR.
 
-    tokens: {text, x0, y0, x1, y1, confidence, line_origin, start, end}
+    tokens: {text, x0, y0, x1, y1, confidence, start, end}
+      (schemas.TOKEN_TYPE)
       where start/end are char offsets into the ORIGINAL turn text.
     lines:  {text, x0, y0, x1, y1, line_index, confidence, tokens: [...]}
       ordered by y0, text == ' '.join(token texts) per the contract.
@@ -125,16 +138,8 @@ def tokenize_turn(text: Optional[str]) -> tuple[list[dict], list[dict]]:
                 "x1": xs[b],
                 "y1": y1,
                 "confidence": TOKEN_CONFIDENCE,
-                "line_origin": i,
                 "start": offset + a,
                 "end": offset + b,
-                # line-local char columns: segment-level analysis
-                # re-normalizes geometry over a shared width so tokens
-                # from turns of different widths stay comparable (the
-                # reference's pages share one coordinate system;
-                # per-turn scaling is a transcripts artifact)
-                "col0": a,
-                "col1": b,
             }
             line_tokens.append(tok)
             tokens.append(tok)
@@ -153,91 +158,48 @@ def tokenize_turn(text: Optional[str]) -> tuple[list[dict], list[dict]]:
     return tokens, lines
 
 
-def tokenize_turn_lines(text: Optional[str]) -> list[dict]:
-    """Lean tokenizer for the segment-analysis path: lines only.
+def segment_lines(turns: Iterable[tuple[int, Optional[str]]]) -> list[dict]:
+    """The lines ``analyse_segment`` reads, built once per segment.
 
-    Emits exactly :func:`tokenize_turn`'s ``lines`` (same text, y0/y1,
-    line_index, token text/start/end/col0/col1) MINUS the fields that
-    path provably never reads before they are re-derived or at all:
-    token x0/x1 (``_rescale_segment_geometry`` re-derives every x from
-    col0/col1 over the segment-wide width as the first step of
-    ``analyse_segment``), token y0/y1/confidence/line_origin, and line
-    x0/x1/confidence.  Skipping them also skips the per-turn page-width
-    scan and the x/y memo-table lookups — about a third of the full
-    tokenizer's cost on statement-shaped turns.  Parity of the shared
-    fields is pinned by tests/test_layout.py.
+    ``turns``: the segment's (turn_idx, payload) pairs in turn order.
+    Each turn is tokenized as :func:`tokenize_turn` does (same line
+    text, y0/y1 and line_index, same token text/start/end) and each
+    line is tagged with its turn_idx.  x is segment-wide: a token's
+    x0/x1 are its char columns divided by the segment's longest token
+    end, so a char column lands at the same x in every turn of the
+    segment, as the reference's page-absolute pdfplumber coordinates
+    do (tokenize_turn's per-turn width would shift a column whenever a
+    turn of another width joins the segment).  Lines carry no x and
+    tokens no y or confidence: the segment analysis reads neither.
     """
-    if not text:
-        return []
-    raw_lines = text.split("\n")
-    y0s, y1s = _y_tables(len(raw_lines))
+    lines: list[dict] = []
+    width = 0
     finditer = _TOKEN_RE.finditer
-
-    lines: list[dict] = []
-    offset = 0
-    for i, raw in enumerate(raw_lines):
-        line_tokens = [
-            {
-                "text": m.group(0),
-                "start": offset + m.start(),
-                "end": offset + m.end(),
-                "col0": m.start(),
-                "col1": m.end(),
-            }
-            for m in finditer(raw)
-        ]
-        if line_tokens:
-            lines.append({
-                "text": " ".join(t["text"] for t in line_tokens),
-                "y0": y0s[i],
-                "y1": y1s[i],
-                "line_index": len(lines),
-                "tokens": line_tokens,
-            })
-        offset += len(raw) + 1
+    for turn_idx, text in turns:
+        if not text:
+            continue
+        turn_idx = int(turn_idx)
+        raw_lines = text.split("\n")
+        y0s, y1s = _y_tables(len(raw_lines))
+        first = len(lines)
+        offset = 0
+        for i, raw in enumerate(raw_lines):
+            # x0/x1 hold the char columns until the width is known
+            tokens = [{"text": m.group(0), "x0": m.start(), "x1": m.end(),
+                       "start": offset + m.start(), "end": offset + m.end()}
+                      for m in finditer(raw)]
+            if tokens:
+                width = max(width, tokens[-1]["x1"])
+                lines.append({"text": " ".join(t["text"] for t in tokens),
+                              "y0": y0s[i], "y1": y1s[i],
+                              "line_index": len(lines) - first,
+                              "turn_idx": turn_idx, "tokens": tokens})
+            offset += len(raw) + 1
+    for ln in lines:
+        for t in ln["tokens"]:
+            t["x0"] /= width
+            t["x1"] /= width
     return lines
-
-
-def cluster_tokens_to_lines(tokens: list[dict], y_tolerance: float = Y_TOLERANCE) -> list[dict]:
-    """Greedy y-clustering of an arbitrary token soup into lines.
-
-    Sorts by (y0, x0) and opens a new line when a token's y0 drifts
-    more than ``y_tolerance`` from the FIRST token of the current line
-    (the reference updates its comparison anchor only on line break,
-    pdfplumber_engine.py:28-46).  With synthetic coordinates this is
-    the identity on original lines; it exists so the engine also
-    handles externally-supplied token tables.
-    """
-    if not tokens:
-        return []
-    ordered = sorted(tokens, key=lambda t: (t["y0"], t["x0"]))
-    lines: list[dict] = []
-    current = [ordered[0]]
-    anchor_y = ordered[0]["y0"]
-    for tok in ordered[1:]:
-        if abs(tok["y0"] - anchor_y) <= y_tolerance:
-            current.append(tok)
-        else:
-            lines.append(_make_line(current, len(lines)))
-            current = [tok]
-            anchor_y = tok["y0"]
-    lines.append(_make_line(current, len(lines)))
-    return lines
-
-
-def _make_line(tokens: list[dict], line_index: int) -> dict:
-    ordered = sorted(tokens, key=lambda t: t["x0"])
-    return {
-        "text": " ".join(t["text"] for t in ordered),
-        "x0": min(t["x0"] for t in ordered),
-        "y0": min(t["y0"] for t in ordered),
-        "x1": max(t["x1"] for t in ordered),
-        "y1": max(t["y1"] for t in ordered),
-        "line_index": line_index,
-        "confidence": sum(t["confidence"] for t in ordered) / len(ordered),
-        "tokens": ordered,
-    }
-
 
 def turn_view(text: Optional[str]) -> dict:
     """Reference-path per-turn view via the full token IR (oracle path).

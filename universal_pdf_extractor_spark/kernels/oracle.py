@@ -5,6 +5,11 @@ the Spark pipeline is required to compute it (and as the reference
 orchestrator does per document, app/pipeline/orchestrator.py:168-432).
 The e2e equality tests compare the distributed pipeline's output
 against this oracle per (conv_id, turn_idx) — the north-rule gate.
+The oracle builds each segment's lines with the stage's own
+``layout.segment_lines``, so those tests check everything after that
+function.  A change to its geometry shows only in the golden
+files, in its parity test (tests/test_layout.py) and in a comparison
+with the previous version's outputs.
 
 Integrated-path parity notes (all mirrored by the Spark stages):
 - classification, provider detection and customer-info extraction all
@@ -45,7 +50,7 @@ from .classify import (
 )
 from .customer import extract_customer_info
 from .dates import DEFAULT_TODAY
-from .layout import tokenize_turn, turn_view
+from .layout import segment_lines, turn_view
 from .segment_extract import analyse_segment
 
 
@@ -139,20 +144,14 @@ def process_conversation(turns: list[tuple[int, Optional[str]]],
     provider = detect_provider([conv_text])
     customer = extract_customer_info(conv_text)
 
-    # per-segment extraction: lines (tagged with turn_idx) in reading order
+    # per-segment extraction over the same lines the stage builds
     records = []
     segments = []
     n_segments = seg_per_turn[-1] + 1 if seg_per_turn else 0
     for seg_idx in range(n_segments):
-        seg_lines = []
-        for (t_idx, text), s in zip(turns, seg_per_turn):
-            if s != seg_idx:
-                continue
-            _, lines = tokenize_turn(text)
-            for ln in lines:
-                ln["turn_idx"] = t_idx
-                seg_lines.append(ln)
-        result = analyse_segment(seg_lines, today=today)
+        seg_turns = [turn for turn, s in zip(turns, seg_per_turn)
+                     if s == seg_idx]
+        result = analyse_segment(segment_lines(seg_turns), today=today)
         segments.append({
             "segment_index": seg_idx,
             "opening_balance": result["opening_balance"],

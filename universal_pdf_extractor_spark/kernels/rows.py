@@ -130,9 +130,9 @@ def reconstruct_rows(lines: list[dict],
     return rows
 
 
-def detect_header_line(lines: list[dict], max_lines: int = HEADER_SCAN_LINES) -> Optional[int]:
+def detect_header_line(lines: list[dict]) -> Optional[int]:
     """First of the top lines matching >=2 header keywords."""
-    for i, line in enumerate(lines[:max_lines]):
+    for i, line in enumerate(lines[:HEADER_SCAN_LINES]):
         text_lower = line["text"].lower()
         if sum(1 for kw in HEADER_KEYWORDS if kw in text_lower) >= 2:
             return i

@@ -1,7 +1,8 @@
 """Per-segment record extraction: the full analysis chain.
 
 Mirrors the reference orchestrator's segment analysis
-(app/pipeline/orchestrator.py:516-690): collect the segment's lines,
+(app/pipeline/orchestrator.py:516-690) over the lines
+``layout.segment_lines`` builds, whose x is already segment-wide:
 detect columns, find + strip the header line, preliminary row pass,
 role assignment, final row pass, per-row field projection, opening /
 closing balance from marker rows, direction solving, merge, and the
@@ -159,12 +160,12 @@ _BF_CF_KW = ["brought forward", "carried forward", "b/f", "c/f"]
 
 
 def _cells_to_fields(row_cells: list[dict], col_map: dict, last_date,
-                     today: date, turn: int, carry_date: bool = True):
+                     today: date, turn: int):
     """Shared cells -> (date, desc, amount, direction, balance) field
     projection used by every fallback tier (the common body of the
     reference's pdfplumber/tabula/camelot row loops,
     orchestrator.py:860-930 / 1056-1110 / 1240-1281): date parse with
-    optional last-date carry, role-driven amount/direction (paid_in ->
+    last-date carry, role-driven amount/direction (paid_in ->
     CREDIT, withdrawn -> DEBIT, balance -> running balance, amount ->
     sign inference), with per-field evidence spans."""
     evidence: list[dict] = []
@@ -185,7 +186,7 @@ def _cells_to_fields(row_cells: list[dict], col_map: dict, last_date,
                 date_val = parsed.parsed_date
                 last_date = date_val
                 _ev("date", date_cell)
-    if date_val is None and carry_date and last_date:
+    if date_val is None and last_date:
         date_val = last_date
 
     desc = ""
@@ -390,41 +391,6 @@ def _split_columns_by_header(columns: list[dict], header_line: dict) -> list[dic
     out.sort(key=lambda c: c["x_start"])
     for i, col in enumerate(out):
         col["column_index"] = i
-    return out
-
-
-def _rescale_segment_geometry(lines: list[dict]) -> list[dict]:
-    """Re-normalize token/line x-geometry over a SEGMENT-wide width.
-
-    tokenize_turn normalizes x by each turn's own max line length, so
-    the same character column lands at different x in turns of
-    different widths (a narrow chatter turn between statement pages
-    rescales everything) — which smears the column histogram exactly
-    where the reference's page-absolute pdfplumber coordinates would
-    stay aligned (pdfplumber_engine.py coordinate contract).  Tokens
-    carry their line-local char columns (layout.py col0/col1); when
-    present, x is re-derived as col/segment_width on copies of the
-    line and token dicts, which belong to the caller.  Segments whose
-    lines all came from one turn keep their x (same width).
-    y-geometry (per-turn line index ordering) is untouched.
-    """
-    width = 0
-    for ln in lines:
-        for t in ln["tokens"]:
-            c1 = t.get("col1")
-            if c1 is None:
-                return lines  # externally-supplied token table: keep its x
-            if c1 > width:
-                width = c1
-    if width <= 0:
-        return lines
-    out = []
-    for ln in lines:
-        toks = [{**t, "x0": t["col0"] / width, "x1": t["col1"] / width}
-                for t in ln["tokens"]]
-        out.append({**ln, "tokens": toks,
-                    "x0": min(t["x0"] for t in toks),
-                    "x1": max(t["x1"] for t in toks)})
     return out
 
 
@@ -640,6 +606,9 @@ def _solver_view(fields: dict) -> dict:
 def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
     """Segment lines -> {records, opening_balance, closing_balance}.
 
+    ``lines`` come from ``layout.segment_lines``: x is already
+    segment-wide, and the line and token dicts are only read.
+
     Each record carries the output-fields of the reference
     ``transactions`` row (tables.py:298-382) minus identifiers, which
     the caller attaches: row_index, turn_idx (of the row's first
@@ -659,13 +628,23 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
                 "header": header,
                 "column_mapping": column_mapping}
 
+    def _tier_result(tier_name: str, records: list, info: dict) -> dict:
+        """A fallback tier's result: its records, no balances."""
+        return {"records": records, "opening_balance": None,
+                "closing_balance": None,
+                "closing_balance_distinct": False,
+                "fallback_used": True,
+                "diagnostics": _diag(
+                    tier_name, records,
+                    column_count=info.get("column_count"),
+                    header={"line_index": info.get("header_line")},
+                    column_mapping=info.get("column_mapping"))}
+
     empty = {"records": [], "opening_balance": None, "closing_balance": None,
              "closing_balance_distinct": False, "fallback_used": False,
              "diagnostics": _diag("none", [])}
     if not lines:
         return empty
-
-    lines = _rescale_segment_geometry(lines)
 
     all_lines = lines  # pre-header-strip view for the fallback parsers
 
@@ -678,17 +657,6 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
     # reproducible from the corpus alone (the delim-records oracle
     # re-derives it in SQL).  A failed delim parse falls through to
     # the normal histogram path.
-    def _tier_result(tier_name: str, records: list, info: dict) -> dict:
-        return {"records": records, "opening_balance": None,
-                "closing_balance": None,
-                "closing_balance_distinct": False,
-                "fallback_used": True,
-                "diagnostics": _diag(
-                    tier_name, records,
-                    column_count=info.get("column_count"),
-                    header={"line_index": info.get("header_line")},
-                    column_mapping=info.get("column_mapping"))}
-
     delim_flags = [_DELIM_RE.search(ln["text"]) is not None for ln in lines]
     n_delim = sum(delim_flags)
     if n_delim * 2 > len(lines):
@@ -728,18 +696,10 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
             records, info = tier_fn(all_lines, today)
             if records:
                 if tier_name != "text_grid":
-                    tier_name = tier_name + "_rescue"
+                    tier_name += "_rescue"
                     for rec in records:
                         rec["direction_source"] += "_rescue"
-                return {"records": records, "opening_balance": None,
-                        "closing_balance": None,
-                        "closing_balance_distinct": False,
-                        "fallback_used": True,
-                        "diagnostics": _diag(
-                            tier_name, records,
-                            column_count=info.get("column_count"),
-                            header={"line_index": info.get("header_line")},
-                            column_mapping=info.get("column_mapping"))}
+                return _tier_result(tier_name, records, info)
         return empty
 
     columns = detect_columns(lines)

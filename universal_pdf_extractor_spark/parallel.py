@@ -29,7 +29,13 @@ def barrier(df: DataFrame, *key_cols: str) -> DataFrame:
     small-byte/high-CPU intermediates, serializing every operator
     between the barrier and the next exchange (windows, explodes,
     partial aggregations).  The explicit count keeps those stages on
-    all cores; it scales with the session (cores), not a constant."""
+    all cores; it scales with defaultParallelism (the cores), not a
+    constant.
+
+    The reuse needs the exchange to survive planning.  Downstream of a
+    ``spread`` that fired on the same key, the data is already
+    hash-partitioned with this count, Spark drops the barrier's
+    exchange as redundant, and each branch recomputes the subtree."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism, *key_cols)
 

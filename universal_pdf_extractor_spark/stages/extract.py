@@ -6,8 +6,11 @@ The sequential parts of the reference pipeline — row reconstruction
 (balance_solver.py:172-245,390-430) — carry genuine running state, so
 they run in Python, one ``analyse_segment`` call per segment, inside
 ONE ``mapInPandas`` that streams many whole conversations per Arrow
-batch.  Everything upstream (tokenize, boundary scoring, segment ids)
-and downstream (scoring, joins, ordering) is native.
+batch.  Each segment's lines come from ``kernels.layout.segment_lines``,
+which the oracle calls too and which tokenizes the segment's
+payloads and decides x over the whole segment.  Everything upstream
+(tokenize, boundary scoring, segment ids) and downstream (scoring,
+joins, ordering) is native.
 
 That call yields every per-segment surface at once, in one
 row_type-discriminated frame: the `transactions` rows
@@ -36,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernels.layout import tokenize_turn_lines
+from ..kernels.layout import segment_lines
 from ..kernels.segment_extract import analyse_segment
 
 # per-field provenance (transaction_evidence analogue, tables.py:388-420)
@@ -121,16 +124,6 @@ def _conf(x: float) -> Decimal:
     return d
 
 
-def _segment_lines(seg: pd.DataFrame) -> list[dict]:
-    lines: list[dict] = []
-    for turn_idx, payload in zip(seg["turn_idx"], seg["payload"]):
-        turn_lines = tokenize_turn_lines(payload)
-        for ln in turn_lines:
-            ln["turn_idx"] = int(turn_idx)
-            lines.append(ln)
-    return lines
-
-
 def _diag_row(conv_id: str, seg_idx: int, d: dict) -> dict:
     import json
 
@@ -156,7 +149,8 @@ def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
     """Records AND diagnostics from one analyse_segment call per
     segment (row_type-discriminated)."""
     for seg_idx, seg in pdf.groupby("segment_index", sort=True):
-        result = analyse_segment(_segment_lines(seg))
+        result = analyse_segment(
+            segment_lines(zip(seg["turn_idx"], seg["payload"])))
         seg_idx = int(seg_idx)
         fallback_used = result["fallback_used"]
         opening = result["opening_balance"]

@@ -47,10 +47,9 @@ def conversations_table(conv_meta: DataFrame, records: DataFrame) -> DataFrame:
     conversation balances are the first record-bearing segment's
     opening and the last record-bearing segment's closing — the latter
     only when flagged distinct (a first==last single-marker segment is
-    not independent closing evidence).  When those stage columns are
-    absent the gate never fires (scorer called without balances).
+    not independent closing evidence).  ``conv_meta`` carries the
+    classification columns plus ``n_segments``.
     """
-    has_balances = "segment_opening_balance" in records.columns
     agg = records.groupBy("conv_id").agg(
         F.count(F.lit(1)).cast("int").alias("row_count"),
         F.avg(F.col("confidence_amount").cast("double")).alias("_mean_amount"),
@@ -69,22 +68,16 @@ def conversations_table(conv_meta: DataFrame, records: DataFrame) -> DataFrame:
                                 F.abs(F.col("amount")))),
                    F.lit(0).cast("decimal(15,2)")).alias("_total_credits"),
         (F.max("segment_index") + 1).cast("int").alias("_n_rec_segments"),
-        *([
-            F.min_by("segment_opening_balance", "segment_index").alias("_opening"),
-            F.when(F.max_by("segment_closing_distinct", "segment_index"),
-                   F.max_by("segment_closing_balance", "segment_index"))
-             .alias("_closing"),
-        ] if has_balances else []),
+        F.min_by("segment_opening_balance", "segment_index").alias("_opening"),
+        F.when(F.max_by("segment_closing_distinct", "segment_index"),
+               F.max_by("segment_closing_balance", "segment_index"))
+         .alias("_closing"),
     )
 
     df = conv_meta.join(agg, "conv_id", "left")
     df = df.fillna({"row_count": 0, "_mean_amount": 0.0, "_mean_direction": 0.0,
                     "_mean_date": 0.0, "_mean_balance": 0.0, "_recon_rate": 0.0,
                     "_unknown_count": 0})
-
-    if not has_balances:
-        df = df.withColumn("_opening", F.lit(None).cast("decimal(15,2)")) \
-               .withColumn("_closing", F.lit(None).cast("decimal(15,2)"))
 
     weighted = (
         F.lit(DOCUMENT_WEIGHTS["reconciliation_rate"]) * F.col("_recon_rate")
@@ -148,15 +141,13 @@ def conversations_table(conv_meta: DataFrame, records: DataFrame) -> DataFrame:
         F.when(F.col("validation_status").isin("PASS", "PASS_WITH_WARNINGS"),
                "COMPLETED").otherwise("NEEDS_REVIEW"),
     )
-    passthrough = [c for c in ("n_segments",) if c in conv_meta.columns]
     return df.select(
         "conv_id", "doc_family", "doc_family_confidence",
         "provider", "provider_confidence", "currency",
         "account_holder_name", "account_holder_address", "account_holder_postcode",
         "document_confidence", "reconciliation_rate",
         "validation_status", "final_status",
-        "hard_gate_failures", "warnings", "row_count",
-        *passthrough,
+        "hard_gate_failures", "warnings", "row_count", "n_segments",
     )
 
 
