@@ -42,13 +42,23 @@ def test_blank_lines_skipped():
     _, lines = tokenize_turn(SAMPLE)
     assert len(lines) == 6  # blank line produces no line
     assert [ln["line_index"] for ln in lines] == list(range(6))
-    # one line per non-blank source line; distinct lines sit LINE_PITCH
-    # apart, more than the reference's 0.005 y-clustering tolerance, so
-    # its clustering would keep them apart too
+
+
+def test_cluster_identity_on_synthetic_coords():
+    """Greedy y-clustering of the token soup, as the reference engine
+    does it (0.005 tolerance from each line's first token), gives back
+    tokenize_turn's lines: one per non-blank source line."""
+    tokens, lines = tokenize_turn(SAMPLE)
+    clustered: list[list[str]] = []
+    anchor_y = None
+    for tok in sorted(tokens, key=lambda t: (t["y0"], t["x0"])):
+        if anchor_y is None or abs(tok["y0"] - anchor_y) > 0.005:
+            clustered.append([])
+            anchor_y = tok["y0"]
+        clustered[-1].append(tok["text"])
+    assert [" ".join(c) for c in clustered] == [ln["text"] for ln in lines]
     assert [ln["text"] for ln in lines] == [
         " ".join(raw.split()) for raw in SAMPLE.split("\n") if raw.strip()]
-    gaps = [b["y0"] - a["y0"] for a, b in zip(lines, lines[1:])]
-    assert min(gaps) > 0.005
 
 
 def test_segment_lines_match_tokenize_turn():
