@@ -260,7 +260,10 @@ def minhash_signatures(documents: DataFrame,
     projections collapsed under CollapseProject into k copies of the
     md5 pipeline — a ~k x constant-factor regression on the signature
     stage.)  Values are unchanged: min over pmod(h*a_i + b_i, p) with
-    a_i = 2i+1, b_i = (i*0x9E3779B9 + 0x85EBCA6B) mod p."""
+    a_i = 2i+1, b_i = (i*0x9E3779B9 + 0x85EBCA6B) mod p.
+
+    ``id_col`` must be unique: rows are grouped by it, so documents
+    that share an id get one signature over their pooled shingles."""
     p = MERSENNE_PRIME
     # spread before the fold: the md5-per-shingle + 64-permutation
     # reduction is the dominant narrow compute and must sit above an
@@ -308,6 +311,7 @@ def minhash_lsh_pairs(documents: DataFrame,
 
     bands * rows_per_band == num_hashes; a pair is a candidate if any
     band matches; est_jaccard = matching minhashes / num_hashes.
+    ``id_col`` must be unique (see minhash_signatures).
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(documents, num_hashes, n, id_col, text_col)
@@ -378,6 +382,9 @@ def simhash_fingerprints(documents: DataFrame,
     Computed columnarly: per bit, count tokens with the bit set vs
     total, no UDF.  60 bits (not 64) because the cross-engine hash60
     provides 60 uniform bits — hamming semantics are unchanged.
+
+    ``id_col`` must be unique: rows are grouped by it, so documents
+    that share an id get one fingerprint over their pooled tokens.
     """
     words = F.split(normalize_text(F.col(text_col)), " ")
     # explode + 60 conditional SUM aggregates instead of 60 per-doc
@@ -423,7 +430,8 @@ def simhash_near_dups(documents: DataFrame,
                       text_col: str = "text") -> DataFrame:
     """Near-dup pairs by SimHash: block on 4 x 15-bit sub-fingerprints
     (pigeonhole: hamming<=3 pairs share at least one exact block),
-    verify hamming distance exactly."""
+    verify hamming distance exactly.  ``id_col`` must be unique (see
+    simhash_fingerprints)."""
     # barrier after the fingerprint fold: the self-join's two sides and
     # the 4-way block explode all reuse ONE fingerprint computation via
     # ReusedExchange instead of re-deriving the 60 per-bit counts.

@@ -7,6 +7,21 @@ on both sides; floating outputs are either integers, decimals, or
 divisions of identical inputs (bit-stable across engines); sums use
 DECIMAL casts so distributed accumulation order cannot change values.
 
+Each entry is one `@register(name, sql)` on its Spark function, with
+its oracle SQL beside it: a literal, or a builder defined above it.
+Registration order is the queries() order, and nothing else writes
+the registry.  SQL fragments that several oracles share (the
+transcripts turns view, the money-token and date parsers, the raw
+line frame) are defined once, as module constants or functions.
+
+Input domain: DuckDB's regex engine is RE2, whose \\s is [\\t\\n\\f\\r ]
+and whose \\d is [0-9], so the oracles hold for text whose whitespace
+is in that set and whose digits are ASCII.  boilerplate_strip_docs
+spells RE2's \\s out in its Spark body (the JVM's \\s also takes
+\\x0b).  The entries that read pipeline output share the limit: the
+pipeline normalizes whitespace with Python's \\s, which also takes
+\\x0b and \\x1c-\\x1f.
+
 Entries without SQL omit the oracle -> the driver records a rows-only
 check.  The remaining no-oracle entries, each with its reason:
 
@@ -49,6 +64,18 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from .datapipe import dedup, similarity, textstats
 from .io.fixtures import n_convs_for_sf, transcripts_sdf
+from .kernels.patterns import (
+    ACCOUNT_HEADER_RLIKE,
+    BALANCE_MARKER_RLIKE,
+    BANK_STATEMENT_KEYWORDS,
+    BOILERPLATE_RLIKE,
+    HEADER_KEYWORDS,
+    MOTOR_FINANCE_KEYWORDS,
+    OPENING_BALANCE_RLIKE,
+    PROVIDER_PATTERNS,
+    STATEMENT_PERIOD_RLIKE,
+    _noncapturing,
+)
 from .kernels.segment_extract import FALLBACK_SOURCES
 from .stages.pipeline import run_pipeline
 
@@ -267,17 +294,19 @@ def quality_gate_filter(spark, sf_dir):
 """)
 def boilerplate_strip_docs(spark, sf_dir):
     """S3+P5/P6 flagship slice over the documents table: reading-order
-    normalization + boilerplate suppression, all JVM-side."""
+    normalization + boilerplate suppression, all JVM-side.  Whitespace
+    is the oracle's (RE2) \\s, [\\t\\n\\f\\r ]: the JVM's \\s also takes
+    \\x0b, which would strip lines and join words the oracle keeps."""
     from .parallel import spread
     docs = spread(_read(spark, sf_dir, "documents")
                   .select("doc_id", "text"), "doc_id")
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
+    space = r"[\t\n\f\r ]"
     norm = F.filter(
         F.transform(F.split(F.col("text"), "\n"),
-                    lambda l: F.trim(F.regexp_replace(l, r"\s+", " "))),
+                    lambda l: F.trim(F.regexp_replace(l, space + "+", " "))),
         lambda l: l != "")
-    combined = f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})"
-    kept = F.filter(norm, lambda l: ~F.lower(l).rlike(combined))
+    boiler = BOILERPLATE_RLIKE.replace(r"\s", space)
+    kept = F.filter(norm, lambda l: ~F.lower(l).rlike(boiler))
     return docs.select("doc_id", F.array_join(kept, "\n").alias("clean_text"))
 
 
@@ -430,12 +459,16 @@ def signed_direction_case2(spark, sf_dir):
                      direction_of(styled).alias("direction"))
 
 
-@register("fingerprint_template_match", r"""
-    WITH toks AS (
+# each document's distinct lowered tokens (the two template oracles)
+_TEMPLATE_TOKS_SQL = r"""toks AS (
         SELECT doc_id, source,
                list_distinct(string_split(
                    lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tokens
-        FROM documents),
+        FROM documents)"""
+
+
+@register("fingerprint_template_match", f"""
+    WITH {_TEMPLATE_TOKS_SQL},
     templates AS (
         SELECT source AS template_source, tokens AS template_tokens
         FROM (SELECT source, tokens,
@@ -480,12 +513,8 @@ def fingerprint_template_match(spark, sf_dir):
             .select("doc_id", "template_source", "score"))
 
 
-@register("template_store_match", r"""
-    WITH toks AS (
-        SELECT doc_id, source,
-               list_distinct(string_split(
-                   lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS tokens
-        FROM documents),
+@register("template_store_match", f"""
+    WITH {_TEMPLATE_TOKS_SQL},
     versions AS (
         SELECT source AS template_name, tokens AS fingerprint_tokens,
                ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) AS version_number
@@ -546,18 +575,24 @@ def dedup_exact_groups(spark, sf_dir):
             .where(F.col("group_size") > 1))
 
 
-@register("dedup_ngram_jaccard", r"""
-    WITH words AS (
+# each document's normalized lowered words, and their distinct word
+# 3-shingles (the dedup oracles)
+_WORDS_SQL = r"""words AS (
         SELECT doc_id,
                string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        FROM documents),
-    shingled AS (
+        FROM documents)"""
+_SHINGLED_SQL = """shingled AS (
         SELECT doc_id,
                list_distinct(CASE WHEN len(w) >= 3
                    THEN list_transform(range(1, len(w) - 1),
                                        i -> array_to_string(list_slice(w, i, i + 2), ' '))
                    ELSE [array_to_string(w, ' ')] END) AS shingles
-        FROM words),
+        FROM words)"""
+
+
+@register("dedup_ngram_jaccard", f"""
+    WITH {_WORDS_SQL},
+    {_SHINGLED_SQL},
     sized AS (SELECT doc_id, shingles, len(shingles) AS n FROM shingled),
     exploded AS (SELECT doc_id, n, unnest(shingles) AS shingle FROM sized),
     pairs AS (
@@ -581,18 +616,9 @@ _MH_B_MULT = 0x9E3779B9  # same coefficients as dedup.minhash_signatures
 _MH_B_ADD = 0x85EBCA6B
 
 
-@register("dedup_minhash_lsh", rf"""
-    WITH words AS (
-        SELECT doc_id,
-               string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS w
-        FROM documents),
-    shingled AS (
-        SELECT doc_id,
-               list_distinct(CASE WHEN len(w) >= 3
-                   THEN list_transform(range(1, len(w) - 1),
-                                       i -> array_to_string(list_slice(w, i, i + 2), ' '))
-                   ELSE [array_to_string(w, ' ')] END) AS shingles
-        FROM words),
+@register("dedup_minhash_lsh", f"""
+    WITH {_WORDS_SQL},
+    {_SHINGLED_SQL},
     hashed AS (
         SELECT doc_id,
                list_transform(shingles, s -> {_H60_SQL.format(s='s')} % {_MERSENNE}) AS hs
@@ -631,10 +657,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 
 
 @register("dedup_simhash", f"""
-    WITH words AS (
-        SELECT doc_id,
-               string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w
-        FROM documents),
+    WITH {_WORDS_SQL},
     hs AS (SELECT doc_id,
                   list_transform(w, tk -> {_H60_SQL.format(s='tk')}) AS hs,
                   len(w) AS n
@@ -666,7 +689,20 @@ def dedup_simhash(spark, sf_dir):
     return dedup.simhash_near_dups(docs, max_hamming=3)
 
 
-@register("ann_cosine_topk", """
+# each query's top 10 by cosine, ties to the lower vec_id (the ANN
+# oracles)
+_ANN_TOP10_SQL = """
+    ranked AS (
+        SELECT query_id, vec_id, cosine,
+               ROW_NUMBER() OVER (PARTITION BY query_id
+                                  ORDER BY cosine DESC, vec_id ASC) AS rank
+        FROM scored)
+    SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
+    FROM ranked WHERE rank <= 10
+"""
+
+
+@register("ann_cosine_topk", f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
                FROM embeddings WHERE vec_id < 5),
     corpus AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
@@ -678,15 +714,7 @@ def dedup_simhash(spark, sf_dir):
                / (sqrt(list_sum(list_transform(c.vec, x -> x * x)))
                   * sqrt(list_sum(list_transform(q.qvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
                AS cosine
-        FROM corpus c, q WHERE c.vec_id <> q.query_id),
-    ranked AS (
-        SELECT query_id, vec_id, cosine,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, vec_id ASC) AS rank
-        FROM scored)
-    SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 10
-""")
+        FROM corpus c, q WHERE c.vec_id <> q.query_id),{_ANN_TOP10_SQL}""")
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k baseline (exact, broadcast queries)."""
     emb = _read(spark, sf_dir, "embeddings")
@@ -777,15 +805,7 @@ def _ann_lsh_sql() -> str:
                list_sum(list_transform(range(1, {_LSH_DIM + 1}), i -> v[i] * qv[i]))
                / (sqrt(list_sum(list_transform(v, x -> x * x)))
                   * sqrt(list_sum(list_transform(qv, x -> x * x)))) AS cosine
-        FROM cand),
-    ranked AS (
-        SELECT query_id, vec_id, cosine,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, vec_id ASC) AS rank
-        FROM scored)
-    SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 10
-    """
+        FROM cand),{_ANN_TOP10_SQL}    """
 
 
 @register("ann_lsh_topk", _ann_lsh_sql())
@@ -860,15 +880,7 @@ def _ann_ivf_sql() -> str:
     scored AS (
         SELECT p.query_id, i.vec_id, {cos('i.v', 'p.qv')} AS cosine
         FROM inv i JOIN qprobe p ON i.centroid_id = p.centroid_id
-        WHERE i.vec_id <> p.query_id),
-    ranked AS (
-        SELECT query_id, vec_id, cosine,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, vec_id ASC) AS rank
-        FROM scored)
-    SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 10
-    """
+        WHERE i.vec_id <> p.query_id),{_ANN_TOP10_SQL}    """
 
 
 @register("ann_ivf_topk", _ann_ivf_sql())
@@ -881,8 +893,31 @@ def ann_ivf_topk(spark, sf_dir):
     return similarity.ivf_topk(emb, q, k=10)
 
 
+# snapshot path -> key of the input this process last wrote there
+_SNAPSHOT_KEYS: dict[str, object] = {}
+
+
+def _snapshot(df: DataFrame, path: str, key) -> DataFrame:
+    """Write `df` to `path` unless this process already wrote it there
+    under `key` (e.g. the corpus directory), then read it back: an
+    engine and its oracle read the same snapshotted input."""
+    if _SNAPSHOT_KEYS.get(path) != key:
+        df.write.mode("overwrite").parquet(path)
+        _SNAPSHOT_KEYS[path] = key
+    return df.sparkSession.read.parquet(path)
+
+
+def _payload_digest(snap: DataFrame) -> DataFrame:
+    """(doc_id, n_bytes, payload_digest) of snapshotted page payloads;
+    the digest is over the lowercase hex because DuckDB 1.0 has no
+    sha256(BLOB)."""
+    return snap.select(
+        "doc_id",
+        F.length("payload").cast("long").alias("n_bytes"),
+        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_digest"))
+
+
 MEDIA_SNAPSHOT = "/tmp/updx_oracle_inputs/media.parquet"
-_MEDIA_WRITTEN: set[int] = set()
 
 
 def _multimodal_sql() -> str:
@@ -938,18 +973,14 @@ def _multimodal_sql() -> str:
     """
 
 
-@register("multimodal_features", None)  # SQL attached below
+@register("multimodal_features", _multimodal_sql())
 def multimodal_features(spark, sf_dir):
     """Multimodal processing: binary media columns -> flat feature
     table via REAL 24-bit-BMP / PCM16-WAV decode (pure numpy, public
     formats), oracle-checked against formula re-derivations over the
     snapshotted payloads (see _multimodal_sql)."""
     from .datapipe.multimodal import extract_features, synthetic_media
-    media = synthetic_media(spark, n=256)
-    if not _MEDIA_WRITTEN:
-        media.write.mode("overwrite").parquet(MEDIA_SNAPSHOT)
-        _MEDIA_WRITTEN.add(1)
-    snap = spark.read.parquet(MEDIA_SNAPSHOT)
+    snap = _snapshot(synthetic_media(spark, n=256), MEDIA_SNAPSHOT, 256)
     digest = snap.select(
         "media_id",
         F.sha2(F.lower(F.hex("payload")), 256).alias("payload_digest"))
@@ -961,7 +992,6 @@ def multimodal_features(spark, sf_dir):
 
 
 RASTER_SNAPSHOT = "/tmp/updx_oracle_inputs/raster_pages.parquet"
-_RASTER_WRITTEN: set[str] = set()
 
 
 def _raster_sql() -> str:
@@ -992,7 +1022,7 @@ def _raster_sql() -> str:
     """
 
 
-@register("raster_preprocess", None)  # SQL attached below
+@register("raster_preprocess", _raster_sql())
 def raster_preprocess(spark, sf_dir):
     """Raster page preprocessing (S2 render + R1 orientation + R2
     deskew + R3 enhancement + R4 composition, renderer.py:37-242):
@@ -1002,17 +1032,8 @@ def raster_preprocess(spark, sf_dir):
     applies the confidence-keyed enhancement ladder.  Oracle-checked
     against the snapshot's ground-truth parameters (_raster_sql)."""
     from .datapipe.raster import preprocess_pages, render_pages
-    docs = _read(spark, sf_dir, "documents")
-    pages = render_pages(docs)
-    if _RASTER_WRITTEN != {sf_dir}:   # re-key per corpus directory
-        pages.write.mode("overwrite").parquet(RASTER_SNAPSHOT)
-        _RASTER_WRITTEN.clear()
-        _RASTER_WRITTEN.add(sf_dir)
-    snap = spark.read.parquet(RASTER_SNAPSHOT)
-    meta = snap.select(
-        "doc_id",
-        F.length("payload").cast("long").alias("n_bytes"),
-        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_digest"))
+    snap = _snapshot(render_pages(_read(spark, sf_dir, "documents")),
+                     RASTER_SNAPSHOT, sf_dir)
     out = preprocess_pages(snap)
     # orientation_conf / out_sha256 / ink_ratio are engine-measured
     # diagnostics with no SQL re-derivation; they stay pytest-pinned
@@ -1020,11 +1041,18 @@ def raster_preprocess(spark, sf_dir):
     return (out.select("doc_id", "width", "height", "orientation_detected",
                        "rotation_applied", "skew_milli", "skew_applied",
                        "profile")
-            .join(F.broadcast(meta), "doc_id"))
+            .join(F.broadcast(_payload_digest(snap)), "doc_id"))
 
 
 TABLE_SNAPSHOT = "/tmp/updx_oracle_inputs/raster_tables.parquet"
-_TABLES_WRITTEN: set[str] = set()
+# ground-truth grid and payload identity (the two table oracles)
+_GT_TABLE_SQL = """CAST(gt_rows AS INT) AS n_rows,
+           CAST(gt_cols AS INT) AS n_cols,
+           CAST(gt_x0 AS INT) AS bbox_x0, CAST(gt_y0 AS INT) AS bbox_y0,
+           CAST(gt_x1 AS INT) AS bbox_x1, CAST(gt_y1 AS INT) AS bbox_y1,
+           CAST(gt_filled AS INT) AS n_cells_filled,
+           CAST(octet_length(payload) AS BIGINT) AS n_bytes,
+           sha256(lower(hex(payload))) AS payload_digest"""
 
 
 def _raster_tables_sql() -> str:
@@ -1036,18 +1064,12 @@ def _raster_tables_sql() -> str:
     detector)."""
     return f"""
     SELECT doc_id, gt_mode AS mode,
-           CAST(gt_rows AS INT) AS n_rows,
-           CAST(gt_cols AS INT) AS n_cols,
-           CAST(gt_x0 AS INT) AS bbox_x0, CAST(gt_y0 AS INT) AS bbox_y0,
-           CAST(gt_x1 AS INT) AS bbox_x1, CAST(gt_y1 AS INT) AS bbox_y1,
-           CAST(gt_filled AS INT) AS n_cells_filled,
-           CAST(octet_length(payload) AS BIGINT) AS n_bytes,
-           sha256(lower(hex(payload))) AS payload_digest
+           {_GT_TABLE_SQL}
     FROM read_parquet('{TABLE_SNAPSHOT}/*.parquet')
     """
 
 
-@register("raster_table_extract", None)  # SQL attached below
+@register("raster_table_extract", _raster_tables_sql())
 def raster_table_extract(spark, sf_dir):
     """S7 raster table-extraction tiers (tabula analogue
     orchestrator.py:982-1173, camelot analogue :1174-1341): documents
@@ -1057,22 +1079,12 @@ def raster_table_extract(spark, sf_dir):
     north-star's two table-detection heuristics, exercised on pixels
     and oracle-checked against the snapshot's ground truth."""
     from .datapipe.raster import extract_tables, render_table_pages
-    docs = _read(spark, sf_dir, "documents")
-    pages = render_table_pages(docs)
-    if _TABLES_WRITTEN != {sf_dir}:   # re-key per corpus directory
-        pages.write.mode("overwrite").parquet(TABLE_SNAPSHOT)
-        _TABLES_WRITTEN.clear()
-        _TABLES_WRITTEN.add(sf_dir)
-    snap = spark.read.parquet(TABLE_SNAPSHOT)
-    meta = snap.select(
-        "doc_id",
-        F.length("payload").cast("long").alias("n_bytes"),
-        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_digest"))
-    return extract_tables(snap).join(F.broadcast(meta), "doc_id")
+    snap = _snapshot(render_table_pages(_read(spark, sf_dir, "documents")),
+                     TABLE_SNAPSHOT, sf_dir)
+    return extract_tables(snap).join(F.broadcast(_payload_digest(snap)), "doc_id")
 
 
 SKEWED_TBL_SNAPSHOT = "/tmp/updx_oracle_inputs/raster_skewed_tables.parquet"
-_SKEWED_TBL_WRITTEN: set[str] = set()
 
 
 def _raster_deskew_tables_sql() -> str:
@@ -1086,18 +1098,12 @@ def _raster_deskew_tables_sql() -> str:
            CAST(gt_skew_milli AS BIGINT) AS skew_milli,
            gt_skew_applied AS skew_applied,
            gt_mode AS mode,
-           CAST(gt_rows AS INT) AS n_rows,
-           CAST(gt_cols AS INT) AS n_cols,
-           CAST(gt_x0 AS INT) AS bbox_x0, CAST(gt_y0 AS INT) AS bbox_y0,
-           CAST(gt_x1 AS INT) AS bbox_x1, CAST(gt_y1 AS INT) AS bbox_y1,
-           CAST(gt_filled AS INT) AS n_cells_filled,
-           CAST(octet_length(payload) AS BIGINT) AS n_bytes,
-           sha256(lower(hex(payload))) AS payload_digest
+           {_GT_TABLE_SQL}
     FROM read_parquet('{SKEWED_TBL_SNAPSHOT}/*.parquet')
     """
 
 
-@register("raster_deskew_table_extract", None)  # SQL attached below
+@register("raster_deskew_table_extract", _raster_deskew_tables_sql())
 def raster_deskew_table_extract(spark, sf_dir):
     """Composed raster pipeline (R2 ∘ S7, the preprocess→table-engine
     hand-off of renderer.py:221-242 → orchestrator table tiers):
@@ -1109,18 +1115,464 @@ def raster_deskew_table_extract(spark, sf_dir):
     (wrong angle, wrong correction direction, detection on
     uncorrected pixels) breaks the hash."""
     from .datapipe.raster import deskew_and_extract, render_skewed_table_pages
-    docs = _read(spark, sf_dir, "documents")
-    pages = render_skewed_table_pages(docs)
-    if _SKEWED_TBL_WRITTEN != {sf_dir}:
-        pages.write.mode("overwrite").parquet(SKEWED_TBL_SNAPSHOT)
-        _SKEWED_TBL_WRITTEN.clear()
-        _SKEWED_TBL_WRITTEN.add(sf_dir)
-    snap = spark.read.parquet(SKEWED_TBL_SNAPSHOT)
-    meta = snap.select(
-        "doc_id",
-        F.length("payload").cast("long").alias("n_bytes"),
-        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_digest"))
-    return deskew_and_extract(snap).join(F.broadcast(meta), "doc_id")
+    snap = _snapshot(render_skewed_table_pages(_read(spark, sf_dir, "documents")),
+                     SKEWED_TBL_SNAPSHOT, sf_dir)
+    return deskew_and_extract(snap).join(F.broadcast(_payload_digest(snap)), "doc_id")
+
+
+# ───────────────── transcripts snapshot and shared oracle SQL ──────
+
+# The synthetic transcripts corpus is not part of the driver's parquet
+# tables, so the transcripts queries snapshot their (deterministic)
+# input here; the oracle SQL reads the same snapshot.  The driver runs
+# each query before its oracle, so the write always precedes the read.
+# Single-driver assumption: the path is shared per host — two
+# concurrent correctness drivers at different scale factors would
+# clobber each other (the driver protocol runs one at a time).
+TRANSCRIPTS_SNAPSHOT = "/tmp/updx_oracle_inputs/transcripts.parquet"
+
+
+def _ensure_snapshot(spark, sf_dir) -> DataFrame:
+    """Write (once per process per size) and read the transcripts
+    snapshot both engines share."""
+    sf = sf_from_dir(sf_dir)
+    n_convs = min(n_convs_for_sf(sf), 2_000)  # cap correctness-run size
+    return _snapshot(transcripts_sdf(spark, n_convs), TRANSCRIPTS_SNAPSHOT, n_convs)
+
+
+def _pipeline_outputs(spark, sf_dir):
+    return run_pipeline(_ensure_snapshot(spark, sf_dir))
+
+
+def _payload():
+    """A turn's payload: its text, else its tool output, else ''."""
+    text_ok = F.col("text").isNotNull() & (F.col("text") != "")
+    tool_ok = F.col("tool").isNotNull() & (F.col("tool") != "")
+    return F.when(text_ok, F.col("text")).when(tool_ok, F.col("tool")) \
+            .otherwise(F.lit(""))
+
+
+def _sql_regex(pattern: str) -> str:
+    """Escape a Java/RE2-compatible regex for a DuckDB string literal."""
+    return pattern.replace("'", "''")
+
+
+_BOILERPLATE_SQL = _sql_regex(BOILERPLATE_RLIKE)
+_MARKER_SQL = _sql_regex(BALANCE_MARKER_RLIKE)
+# a money token (the pattern tier's _PATTERN_MONEY_RE): optional
+# paren/minus/currency, grouped or plain digits, mandatory pence,
+# optional trailing paren/minus
+_MONEY_TOKEN_RE = ("^\\(?-?[" + chr(163) + chr(36) + chr(8364)
+                   + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
+
+
+def _tok_cents_abs(expr: str) -> str:
+    """Exact unsigned cents of a money-regex-matched token."""
+    return rf"""(CAST(replace(regexp_extract({expr}, '(\d[\d,]*)\.', 1),
+                             ',', '') AS BIGINT) * 100
+                + CAST(regexp_extract({expr}, '\.(\d{{2}})', 1) AS BIGINT))"""
+
+
+def _tok_cents(expr: str) -> str:
+    """parse_amount of a money-regex-matched token, exact cents: sign
+    from a leading paren or a leading or trailing minus."""
+    return rf"""(CASE WHEN {expr} LIKE '(%' OR {expr} LIKE '-%'
+                          OR {expr} LIKE '%-' THEN -1 ELSE 1 END)
+             * {_tok_cents_abs(expr)}"""
+
+
+def _try_date(expr: str) -> str:
+    """The date-format ladder over `expr` (NULL when none parses)."""
+    return f"""COALESCE(
+            CAST(try_strptime({expr}, '%d/%m/%Y') AS DATE),
+            CAST(try_strptime({expr}, '%d %b %Y') AS DATE),
+            CAST(try_strptime({expr}, '%d/%m/%y') AS DATE),
+            CAST(try_strptime({expr}, '%Y-%m-%d') AS DATE),
+            CAST(try_strptime({expr}, '%d %B %Y') AS DATE),
+            CAST(try_strptime({expr}, '%d%b%y') AS DATE))"""
+
+
+def _pivot(expr: str) -> str:
+    """Two-digit years: 19yy above 50, else 20yy."""
+    return f"""CASE WHEN year({expr}) < 100
+            THEN make_date(CASE WHEN year({expr}) % 100 > 50
+                                THEN 1900 + year({expr}) % 100
+                                ELSE 2000 + year({expr}) % 100 END,
+                           month({expr}), day({expr}))
+            ELSE {expr} END"""
+
+
+# boundary score >= 0.8 <=> at least one strong 1.0 signal group
+# matches (period/opening/account); the page-number signal alone
+# contributes 0.4 < 0.8 (segmenter.py:49-96 semantics)
+_STRONG_BOUNDARY_SQL = _sql_regex(
+    f"(?:{STATEMENT_PERIOD_RLIKE})|(?:{OPENING_BALANCE_RLIKE})"
+    f"|(?:{ACCOUNT_HEADER_RLIKE})")
+# Shared CTE chain: raw transcripts snapshot -> per-turn view (payload
+# routing, whitespace-normalized lines, top-band text, boundary flags,
+# running segment index) — the tokenize+segment stages re-derived
+# independently in SQL from the same pattern tables
+# (kernels/patterns.py; layout.py turn_view semantics).
+_TURNS_VIEW_SQL = rf"""
+    turns_in AS (
+        SELECT conv_id, turn_idx,
+               CASE WHEN text IS NOT NULL AND text <> '' THEN 'TEXT'
+                    WHEN tool IS NOT NULL AND tool <> '' THEN 'TOOL'
+                    ELSE 'EMPTY' END AS extraction_path,
+               CASE WHEN text IS NOT NULL AND text <> '' THEN text
+                    WHEN tool IS NOT NULL AND tool <> '' THEN tool
+                    ELSE '' END AS payload
+        FROM read_parquet('{TRANSCRIPTS_SNAPSHOT}/*.parquet')),
+    turn_lines AS (
+        SELECT conv_id, turn_idx, extraction_path,
+               list_transform(string_split(payload, chr(10)),
+                              l -> trim(regexp_replace(l, '\s+', ' ', 'g'))) AS all_lines
+        FROM turns_in),
+    turn_view AS (
+        SELECT conv_id, turn_idx, extraction_path,
+               list_filter(all_lines, l -> l <> '') AS norm_lines,
+               lower(array_to_string(
+                   list_filter(list_transform(range(1, least(len(all_lines), 12) + 1),
+                                              i -> all_lines[i]),
+                               l -> l <> ''), ' ')) AS top_text
+        FROM turn_lines),
+    turn_scored AS (
+        SELECT conv_id, turn_idx, extraction_path, norm_lines,
+               (ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) = 1
+                OR regexp_matches(top_text, '{_STRONG_BOUNDARY_SQL}')) AS is_boundary
+        FROM turn_view),
+    turn_segmented AS (
+        SELECT conv_id, turn_idx, extraction_path,
+               coalesce(array_to_string(list_filter(norm_lines,
+                   l -> NOT regexp_matches(lower(l), '{_BOILERPLATE_SQL}')), chr(10)), '') AS clean_text,
+               CAST(SUM(CASE WHEN is_boundary THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY conv_id ORDER BY turn_idx
+                          ROWS UNBOUNDED PRECEDING) - 1 AS INT) AS segment_index,
+               CAST(len(norm_lines) AS INT) AS n_lines,
+               CAST(coalesce(list_sum(list_transform(norm_lines,
+                   l -> len(string_split(l, ' ')))), 0) AS INT) AS n_tokens
+        FROM turn_scored)
+    """
+
+
+def _on_turns_view(ctes: str) -> str:
+    """An oracle of `ctes` (more CTEs, then the final SELECT) over the
+    shared turns view."""
+    return f"""
+    WITH {_TURNS_VIEW_SQL},
+    {ctes}
+"""
+
+
+def _records_delim_sql() -> str:
+    """Generated oracle for the delimiter fallback tier's records (W9
+    field extraction on the delimited-table slice): segments routed to
+    the delim tier are re-parsed in SQL from the snapshot — delimiter
+    cell split, keyword header mapping, positional row fields, date
+    ladder with the yy>50 pivot, exact integer-cent amounts, b/f and
+    summary-row skips, last-date carry, per-segment row numbering.
+
+    Corpus-safe simplifications (each would matter only for header
+    shapes absent from the snapshot corpus, mirroring the RE2 note on
+    the classification oracle): header keyword categories are treated
+    as non-overlapping (the kernel's if/elif chain only diverges when
+    one header cell matches two categories), one column per role (the
+    kernel collects every match), credit checked before debit when
+    both parse on one row (the kernel's last-write order depends on
+    column order), and amounts are plain/comma-grouped with optional
+    leading minus (the delim corpus renders no parens/CR/DR forms).
+    """
+    return rf"""
+    {_delim_ctes_body()}
+    SELECT conv_id, segment_index,
+           CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, segment_index
+                                   ORDER BY line_ord) - 1 AS INT) AS row_index,
+           CAST(turn_idx AS INT) AS turn_idx,
+           posted_date, description_raw, amount_cents, balance_cents, direction
+    FROM recs
+    """
+
+
+def _delim_geometry_sql() -> str:
+    """Per-segment delim-tier geometry (detected_tables diagnostics
+    re-derivation): column_count = cells of the header line,
+    header_row = the header's 0-based rank among the segment's
+    delimiter-bearing lines (the engine's grid-local data_start - 1,
+    segment_extract._fallback_delim_records)."""
+    return rf"""
+    {_delim_ctes_body()}
+    SELECT h.conv_id, h.segment_index,
+           CAST(len(m.cells) AS INT) AS column_count,
+           CAST((SELECT COUNT(*) FROM delim_lines d
+                 WHERE d.conv_id = h.conv_id
+                   AND d.segment_index = h.segment_index
+                   AND d.line_ord < h.header_ord) AS INT) AS header_row
+    FROM header h
+    JOIN mapped m ON m.conv_id = h.conv_id
+                 AND m.segment_index = h.segment_index
+                 AND m.line_ord = h.header_ord
+    """
+
+
+def _delim_ctes_body() -> str:
+    """Shared delim-tier CTE chain (through `recs`): lines, delimiter
+    cells, routing rule, keyword header mapping, field projection —
+    reused by the records oracle and the routing-geometry oracle.
+
+    line_ord packs (turn_idx, line_no) into one ordinal assuming
+    < 100000 non-empty lines per turn — a corpus bound far above the
+    payload sizes the generator emits (<= a few hundred); a turn
+    exceeding it would alias into the next turn's ordinal space.
+    """
+    def kw(col: str, words: list[str]) -> str:
+        tests = " OR ".join(f"lower(c) LIKE '%{w}%'" for w in words)
+        return (f"list_position(list_transform(cells, c -> ({tests})), true)"
+                f" AS {col}")
+
+    def cents(expr: str) -> str:
+        return rf"""CASE WHEN {expr} IS NOT NULL
+                 AND regexp_matches({expr}, '^-?\d[\d,]*\.\d{{2}}$')
+            THEN (CASE WHEN {expr} LIKE '-%' THEN -1 ELSE 1 END)
+                 * (CAST(replace(regexp_extract({expr}, '^-?([\d,]+)\.', 1),
+                                 ',', '') AS BIGINT) * 100
+                    + CAST(regexp_extract({expr}, '\.(\d{{2}})$', 1) AS BIGINT))
+            END"""
+
+    return rf"""
+    seg_lines AS (
+        SELECT s.conv_id, s.segment_index, s.turn_idx,
+               unnest(v.norm_lines) AS line,
+               s.turn_idx * 100000
+                   + unnest(range(1, len(v.norm_lines) + 1)) AS line_ord
+        FROM turn_segmented s
+        JOIN turn_scored v USING (conv_id, turn_idx)),
+    delim_lines AS (
+        SELECT conv_id, segment_index, turn_idx, line_ord,
+               list_transform(string_split_regex(line, '[|;]'),
+                              c -> trim(regexp_replace(c, '\s+', ' ', 'g'))) AS cells
+        FROM seg_lines
+        WHERE regexp_matches(line, '[|;]')),
+    -- delimiter-dominant routing rule (analyse_segment): the delim
+    -- parser takes the segment iff a strict majority of its lines
+    -- carry a delimiter
+    seg_ok AS (
+        SELECT conv_id, segment_index
+        FROM seg_lines
+        GROUP BY 1, 2
+        HAVING 2 * SUM(CASE WHEN regexp_matches(line, '[|;]')
+                            THEN 1 ELSE 0 END) > COUNT(*)),
+    mapped AS (
+        SELECT d.*,
+               {kw("date_pos", ["date", "posted dte"])},
+               {kw("desc_pos", ["description", "details", "particulars",
+                                "narrative", "transaction"])},
+               {kw("paid_in_pos", ["paid in", "credit", "money in",
+                                   "deposit", "receipts"])},
+               {kw("withdrawn_pos", ["withdrawn", "debit", "money out",
+                                     "paid out", "withdrawal", "payments"])},
+               {kw("balance_pos", ["balance"])},
+               {kw("amount_pos", ["amount"])}
+        FROM delim_lines d JOIN seg_ok USING (conv_id, segment_index)),
+    header AS (
+        SELECT conv_id, segment_index, MIN(line_ord) AS header_ord,
+               arg_min(date_pos, line_ord) AS date_pos,
+               arg_min(desc_pos, line_ord) AS desc_pos,
+               arg_min(paid_in_pos, line_ord) AS paid_in_pos,
+               arg_min(withdrawn_pos, line_ord) AS withdrawn_pos,
+               arg_min(balance_pos, line_ord) AS balance_pos,
+               arg_min(amount_pos, line_ord) AS amount_pos
+        FROM mapped
+        WHERE date_pos IS NOT NULL
+          AND (paid_in_pos IS NOT NULL OR withdrawn_pos IS NOT NULL
+               OR amount_pos IS NOT NULL)
+        GROUP BY 1, 2),
+    data_rows AS (
+        SELECT m.conv_id, m.segment_index, m.turn_idx, m.line_ord, m.cells,
+               h.date_pos, h.desc_pos, h.paid_in_pos, h.withdrawn_pos,
+               h.balance_pos, h.amount_pos,
+               lower(array_to_string(m.cells, ' ')) AS row_lower
+        FROM mapped m JOIN header h USING (conv_id, segment_index)
+        WHERE m.line_ord > h.header_ord),
+    kept_rows AS (
+        SELECT * FROM data_rows
+        WHERE NOT (row_lower LIKE '%brought forward%'
+                   OR row_lower LIKE '%carried forward%'
+                   OR row_lower LIKE '%b/f%' OR row_lower LIKE '%c/f%')),
+    fields AS (
+        SELECT conv_id, segment_index, turn_idx, line_ord, row_lower,
+               cells[date_pos] AS date_raw,
+               coalesce(CASE WHEN desc_pos IS NOT NULL THEN cells[desc_pos] END,
+                        '') AS descr,
+               {cents("cells[paid_in_pos]")} AS credit_cents,
+               {cents("cells[withdrawn_pos]")} AS debit_cents,
+               {cents("cells[amount_pos]")} AS single_cents,
+               {cents("cells[balance_pos]")} AS balance_cents
+        FROM kept_rows),
+    dated AS (
+        SELECT *,
+               last_value(pd_fixed IGNORE NULLS) OVER (
+                   PARTITION BY conv_id, segment_index ORDER BY line_ord
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS posted_date
+        FROM (
+            SELECT *,
+                   CASE WHEN year(pd0) < 100
+                        THEN make_date(CASE WHEN year(pd0) % 100 > 50
+                                            THEN 1900 + year(pd0) % 100
+                                            ELSE 2000 + year(pd0) % 100 END,
+                                       month(pd0), day(pd0))
+                        ELSE pd0 END AS pd_fixed
+            FROM (SELECT *, {_try_date('date_raw')} AS pd0 FROM fields))),
+    recs AS (
+        SELECT conv_id, segment_index, turn_idx, line_ord, posted_date,
+               substr(descr, 1, 500) AS description_raw,
+               abs(coalesce(credit_cents, debit_cents, single_cents))
+                   AS amount_cents,
+               balance_cents,
+               CASE WHEN credit_cents IS NOT NULL THEN 'CREDIT'
+                    WHEN debit_cents IS NOT NULL THEN 'DEBIT'
+                    WHEN single_cents < 0 THEN 'DEBIT'
+                    WHEN single_cents > 0 THEN 'CREDIT'
+                    ELSE 'UNKNOWN' END AS direction
+        FROM dated
+        WHERE coalesce(credit_cents, debit_cents, single_cents) IS NOT NULL
+          AND NOT regexp_matches(lower(trim(descr)), '{_BOILERPLATE_SQL}')
+          AND NOT regexp_matches(row_lower, '{_BOILERPLATE_SQL}'))
+    """
+
+
+# each segment's non-blank RAW lines (the routing rules need their
+# whitespace runs) and their normalized text; line_ord packs
+# (turn_idx, line_no) — see the corpus-bound note in _delim_ctes_body
+_RAW_LINES_SQL = r"""raw_lines AS (
+        SELECT s.conv_id, s.segment_index, s.turn_idx,
+               unnest(kept) AS raw_line,
+               s.turn_idx * 100000 + unnest(range(1, len(kept) + 1)) AS line_ord
+        FROM (SELECT t.conv_id, t.turn_idx,
+                     list_filter(string_split(t.payload, chr(10)),
+                         l -> trim(regexp_replace(l, '\s+', ' ', 'g')) <> '')
+                         AS kept
+              FROM turns_in t) t
+        JOIN turn_segmented s USING (conv_id, turn_idx)),
+    flagged AS (
+        SELECT conv_id, segment_index, turn_idx, line_ord,
+               trim(regexp_replace(raw_line, '\s+', ' ', 'g')) AS line,"""
+
+
+def _records_pattern_sql() -> str:
+    """Generated oracle for the pattern fallback tier's records: the
+    single-space-dominant routing rule, the camelot date+keyword
+    header gate, trailing-money-token detection (rightmost = balance
+    when two), the grow-while-the-parse-changes leading-date rule, no
+    date carry, b/f and summary skips, per-segment row numbering — all
+    re-derived in SQL from the snapshot's RAW lines (the routing rule
+    needs pre-normalization whitespace runs).
+    """
+    header_kw = ["description", "paid in", "withdrawn", "balance",
+                 "money in", "money out", "debit", "credit", "amount"]
+    kw_test = " OR ".join(f"hdr LIKE '%{w}%'" for w in header_kw)
+
+    return rf"""
+    {_RAW_LINES_SQL}
+               (NOT regexp_matches(raw_line, '[|;]')
+                AND NOT regexp_matches(raw_line, '\S\s\s+\S')) AS is_single
+        FROM raw_lines),
+    -- single-space-dominant routing rule (analyse_segment)
+    seg_ok AS (
+        SELECT conv_id, segment_index FROM flagged
+        GROUP BY 1, 2
+        HAVING 2 * SUM(CASE WHEN is_single THEN 1 ELSE 0 END) > COUNT(*)),
+    -- camelot header gate: first line with 'date' + a table keyword
+    header AS (
+        SELECT conv_id, segment_index, MIN(line_ord) AS header_ord
+        FROM (SELECT conv_id, segment_index, line_ord,
+                     lower(line) AS hdr FROM flagged)
+        WHERE hdr LIKE '%date%' AND ({kw_test})
+        GROUP BY 1, 2),
+    rows_in AS (
+        SELECT f.conv_id, f.segment_index, f.turn_idx, f.line_ord, f.line,
+               string_split(f.line, ' ') AS toks
+        FROM flagged f
+        JOIN seg_ok USING (conv_id, segment_index)
+        JOIN header h USING (conv_id, segment_index)
+        WHERE f.line_ord > h.header_ord
+          AND NOT (lower(f.line) LIKE '%brought forward%'
+                   OR lower(f.line) LIKE '%carried forward%'
+                   OR lower(f.line) LIKE '%b/f%' OR lower(f.line) LIKE '%c/f%')),
+    tails AS (
+        SELECT *, len(toks) AS n,
+               CASE WHEN NOT regexp_matches(toks[len(toks)], '{_MONEY_TOKEN_RE}') THEN 0
+                    WHEN len(toks) >= 2
+                         AND regexp_matches(toks[len(toks) - 1], '{_MONEY_TOKEN_RE}')
+                         THEN 2
+                    ELSE 1 END AS tail_len
+        FROM rows_in
+        WHERE len(toks) >= 1),
+    dated AS (
+        SELECT *, n - tail_len AS avail,
+               CASE WHEN n - tail_len >= 1
+                    THEN {_pivot(_try_date("toks[1]"))} END AS p1,
+               CASE WHEN n - tail_len >= 2
+                    THEN {_pivot(_try_date("array_to_string(list_slice(toks, 1, 2), ' ')"))}
+                    END AS p2,
+               CASE WHEN n - tail_len >= 3
+                    THEN {_pivot(_try_date("array_to_string(list_slice(toks, 1, 3), ' ')"))}
+                    END AS p3
+        FROM tails
+        WHERE tail_len > 0),
+    grown AS (
+        -- grow-while-the-parse-changes (segment_extract.py pattern
+        -- tier): extend the date candidate only when the longer parse
+        -- differs; stop at the first unchanged or failed extension
+        -- after a success
+        SELECT *,
+               CASE WHEN p1 IS NOT NULL AND (p2 IS NULL OR p2 = p1) THEN 1
+                    WHEN p1 IS NOT NULL AND p2 IS NOT NULL AND p2 <> p1
+                         AND (p3 IS NULL OR p3 = p2) THEN 2
+                    WHEN p1 IS NOT NULL AND p2 IS NOT NULL AND p2 <> p1
+                         AND p3 IS NOT NULL AND p3 <> p2 THEN 3
+                    WHEN p1 IS NULL AND p2 IS NOT NULL
+                         AND (p3 IS NULL OR p3 = p2) THEN 2
+                    WHEN p1 IS NULL AND p2 IS NOT NULL
+                         AND p3 IS NOT NULL AND p3 <> p2 THEN 3
+                    WHEN p1 IS NULL AND p2 IS NULL AND p3 IS NOT NULL THEN 3
+                    ELSE 0 END AS date_end
+        FROM dated),
+    -- description materialized as a plain column BEFORE the summary
+    -- regex filter: DuckDB re-compiles a regexp per row when its input
+    -- is a computed list expression, which OOMs on this alternation
+    projected AS MATERIALIZED (
+        SELECT conv_id, segment_index, turn_idx, line_ord, line,
+               toks, n, tail_len,
+               CASE date_end WHEN 1 THEN p1 WHEN 2 THEN p2 WHEN 3 THEN p3 END
+                   AS posted_date,
+               array_to_string(list_slice(toks, date_end + 1, n - tail_len),
+                               ' ') AS descr
+        FROM grown),
+    recs AS (
+        SELECT conv_id, segment_index, turn_idx, line_ord, posted_date,
+               substr(descr, 1, 500) AS description_raw,
+               abs({_tok_cents("toks[n - tail_len + 1]")}) AS amount_cents,
+               CASE WHEN tail_len = 2 THEN {_tok_cents("toks[n]")} END
+                   AS balance_cents,
+               CASE WHEN {_tok_cents("toks[n - tail_len + 1]")} < 0 THEN 'DEBIT'
+                    WHEN {_tok_cents("toks[n - tail_len + 1]")} > 0 THEN 'CREDIT'
+                    ELSE 'UNKNOWN' END AS direction
+        FROM projected
+        WHERE NOT regexp_matches(lower(trim(descr)), '{_BOILERPLATE_SQL}')
+          AND NOT regexp_matches(lower(line), '{_BOILERPLATE_SQL}'))
+    """
+
+
+def _records_pattern_select() -> str:
+    return """
+    SELECT conv_id, segment_index,
+           CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, segment_index
+                                   ORDER BY line_ord) - 1 AS INT) AS row_index,
+           CAST(turn_idx AS INT) AS turn_idx,
+           posted_date, description_raw, amount_cents, balance_cents, direction
+    FROM recs
+    """
 
 
 def _review_scored_slice(spark, sf_dir):
@@ -1220,7 +1672,17 @@ def _review_routed_ctes() -> str:
     """
 
 
-@register("review_queue_page", None)  # SQL attached below
+@register("review_queue_page", f"""
+    WITH {_TURNS_VIEW_SQL},
+    {_review_routed_ctes()}
+    SELECT * FROM (
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY priority, conv_id) AS INT)
+                   AS rank,
+               conv_id, status, priority, reason, validation_status,
+               n_records, confidence_micros
+        FROM rq_routed) _
+    WHERE rank > 7 AND rank <= 47
+""")
 def review_queue_page(spark, sf_dir):
     """A5 route-to-review + O6 priority/pagination ordering
     (review/queue.py:20-69) over the oracled fallback-tier slice: the
@@ -1235,7 +1697,15 @@ def review_queue_page(spark, sf_dir):
                        "validation_status", "n_records", "confidence_micros")
 
 
-@register("review_queue_stats", None)  # SQL attached below
+@register("review_queue_stats", f"""
+    WITH {_TURNS_VIEW_SQL},
+    {_review_routed_ctes()}
+    SELECT status, reason, validation_status, priority,
+           CAST(COUNT(*) AS BIGINT) AS n_items,
+           CAST(SUM(n_records) AS BIGINT) AS n_records
+    FROM rq_routed
+    GROUP BY 1, 2, 3, 4
+""")
 def review_queue_rollup(spark, sf_dir):
     """A5 queue statistics (review/queue.py:72-88): GROUP BY rollup of
     the routed queue — item counts and records behind them per
@@ -1245,27 +1715,9 @@ def review_queue_rollup(spark, sf_dir):
     return review_queue_stats(items)
 
 
-@register("xlsx_styled_export", None)  # SQL attached below
-def xlsx_styled_export(spark, sf_dir):
-    """S12 styled XLSX export decisions (api/documents.py:650-731) on
-    the oracled fallback-tier slice: signed cents, the comma-grouped
-    pound rendering built from exact integer cents, the direction-
-    keyed font colors, and the DD/MM/YYYY date rendering — every
-    styling decision the workbook writer would apply, hash-checked."""
-    from .io.sinks import xlsx_style_columns
-    rec = _pipeline_outputs(spark, sf_dir)["records"]
-    styled = xlsx_style_columns(
-        rec.where(F.col("direction_source").isin("delim_table",
-                                                 "row_pattern")))
-    return styled.select(
-        "conv_id", "segment_index", "row_index", "direction",
-        (F.col("signed_amount") * 100).cast("long").alias("signed_cents"),
-        "amount_display", "font_color", "date_display", "number_format")
-
-
 def _xlsx_styled_sql() -> str:
-    """Oracle CTEs + select for the styled export (composed after the
-    shared turns view by _attach_turns_sql)."""
+    """Oracle CTEs + select for the styled export (run over the shared
+    turns view)."""
     return f"""
     sx_slice AS (
         SELECT conv_id, segment_index, row_index, direction,
@@ -1296,28 +1748,22 @@ def _xlsx_styled_sql() -> str:
     """
 
 
-@register("transcripts_token_ir", None)  # SQL attached below
-def transcripts_token_ir(spark, sf_dir):
-    """Exploded token-IR diagnostics surface (contracts.py:20-26),
-    oracle-checked: the whitespace tokenizer's char offsets are
-    prefix-sum arithmetic over space-split parts (split(' ') keeps
-    empties, so every part boundary is exactly one space — a
-    corpus-safe simplification: the generator emits no tabs or other
-    non-space whitespace, which \\S+ would treat as separators too),
-    and the synthetic bbox geometry (layout.py coordinate tables) is
-    affine in (char col / page width, raw line index).  Coordinates
-    and confidence are compared as exact integer micro/bp units (the
-    cross-engine float-stringify rule)."""
-    from .stages.tokenize import tokens_table
-    t = tokens_table(_ensure_snapshot(spark, sf_dir))
-    return t.select(
-        "conv_id", "turn_idx", "token_index", "text",
-        F.round(F.col("x0") * 1e6).cast("long").alias("x0_micro"),
-        F.round(F.col("y0") * 1e6).cast("long").alias("y0_micro"),
-        F.round(F.col("x1") * 1e6).cast("long").alias("x1_micro"),
-        F.round(F.col("y1") * 1e6).cast("long").alias("y1_micro"),
-        F.round(F.col("confidence") * 10000).cast("long").alias("conf_bp"),
-        "start", "end")
+@register("xlsx_styled_export", _on_turns_view(_xlsx_styled_sql()))
+def xlsx_styled_export(spark, sf_dir):
+    """S12 styled XLSX export decisions (api/documents.py:650-731) on
+    the oracled fallback-tier slice: signed cents, the comma-grouped
+    pound rendering built from exact integer cents, the direction-
+    keyed font colors, and the DD/MM/YYYY date rendering — every
+    styling decision the workbook writer would apply, hash-checked."""
+    from .io.sinks import xlsx_style_columns
+    rec = _pipeline_outputs(spark, sf_dir)["records"]
+    styled = xlsx_style_columns(
+        rec.where(F.col("direction_source").isin("delim_table",
+                                                 "row_pattern")))
+    return styled.select(
+        "conv_id", "segment_index", "row_index", "direction",
+        (F.col("signed_amount") * 100).cast("long").alias("signed_cents"),
+        "amount_display", "font_color", "date_display", "number_format")
 
 
 def _token_ir_sql() -> str:
@@ -1380,6 +1826,30 @@ def _token_ir_sql() -> str:
            CAST(off + a + len(part) AS INT) AS "end"
     FROM tok_pos
     """
+
+
+@register("transcripts_token_ir", _token_ir_sql())
+def transcripts_token_ir(spark, sf_dir):
+    """Exploded token-IR diagnostics surface (contracts.py:20-26),
+    oracle-checked: the whitespace tokenizer's char offsets are
+    prefix-sum arithmetic over space-split parts (split(' ') keeps
+    empties, so every part boundary is exactly one space — a
+    corpus-safe simplification: the generator emits no tabs or other
+    non-space whitespace, which \\S+ would treat as separators too),
+    and the synthetic bbox geometry (layout.py coordinate tables) is
+    affine in (char col / page width, raw line index).  Coordinates
+    and confidence are compared as exact integer micro/bp units (the
+    cross-engine float-stringify rule)."""
+    from .stages.tokenize import tokens_table
+    t = tokens_table(_ensure_snapshot(spark, sf_dir))
+    return t.select(
+        "conv_id", "turn_idx", "token_index", "text",
+        F.round(F.col("x0") * 1e6).cast("long").alias("x0_micro"),
+        F.round(F.col("y0") * 1e6).cast("long").alias("y0_micro"),
+        F.round(F.col("x1") * 1e6).cast("long").alias("x1_micro"),
+        F.round(F.col("y1") * 1e6).cast("long").alias("y1_micro"),
+        F.round(F.col("confidence") * 10000).cast("long").alias("conf_bp"),
+        "start", "end")
 
 
 @register("text_token_count", r"""
@@ -1581,7 +2051,7 @@ def _components_sql() -> str:
     """
 
 
-@register("dedup_components", None)  # SQL attached at import below
+@register("dedup_components", _components_sql())
 def dedup_components_query(spark, sf_dir):
     """Near-dup closure: connected components over the exact
     ngram-jaccard pairs, each document mapped to its component's
@@ -1618,7 +2088,7 @@ def _pii_sql() -> str:
     """
 
 
-@register("text_pii_scan", None)  # SQL attached at import below
+@register("text_pii_scan", _pii_sql())
 def text_pii_scan(spark, sf_dir):
     """PII detection + redaction (emails, UK phones/postcodes/sort
     codes/account numbers): per-class counts computed on the
@@ -1655,7 +2125,7 @@ def _duplicate_lines_sql() -> str:
     """
 
 
-@register("corpus_duplicate_lines", None)  # SQL attached at import below
+@register("corpus_duplicate_lines", _duplicate_lines_sql())
 def corpus_duplicate_lines(spark, sf_dir):
     """Corpus-level duplicate-line discovery (CCNet/RefinedWeb
     boilerplate primitive) over the transcripts corpus: normalized
@@ -1663,116 +2133,20 @@ def corpus_duplicate_lines(spark, sf_dir):
     (provider headers, FSCS notices, chatter stock phrases) a
     training pipeline strips before use.  Aggregated on hash60(line)
     so the shuffle key is a bounded integer."""
-    snap = _ensure_snapshot(spark, sf_dir)
-    payload = F.when((F.col("text").isNotNull()) & (F.col("text") != ""),
-                     F.col("text")) \
-               .when((F.col("tool").isNotNull()) & (F.col("tool") != ""),
-                     F.col("tool")).otherwise(F.lit(""))
-    docs = (snap.groupBy("conv_id")
+    docs = (_ensure_snapshot(spark, sf_dir).groupBy("conv_id")
             .agg(F.concat_ws("\n", F.array_sort(F.collect_list(
-                F.struct("turn_idx", payload.alias("p")))).getField("p"))
+                F.struct("turn_idx", _payload().alias("p")))).getField("p"))
                  .alias("text"))
             .select(F.col("conv_id").alias("doc_id"), "text"))
     return textstats.duplicate_lines(docs, min_docs=50)
 
 
-# ───────────────────── transcripts pipeline ─────────────────────────
-
-# The synthetic transcripts corpus is not part of the driver's parquet
-# tables, so the transcripts queries snapshot their (deterministic)
-# input here; the oracle SQL reads the same snapshot.  The driver runs
-# each query before its oracle, so the write always precedes the read.
-# Single-driver assumption: the path is shared per host — two
-# concurrent correctness drivers at different scale factors would
-# clobber each other (the driver protocol runs one at a time).
-TRANSCRIPTS_SNAPSHOT = "/tmp/updx_oracle_inputs/transcripts.parquet"
-_SNAPSHOT_WRITTEN: set[int] = set()  # n_convs written by this process
-
-
-def _ensure_snapshot(spark, sf_dir) -> DataFrame:
-    """Write (once per process per size) and read the transcripts
-    snapshot both engines share."""
-    sf = sf_from_dir(sf_dir)
-    n_convs = min(n_convs_for_sf(sf), 2_000)  # cap correctness-run size
-    if _SNAPSHOT_WRITTEN != {n_convs}:
-        transcripts_sdf(spark, n_convs).write.mode("overwrite") \
-            .parquet(TRANSCRIPTS_SNAPSHOT)
-        _SNAPSHOT_WRITTEN.clear()
-        _SNAPSHOT_WRITTEN.add(n_convs)
-    return spark.read.parquet(TRANSCRIPTS_SNAPSHOT)
-
-
-def _pipeline_outputs(spark, sf_dir):
-    return run_pipeline(_ensure_snapshot(spark, sf_dir))
-
-
-def _sql_regex(pattern: str) -> str:
-    """Escape a Java/RE2-compatible regex for a DuckDB string literal."""
-    return pattern.replace("'", "''")
-
-
-def _turns_view_sql() -> str:
-    """Shared CTE chain: raw transcripts snapshot -> per-turn view
-    (payload routing, whitespace-normalized lines, top-band text,
-    boundary flags, running segment index) — the tokenize+segment
-    stages re-derived independently in SQL from the same pattern
-    tables (kernels/patterns.py; layout.py turn_view semantics)."""
-    from .kernels.patterns import (
-        ACCOUNT_HEADER_RLIKE,
-        BALANCE_MARKER_RLIKE,
-        OPENING_BALANCE_RLIKE,
-        STATEMENT_PERIOD_RLIKE,
-        SUMMARY_ROW_RLIKE,
-    )
-    boiler = _sql_regex(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-    # boundary score >= 0.8 <=> at least one strong 1.0 signal group
-    # matches (period/opening/account); the page-number signal alone
-    # contributes 0.4 < 0.8 (segmenter.py:49-96 semantics)
-    strong = _sql_regex(f"(?:{STATEMENT_PERIOD_RLIKE})|(?:{OPENING_BALANCE_RLIKE})"
-                        f"|(?:{ACCOUNT_HEADER_RLIKE})")
-    return rf"""
-    turns_in AS (
-        SELECT conv_id, turn_idx,
-               CASE WHEN text IS NOT NULL AND text <> '' THEN 'TEXT'
-                    WHEN tool IS NOT NULL AND tool <> '' THEN 'TOOL'
-                    ELSE 'EMPTY' END AS extraction_path,
-               CASE WHEN text IS NOT NULL AND text <> '' THEN text
-                    WHEN tool IS NOT NULL AND tool <> '' THEN tool
-                    ELSE '' END AS payload
-        FROM read_parquet('{TRANSCRIPTS_SNAPSHOT}/*.parquet')),
-    turn_lines AS (
-        SELECT conv_id, turn_idx, extraction_path,
-               list_transform(string_split(payload, chr(10)),
-                              l -> trim(regexp_replace(l, '\s+', ' ', 'g'))) AS all_lines
-        FROM turns_in),
-    turn_view AS (
-        SELECT conv_id, turn_idx, extraction_path,
-               list_filter(all_lines, l -> l <> '') AS norm_lines,
-               lower(array_to_string(
-                   list_filter(list_transform(range(1, least(len(all_lines), 12) + 1),
-                                              i -> all_lines[i]),
-                               l -> l <> ''), ' ')) AS top_text
-        FROM turn_lines),
-    turn_scored AS (
-        SELECT conv_id, turn_idx, extraction_path, norm_lines,
-               (ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) = 1
-                OR regexp_matches(top_text, '{strong}')) AS is_boundary
-        FROM turn_view),
-    turn_segmented AS (
-        SELECT conv_id, turn_idx, extraction_path,
-               coalesce(array_to_string(list_filter(norm_lines,
-                   l -> NOT regexp_matches(lower(l), '{boiler}')), chr(10)), '') AS clean_text,
-               CAST(SUM(CASE WHEN is_boundary THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY conv_id ORDER BY turn_idx
-                          ROWS UNBOUNDED PRECEDING) - 1 AS INT) AS segment_index,
-               CAST(len(norm_lines) AS INT) AS n_lines,
-               CAST(coalesce(list_sum(list_transform(norm_lines,
-                   l -> len(string_split(l, ' ')))), 0) AS INT) AS n_tokens
-        FROM turn_scored)
-    """
-
-
-@register("transcripts_turns", None)  # SQL attached below via _attach_turns_sql
+@register("transcripts_turns", f"""
+    WITH {_TURNS_VIEW_SQL}
+    SELECT conv_id, turn_idx, extraction_path, clean_text,
+           segment_index, n_lines, n_tokens
+    FROM turn_segmented
+""")
 def transcripts_turns(spark, sf_dir):
     """Flagship: per-turn main-content extraction (clean_text + spans).
     The oracle re-derives the tokenize+segment semantics in SQL from
@@ -1785,362 +2159,19 @@ def transcripts_turns(spark, sf_dir):
                       "segment_index", "n_lines", "n_tokens")
 
 
-@register("transcripts_segment_ranges", None)  # SQL attached below
+@register("transcripts_segment_ranges", f"""
+    WITH {_TURNS_VIEW_SQL}
+    SELECT conv_id, segment_index,
+           CAST(MIN(turn_idx) AS INT) AS start_turn,
+           CAST(MAX(turn_idx) AS INT) AS end_turn
+    FROM turn_segmented
+    GROUP BY conv_id, segment_index
+""")
 def transcripts_segment_ranges(spark, sf_dir):
     """J2/C4 segment ranges (document_segments turn spans) — the
     SQL-expressible projection of the segments table."""
     out = _pipeline_outputs(spark, sf_dir)["segments"]
     return out.select("conv_id", "segment_index", "start_turn", "end_turn")
-
-
-def _records_delim_sql() -> str:
-    """Generated oracle for the delimiter fallback tier's records (W9
-    field extraction on the delimited-table slice): segments routed to
-    the delim tier are re-parsed in SQL from the snapshot — delimiter
-    cell split, keyword header mapping, positional row fields, date
-    ladder with the yy>50 pivot, exact integer-cent amounts, b/f and
-    summary-row skips, last-date carry, per-segment row numbering.
-
-    Corpus-safe simplifications (each would matter only for header
-    shapes absent from the snapshot corpus, mirroring the RE2 note on
-    the classification oracle): header keyword categories are treated
-    as non-overlapping (the kernel's if/elif chain only diverges when
-    one header cell matches two categories), one column per role (the
-    kernel collects every match), credit checked before debit when
-    both parse on one row (the kernel's last-write order depends on
-    column order), and amounts are plain/comma-grouped with optional
-    leading minus (the delim corpus renders no parens/CR/DR forms).
-    """
-    return rf"""
-    {_delim_ctes_body()}
-    SELECT conv_id, segment_index,
-           CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, segment_index
-                                   ORDER BY line_ord) - 1 AS INT) AS row_index,
-           CAST(turn_idx AS INT) AS turn_idx,
-           posted_date, description_raw, amount_cents, balance_cents, direction
-    FROM recs
-    """
-
-
-def _delim_geometry_sql() -> str:
-    """Per-segment delim-tier geometry (detected_tables diagnostics
-    re-derivation): column_count = cells of the header line,
-    header_row = the header's 0-based rank among the segment's
-    delimiter-bearing lines (the engine's grid-local data_start - 1,
-    segment_extract._fallback_delim_records)."""
-    return rf"""
-    {_delim_ctes_body()}
-    SELECT h.conv_id, h.segment_index,
-           CAST(len(m.cells) AS INT) AS column_count,
-           CAST((SELECT COUNT(*) FROM delim_lines d
-                 WHERE d.conv_id = h.conv_id
-                   AND d.segment_index = h.segment_index
-                   AND d.line_ord < h.header_ord) AS INT) AS header_row
-    FROM header h
-    JOIN mapped m ON m.conv_id = h.conv_id
-                 AND m.segment_index = h.segment_index
-                 AND m.line_ord = h.header_ord
-    """
-
-
-def _delim_ctes_body() -> str:
-    """Shared delim-tier CTE chain (through `recs`): lines, delimiter
-    cells, routing rule, keyword header mapping, field projection —
-    reused by the records oracle and the routing-geometry oracle.
-
-    line_ord packs (turn_idx, line_no) into one ordinal assuming
-    < 100000 non-empty lines per turn — a corpus bound far above the
-    payload sizes the generator emits (<= a few hundred); a turn
-    exceeding it would alias into the next turn's ordinal space.
-    """
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
-    summary = _sql_regex(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-
-    def kw(col: str, words: list[str]) -> str:
-        tests = " OR ".join(f"lower(c) LIKE '%{w}%'" for w in words)
-        return (f"list_position(list_transform(cells, c -> ({tests})), true)"
-                f" AS {col}")
-
-    def cents(expr: str) -> str:
-        return rf"""CASE WHEN {expr} IS NOT NULL
-                 AND regexp_matches({expr}, '^-?\d[\d,]*\.\d{{2}}$')
-            THEN (CASE WHEN {expr} LIKE '-%' THEN -1 ELSE 1 END)
-                 * (CAST(replace(regexp_extract({expr}, '^-?([\d,]+)\.', 1),
-                                 ',', '') AS BIGINT) * 100
-                    + CAST(regexp_extract({expr}, '\.(\d{{2}})$', 1) AS BIGINT))
-            END"""
-
-    date_ladder = """COALESCE(
-            CAST(try_strptime(date_raw, '%d/%m/%Y') AS DATE),
-            CAST(try_strptime(date_raw, '%d %b %Y') AS DATE),
-            CAST(try_strptime(date_raw, '%d/%m/%y') AS DATE),
-            CAST(try_strptime(date_raw, '%Y-%m-%d') AS DATE),
-            CAST(try_strptime(date_raw, '%d %B %Y') AS DATE),
-            CAST(try_strptime(date_raw, '%d%b%y') AS DATE))"""
-
-    return rf"""
-    seg_lines AS (
-        SELECT s.conv_id, s.segment_index, s.turn_idx,
-               unnest(v.norm_lines) AS line,
-               s.turn_idx * 100000
-                   + unnest(range(1, len(v.norm_lines) + 1)) AS line_ord
-        FROM turn_segmented s
-        JOIN turn_scored v USING (conv_id, turn_idx)),
-    delim_lines AS (
-        SELECT conv_id, segment_index, turn_idx, line_ord,
-               list_transform(string_split_regex(line, '[|;]'),
-                              c -> trim(regexp_replace(c, '\s+', ' ', 'g'))) AS cells
-        FROM seg_lines
-        WHERE regexp_matches(line, '[|;]')),
-    -- delimiter-dominant routing rule (analyse_segment): the delim
-    -- parser takes the segment iff a strict majority of its lines
-    -- carry a delimiter
-    seg_ok AS (
-        SELECT conv_id, segment_index
-        FROM seg_lines
-        GROUP BY 1, 2
-        HAVING 2 * SUM(CASE WHEN regexp_matches(line, '[|;]')
-                            THEN 1 ELSE 0 END) > COUNT(*)),
-    mapped AS (
-        SELECT d.*,
-               {kw("date_pos", ["date", "posted dte"])},
-               {kw("desc_pos", ["description", "details", "particulars",
-                                "narrative", "transaction"])},
-               {kw("paid_in_pos", ["paid in", "credit", "money in",
-                                   "deposit", "receipts"])},
-               {kw("withdrawn_pos", ["withdrawn", "debit", "money out",
-                                     "paid out", "withdrawal", "payments"])},
-               {kw("balance_pos", ["balance"])},
-               {kw("amount_pos", ["amount"])}
-        FROM delim_lines d JOIN seg_ok USING (conv_id, segment_index)),
-    header AS (
-        SELECT conv_id, segment_index, MIN(line_ord) AS header_ord,
-               arg_min(date_pos, line_ord) AS date_pos,
-               arg_min(desc_pos, line_ord) AS desc_pos,
-               arg_min(paid_in_pos, line_ord) AS paid_in_pos,
-               arg_min(withdrawn_pos, line_ord) AS withdrawn_pos,
-               arg_min(balance_pos, line_ord) AS balance_pos,
-               arg_min(amount_pos, line_ord) AS amount_pos
-        FROM mapped
-        WHERE date_pos IS NOT NULL
-          AND (paid_in_pos IS NOT NULL OR withdrawn_pos IS NOT NULL
-               OR amount_pos IS NOT NULL)
-        GROUP BY 1, 2),
-    data_rows AS (
-        SELECT m.conv_id, m.segment_index, m.turn_idx, m.line_ord, m.cells,
-               h.date_pos, h.desc_pos, h.paid_in_pos, h.withdrawn_pos,
-               h.balance_pos, h.amount_pos,
-               lower(array_to_string(m.cells, ' ')) AS row_lower
-        FROM mapped m JOIN header h USING (conv_id, segment_index)
-        WHERE m.line_ord > h.header_ord),
-    kept_rows AS (
-        SELECT * FROM data_rows
-        WHERE NOT (row_lower LIKE '%brought forward%'
-                   OR row_lower LIKE '%carried forward%'
-                   OR row_lower LIKE '%b/f%' OR row_lower LIKE '%c/f%')),
-    fields AS (
-        SELECT conv_id, segment_index, turn_idx, line_ord, row_lower,
-               cells[date_pos] AS date_raw,
-               coalesce(CASE WHEN desc_pos IS NOT NULL THEN cells[desc_pos] END,
-                        '') AS descr,
-               {cents("cells[paid_in_pos]")} AS credit_cents,
-               {cents("cells[withdrawn_pos]")} AS debit_cents,
-               {cents("cells[amount_pos]")} AS single_cents,
-               {cents("cells[balance_pos]")} AS balance_cents
-        FROM kept_rows),
-    dated AS (
-        SELECT *,
-               last_value(pd_fixed IGNORE NULLS) OVER (
-                   PARTITION BY conv_id, segment_index ORDER BY line_ord
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS posted_date
-        FROM (
-            SELECT *,
-                   CASE WHEN year(pd0) < 100
-                        THEN make_date(CASE WHEN year(pd0) % 100 > 50
-                                            THEN 1900 + year(pd0) % 100
-                                            ELSE 2000 + year(pd0) % 100 END,
-                                       month(pd0), day(pd0))
-                        ELSE pd0 END AS pd_fixed
-            FROM (SELECT *, {date_ladder} AS pd0 FROM fields))),
-    recs AS (
-        SELECT conv_id, segment_index, turn_idx, line_ord, posted_date,
-               substr(descr, 1, 500) AS description_raw,
-               abs(coalesce(credit_cents, debit_cents, single_cents))
-                   AS amount_cents,
-               balance_cents,
-               CASE WHEN credit_cents IS NOT NULL THEN 'CREDIT'
-                    WHEN debit_cents IS NOT NULL THEN 'DEBIT'
-                    WHEN single_cents < 0 THEN 'DEBIT'
-                    WHEN single_cents > 0 THEN 'CREDIT'
-                    ELSE 'UNKNOWN' END AS direction
-        FROM dated
-        WHERE coalesce(credit_cents, debit_cents, single_cents) IS NOT NULL
-          AND NOT regexp_matches(lower(trim(descr)), '{summary}')
-          AND NOT regexp_matches(row_lower, '{summary}'))
-    """
-
-
-def _records_pattern_sql() -> str:
-    """Generated oracle for the pattern fallback tier's records: the
-    single-space-dominant routing rule, the camelot date+keyword
-    header gate, trailing-money-token detection (rightmost = balance
-    when two), the grow-while-the-parse-changes leading-date rule, no
-    date carry, b/f and summary skips, per-segment row numbering — all
-    re-derived in SQL from the snapshot's RAW lines (the routing rule
-    needs pre-normalization whitespace runs).
-    """
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
-    summary = _sql_regex(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-    # _PATTERN_MONEY_RE: optional paren/minus/currency, grouped or
-    # plain digits, mandatory pence, optional trailing paren/minus
-    money = (r"^\(?-?[" + chr(163) + chr(36) + chr(8364)
-             + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
-    header_kw = ["description", "paid in", "withdrawn", "balance",
-                 "money in", "money out", "debit", "credit", "amount"]
-    kw_test = " OR ".join(f"hdr LIKE '%{w}%'" for w in header_kw)
-
-    def tok_cents(expr: str) -> str:
-        """parse_amount of a money-regex-matched token, exact cents:
-        sign from leading paren / leading or trailing minus."""
-        return rf"""(CASE WHEN {expr} LIKE '(%' OR {expr} LIKE '-%'
-                          OR {expr} LIKE '%-' THEN -1 ELSE 1 END)
-             * (CAST(replace(regexp_extract({expr}, '(\d[\d,]*)\.', 1),
-                             ',', '') AS BIGINT) * 100
-                + CAST(regexp_extract({expr}, '\.(\d{{2}})', 1) AS BIGINT))"""
-
-    def try_date(expr: str) -> str:
-        return f"""COALESCE(
-            CAST(try_strptime({expr}, '%d/%m/%Y') AS DATE),
-            CAST(try_strptime({expr}, '%d %b %Y') AS DATE),
-            CAST(try_strptime({expr}, '%d/%m/%y') AS DATE),
-            CAST(try_strptime({expr}, '%Y-%m-%d') AS DATE),
-            CAST(try_strptime({expr}, '%d %B %Y') AS DATE),
-            CAST(try_strptime({expr}, '%d%b%y') AS DATE))"""
-
-    def pivot(expr: str) -> str:
-        return f"""CASE WHEN year({expr}) < 100
-            THEN make_date(CASE WHEN year({expr}) % 100 > 50
-                                THEN 1900 + year({expr}) % 100
-                                ELSE 2000 + year({expr}) % 100 END,
-                           month({expr}), day({expr}))
-            ELSE {expr} END"""
-
-    # line_ord: packed (turn_idx, line_no) ordinal — see the
-    # <100000-lines-per-turn corpus-bound note in _records_delim_sql
-    return rf"""
-    raw_lines AS (
-        SELECT s.conv_id, s.segment_index, s.turn_idx,
-               unnest(kept) AS raw_line,
-               s.turn_idx * 100000 + unnest(range(1, len(kept) + 1)) AS line_ord
-        FROM (SELECT t.conv_id, t.turn_idx,
-                     list_filter(string_split(t.payload, chr(10)),
-                         l -> trim(regexp_replace(l, '\s+', ' ', 'g')) <> '')
-                         AS kept
-              FROM turns_in t) t
-        JOIN turn_segmented s USING (conv_id, turn_idx)),
-    flagged AS (
-        SELECT conv_id, segment_index, turn_idx, line_ord,
-               trim(regexp_replace(raw_line, '\s+', ' ', 'g')) AS line,
-               (NOT regexp_matches(raw_line, '[|;]')
-                AND NOT regexp_matches(raw_line, '\S\s\s+\S')) AS is_single
-        FROM raw_lines),
-    -- single-space-dominant routing rule (analyse_segment)
-    seg_ok AS (
-        SELECT conv_id, segment_index FROM flagged
-        GROUP BY 1, 2
-        HAVING 2 * SUM(CASE WHEN is_single THEN 1 ELSE 0 END) > COUNT(*)),
-    -- camelot header gate: first line with 'date' + a table keyword
-    header AS (
-        SELECT conv_id, segment_index, MIN(line_ord) AS header_ord
-        FROM (SELECT conv_id, segment_index, line_ord,
-                     lower(line) AS hdr FROM flagged)
-        WHERE hdr LIKE '%date%' AND ({kw_test})
-        GROUP BY 1, 2),
-    rows_in AS (
-        SELECT f.conv_id, f.segment_index, f.turn_idx, f.line_ord, f.line,
-               string_split(f.line, ' ') AS toks
-        FROM flagged f
-        JOIN seg_ok USING (conv_id, segment_index)
-        JOIN header h USING (conv_id, segment_index)
-        WHERE f.line_ord > h.header_ord
-          AND NOT (lower(f.line) LIKE '%brought forward%'
-                   OR lower(f.line) LIKE '%carried forward%'
-                   OR lower(f.line) LIKE '%b/f%' OR lower(f.line) LIKE '%c/f%')),
-    tails AS (
-        SELECT *, len(toks) AS n,
-               CASE WHEN NOT regexp_matches(toks[len(toks)], '{money}') THEN 0
-                    WHEN len(toks) >= 2
-                         AND regexp_matches(toks[len(toks) - 1], '{money}')
-                         THEN 2
-                    ELSE 1 END AS tail_len
-        FROM rows_in
-        WHERE len(toks) >= 1),
-    dated AS (
-        SELECT *, n - tail_len AS avail,
-               CASE WHEN n - tail_len >= 1
-                    THEN {pivot(try_date("toks[1]"))} END AS p1,
-               CASE WHEN n - tail_len >= 2
-                    THEN {pivot(try_date("array_to_string(list_slice(toks, 1, 2), ' ')"))}
-                    END AS p2,
-               CASE WHEN n - tail_len >= 3
-                    THEN {pivot(try_date("array_to_string(list_slice(toks, 1, 3), ' ')"))}
-                    END AS p3
-        FROM tails
-        WHERE tail_len > 0),
-    grown AS (
-        -- grow-while-the-parse-changes (segment_extract.py pattern
-        -- tier): extend the date candidate only when the longer parse
-        -- differs; stop at the first unchanged or failed extension
-        -- after a success
-        SELECT *,
-               CASE WHEN p1 IS NOT NULL AND (p2 IS NULL OR p2 = p1) THEN 1
-                    WHEN p1 IS NOT NULL AND p2 IS NOT NULL AND p2 <> p1
-                         AND (p3 IS NULL OR p3 = p2) THEN 2
-                    WHEN p1 IS NOT NULL AND p2 IS NOT NULL AND p2 <> p1
-                         AND p3 IS NOT NULL AND p3 <> p2 THEN 3
-                    WHEN p1 IS NULL AND p2 IS NOT NULL
-                         AND (p3 IS NULL OR p3 = p2) THEN 2
-                    WHEN p1 IS NULL AND p2 IS NOT NULL
-                         AND p3 IS NOT NULL AND p3 <> p2 THEN 3
-                    WHEN p1 IS NULL AND p2 IS NULL AND p3 IS NOT NULL THEN 3
-                    ELSE 0 END AS date_end
-        FROM dated),
-    -- description materialized as a plain column BEFORE the summary
-    -- regex filter: DuckDB re-compiles a regexp per row when its input
-    -- is a computed list expression, which OOMs on this alternation
-    projected AS MATERIALIZED (
-        SELECT conv_id, segment_index, turn_idx, line_ord, line,
-               toks, n, tail_len,
-               CASE date_end WHEN 1 THEN p1 WHEN 2 THEN p2 WHEN 3 THEN p3 END
-                   AS posted_date,
-               array_to_string(list_slice(toks, date_end + 1, n - tail_len),
-                               ' ') AS descr
-        FROM grown),
-    recs AS (
-        SELECT conv_id, segment_index, turn_idx, line_ord, posted_date,
-               substr(descr, 1, 500) AS description_raw,
-               abs({tok_cents("toks[n - tail_len + 1]")}) AS amount_cents,
-               CASE WHEN tail_len = 2 THEN {tok_cents("toks[n]")} END
-                   AS balance_cents,
-               CASE WHEN {tok_cents("toks[n - tail_len + 1]")} < 0 THEN 'DEBIT'
-                    WHEN {tok_cents("toks[n - tail_len + 1]")} > 0 THEN 'CREDIT'
-                    ELSE 'UNKNOWN' END AS direction
-        FROM projected
-        WHERE NOT regexp_matches(lower(trim(descr)), '{summary}')
-          AND NOT regexp_matches(lower(line), '{summary}'))
-    """
-
-
-def _records_pattern_select() -> str:
-    return """
-    SELECT conv_id, segment_index,
-           CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, segment_index
-                                   ORDER BY line_ord) - 1 AS INT) AS row_index,
-           CAST(turn_idx AS INT) AS turn_idx,
-           posted_date, description_raw, amount_cents, balance_cents, direction
-    FROM recs
-    """
 
 
 def _pattern_geometry_sql() -> str:
@@ -2159,7 +2190,6 @@ def _pattern_geometry_sql() -> str:
 
 
 def _header_kw_sum() -> str:
-    from .kernels.patterns import HEADER_KEYWORDS
     return " + ".join(f"(CASE WHEN low LIKE '%{kw}%' THEN 1 ELSE 0 END)"
                       for kw in sorted(HEADER_KEYWORDS))
 
@@ -2173,22 +2203,8 @@ def _mainslice_ctes() -> str:
     header, e.g. "DIRECT DEBIT ... DR" opening a headerless segment).
     """
     kw_sum = _header_kw_sum()
-    # line_ord: packed (turn_idx, line_no) ordinal — see the
-    # <100000-lines-per-turn corpus-bound note in _records_delim_sql
     return rf"""
-    raw_lines AS (
-        SELECT s.conv_id, s.segment_index, s.turn_idx,
-               unnest(kept) AS raw_line,
-               s.turn_idx * 100000 + unnest(range(1, len(kept) + 1)) AS line_ord
-        FROM (SELECT t.conv_id, t.turn_idx,
-                     list_filter(string_split(t.payload, chr(10)),
-                         l -> trim(regexp_replace(l, '\s+', ' ', 'g')) <> '')
-                         AS kept
-              FROM turns_in t) t
-        JOIN turn_segmented s USING (conv_id, turn_idx)),
-    flagged AS (
-        SELECT conv_id, segment_index, turn_idx, line_ord,
-               trim(regexp_replace(raw_line, '\s+', ' ', 'g')) AS line,
+    {_RAW_LINES_SQL}
                regexp_matches(raw_line, '[|;]') AS is_delim,
                (NOT regexp_matches(raw_line, '[|;]')
                 AND NOT regexp_matches(raw_line, '\S\s\s+\S')) AS is_single
@@ -2209,6 +2225,39 @@ def _mainslice_ctes() -> str:
         GROUP BY 1, 2)"""
 
 
+def _money_tails(src: str) -> str:
+    """`tails` over `src`'s token lists: amt_idx is the amount token —
+    the money token before a CR/DR suffix, else the first of one or two
+    trailing money tokens (NULL on a line without a money tail)."""
+    return rf"""tails AS (
+        SELECT *,
+               CASE WHEN n >= 2 AND toks[n] IN ('CR', 'DR')
+                         AND regexp_matches(toks[n - 1], '{_MONEY_TOKEN_RE}')
+                    THEN n - 1
+                    WHEN regexp_matches(toks[n], '{_MONEY_TOKEN_RE}')
+                    THEN CASE WHEN n >= 2
+                                   AND regexp_matches(toks[n - 1], '{_MONEY_TOKEN_RE}')
+                              THEN n - 1 ELSE n END
+                    END AS amt_idx
+        FROM (SELECT *, len(toks) AS n FROM {src}) _
+        WHERE len(toks) >= 1),"""
+
+
+# p1..p3: the first one, two and three tokens parsed as dates, where
+# they stand before the amount
+_LEADING_DATES_SQL = f"""dated AS (
+        SELECT *,
+               CASE WHEN amt_idx > 1
+                    THEN {_pivot(_try_date("toks[1]"))} END AS p1,
+               CASE WHEN amt_idx > 2
+                    THEN {_pivot(_try_date("array_to_string(list_slice(toks, 1, 2), ' ')"))}
+                    END AS p2,
+               CASE WHEN amt_idx > 3
+                    THEN {_pivot(_try_date("array_to_string(list_slice(toks, 1, 3), ' ')"))}
+                    END AS p3
+        FROM tails WHERE amt_idx IS NOT NULL),"""
+
+
 def _records_amounts_sql() -> str:
     """Generated oracle for the MAIN extraction path's amount rows
     (the solver-independent projection of W9 on the histogram/grid
@@ -2225,33 +2274,6 @@ def _records_amounts_sql() -> str:
     Money shapes cover the corpus conventions (plain, comma-grouped,
     parens, leading/trailing minus, CR/DR suffix tokens).
     """
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
-    summary = _sql_regex(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-    money = (r"^\(?-?[" + chr(163) + chr(36) + chr(8364)
-             + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
-
-    def tok_cents_abs(expr: str) -> str:
-        return rf"""(CAST(replace(regexp_extract({expr}, '(\d[\d,]*)\.', 1),
-                             ',', '') AS BIGINT) * 100
-                + CAST(regexp_extract({expr}, '\.(\d{{2}})', 1) AS BIGINT))"""
-
-    def try_date(expr: str) -> str:
-        return f"""COALESCE(
-            CAST(try_strptime({expr}, '%d/%m/%Y') AS DATE),
-            CAST(try_strptime({expr}, '%d %b %Y') AS DATE),
-            CAST(try_strptime({expr}, '%d/%m/%y') AS DATE),
-            CAST(try_strptime({expr}, '%Y-%m-%d') AS DATE),
-            CAST(try_strptime({expr}, '%d %B %Y') AS DATE),
-            CAST(try_strptime({expr}, '%d%b%y') AS DATE))"""
-
-    def pivot(expr: str) -> str:
-        return f"""CASE WHEN year({expr}) < 100
-            THEN make_date(CASE WHEN year({expr}) % 100 > 50
-                                THEN 1900 + year({expr}) % 100
-                                ELSE 2000 + year({expr}) % 100 END,
-                           month({expr}), day({expr}))
-            ELSE {expr} END"""
-
     return rf"""{_mainslice_ctes()},
     rows_in AS (
         SELECT f.conv_id, f.segment_index, f.turn_idx, f.line_ord, f.line,
@@ -2260,30 +2282,9 @@ def _records_amounts_sql() -> str:
         JOIN seg_ok USING (conv_id, segment_index)
         JOIN headered h USING (conv_id, segment_index)
         WHERE f.line_ord > h.header_ord
-          AND NOT regexp_matches(lower(f.line), '{summary}')),
-    tails AS (
-        SELECT *,
-               CASE WHEN n >= 2 AND toks[n] IN ('CR', 'DR')
-                         AND regexp_matches(toks[n - 1], '{money}')
-                    THEN n - 1
-                    WHEN regexp_matches(toks[n], '{money}')
-                    THEN CASE WHEN n >= 2
-                                   AND regexp_matches(toks[n - 1], '{money}')
-                              THEN n - 1 ELSE n END
-                    END AS amt_idx
-        FROM (SELECT *, len(toks) AS n FROM rows_in) _
-        WHERE len(toks) >= 1),
-    dated AS (
-        SELECT *,
-               CASE WHEN amt_idx > 1
-                    THEN {pivot(try_date("toks[1]"))} END AS p1,
-               CASE WHEN amt_idx > 2
-                    THEN {pivot(try_date("array_to_string(list_slice(toks, 1, 2), ' ')"))}
-                    END AS p2,
-               CASE WHEN amt_idx > 3
-                    THEN {pivot(try_date("array_to_string(list_slice(toks, 1, 3), ' ')"))}
-                    END AS p3
-        FROM tails WHERE amt_idx IS NOT NULL),
+          AND NOT regexp_matches(lower(f.line), '{_BOILERPLATE_SQL}')),
+    {_money_tails("rows_in")}
+    {_LEADING_DATES_SQL}
     grown AS (
         SELECT *,
                CASE WHEN p1 IS NOT NULL AND (p2 IS NULL OR p2 = p1) THEN 1
@@ -2309,7 +2310,7 @@ def _records_amounts_sql() -> str:
                -- alone carries the description
                array_to_string(list_slice(toks, date_end + 1, amt_idx - 1),
                                ' ') AS description_raw,
-               {tok_cents_abs("toks[amt_idx]")} AS amount_cents
+               {_tok_cents_abs("toks[amt_idx]")} AS amount_cents
         FROM grown)
     SELECT conv_id, segment_index,
            CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, segment_index
@@ -2364,47 +2365,18 @@ def _records_headerless_sql() -> str:
     the second, date the grow-while-the-parse-changes leading tokens —
     restricted to uniform-tail segments where role statistics are
     value-determined."""
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
-    summary = _sql_regex(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-    money = (r"^\(?-?[" + chr(163) + chr(36) + chr(8364)
-             + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
-
-    def tok_cents(expr: str) -> str:
-        return rf"""(CASE WHEN {expr} LIKE '(%' OR {expr} LIKE '-%'
-                          OR {expr} LIKE '%-' THEN -1 ELSE 1 END)
-             * (CAST(replace(regexp_extract({expr}, '(\d[\d,]*)\.', 1),
-                             ',', '') AS BIGINT) * 100
-                + CAST(regexp_extract({expr}, '\.(\d{{2}})', 1) AS BIGINT))"""
-
-    def try_date(expr: str) -> str:
-        return f"""COALESCE(
-            CAST(try_strptime({expr}, '%d/%m/%Y') AS DATE),
-            CAST(try_strptime({expr}, '%d %b %Y') AS DATE),
-            CAST(try_strptime({expr}, '%d/%m/%y') AS DATE),
-            CAST(try_strptime({expr}, '%Y-%m-%d') AS DATE),
-            CAST(try_strptime({expr}, '%d %B %Y') AS DATE),
-            CAST(try_strptime({expr}, '%d%b%y') AS DATE))"""
-
-    def pivot(expr: str) -> str:
-        return f"""CASE WHEN year({expr}) < 100
-            THEN make_date(CASE WHEN year({expr}) % 100 > 50
-                                THEN 1900 + year({expr}) % 100
-                                ELSE 2000 + year({expr}) % 100 END,
-                           month({expr}), day({expr}))
-            ELSE {expr} END"""
-
     return rf"""{_mainslice_ctes()},
     -- uniform-tail rule on RAW lines (fixed-width ends), excluding
     -- marker/summary lines like the engine-side helper
     tail_ends AS (
         SELECT r.conv_id, r.segment_index,
                COUNT(DISTINCT CASE WHEN
-                   regexp_matches(toks[len(toks)], '{money}')
+                   regexp_matches(toks[len(toks)], '{_MONEY_TOKEN_RE}')
                    AND len(toks) >= 2
-                   AND regexp_matches(toks[len(toks) - 1], '{money}')
+                   AND regexp_matches(toks[len(toks) - 1], '{_MONEY_TOKEN_RE}')
                  THEN len(rtrim(regexp_replace(r.raw_line, '\s*\S+\s*$', '')))
                  END) AS n_ends,
-               SUM(CASE WHEN regexp_matches(toks[len(toks)], '{money}')
+               SUM(CASE WHEN regexp_matches(toks[len(toks)], '{_MONEY_TOKEN_RE}')
                         THEN 1 ELSE 0 END) AS n_tail
         FROM (SELECT conv_id, segment_index, raw_line,
                      string_split(trim(regexp_replace(raw_line, '\s+', ' ', 'g')),
@@ -2412,7 +2384,7 @@ def _records_headerless_sql() -> str:
               FROM raw_lines
               WHERE NOT regexp_matches(
                   lower(trim(regexp_replace(raw_line, '\s+', ' ', 'g'))),
-                  '{summary}')) r
+                  '{_BOILERPLATE_SQL}')) r
         GROUP BY 1, 2),
     -- n_tail >= 12: the histogram peak-height floor (see the
     -- engine-side helper's size-floor note)
@@ -2427,30 +2399,9 @@ def _records_headerless_sql() -> str:
                string_split(f.line, ' ') AS toks
         FROM flagged f
         JOIN hl_slice USING (conv_id, segment_index)
-        WHERE NOT regexp_matches(lower(f.line), '{summary}')),
-    tails AS (
-        SELECT *,
-               CASE WHEN n >= 2 AND toks[n] IN ('CR', 'DR')
-                         AND regexp_matches(toks[n - 1], '{money}')
-                    THEN n - 1
-                    WHEN regexp_matches(toks[n], '{money}')
-                    THEN CASE WHEN n >= 2
-                                   AND regexp_matches(toks[n - 1], '{money}')
-                              THEN n - 1 ELSE n END
-                    END AS amt_idx
-        FROM (SELECT *, len(toks) AS n FROM rows_in) _
-        WHERE len(toks) >= 1),
-    dated AS (
-        SELECT *,
-               CASE WHEN amt_idx > 1
-                    THEN {pivot(try_date("toks[1]"))} END AS p1,
-               CASE WHEN amt_idx > 2
-                    THEN {pivot(try_date("array_to_string(list_slice(toks, 1, 2), ' ')"))}
-                    END AS p2,
-               CASE WHEN amt_idx > 3
-                    THEN {pivot(try_date("array_to_string(list_slice(toks, 1, 3), ' ')"))}
-                    END AS p3
-        FROM tails WHERE amt_idx IS NOT NULL),
+        WHERE NOT regexp_matches(lower(f.line), '{_BOILERPLATE_SQL}')),
+    {_money_tails("rows_in")}
+    {_LEADING_DATES_SQL}
     recs AS (
         SELECT conv_id, segment_index, turn_idx, line_ord,
                CASE WHEN p1 IS NOT NULL AND (p2 IS NULL OR p2 = p1) THEN p1
@@ -2462,12 +2413,12 @@ def _records_headerless_sql() -> str:
                          AND (p3 IS NULL OR p3 = p2) THEN p2
                     WHEN p1 IS NULL AND p2 IS NOT NULL THEN coalesce(p3, p2)
                     ELSE p3 END AS posted_date,
-               abs({tok_cents("toks[amt_idx]")}) AS amount_cents,
-               ({tok_cents("toks[amt_idx]")} < 0
+               abs({_tok_cents("toks[amt_idx]")}) AS amount_cents,
+               ({_tok_cents("toks[amt_idx]")} < 0
                 OR (amt_idx = n - 1 AND toks[n] = 'DR')) AS is_neg,
-               {tok_cents("toks[amt_idx]")} = 0 AS is_zero,
+               {_tok_cents("toks[amt_idx]")} = 0 AS is_zero,
                CASE WHEN amt_idx = n - 1 AND toks[n] NOT IN ('CR', 'DR')
-                    THEN {tok_cents("toks[n]")} END AS balance_cents
+                    THEN {_tok_cents("toks[n]")} END AS balance_cents
         FROM dated)
     SELECT conv_id, segment_index,
            CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, segment_index
@@ -2495,20 +2446,6 @@ def _records_directions_sql() -> str:
     order with debit tried before credit per position
     (solver.attempt_balance_correction parity).
     """
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
-    summary = _sql_regex(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-    marker = _sql_regex(BALANCE_MARKER_RLIKE)
-    money = (r"^\(?-?[" + chr(163) + chr(36) + chr(8364)
-             + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
-
-    def tok_cents(expr: str) -> str:
-        """Signed exact cents of a money-regex-matched token."""
-        return rf"""(CASE WHEN {expr} LIKE '(%' OR {expr} LIKE '-%'
-                          OR {expr} LIKE '%-' THEN -1 ELSE 1 END)
-             * (CAST(replace(regexp_extract({expr}, '(\d[\d,]*)\.', 1),
-                             ',', '') AS BIGINT) * 100
-                + CAST(regexp_extract({expr}, '\.(\d{{2}})', 1) AS BIGINT))"""
-
     def ladder(expr: str) -> str:
         return (f"CASE WHEN {expr} <= 0 THEN 0 WHEN {expr} <= 1 THEN 1"
                 f" WHEN {expr} <= 2 THEN 2 WHEN {expr} <= 5 THEN 5"
@@ -2545,28 +2482,17 @@ def _records_directions_sql() -> str:
         FROM flagged f
         JOIN hdr_case c USING (conv_id, segment_index)
         WHERE f.line_ord > c.header_ord
-          AND NOT regexp_matches(lower(f.line), '{summary}')),
-    tails AS (
-        SELECT *,
-               CASE WHEN n >= 2 AND toks[n] IN ('CR', 'DR')
-                         AND regexp_matches(toks[n - 1], '{money}')
-                    THEN n - 1
-                    WHEN regexp_matches(toks[n], '{money}')
-                    THEN CASE WHEN n >= 2
-                                   AND regexp_matches(toks[n - 1], '{money}')
-                              THEN n - 1 ELSE n END
-                    END AS amt_idx
-        FROM (SELECT *, len(toks) AS n FROM data_lines) _
-        WHERE len(toks) >= 1),
+          AND NOT regexp_matches(lower(f.line), '{_BOILERPLATE_SQL}')),
+    {_money_tails("data_lines")}
     tail_rows AS (
         SELECT conv_id, segment_index, turn_idx, line_ord, case_type,
-               abs({tok_cents("toks[amt_idx]")}) AS amt_cents,
-               {tok_cents("toks[amt_idx]")} AS amt_signed,
+               abs({_tok_cents("toks[amt_idx]")}) AS amt_cents,
+               {_tok_cents("toks[amt_idx]")} AS amt_signed,
                (toks[amt_idx] LIKE '(%' OR toks[amt_idx] LIKE '-%'
                 OR toks[amt_idx] LIKE '%-'
                 OR toks[n] IN ('CR', 'DR')) AS signish,
                CASE WHEN amt_idx = n - 1 AND toks[n] NOT IN ('CR', 'DR')
-                    THEN {tok_cents("toks[n]")} END AS bal_cents
+                    THEN {_tok_cents("toks[n]")} END AS bal_cents
         FROM tails WHERE amt_idx IS NOT NULL),
     -- case-2 exclusion: >30% signed amount tokens -> sign solver
     seg_sign_ok AS (
@@ -2576,7 +2502,7 @@ def _records_directions_sql() -> str:
     -- W7 opening anchor: first post-header marker row's money token
     opening AS (
         SELECT m.conv_id, m.segment_index,
-               arg_min({tok_cents("m.money_tok")}, m.line_ord) AS opening_cents
+               arg_min({_tok_cents("m.money_tok")}, m.line_ord) AS opening_cents
         FROM (
             SELECT f.conv_id, f.segment_index, f.line_ord,
                    string_split(f.line, ' ')[len(string_split(f.line, ' '))]
@@ -2584,8 +2510,8 @@ def _records_directions_sql() -> str:
             FROM flagged f
             JOIN hdr_case c USING (conv_id, segment_index)
             WHERE f.line_ord > c.header_ord
-              AND regexp_matches(lower(f.line), '{marker}')) m
-        WHERE regexp_matches(m.money_tok, '{money}')
+              AND regexp_matches(lower(f.line), '{_MARKER_SQL}')) m
+        WHERE regexp_matches(m.money_tok, '{_MONEY_TOKEN_RE}')
         GROUP BY 1, 2),
     chain AS (
         SELECT t.*,
@@ -2695,17 +2621,13 @@ def _records_directions_sql() -> str:
     """
 
 
-def _headered_segments(turns: DataFrame) -> DataFrame:
-    """(conv_id, segment_index) whose first 10 lines contain a header
-    line (>=2 HEADER_KEYWORDS) — the detect_header_line data rule
-    (kernels/rows.py), re-expressed natively so the amounts oracle's
-    slice restriction is the same pure data property on both engines.
-    Headerless segments (the corpus wipes ~5%% of opening turns) are
-    where merged right-justified columns cannot be split by header
-    evidence, the one remaining class the line-level oracle cannot
-    predict."""
-    from .kernels.patterns import HEADER_KEYWORDS
-
+def _line_frame(turns: DataFrame) -> DataFrame:
+    """Each segment's whitespace-normalized non-blank lines in reading
+    order `_ord` (from 1), with `_hdr` set on header candidates: lines
+    among the first 10 holding >= 2 HEADER_KEYWORDS — the
+    detect_header_line data rule (kernels/rows.py), re-expressed
+    natively so an oracle's slice restriction is the same pure data
+    property on both engines."""
     lines = turns.select(
         "conv_id", "segment_index", "turn_idx",
         F.posexplode(F.filter(
@@ -2719,9 +2641,37 @@ def _headered_segments(turns: DataFrame) -> DataFrame:
         term = low.contains(kw).cast("int")
         kw_count = term if kw_count is None else kw_count + term
     return (lines.withColumn("_ord", F.row_number().over(w))
-            .where(F.col("_ord") <= 10)
-            .where(kw_count >= 2)
+            .withColumn("_hdr", (F.col("_ord") <= 10) & (kw_count >= 2)))
+
+
+def _segment_headers(lines: DataFrame) -> DataFrame:
+    """(conv_id, segment_index, hl, header_ord): each segment's first
+    header candidate among `_line_frame` lines, lowered, and its _ord."""
+    return (lines.where("_hdr").groupBy("conv_id", "segment_index")
+            .agg(F.lower(F.min_by("line", "_ord")).alias("hl"),
+                 F.min("_ord").alias("header_ord")))
+
+
+def _headered_segments(turns: DataFrame) -> DataFrame:
+    """(conv_id, segment_index) whose first 10 lines hold a header line
+    (see _line_frame).  Headerless segments (the corpus wipes ~5% of
+    opening turns) are where merged right-justified columns cannot be
+    split by header evidence, the one remaining class the line-level
+    oracle cannot predict."""
+    return (_line_frame(turns).where("_hdr")
             .select("conv_id", "segment_index").distinct())
+
+
+def _main_amount_rows(rec: DataFrame, *slices: DataFrame) -> DataFrame:
+    """Amount-bearing main-path (non-fallback) records on the segments
+    of every `slices` frame, numbered `seq` from 0 per segment in row
+    order."""
+    rows = rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
+                     & F.col("amount").isNotNull())
+    for seg in slices:
+        rows = rows.join(seg, ["conv_id", "segment_index"])
+    w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
+    return rows.withColumn("seq", (F.row_number().over(w) - 1).cast("int"))
 
 
 def _segments_balances_sql() -> str:
@@ -2733,10 +2683,6 @@ def _segments_balances_sql() -> str:
     balance picks at all only when its header maps a BALANCE column
     (match_header keywords — the corpus' headered segments assign
     ROLE_BALANCE exactly by header keyword)."""
-    from .kernels.patterns import BALANCE_MARKER_RLIKE
-    marker = _sql_regex(BALANCE_MARKER_RLIKE)
-    money = (r"^\(?-?[" + chr(163) + chr(36) + chr(8364)
-             + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
     cents = r"""(CASE WHEN m.money_tok LIKE '(%' OR m.money_tok LIKE '-%'
                       OR m.money_tok LIKE '%-' THEN -1 ELSE 1 END)
          * (CAST(replace(regexp_extract(m.money_tok, '(\d[\d,]*)\.', 1),
@@ -2765,8 +2711,8 @@ def _segments_balances_sql() -> str:
             FROM flagged f
             JOIN headered h USING (conv_id, segment_index)
             WHERE f.line_ord > h.header_ord
-              AND regexp_matches(lower(f.line), '{marker}')) m
-        WHERE regexp_matches(m.money_tok, '{money}')),
+              AND regexp_matches(lower(f.line), '{_MARKER_SQL}')) m
+        WHERE regexp_matches(m.money_tok, '{_MONEY_TOKEN_RE}')),
     balances AS (
         SELECT conv_id, segment_index,
                arg_min(bal, line_ord) AS opening,
@@ -2782,7 +2728,7 @@ def _segments_balances_sql() -> str:
     """
 
 
-@register("transcripts_segments_balances", None)  # SQL attached below
+@register("transcripts_segments_balances", _on_turns_view(_segments_balances_sql()))
 def transcripts_segments_balances(spark, sf_dir):
     """Segments-table projection (ranges + W7 opening/closing marker
     balances) on the headered main-route slice, hash-checked against
@@ -2800,29 +2746,28 @@ def transcripts_segments_balances(spark, sf_dir):
                     (F.col("closing_balance") * 100).cast("long").alias("closing_cents")))
 
 
+def _raw_segment_lines(spark: SparkSession, turns: DataFrame) -> DataFrame:
+    """(conv_id, segment_index, raw): each segment's non-blank lines as
+    the snapshot payloads hold them — the routing rules need the
+    whitespace runs the turns output's raw_text has normalized away."""
+    snap = spark.read.parquet(TRANSCRIPTS_SNAPSHOT)
+    return (snap.select("conv_id", "turn_idx", _payload().alias("payload"))
+            .join(turns.select("conv_id", "turn_idx", "segment_index"),
+                  ["conv_id", "turn_idx"])
+            .select("conv_id", "segment_index",
+                    F.explode(F.filter(
+                        F.split("payload", "\n"),
+                        lambda l: F.trim(F.regexp_replace(l, r"\s+", " ")) != ""))
+                    .alias("raw")))
+
+
 def _mainroute_segments(spark: SparkSession, turns: DataFrame) -> DataFrame:
     """(conv_id, segment_index) where neither structured-tier majority
     rule fires — the analyse_segment routing complement, as a native
-    re-derivation of the same data property (see _headered_segments).
-    The single-space rule needs pre-normalization whitespace runs, so
-    lines come from the snapshot payloads (the turns output's raw_text
-    is already whitespace-normalized), joined to segment indices."""
-    snap = spark.read.parquet(TRANSCRIPTS_SNAPSHOT)
-    payload = F.when((F.col("text").isNotNull()) & (F.col("text") != ""),
-                     F.col("text")) \
-               .when((F.col("tool").isNotNull()) & (F.col("tool") != ""),
-                     F.col("tool")).otherwise(F.lit(""))
-    lines = (snap.select("conv_id", "turn_idx", payload.alias("payload"))
-             .join(turns.select("conv_id", "turn_idx", "segment_index"),
-                   ["conv_id", "turn_idx"])
-             .select("conv_id", "segment_index",
-                     F.explode(F.filter(
-                         F.split("payload", "\n"),
-                         lambda l: F.trim(F.regexp_replace(l, r"\s+", " ")) != ""))
-                     .alias("raw")))
+    re-derivation of the same data property (see _line_frame)."""
     is_delim = F.col("raw").rlike("[|;]")
     is_single = (~is_delim) & (~F.col("raw").rlike(r"\S\s\s+\S"))
-    return (lines
+    return (_raw_segment_lines(spark, turns)
             .groupBy("conv_id", "segment_index")
             .agg(F.sum(is_delim.cast("int")).alias("_d"),
                  F.sum(is_single.cast("int")).alias("_s"),
@@ -2832,26 +2777,19 @@ def _mainroute_segments(spark: SparkSession, turns: DataFrame) -> DataFrame:
             .select("conv_id", "segment_index"))
 
 
-@register("transcripts_records_amounts", None)  # SQL attached below
+@register("transcripts_records_amounts", _on_turns_view(_records_amounts_sql()))
 def transcripts_records_amounts(spark, sf_dir):
     """Solver-independent projection of the MAIN-path records (W9,
     orchestrator.py:692-789) on headered segments: amount-bearing rows
     with their dates, exact cents and per-segment order, oracle-checked
     against a line-level re-derivation (see _records_amounts_sql)."""
     out = _pipeline_outputs(spark, sf_dir)
-    rec = out["records"]
-    headered = _headered_segments(out["turns"])
-    w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    return (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
-                      & F.col("amount").isNotNull())
-            .join(headered, ["conv_id", "segment_index"])
-            .select("conv_id", "segment_index",
-                    (F.row_number().over(w) - 1).cast("int").alias("seq"),
-                    "turn_idx", "posted_date",
+    return (_main_amount_rows(out["records"], _headered_segments(out["turns"]))
+            .select("conv_id", "segment_index", "seq", "turn_idx", "posted_date",
                     (F.col("amount") * 100).cast("long").alias("amount_cents")))
 
 
-@register("transcripts_records_descriptions", None)  # SQL attached below
+@register("transcripts_records_descriptions", _on_turns_view(_records_descriptions_sql()))
 def transcripts_records_descriptions(spark, sf_dir):
     """Main-path description column (W9), oracle-checked on the
     real-header slice: the detected header line must map a DESCRIPTION
@@ -2860,48 +2798,19 @@ def transcripts_records_descriptions(spark, sf_dir):
     description empty) are excluded by construction.  See
     _records_descriptions_sql for why the opening line's middle tokens
     are exactly the engine's description."""
-    from .kernels.patterns import HEADER_KEYWORDS
-
     out = _pipeline_outputs(spark, sf_dir)
-    rec = out["records"]
     turns = out["turns"]
-
-    lines = turns.select(
-        "conv_id", "segment_index", "turn_idx",
-        F.posexplode(F.filter(
-            F.transform(F.split(F.coalesce("raw_text", F.lit("")), "\n"),
-                        lambda l: F.trim(F.regexp_replace(l, r"\s+", " "))),
-            lambda l: l != "")).alias("pos", "line"))
-    w0 = Window.partitionBy("conv_id", "segment_index").orderBy("turn_idx", "pos")
-    low = F.lower("line")
-    kw_count = None
-    for kw in sorted(HEADER_KEYWORDS):
-        term = low.contains(kw).cast("int")
-        kw_count = term if kw_count is None else kw_count + term
-    hdr = (lines.withColumn("_ord", F.row_number().over(w0))
-           .where((F.col("_ord") <= 10) & (kw_count >= 2))
-           .groupBy("conv_id", "segment_index")
-           .agg(F.lower(F.min_by("line", "_ord")).alias("hl")))
     hl = F.col("hl")
     desc_kw = (hl.contains("description") | hl.contains("details")
                | hl.contains("particulars") | hl.contains("narrative")
                | hl.contains("transaction"))
-    slice_segs = hdr.where(desc_kw).select("conv_id", "segment_index")
-    main = _mainroute_segments(spark, turns)
-
-    w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    return (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
-                      & F.col("amount").isNotNull())
-            .join(slice_segs, ["conv_id", "segment_index"])
-            .join(main, ["conv_id", "segment_index"])
-            .select("conv_id", "segment_index",
-                    (F.row_number().over(w) - 1).cast("int").alias("seq"),
-                    "turn_idx", "description_raw",
+    slice_segs = (_segment_headers(_line_frame(turns)).where(desc_kw)
+                  .select("conv_id", "segment_index"))
+    return (_main_amount_rows(out["records"], slice_segs,
+                              _mainroute_segments(spark, turns))
+            .select("conv_id", "segment_index", "seq", "turn_idx",
+                    "description_raw",
                     (F.col("amount") * 100).cast("long").alias("amount_cents")))
-
-
-_MONEY_TOKEN_RE = ("^\\(?-?[" + chr(163) + chr(36) + chr(8364)
-                   + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
 
 
 def _solver_case_segments(spark: SparkSession, turns: DataFrame) -> DataFrame:
@@ -2910,7 +2819,7 @@ def _solver_case_segments(spark: SparkSession, turns: DataFrame) -> DataFrame:
     columns) or case 3 (single amount + balance), re-derived natively
     from the same line-level data properties the SQL oracle uses, so
     both engines select the identical segment set by construction
-    (the _headered_segments pattern).
+    (the _line_frame pattern).
 
     Corpus-safe simplifications (documented like the delim oracle's):
     the header's role keywords are matched on the whole header line
@@ -2923,32 +2832,8 @@ def _solver_case_segments(spark: SparkSession, turns: DataFrame) -> DataFrame:
     money-tail rows' amount tokens — the line-level proxy for
     rows_have_sign_convention's amount_raw scan.
     """
-    from .kernels.patterns import (
-        BALANCE_MARKER_RLIKE,
-        HEADER_KEYWORDS,
-        SUMMARY_ROW_RLIKE,
-    )
-    boiler = f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})"
-
-    lines = (turns.select(
-        "conv_id", "segment_index", "turn_idx",
-        F.posexplode(F.filter(
-            F.transform(F.split(F.coalesce("raw_text", F.lit("")), "\n"),
-                        lambda l: F.trim(F.regexp_replace(l, r"\s+", " "))),
-            lambda l: l != "")).alias("pos", "line")))
-    w = Window.partitionBy("conv_id", "segment_index").orderBy("turn_idx", "pos")
-    lines = lines.withColumn("_ord", F.row_number().over(w))
-
-    low = F.lower("line")
-    kw_count = None
-    for kw in sorted(HEADER_KEYWORDS):
-        term = low.contains(kw).cast("int")
-        kw_count = term if kw_count is None else kw_count + term
-    hdr = (lines.where((F.col("_ord") <= 10) & (kw_count >= 2))
-           .groupBy("conv_id", "segment_index")
-           .agg(F.lower(F.min_by("line", "_ord")).alias("hl"),
-                F.min("_ord").alias("header_ord")))
-
+    lines = _line_frame(turns)
+    hdr = _segment_headers(lines)
     hl = F.col("hl")
     deb = (hl.contains("debit") | hl.contains("paid out")
            | hl.contains("money out") | hl.contains("withdrawal")
@@ -2967,7 +2852,7 @@ def _solver_case_segments(spark: SparkSession, turns: DataFrame) -> DataFrame:
     # case-2 exclusion: signed amount tokens on >30% of money-tail rows
     data = (lines.join(cases, ["conv_id", "segment_index"])
             .where(F.col("_ord") > F.col("header_ord"))
-            .where(~low.rlike(boiler)))
+            .where(~F.lower("line").rlike(BOILERPLATE_RLIKE)))
     toks = F.split("line", " ")
     n = F.size(toks)
     last = F.element_at(toks, -1)
@@ -3007,25 +2892,9 @@ def _headerless_uniform_segments(spark: SparkSession,
     themselves.  Computed from the snapshot's RAW lines (fixed-width
     column ends vanish after whitespace normalization).
     """
-    from .kernels.patterns import BALANCE_MARKER_RLIKE, SUMMARY_ROW_RLIKE
-    boiler = f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})"
-
-    snap = spark.read.parquet(TRANSCRIPTS_SNAPSHOT)
-    payload = F.when((F.col("text").isNotNull()) & (F.col("text") != ""),
-                     F.col("text")) \
-               .when((F.col("tool").isNotNull()) & (F.col("tool") != ""),
-                     F.col("tool")).otherwise(F.lit(""))
-    lines = (snap.select("conv_id", "turn_idx", payload.alias("payload"))
-             .join(turns.select("conv_id", "turn_idx", "segment_index"),
-                   ["conv_id", "turn_idx"])
-             .select("conv_id", "segment_index",
-                     F.explode(F.filter(
-                         F.split("payload", "\n"),
-                         lambda l: F.trim(F.regexp_replace(l, r"\s+", " ")) != ""))
-                     .alias("raw")))
     norm = F.trim(F.regexp_replace("raw", r"\s+", " "))
-    lines = lines.withColumn("norm", norm) \
-                 .where(~F.lower("norm").rlike(boiler))
+    lines = (_raw_segment_lines(spark, turns).withColumn("norm", norm)
+             .where(~F.lower("norm").rlike(BOILERPLATE_RLIKE)))
     toks = F.split("norm", " ")
     n = F.size(toks)
     last = F.element_at(toks, -1)
@@ -3055,7 +2924,7 @@ def _headerless_uniform_segments(spark: SparkSession,
             .join(headered, ["conv_id", "segment_index"], "left_anti"))
 
 
-@register("transcripts_records_headerless", None)  # SQL attached below
+@register("transcripts_records_headerless", _on_turns_view(_records_headerless_sql()))
 def transcripts_records_headerless(spark, sf_dir):
     """Headerless-branch records oracle (the complement of
     transcripts_records_amounts): amount-bearing main-path records on
@@ -3064,22 +2933,16 @@ def transcripts_records_headerless(spark, sf_dir):
     order, turn, date, exact cents, balance, sign direction all
     re-derived line-level in SQL."""
     out = _pipeline_outputs(spark, sf_dir)
-    rec = out["records"]
     seg_slice = _headerless_uniform_segments(spark, out["turns"])
-    w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    return (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
-                      & F.col("amount").isNotNull())
-            .join(seg_slice, ["conv_id", "segment_index"])
-            .select("conv_id", "segment_index",
-                    (F.row_number().over(w) - 1).cast("int").alias("seq"),
-                    "turn_idx", "posted_date",
+    return (_main_amount_rows(out["records"], seg_slice)
+            .select("conv_id", "segment_index", "seq", "turn_idx", "posted_date",
                     (F.col("amount") * 100).cast("long").alias("amount_cents"),
                     (F.col("running_balance") * 100).cast("long")
                     .alias("balance_cents"),
                     "direction", "direction_source"))
 
 
-@register("transcripts_records_directions", None)  # SQL attached below
+@register("transcripts_records_directions", _on_turns_view(_records_directions_sql()))
 def transcripts_records_directions(spark, sf_dir):
     """W4/W6 balance-chain solver oracle (balance_solver.py:172-245,
     390-430 parity surface): on the case-1/case-3 headered main-route
@@ -3099,18 +2962,10 @@ def transcripts_records_directions(spark, sf_dir):
     wrong column fails the chain fit and therefore the hash.
     """
     out = _pipeline_outputs(spark, sf_dir)
-    rec = out["records"]
-    cases = _solver_case_segments(spark, out["turns"])
-    w = Window.partitionBy("conv_id", "segment_index").orderBy("row_index")
-    r = (rec.where((~F.col("direction_source").isin(*FALLBACK_SOURCES))
-                   & F.col("amount").isNotNull())
-         .join(cases, ["conv_id", "segment_index"]))
-    is_case3 = F.col("case_type") == "case3"
-    checked = is_case3 | F.col("balance_confirmed")
+    r = _main_amount_rows(out["records"], _solver_case_segments(spark, out["turns"]))
+    checked = (F.col("case_type") == "case3") | F.col("balance_confirmed")
     return r.select(
-        "conv_id", "segment_index",
-        (F.row_number().over(w) - 1).cast("int").alias("seq"),
-        "turn_idx",
+        "conv_id", "segment_index", "seq", "turn_idx",
         (F.col("amount") * 100).cast("long").alias("amount_cents"),
         (F.col("running_balance") * 100).cast("long").alias("balance_cents"),
         F.when(checked, F.col("direction")).alias("direction"),
@@ -3122,12 +2977,10 @@ def transcripts_records_directions(spark, sf_dir):
         .alias("tol_hundredths"))
 
 
-@register("transcripts_records_pattern", None)  # SQL attached below
-def transcripts_records_pattern(spark, sf_dir):
-    """W9 field extraction, oracle-checked on the pattern-tier slice
-    (see transcripts_records_delim — same routing-pinning argument)."""
+def _tier_records(spark, sf_dir, source: str) -> DataFrame:
+    """The records one fallback tier extracted, in its oracle's columns."""
     rec = _pipeline_outputs(spark, sf_dir)["records"]
-    return (rec.where(F.col("direction_source") == "row_pattern")
+    return (rec.where(F.col("direction_source") == source)
             .select("conv_id", "segment_index", "row_index", "turn_idx",
                     "posted_date", "description_raw",
                     (F.col("amount") * 100).cast("long").alias("amount_cents"),
@@ -3135,7 +2988,18 @@ def transcripts_records_pattern(spark, sf_dir):
                     "direction"))
 
 
-@register("transcripts_records_delim", None)  # SQL attached below
+@register("transcripts_records_pattern", f"""
+    WITH {_TURNS_VIEW_SQL},
+    {_records_pattern_sql()}
+    {_records_pattern_select()}
+""")
+def transcripts_records_pattern(spark, sf_dir):
+    """W9 field extraction, oracle-checked on the pattern-tier slice
+    (see transcripts_records_delim — same routing-pinning argument)."""
+    return _tier_records(spark, sf_dir, "row_pattern")
+
+
+@register("transcripts_records_delim", _on_turns_view(_records_delim_sql()))
 def transcripts_records_delim(spark, sf_dir):
     """W9 field extraction, oracle-checked on the delimiter-tier slice:
     every record the pipeline extracts through the delim fallback is
@@ -3143,13 +3007,7 @@ def transcripts_records_delim(spark, sf_dir):
     ladder, exact cents, skips, row numbering).  The slice filter
     (direction_source) also pins tier ROUTING: a segment the engine
     mis-routes produces rows on exactly one side and fails the hash."""
-    rec = _pipeline_outputs(spark, sf_dir)["records"]
-    return (rec.where(F.col("direction_source") == "delim_table")
-            .select("conv_id", "segment_index", "row_index", "turn_idx",
-                    "posted_date", "description_raw",
-                    (F.col("amount") * 100).cast("long").alias("amount_cents"),
-                    (F.col("running_balance") * 100).cast("long").alias("balance_cents"),
-                    "direction"))
+    return _tier_records(spark, sf_dir, "delim_table")
 
 
 def _classification_sql() -> str:
@@ -3173,12 +3031,6 @@ def _classification_sql() -> str:
         CURRENCY_PATTERN_STRINGS,
         MOTOR_FINANCE_WEIGHT,
         PROVIDER_MATCH_WEIGHT,
-    )
-    from .kernels.patterns import (
-        BANK_STATEMENT_KEYWORDS,
-        MOTOR_FINANCE_KEYWORDS,
-        PROVIDER_PATTERNS,
-        _noncapturing,
     )
 
     def term(pattern: str, weight: float) -> str:
@@ -3267,7 +3119,7 @@ def _classification_sql() -> str:
     """
 
 
-@register("transcripts_classification", None)  # SQL attached below
+@register("transcripts_classification", _classification_sql())
 def transcripts_classification(spark, sf_dir):
     """C1/C2 + currency over the snapshot corpus, oracle-checked: the
     classification regex folds and argmaxes are pure column math, so
@@ -3275,88 +3127,14 @@ def transcripts_classification(spark, sf_dir):
     from .stages.classify import classify_stage
     from .stages.tokenize import tokenize_stage
 
-    sf = sf_from_dir(sf_dir)
-    n_convs = min(n_convs_for_sf(sf), 2_000)
-    if _SNAPSHOT_WRITTEN != {n_convs}:
-        transcripts_sdf(spark, n_convs).write.mode("overwrite") \
-            .parquet(TRANSCRIPTS_SNAPSHOT)
-        _SNAPSHOT_WRITTEN.clear()
-        _SNAPSHOT_WRITTEN.add(n_convs)
-    turns = tokenize_stage(spark.read.parquet(TRANSCRIPTS_SNAPSHOT))
+    turns = tokenize_stage(_ensure_snapshot(spark, sf_dir))
     conv = classify_stage(turns)
     return conv.select("conv_id", "doc_family", "doc_family_confidence",
                        "provider", "provider_confidence", "currency")
 
 
-def _attach_turns_sql() -> None:
-    """Attach the transcripts-view oracles (built from the pattern
-    tables at import time; registered post-hoc so the shared CTE is
-    defined once)."""
-    view = _turns_view_sql()
-    fn, _ = _REGISTRY["transcripts_turns"]
-    _REGISTRY["transcripts_turns"] = (fn, f"""
-    WITH {view}
-    SELECT conv_id, turn_idx, extraction_path, clean_text,
-           segment_index, n_lines, n_tokens
-    FROM turn_segmented
-""")
-    fn, _ = _REGISTRY["transcripts_segment_ranges"]
-    _REGISTRY["transcripts_segment_ranges"] = (fn, f"""
-    WITH {view}
-    SELECT conv_id, segment_index,
-           CAST(MIN(turn_idx) AS INT) AS start_turn,
-           CAST(MAX(turn_idx) AS INT) AS end_turn
-    FROM turn_segmented
-    GROUP BY conv_id, segment_index
-""")
-    fn, _ = _REGISTRY["transcripts_classification"]
-    _REGISTRY["transcripts_classification"] = (fn, _classification_sql())
-    fn, _ = _REGISTRY["transcripts_token_ir"]
-    _REGISTRY["transcripts_token_ir"] = (fn, _token_ir_sql())
-    fn, _ = _REGISTRY["multimodal_features"]
-    _REGISTRY["multimodal_features"] = (fn, _multimodal_sql())
-    fn, _ = _REGISTRY["raster_preprocess"]
-    _REGISTRY["raster_preprocess"] = (fn, _raster_sql())
-    fn, _ = _REGISTRY["raster_table_extract"]
-    _REGISTRY["raster_table_extract"] = (fn, _raster_tables_sql())
-    fn, _ = _REGISTRY["raster_deskew_table_extract"]
-    _REGISTRY["raster_deskew_table_extract"] = (fn, _raster_deskew_tables_sql())
-    fn, _ = _REGISTRY["xlsx_styled_export"]
-    _REGISTRY["xlsx_styled_export"] = (fn, f"""
-    WITH {view},
-    {_xlsx_styled_sql()}
-""")
-    fn, _ = _REGISTRY["review_queue_page"]
-    _REGISTRY["review_queue_page"] = (fn, f"""
-    WITH {view},
-    {_review_routed_ctes()}
-    SELECT * FROM (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY priority, conv_id) AS INT)
-                   AS rank,
-               conv_id, status, priority, reason, validation_status,
-               n_records, confidence_micros
-        FROM rq_routed) _
-    WHERE rank > 7 AND rank <= 47
-""")
-    fn, _ = _REGISTRY["review_queue_stats"]
-    _REGISTRY["review_queue_stats"] = (fn, f"""
-    WITH {view},
-    {_review_routed_ctes()}
-    SELECT status, reason, validation_status, priority,
-           CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(n_records) AS BIGINT) AS n_records
-    FROM rq_routed
-    GROUP BY 1, 2, 3, 4
-""")
-    fn, _ = _REGISTRY["text_pii_scan"]
-    _REGISTRY["text_pii_scan"] = (fn, _pii_sql())
-    fn, _ = _REGISTRY["corpus_duplicate_lines"]
-    _REGISTRY["corpus_duplicate_lines"] = (fn, _duplicate_lines_sql())
-    fn, _ = _REGISTRY["dedup_components"]
-    _REGISTRY["dedup_components"] = (fn, _components_sql())
-    fn, _ = _REGISTRY["transcripts_conversations_meta"]
-    _REGISTRY["transcripts_conversations_meta"] = (fn, f"""
-    WITH {view},
+@register("transcripts_conversations_meta", f"""
+    WITH {_TURNS_VIEW_SQL},
     nseg AS (
         SELECT conv_id, CAST(MAX(segment_index) + 1 AS INT) AS n_segments
         FROM turn_segmented GROUP BY conv_id)
@@ -3364,79 +3142,6 @@ def _attach_turns_sql() -> None:
     FROM ({_classification_sql()}) c
     JOIN nseg n USING (conv_id)
 """)
-    fn, _ = _REGISTRY["transcripts_segments_counts"]
-    _REGISTRY["transcripts_segments_counts"] = (fn, f"""
-    WITH {view}
-    SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS n_records
-    FROM (WITH {_records_delim_sql()})
-    GROUP BY 1, 2
-    UNION ALL
-    SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS n_records
-    FROM (WITH {_records_pattern_sql()}
-          {_records_pattern_select()})
-    GROUP BY 1, 2
-""")
-    fn, _ = _REGISTRY["transcripts_records_delim"]
-    _REGISTRY["transcripts_records_delim"] = (fn, f"""
-    WITH {view},
-    {_records_delim_sql()}
-""")
-    fn, _ = _REGISTRY["transcripts_records_pattern"]
-    _REGISTRY["transcripts_records_pattern"] = (fn, f"""
-    WITH {view},
-    {_records_pattern_sql()}
-    {_records_pattern_select()}
-""")
-    fn, _ = _REGISTRY["transcripts_records_amounts"]
-    _REGISTRY["transcripts_records_amounts"] = (fn, f"""
-    WITH {view},
-    {_records_amounts_sql()}
-""")
-    fn, _ = _REGISTRY["transcripts_records_directions"]
-    _REGISTRY["transcripts_records_directions"] = (fn, f"""
-    WITH {view},
-    {_records_directions_sql()}
-""")
-    fn, _ = _REGISTRY["transcripts_records_headerless"]
-    _REGISTRY["transcripts_records_headerless"] = (fn, f"""
-    WITH {view},
-    {_records_headerless_sql()}
-""")
-    fn, _ = _REGISTRY["transcripts_records_descriptions"]
-    _REGISTRY["transcripts_records_descriptions"] = (fn, f"""
-    WITH {view},
-    {_records_descriptions_sql()}
-""")
-    fn, _ = _REGISTRY["transcripts_segments_balances"]
-    _REGISTRY["transcripts_segments_balances"] = (fn, f"""
-    WITH {view},
-    {_segments_balances_sql()}
-""")
-    fn, _ = _REGISTRY["transcripts_detected_tables_routing"]
-    _REGISTRY["transcripts_detected_tables_routing"] = (fn, f"""
-    WITH {view}
-    SELECT c.conv_id, c.segment_index, 'delim_grid' AS engine,
-           'TRANSACTION_TABLE' AS table_type, c.row_count,
-           g.column_count, g.header_row
-    FROM (SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS row_count
-          FROM (WITH {_records_delim_sql()})
-          GROUP BY 1, 2) c
-    JOIN (WITH {_delim_geometry_sql()}) g USING (conv_id, segment_index)
-    UNION ALL
-    SELECT c.conv_id, c.segment_index, 'row_pattern' AS engine,
-           'TRANSACTION_TABLE' AS table_type, c.row_count,
-           g.column_count, g.header_row
-    FROM (SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS row_count
-          FROM (WITH {_records_pattern_sql()}
-                {_records_pattern_select()})
-          GROUP BY 1, 2) c
-    JOIN (WITH {_pattern_geometry_sql()}) g USING (conv_id, segment_index)
-""")
-
-
-
-
-@register("transcripts_conversations_meta", None)  # SQL attached below
 def transcripts_conversations_meta(spark, sf_dir):
     """SQL-expressible projection of the conversations rollup: the
     n_segments wiring (max segment index + 1 joined onto the rollup)
@@ -3446,7 +3151,17 @@ def transcripts_conversations_meta(spark, sf_dir):
     return conv.select("conv_id", "n_segments", "doc_family", "currency")
 
 
-@register("transcripts_segments_counts", None)  # SQL attached below
+@register("transcripts_segments_counts", f"""
+    WITH {_TURNS_VIEW_SQL}
+    SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS n_records
+    FROM (WITH {_records_delim_sql()})
+    GROUP BY 1, 2
+    UNION ALL
+    SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS n_records
+    FROM (WITH {_records_pattern_sql()}
+          {_records_pattern_select()})
+    GROUP BY 1, 2
+""")
 def transcripts_segments_counts(spark, sf_dir):
     """Segments-table n_records wiring on the structured-tier slices:
     per-segment record counts re-derived by the tier oracles must
@@ -3487,7 +3202,25 @@ def transcripts_segments(spark, sf_dir):
     return _pipeline_outputs(spark, sf_dir)["segments"]
 
 
-@register("transcripts_detected_tables_routing", None)  # SQL attached below
+@register("transcripts_detected_tables_routing", f"""
+    WITH {_TURNS_VIEW_SQL}
+    SELECT c.conv_id, c.segment_index, 'delim_grid' AS engine,
+           'TRANSACTION_TABLE' AS table_type, c.row_count,
+           g.column_count, g.header_row
+    FROM (SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS row_count
+          FROM (WITH {_records_delim_sql()})
+          GROUP BY 1, 2) c
+    JOIN (WITH {_delim_geometry_sql()}) g USING (conv_id, segment_index)
+    UNION ALL
+    SELECT c.conv_id, c.segment_index, 'row_pattern' AS engine,
+           'TRANSACTION_TABLE' AS table_type, c.row_count,
+           g.column_count, g.header_row
+    FROM (SELECT conv_id, segment_index, CAST(COUNT(*) AS INT) AS row_count
+          FROM (WITH {_records_pattern_sql()}
+                {_records_pattern_select()})
+          GROUP BY 1, 2) c
+    JOIN (WITH {_pattern_geometry_sql()}) g USING (conv_id, segment_index)
+""")
 def transcripts_detected_tables_routing(spark, sf_dir):
     """Diagnostics routing oracle: on the structured-tier slices the
     detected_tables row (engine, table_type, row_count) is fully
@@ -3510,9 +3243,6 @@ def transcripts_detected_tables(spark, sf_dir):
     geometry is the non-relational kernel itself; the row/engine
     contract is pinned by tests/test_fallback_tiers.py."""
     return _pipeline_outputs(spark, sf_dir)["detected_tables"]
-
-
-_attach_turns_sql()
 
 
 def queries() -> dict[str, QueryFn]:

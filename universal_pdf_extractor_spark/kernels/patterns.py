@@ -187,7 +187,8 @@ _BALANCE_MARKER_RE = re.compile(BALANCE_MARKER_RLIKE)
 _SUMMARY_ROW_RE = re.compile(SUMMARY_ROW_RLIKE)
 # single pass for "balance marker OR summary row" (boolean-equivalent
 # to the two-regex OR; used by the batch boilerplate strip)
-_BOILERPLATE_RE = re.compile(f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
+BOILERPLATE_RLIKE = f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})"
+_BOILERPLATE_RE = re.compile(BOILERPLATE_RLIKE)
 
 
 def is_balance_marker(text: str) -> bool:
@@ -246,9 +247,6 @@ def _search_batch(lowered: pd.Series, pattern: str, py_re: "re.Pattern") -> pd.S
         return lowered.str.contains(py_re, regex=True)
 
 
-_BOILERPLATE_RLIKE = (f"(?:{BALANCE_MARKER_RLIKE})|(?:{SUMMARY_ROW_RLIKE})")
-
-
 def is_summary_row_batch(values: pd.Series) -> pd.Series:
     s = values.fillna("").str.lower().str.strip()
-    return (s != "") & _search_batch(s, _BOILERPLATE_RLIKE, _BOILERPLATE_RE)
+    return (s != "") & _search_batch(s, BOILERPLATE_RLIKE, _BOILERPLATE_RE)

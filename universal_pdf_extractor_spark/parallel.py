@@ -44,7 +44,11 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition ``df`` up to the session's default parallelism iff
     its planned partition count is below it; otherwise return it
     unchanged.  Key columns make the exchange deterministic (hash) and
-    reusable by downstream same-key operations."""
+    reusable by downstream same-key operations.
+
+    Batch frames only: the partition count comes from
+    ``df.rdd.getNumPartitions()``, which plans the frame physically and
+    raises on a streaming frame."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
