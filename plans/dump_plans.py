@@ -1,6 +1,15 @@
-"""Dump .explain("formatted") for declared queries into plans/r06/.
+"""Dump .explain("formatted") for declared queries into plans/r06/,
+or print each query's whole-stage-codegen facts.
 
 Usage: python plans/dump_plans.py <suffix> [query ...]
+       python plans/dump_plans.py --codegen [query ...]
+
+``--codegen`` plans each query with AQE off (so the executed plan is
+the whole codegen'd plan) and prints one line per query: the number
+of codegen stages, their total generated Java source in KB, and the
+largest compiled method in bytes of bytecode (HotSpot does not
+JIT-compile a method above 8,000 bytes).  These are clock-free: they
+do not depend on the host or its load.
 """
 from __future__ import annotations
 
@@ -28,7 +37,19 @@ DEFAULT = [
 ]
 
 
+def codegen_facts(spark, df) -> tuple[int, float, int]:
+    """(codegen stages, generated source KB, largest method bytes) of
+    ``df``'s executed plan; AQE must be off for the plan to be whole."""
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    stats = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    stages = [stats.apply(i) for i in range(stats.size())]
+    source = sum(len(s._2()) for s in stages)
+    largest = max((s._3().maxMethodCodeSize() for s in stages), default=0)
+    return len(stages), source / 1000, largest
+
+
 def main() -> None:
+    codegen = sys.argv[1] == "--codegen"
     suffix = sys.argv[1]
     names = sys.argv[2:] or DEFAULT
     os.makedirs(OUT_DIR, exist_ok=True)
@@ -37,9 +58,19 @@ def main() -> None:
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     registry = entry_queries.queries()
+
+    if codegen:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        print(f"{'query':<28} {'stages':>6} {'source_kb':>10} {'max_method_b':>12}")
+        for name in names:
+            stages, kb, largest = codegen_facts(spark, registry[name](spark, SF_DIR))
+            print(f"{name:<28} {stages:>6} {kb:>10.1f} {largest:>12}")
+        spark.stop()
+        return
 
     for name in names:
         if name == "pipeline_e2e":

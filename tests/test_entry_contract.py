@@ -109,8 +109,7 @@ def test_boilerplate_strip_matches_oracle_on_control_whitespace(spark, tmp_path)
     _assert_same(name, got, exp)
 
 
-@pytest.mark.parametrize("name", [n for n in ROWS_ONLY_CASES
-                                  if not n.startswith("transcripts_")])
+@pytest.mark.parametrize("name", ROWS_ONLY_CASES)
 def test_rows_only_queries_run(spark, name):
     fn = entry_queries.queries()[name]
     df = fn(spark, SF_DIR)

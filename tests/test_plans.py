@@ -9,13 +9,19 @@ cannot silently regress them:
 - column pruning reaches the parquet scan (a narrow projection reads
   only the needed transcript columns — `text` excluded when unused);
 - every generated method of the conversations plan stays small enough
-  for HotSpot to JIT-compile it;
+  for HotSpot to JIT-compile it, and the signature plans' generated
+  code does not grow with the hash count;
+- on a single-file input the datapipe barriers survive planning, so
+  each heavy projection runs once;
 - the segments table is a projection of the cached extraction frame,
   with no join or aggregate of its own.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -117,24 +123,91 @@ def test_segments_read_only_the_cached_extraction_frame(spark, transcripts):
 HUGE_METHOD_LIMIT = 8000
 
 
-def test_conversations_codegen_methods_are_jit_compilable(spark, transcripts):
-    """No whole-stage-codegen method in the conversations plan of
-    run_pipeline exceeds HUGE_METHOD_LIMIT bytes of bytecode.  AQE is
-    off so the executed plan is the whole codegen'd plan, not a stub
-    that plans its stages at run time."""
-    from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
-
-    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+@contextmanager
+def _aqe_off(spark):
+    """AQE off, so the executed plan is the whole (codegen'd, reused)
+    plan, not a stub that plans its stages at run time."""
     saved = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        conv = run_pipeline(transcripts)["conversations"]
-        stats = debug.codegenStringSeq(conv._jdf.queryExecution().executedPlan())
-        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+        yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
+
+
+def _codegen(spark, df) -> tuple[list[int], int]:
+    """(largest method bytes of each codegen stage, total generated
+    source chars) of ``df``'s plan with AQE off."""
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    with _aqe_off(spark):
+        stats = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+        stages = [stats.apply(i) for i in range(stats.size())]
+        return ([s._3().maxMethodCodeSize() for s in stages],
+                sum(len(s._2()) for s in stages))
+
+
+def test_conversations_codegen_methods_are_jit_compilable(spark, transcripts):
+    """No whole-stage-codegen method in the conversations plan of
+    run_pipeline exceeds HUGE_METHOD_LIMIT bytes of bytecode."""
+    from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
+
+    sizes, _ = _codegen(spark, run_pipeline(transcripts)["conversations"])
     assert sizes
     assert max(sizes) <= HUGE_METHOD_LIMIT, sizes
+
+
+@pytest.fixture(scope="module")
+def one_file_documents(spark, tmp_path_factory):
+    """A one-file documents table that plans as fewer scan partitions
+    than defaultParallelism, so ``spread`` repartitions it."""
+    path = tmp_path_factory.mktemp("onefile") / "documents.parquet"
+    pd.DataFrame({
+        "doc_id": list(range(40)),
+        "text": [f"alpha beta gamma delta epsilon zeta {i % 7}\nline two {i % 3}"
+                 for i in range(40)],
+    }).to_parquet(path, index=False)
+    docs = spark.read.parquet(str(path))
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    return docs
+
+
+def _datapipe_op(name):
+    from universal_pdf_extractor_spark.datapipe import dedup, textstats
+    return getattr(dedup, name, None) or getattr(textstats, name)
+
+
+# the heavy projection of each operator, as its plan prints it
+@pytest.mark.parametrize("name, heavy", [
+    ("ngram_jaccard_pairs", ["split(lower(trim(regexp_replace(text"]),
+    ("minhash_lsh_pairs", ["md5("]),
+    ("simhash_near_dups", ["md5("]),
+    ("repetition_scores", ["split(text", "split(trim(regexp_replace(lower(text"]),
+])
+def test_single_file_barrier_computes_heavy_projection_once(
+        spark, one_file_documents, name, heavy):
+    """On a single-file input the barrier's hash(doc_id) exchange
+    survives planning, and every branch reads the heavy projection
+    through it (ReusedExchange): each appears in exactly one plan
+    node, not once per branch above ``spread``'s exchange."""
+    with _aqe_off(spark):
+        lines = _plan(_datapipe_op(name)(one_file_documents)).splitlines()
+    assert [l for l in lines if "hashpartitioning(doc_id" in l
+            and "REPARTITION_BY_NUM" in l and "ReusedExchange" not in l]
+    for marker in heavy:
+        nodes = [l.strip() for l in lines if marker in l and "ReusedExchange" not in l]
+        assert len(nodes) == 1, nodes
+
+
+@pytest.mark.parametrize("name", ["minhash_lsh_pairs", "simhash_near_dups"])
+def test_signature_codegen_does_not_grow_with_hash_count(
+        spark, one_file_documents, name):
+    """Every generated method of the signature plans is JIT-compilable
+    and each plan generates at most 200 KB of source (k literal
+    aggregates generated about 1 MB, with 11 KB methods)."""
+    sizes, source = _codegen(spark, _datapipe_op(name)(one_file_documents))
+    assert sizes
+    assert max(sizes) <= HUGE_METHOD_LIMIT, sizes
+    assert source <= 200_000, source
 
 
 def test_ngram_candidate_phase_hashed_and_reused(spark, tmp_path_factory):

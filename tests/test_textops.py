@@ -3,9 +3,12 @@ scan/redaction, corpus duplicate-line discovery (datapipe/textstats)."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from universal_pdf_extractor_spark.datapipe.textstats import (
@@ -220,11 +223,11 @@ class TestJsonlSource:
 
 
 class TestSignatureEdgeCases:
-    """Pin the r6 explode+aggregate rewrites of minhash_signatures and
-    simhash_fingerprints on the degenerate inputs the old array-fold
-    versions defined: null text -> all-null signature / simhash 0 with
-    n_tokens -1 (size(null) semantics); empty text -> the ''-token
-    signature; normal docs keep one output row per doc_id."""
+    """Pin minhash_signatures (one MIN per exploded (doc, permutation))
+    and simhash_fingerprints (one COUNT per exploded (doc, bit)) on the
+    degenerate inputs: null text -> all-null signature / simhash 0 with
+    n_tokens -1; empty text -> the ''-token signature; normal docs keep
+    one output row per doc_id."""
 
     def test_minhash_null_and_empty_text(self, spark):
         from universal_pdf_extractor_spark.datapipe.dedup import (
@@ -256,6 +259,74 @@ class TestSignatureEdgeCases:
         assert out[2][1] == 1          # '' tokenizes to one '' token
         assert out[3][1] == 4
         assert out[3][0] != 0
+
+
+# Pure-Python reference of the documented signature formulas.  The
+# normalisation is Spark's: the JVM regex \s is [ \t\n\x0b\f\r],
+# trim strips only spaces, then lowercase and split on ' '.
+_JVM_SPACE = re.compile(r"[ \t\n\x0b\f\r]+")
+_P31 = (1 << 31) - 1
+
+
+def _hash60(s: str) -> int:
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def _ref_words(text):
+    return None if text is None else _JVM_SPACE.sub(" ", text).strip(" ").lower().split(" ")
+
+
+def _ref_minhash(text, num_hashes=64, n=3):
+    words = _ref_words(text)
+    if words is None:
+        return [None] * num_hashes
+    shingles = ({" ".join(words[i:i + n]) for i in range(len(words) - n + 1)}
+                if len(words) >= n else {" ".join(words)})
+    hs = [_hash60(s) % _P31 for s in shingles]
+    return [min((h * (2 * i + 1) + (i * 0x9E3779B9 + 0x85EBCA6B) % _P31) % _P31
+                for h in hs)
+            for i in range(num_hashes)]
+
+
+def _ref_simhash(text):
+    words = _ref_words(text)
+    if words is None:
+        return 0, -1
+    hs = [_hash60(w) for w in words]
+    bits = [j for j in range(60) if 2 * sum((h >> j) & 1 for h in hs) > len(hs)]
+    return sum(1 << j for j in bits), len(hs)
+
+
+_WORDS = st.sampled_from(["alpha", "Beta", "gamma", "la", "straße", "ÉCOLE",
+                          "жук", "中文", "٣٣", "x", "a-b"])
+_GAPS = st.sampled_from([" ", "  ", "\t", "\n", " \r\n ", "\x0b", "\xa0"])
+_texts = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(alphabet=" \t\n\r\f\x0b", min_size=1, max_size=5),
+    _WORDS,
+    st.builds(lambda w, k: " ".join([w] * k), _WORDS, st.integers(2, 6)),
+    st.builds(lambda parts, tail: "".join(g + w for g, w in parts) + tail,
+              st.lists(st.tuples(_GAPS, _WORDS), min_size=1, max_size=12), _GAPS))
+
+
+@given(st.lists(_texts, min_size=1, max_size=10))
+@example([None, "", " \t\n ", "la la la la", "Ünï straße жук 中文", "single"])
+@settings(max_examples=20, deadline=None)
+def test_signatures_match_reference(spark, texts):
+    from universal_pdf_extractor_spark.datapipe.dedup import (
+        minhash_signatures,
+        simhash_fingerprints,
+    )
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+        schema="doc_id long, text string")
+    sigs = {r["doc_id"]: list(r["signature"])
+            for r in minhash_signatures(docs).collect()}
+    fps = {r["doc_id"]: (r["simhash"], r["n_tokens"])
+           for r in simhash_fingerprints(docs).collect()}
+    assert sigs == {i: _ref_minhash(t) for i, t in enumerate(texts)}
+    assert fps == {i: _ref_simhash(t) for i, t in enumerate(texts)}
 
 
 # Boilerplate phrases whose spaces become a drawn separator, with

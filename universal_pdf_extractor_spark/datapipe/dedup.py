@@ -72,6 +72,27 @@ def shingles_of_words(words, n: int = 3):
     )
 
 
+def _spread_docs(documents: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, text) behind ``spread``: the per-document work chained
+    onto it parallelizes even when the input is one small file."""
+    return spread(documents.select(F.col(id_col).alias("doc_id"),
+                                   F.col(text_col).alias("text")))
+
+
+def _shingled(documents: DataFrame, n: int, id_col: str,
+              text_col: str) -> DataFrame:
+    """(doc_id, shingles): the distinct word n-shingles of each
+    document, with the words staged in their own projection (see
+    shingles_of_words)."""
+    return _spread_docs(documents, id_col, text_col).select(
+        F.col("doc_id"),
+        F.split(normalize_text(F.col("text")), " ").alias("_words"),
+    ).select(
+        F.col("doc_id"),
+        shingles_of_words(F.col("_words"), n).alias("shingles"),
+    )
+
+
 def ngram_jaccard_pairs(documents: DataFrame,
                         threshold: float = 0.8,
                         n: int = 3,
@@ -92,29 +113,25 @@ def ngram_jaccard_pairs(documents: DataFrame,
     # repartition barrier: shingle construction (split + slice + join +
     # distinct over every document) is the dominant narrow stage, and
     # this subtree feeds FOUR plan branches (df counts, prefix ranking,
-    # and both verification sides).  On an input with at least
-    # defaultParallelism scan partitions (``spread`` is the identity),
-    # the barrier's hash(doc_id) exchange lets every branch
-    # ReusedExchange the computed arrays instead of re-deriving them
-    # from the scan.  On a single-file input it does not: ``spread``
-    # already hash-partitioned on doc_id with the same count, Spark
-    # drops the barrier's exchange as redundant, and each branch
-    # recomputes the shingles above ``spread``'s exchange (4x).
+    # and both verification sides); the barrier's hash(doc_id) exchange
+    # lets every branch ReusedExchange the computed arrays instead of
+    # re-deriving them from the scan.  Reuse needs the four subtrees
+    # below it equal.  The pairs' a < b implies non-null ids, and
+    # Spark infers and pushes that filter into every branch but the df
+    # counts', so it is stated up front.  Dropping null-id documents
+    # changes no output: they never pair, and they only move df
+    # counts, which reorders prefixes without losing a pair (any
+    # consistent global order keeps the prefix filter lossless).
     # ``spread`` first: a single-file input plans as ONE scan task, and
     # the shingle projection would otherwise run below the barrier on
     # one core (guide §2: the exchange must sit ABOVE the expensive
     # narrow compute for the compute to parallelize).
-    docs = spread(
-        documents.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text")), "doc_id",
-    ).select(
-        F.col("doc_id"),
-        F.split(normalize_text(F.col("text")), " ").alias("_words"),
-    ).select(
-        F.col("doc_id"),
-        shingles_of_words(F.col("_words"), n).alias("shingles"),
-    ).withColumn("n_shingles", F.size("shingles"))
-    docs = barrier(docs, "doc_id")
+    # n_shingles is derived above the barrier: the df counts do not
+    # read it, and column pruning would otherwise cut it from that
+    # branch only, leaving its subtree unequal to the others
+    docs = barrier(_shingled(documents, n, id_col, text_col)
+                   .where(F.col("doc_id").isNotNull()), "doc_id") \
+        .withColumn("n_shingles", F.size("shingles"))
 
     # candidate phase runs on 64-bit shingle hashes, not strings: the
     # df-count/rank/self-join shuffles move 8-byte longs instead of
@@ -251,53 +268,37 @@ def minhash_signatures(documents: DataFrame,
                        id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """(doc_id, signature[num_hashes]) via affine permutations of
-    hash60(shingle).
-
-    Computed as ONE F.aggregate fold over the shingle-hash array: the
-    md5-derived hash60 runs exactly once per shingle, with the k
-    permutations reduced to k multiply-add-mod integer ops per
-    element.  (The previous k separate array_min(transform(hs, ...))
-    projections collapsed under CollapseProject into k copies of the
-    md5 pipeline — a ~k x constant-factor regression on the signature
-    stage.)  Values are unchanged: min over pmod(h*a_i + b_i, p) with
-    a_i = 2i+1, b_i = (i*0x9E3779B9 + 0x85EBCA6B) mod p.
+    hash60(shingle): signature[i] is the min over the document's
+    shingles of pmod(h*a_i + b_i, p), with h = pmod(hash60(shingle), p),
+    a_i = 2i+1, b_i = pmod(i*0x9E3779B9 + 0x85EBCA6B, p) and p the
+    Mersenne prime 2^31-1.  A null text gives num_hashes nulls.
 
     ``id_col`` must be unique: rows are grouped by it, so documents
     that share an id get one signature over their pooled shingles."""
-    p = MERSENNE_PRIME
-    # spread before the fold: the md5-per-shingle + 64-permutation
-    # reduction is the dominant narrow compute and must sit above an
-    # exchange, not below the single scan task of a small input
-    docs = spread(
-        documents.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text")), "doc_id",
-    ).select(
-        F.col("doc_id"),
-        F.split(normalize_text(F.col("text")), " ").alias("_words"),
-    ).select(
-        F.col("doc_id"),
-        shingles_of_words(F.col("_words"), n).alias("shingles"),
-    )
-    # explode + k conditional MIN aggregates instead of an array fold:
-    # the former zip_with fold allocated a fresh k-element array per
-    # shingle (GC-heavy and codegen-hostile); per-row multiply-add-mod
-    # expressions with map-side partial MIN aggregation produce the
-    # SAME values (min over the same pmod terms; MIN ignores nulls and
-    # an all-null group yields null, matching the old p-sentinel /
-    # null-signature contract reproduced by the SQL oracle's list_min).
-    # doc_id is assumed unique per document (it is the table key).
-    h = F.pmod(hash60(F.col("shingle")), F.lit(p))
-    exploded = docs.select(
-        "doc_id", F.explode_outer("shingles").alias("shingle"))
-    mins = [
-        F.min(F.pmod(h * F.lit(2 * i + 1)
-                     + F.lit((i * 0x9E3779B9 + 0x85EBCA6B) % p),
-                     F.lit(p))).alias(f"_m{i}")
-        for i in range(num_hashes)
-    ]
-    agg = exploded.groupBy("doc_id").agg(*mins)
-    sig = F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-    return agg.select("doc_id", sig.alias("signature"))
+    p = F.lit(MERSENNE_PRIME)
+    # hash60 once per shingle, in its own projection BELOW the
+    # permutation Generate: in the generator's select Spark evaluates
+    # it above the Generate, once per permutation
+    hashed = _shingled(documents, n, id_col, text_col).select(
+        "doc_id", F.explode_outer("shingles").alias("shingle"),
+    ).select("doc_id", F.pmod(hash60(F.col("shingle")), p).alias("h"))
+    # one row per (shingle, permutation i) and one MIN per (doc_id, i),
+    # partially aggregated before the exchange, so the generated code
+    # is the same for any num_hashes: one literal MIN aggregate per
+    # permutation, each inlining hash60, grows the aggregate's methods
+    # past HotSpot's 8,000-byte HugeMethodLimit, and such methods run
+    # interpreted.  MIN ignores nulls, so a null text's lone
+    # null-shingle row gives m = null for every i.
+    i = F.col("i")
+    perm = F.pmod(F.col("h") * (2 * i + 1)
+                  + F.pmod(i * F.lit(0x9E3779B9) + F.lit(0x85EBCA6B), p), p)
+    mins = (hashed.select("doc_id", "h",
+                          F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1)))
+                          .alias("i"))
+            .groupBy("doc_id", "i").agg(F.min(perm).alias("m")))
+    return mins.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(F.struct("i", "m"))).getField("m")
+        .alias("signature"))
 
 
 def minhash_lsh_pairs(documents: DataFrame,
@@ -320,11 +321,7 @@ def minhash_lsh_pairs(documents: DataFrame,
     # computed array instead of inlining the md5 pipeline per extract
     # (CollapseProject), and (b) the self-join's two sides share ONE
     # signature computation via ReusedExchange instead of scanning +
-    # hashing the corpus twice.  (b) holds when the input has at least
-    # defaultParallelism scan partitions; on a single-file input the
-    # signatures' doc_id aggregate already sits on ``spread``'s
-    # hash(doc_id) exchange of the same count, Spark drops this one as
-    # redundant, and each join side computes the signatures (2x)
+    # hashing the corpus twice
     sigs = barrier(sigs, "doc_id")
 
     # band bucket key: minhash values pair-packed into BIGINTs
@@ -333,29 +330,23 @@ def minhash_lsh_pairs(documents: DataFrame,
     # candidate semantics are identical to joining on the raw values
     # (and to the oracle's string-joined bucket), with integer join
     # keys instead of per-row string building.  A null signature
-    # (null/empty text) nulls every key, so such docs never join.
+    # value nulls its key, so such docs never join.  One row per
+    # (doc, band), the signature indexed by the band column: the code
+    # does not grow with ``bands``.
+    band = F.col("band")
     n_keys = (rows_per_band + 1) // 2
     key_names = [f"k{j}" for j in range(n_keys)]
 
-    def _band_keys(band: int) -> list:
-        base = band * rows_per_band
-        keys = []
-        for j in range(0, rows_per_band, 2):
-            v0 = F.col("signature")[base + j]
-            if j + 1 < rows_per_band:
-                packed = v0 * F.lit(1 << 31) + F.col("signature")[base + j + 1]
-            else:
-                packed = v0
-            keys.append(packed.alias(f"k{j // 2}"))
-        return keys
+    def _value(j: int):
+        return F.col("signature")[band * rows_per_band + j]
 
+    keys = [(_value(j) * F.lit(1 << 31) + _value(j + 1)
+             if j + 1 < rows_per_band else _value(j)).alias(f"k{j // 2}")
+            for j in range(0, rows_per_band, 2)]
     banded = sigs.select(
         "doc_id", "signature",
-        F.explode(F.array(*[
-            F.struct(F.lit(band).alias("band"), *_band_keys(band))
-            for band in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "signature", "bb.band", *[f"bb.{k}" for k in key_names])
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+    ).select("doc_id", "signature", "band", *keys)
 
     left = banded.alias("l")
     right = banded.alias("r")
@@ -378,50 +369,47 @@ def simhash_fingerprints(documents: DataFrame,
                          text_col: str = "text") -> DataFrame:
     """60-bit SimHash over word tokens (unit weights).
 
-    bit_j(fingerprint) = 1 iff sum over tokens of sign(bit_j(h)) > 0.
-    Computed columnarly: per bit, count tokens with the bit set vs
-    total, no UDF.  60 bits (not 64) because the cross-engine hash60
-    provides 60 uniform bits — hamming semantics are unchanged.
+    bit_j(fingerprint) = 1 iff more than half of the document's tokens
+    have bit j of hash60 set.  60 bits (not 64) because the
+    cross-engine hash60 provides 60 uniform bits — hamming semantics
+    are unchanged.  n_tokens is the token count, -1 for a null text
+    (whose fingerprint is 0).
 
     ``id_col`` must be unique: rows are grouped by it, so documents
     that share an id get one fingerprint over their pooled tokens.
     """
-    words = F.split(normalize_text(F.col(text_col)), " ")
-    # explode + 60 conditional SUM aggregates instead of 60 per-doc
-    # array filters: F.size(F.filter(hs, bit_j)) allocated a filtered
-    # copy of the token-hash array per bit per doc (GC-heavy); summing
-    # (h >> j) & 1 per exploded token with map-side partial aggregation
-    # counts exactly the same bits.  ``spread`` first: the per-token
-    # md5 hashing is the expensive narrow stage (see
-    # ngram_jaccard_pairs).  doc_id is assumed unique (table key).
-    hashed = spread(
-        documents.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text")), "doc_id",
-    ).select(
+    words = F.split(normalize_text(F.col("text")), " ")
+    hashed = _spread_docs(documents, id_col, text_col).select(
         F.col("doc_id"),
         F.explode_outer(F.transform(words, lambda w: hash60(w))).alias("h"),
     )
-    h = F.col("h")
-    agg = hashed.groupBy("doc_id").agg(
-        F.count(h).alias("_n"),
-        F.count(F.lit(1)).alias("_rows"),
-        *[F.sum(F.shiftright(h, j).bitwiseAND(F.lit(1))).alias(f"_c{j}")
-          for j in range(SIMHASH_BITS)],
-    )
-    # n_tokens parity with F.size(words): null text -> words null ->
-    # one null-h row from explode_outer; size(null) = -1
-    n_tokens = F.when(F.col("_n") == F.col("_rows"), F.col("_rows")) \
-                .otherwise(F.lit(-1)).cast("int")
-    bit_terms = []
-    for j in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"_c{j}") * 2 > n_tokens,
-                     F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bit_terms.append(F.shiftleft(bit, j))
-    fingerprint = bit_terms[0]
-    for t in bit_terms[1:]:
-        fingerprint = fingerprint.bitwiseOR(t)
-    return agg.select("doc_id", fingerprint.alias("simhash"),
-                      n_tokens.alias("n_tokens"))
+    # one row per (token, bit j) where the bit is set, plus a j = -1 row
+    # per token that counts the tokens, then one COUNT per (doc_id, j),
+    # partially aggregated before the exchange, so the generated code
+    # is the same for any SIMHASH_BITS (one literal SUM per bit and an
+    # OR chain over them grow past HotSpot's HugeMethodLimit, see
+    # minhash_signatures).  A null text's lone null-h row counts only
+    # at j = -1, with c = 1 and n = 0.
+    j = F.col("j")
+    counts = (hashed.select(
+        "doc_id", "h",
+        F.explode(F.sequence(F.lit(-1), F.lit(SIMHASH_BITS - 1))).alias("j"))
+        .where((j == -1)
+               | (F.call_function("shiftright", F.col("h"), j).bitwiseAND(1) == 1))
+        .groupBy("doc_id", "j")
+        .agg(F.count(F.lit(1)).alias("c"), F.count("h").alias("n")))
+    tokens = F.when(j == -1, F.when(F.col("n") == F.col("c"), F.col("c"))
+                    .otherwise(F.lit(-1)))
+    agg = counts.groupBy("doc_id").agg(
+        F.max(tokens).cast("int").alias("n_tokens"),
+        F.collect_list(F.struct("j", "c")).alias("_bits"))
+    fingerprint = F.aggregate(
+        "_bits", F.lit(0).cast("long"),
+        lambda acc, b: acc.bitwiseOR(
+            F.when((b["j"] >= 0) & (b["c"] * 2 > F.col("n_tokens")),
+                   F.call_function("shiftleft", F.lit(1).cast("long"), b["j"]))
+            .otherwise(F.lit(0).cast("long"))))
+    return agg.select("doc_id", fingerprint.alias("simhash"), "n_tokens")
 
 
 def simhash_near_dups(documents: DataFrame,
@@ -434,21 +422,15 @@ def simhash_near_dups(documents: DataFrame,
     simhash_fingerprints)."""
     # barrier after the fingerprint fold: the self-join's two sides and
     # the 4-way block explode all reuse ONE fingerprint computation via
-    # ReusedExchange instead of re-deriving the 60 per-bit counts.
-    # That holds when the input has at least defaultParallelism scan
-    # partitions; on a single-file input ``spread``'s hash(doc_id)
-    # exchange of the same count makes this one redundant, Spark drops
-    # it, and each join side computes the fingerprints (2x)
+    # ReusedExchange instead of re-deriving the per-bit counts
     fps = barrier(simhash_fingerprints(documents, id_col, text_col),
                   "doc_id")
     blocked = fps.select(
         "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(k).alias("block"),
-                     F.shiftright("simhash", 15 * k).bitwiseAND(F.lit(0x7FFF)).alias("key"))
-            for k in range(4)
-        ])).alias("bk"),
-    ).select("doc_id", "simhash", "bk.block", "bk.key")
+        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("block"),
+    ).select("doc_id", "simhash", "block",
+             F.call_function("shiftright", F.col("simhash"), F.col("block") * 15)
+             .bitwiseAND(0x7FFF).alias("key"))
 
     pairs = (
         blocked.alias("l").join(blocked.alias("r"), ["block", "key"])

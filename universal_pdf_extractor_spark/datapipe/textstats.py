@@ -18,7 +18,7 @@ def _slim(documents: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Project to (id, text) and apply the scan-parallelism floor so
     the per-document expression work parallelizes even when the input
     is a single small file (guide §2; no-op on real corpora)."""
-    return spread(documents.select(id_col, text_col), id_col)
+    return spread(documents.select(id_col, text_col))
 
 # tiny per-language stopword profiles for the n-gram/stopword heuristic
 LANG_PROFILES = {
@@ -165,16 +165,11 @@ def repetition_scores(documents: DataFrame, id_col: str = "doc_id",
             F.size(F.filter(lines, lambda y: y == x)) > 1,
             F.length(x)).otherwise(F.lit(0)))
     # barrier after the array construction: `base` feeds THREE plan
-    # branches (line stats + 2-gram + 3-gram); on an input with at
-    # least defaultParallelism scan partitions the exchange lets them
+    # branches (line stats + 2-gram + 3-gram); the exchange lets them
     # reuse one computation of the line/token arrays instead of each
     # re-deriving them from the scan (removing it raised repetition
     # CPU from 2.41 to 3.79 s on an 8-file input, local[4] on a
-    # 4-core host, 5 warm reps).  On a
-    # single-file input ``_slim``'s spread already hash-partitioned on
-    # doc_id with the same count, Spark drops this exchange as
-    # redundant, and each branch recomputes the arrays (3x), spread
-    # over all cores by that earlier exchange
+    # 4-core host, 5 warm reps)
     base = staged.select(
         F.col("doc_id"),
         F.col("_toks").alias("toks"),

@@ -298,8 +298,7 @@ def boilerplate_strip_docs(spark, sf_dir):
     is the oracle's (RE2) \\s, [\\t\\n\\f\\r ]: the JVM's \\s also takes
     \\x0b, which would strip lines and join words the oracle keeps."""
     from .parallel import spread
-    docs = spread(_read(spark, sf_dir, "documents")
-                  .select("doc_id", "text"), "doc_id")
+    docs = spread(_read(spark, sf_dir, "documents").select("doc_id", "text"))
     space = r"[\t\n\f\r ]"
     norm = F.filter(
         F.transform(F.split(F.col("text"), "\n"),
@@ -328,7 +327,7 @@ def date_parse_roundtrip(spark, sf_dir):
 
     from .parallel import spread
     orders = spread(_read(spark, sf_dir, "orders")
-                    .select("o_orderkey", "o_orderdate"), "o_orderkey")
+                    .select("o_orderkey", "o_orderdate"))
     rendered = F.date_format(F.col("o_orderdate"), "dd/MM/yyyy")
     return orders.select("o_orderkey", parse_uk(rendered).alias("posted_date"))
 
@@ -366,8 +365,7 @@ def amount_parse_roundtrip(spark, sf_dir):
     # scan-parallelism floor: lineitem is one small file -> one scan
     # task, which would run the whole pandas-UDF parse on a single core
     li = spread(_read(spark, sf_dir, "lineitem")
-                .select("l_orderkey", "l_linenumber", "l_extendedprice"),
-                "l_orderkey")
+                .select("l_orderkey", "l_linenumber", "l_extendedprice"))
     cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
     whole = F.floor(cents / 100).cast("long")
     frac = F.lpad((cents % 100).cast("string"), 2, "0")
