@@ -14,7 +14,11 @@ from datetime import date
 import pytest
 
 from universal_pdf_extractor_spark.kernels.layout import segment_lines
-from universal_pdf_extractor_spark.kernels.segment_extract import analyse_segment
+from universal_pdf_extractor_spark.kernels.segment_extract import (
+    _map_grid_columns,
+    analyse_segment,
+)
+from universal_pdf_extractor_spark.kernels.semantic import match_header
 
 
 def _lines(text: str) -> list[dict]:
@@ -79,6 +83,21 @@ class TestDelimTier:
             ("DEBIT", "20.00"), ("CREDIT", "50.00")]
 
 
+    def test_bf_row_date_does_not_carry(self):
+        # the b/f marker row is skipped before its cells are read, so
+        # its date never becomes the last date a dateless row inherits
+        text = ("Date | Description | Amount | Balance\n"
+                "12/01/2024 | TESCO STORES | -10.00 | 1,190.00\n"
+                "15/01/2024 | Balance brought forward | | 1,190.00\n"
+                " | REFUND AMAZON | 5.00 | 1,195.00")
+        r = analyse_segment(_lines(text))
+        assert r["diagnostics"]["engine"] == "delim_grid"
+        assert [(rec["description_raw"], rec["posted_date"])
+                for rec in r["records"]] == [
+            ("TESCO STORES", date(2024, 1, 12)),
+            ("REFUND AMAZON", date(2024, 1, 12))]
+
+
 class TestPatternTier:
     def test_single_space_table_rescued(self):
         r = analyse_segment(_lines(SPACE_TABLE))
@@ -115,6 +134,74 @@ class TestPatternTier:
         ev = {e["field"]: e for e in recs[0]["evidence"]}
         assert SPACE_TABLE[ev["amount"]["start"]:ev["amount"]["end"]] == "-10.00"
         assert SPACE_TABLE[ev["date"]["start"]:ev["date"]["end"]] == "12/01/2024"
+
+
+class TestGridTier:
+    # a ragged row: four cells under five headers
+    RAGGED = ("Date        Details             Money Out    Money In    Balance\n"
+              "03/02/2024  CARD TESCO          12.00                    88.00\n"
+              "04/02/2024  SALARY  500.00  588.00")
+
+    def test_ragged_row_aligns_by_nearest_header(self):
+        r = analyse_segment(_lines(self.RAGGED))
+        assert r["fallback_used"] is True
+        assert r["diagnostics"]["engine"] == "text_grid"
+        assert [(str(rec["posted_date"]), rec["description_raw"],
+                 str(rec["amount"]), rec["direction"],
+                 str(rec["running_balance"]), rec["direction_source"])
+                for rec in r["records"]] == [
+            ("2024-02-03", "CARD TESCO", "12.00", "DEBIT", "88.00",
+             "text_grid_table"),
+            # SALARY and 500.00 both sit nearest the Details header and
+            # concatenate; 588.00 sits nearest Money Out
+            ("2024-02-04", "SALARY 500.00", "588.00", "DEBIT", "None",
+             "text_grid_table"),
+        ]
+
+    def test_collision_span_covers_both_cells(self):
+        rec = analyse_segment(_lines(self.RAGGED))["records"][1]
+        ev = {e["field"]: e for e in rec["evidence"]}
+        assert self.RAGGED[ev["description"]["start"]:ev["description"]["end"]] \
+            == "SALARY  500.00"
+        assert self.RAGGED[ev["debit"]["start"]:ev["debit"]["end"]] == "588.00"
+        assert ev["debit"]["turn_idx"] == 0
+
+    def test_text_grid_confidences(self):
+        rec = analyse_segment(_lines(self.RAGGED))["records"][0]
+        assert float(rec["confidence_amount"]) == pytest.approx(0.80)
+        assert float(rec["confidence_date"]) == pytest.approx(0.80)
+        assert float(rec["confidence_direction"]) == pytest.approx(0.90)
+
+
+# grid column-map role -> the semantic role match_header gives
+_GRID_TO_SEMANTIC = {"paid_in": "CREDIT", "withdrawn": "DEBIT",
+                     "balance": "BALANCE", "amount": "SINGLE_AMOUNT"}
+
+
+class TestCurrencyHeaders:
+    @pytest.mark.parametrize("header", [
+        "(GBP) Paid in", "\u00a3 Balance", "$ Money out", "(EUR) \u20acAmount",
+        "\u00a3Withdrawn", "(USD) Credit"])
+    def test_grid_map_and_match_header_agree(self, header):
+        grid_role = _map_grid_columns([{"text": header}])["amount_cols"][0]["role"]
+        assert _GRID_TO_SEMANTIC[grid_role] == match_header(header)
+
+    @pytest.mark.parametrize("header", ["(GBP)", "\u00a3", " $ "])
+    def test_bare_currency_header_maps_to_nothing(self, header):
+        assert _map_grid_columns([{"text": header}]) == {
+            "date_col": None, "desc_col": None, "amount_cols": []}
+        assert match_header(header) is None
+
+    def test_decorated_headers_through_the_delim_tier(self):
+        text = ("Date | Description | (GBP) Paid in | \u00a3 Balance\n"
+                "12/01/2024 | SALARY ACME LTD | 250.00 | 1,440.00\n"
+                "13/01/2024 | REFUND AMAZON | 5.00 | 1,445.00")
+        r = analyse_segment(_lines(text))
+        assert r["diagnostics"]["column_mapping"]["amount_cols"] == [
+            {"index": 2, "role": "paid_in"}, {"index": 3, "role": "balance"}]
+        assert [(rec["direction"], str(rec["amount"]), str(rec["running_balance"]))
+                for rec in r["records"]] == [
+            ("CREDIT", "250.00", "1440.00"), ("CREDIT", "5.00", "1445.00")]
 
 
 class TestTierOrdering:

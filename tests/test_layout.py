@@ -1,6 +1,10 @@
 """Layout/tokenize kernel tests: contract invariants + fast-path parity."""
 
+import unicodedata
+
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from universal_pdf_extractor_spark.kernels.classify import boundary_score
 from universal_pdf_extractor_spark.kernels.layout import (
@@ -129,16 +133,53 @@ def test_batch_fast_path_matches_ir_route():
         "\n\n\n",
         "\n".join(f"l{i} word" for i in range(40)),
     ]
-    batch = turn_view_batch(pd.Series(texts))
+    _assert_batch_matches_scalar(texts)
+
+
+def _assert_batch_matches_scalar(texts: list) -> None:
+    """Every turn_view_batch column equals the scalar turn_view route."""
+    batch = turn_view_batch(pd.Series(texts, dtype=object))
+    assert list(batch.columns) == [
+        "raw_text", "top_text", "boundary_score", "clean_text",
+        "span_starts", "span_ends", "n_lines", "n_tokens"]
     for i, text in enumerate(texts):
         view = turn_view(text)
         view["boundary_score"] = boundary_score(view["top_text"])[0]
         for key in ("raw_text", "top_text", "clean_text", "n_lines", "n_tokens",
                     "boundary_score"):
-            assert batch.loc[i, key] == view[key], (i, key)
+            assert batch.loc[i, key] == view[key], (text, key)
         rebuilt = [{"field": "content", "start": a, "end": b}
                    for a, b in zip(batch.loc[i, "span_starts"], batch.loc[i, "span_ends"])]
-        assert rebuilt == view["spans"], i
+        assert rebuilt == view["spans"], text
+
+
+# characters where str methods, the regex \s/\S classes and case folding
+# disagree: every C0 control, NEL, no-break and ideographic spaces, the
+# line separator, decimal digits of other scripts, long s and the Kelvin
+# sign (which match ASCII letters case-insensitively)
+_ODD_CHARS = (
+    [chr(c) for c in range(0x20)]
+    + ["\x85", "\xa0", " ", "\u3000", "\u2028", "\u017f", "\u212a"]
+    + [chr(c) for c in (0x663, 0x6f7, 0x96c, 0xe53, 0xff10, 0x1d7d8)]
+)
+assert all(unicodedata.category(c) == "Nd" for c in _ODD_CHARS[-6:])
+# words the segmenter and the boilerplate strip look for
+_VOCAB = [
+    "statement period: 1", "statement date:", "from 01/02/2024 to", "period ending -",
+    "opening balance", "balance brought forward", "b/f bal", "previous balance",
+    "account number", "sort code", "a/c no", "12-34-56 12345678", "page 1 of 2",
+    "total balance", "personal account statement", "Barclays", "Date", "Paid Out",
+    "TESCO STORES", "50.00", "01/01/2024", "\n", "  ",
+]
+
+
+@given(st.lists(
+    st.none() | st.lists(st.sampled_from(_ODD_CHARS) | st.sampled_from(_VOCAB),
+                         max_size=40).map("".join),
+    min_size=1, max_size=6))
+@settings(max_examples=300, deadline=None)
+def test_batch_fast_path_matches_ir_route_on_any_text(texts):
+    _assert_batch_matches_scalar(texts)
 
 
 def test_tokens_table_contract(spark):

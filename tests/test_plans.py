@@ -8,8 +8,8 @@ cannot silently regress them:
   streamed extraction UDF;
 - column pruning reaches the parquet scan (a narrow projection reads
   only the needed transcript columns — `text` excluded when unused);
-- every generated method of the conversations plan stays small enough
-  for HotSpot to JIT-compile it, and the signature plans' generated
+- every generated method of the five pipeline output plans stays small
+  enough for HotSpot to JIT-compile it, and the signature plans' generated
   code does not grow with the hash count;
 - on a single-file input the datapipe barriers survive planning, so
   each heavy projection runs once;
@@ -146,12 +146,14 @@ def _codegen(spark, df) -> tuple[list[int], int]:
                 sum(len(s._2()) for s in stages))
 
 
-def test_conversations_codegen_methods_are_jit_compilable(spark, transcripts):
-    """No whole-stage-codegen method in the conversations plan of
-    run_pipeline exceeds HUGE_METHOD_LIMIT bytes of bytecode."""
+@pytest.mark.parametrize("output", [
+    "turns", "records", "segments", "conversations", "detected_tables"])
+def test_pipeline_codegen_methods_are_jit_compilable(spark, transcripts, output):
+    """No whole-stage-codegen method in the plan of any run_pipeline
+    output exceeds HUGE_METHOD_LIMIT bytes of bytecode."""
     from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
 
-    sizes, _ = _codegen(spark, run_pipeline(transcripts)["conversations"])
+    sizes, _ = _codegen(spark, run_pipeline(transcripts)[output])
     assert sizes
     assert max(sizes) <= HUGE_METHOD_LIMIT, sizes
 

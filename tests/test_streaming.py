@@ -140,3 +140,13 @@ def test_stream_stateful_segments_nonzero_start(spark, tmp_path_factory):
     assert list(got["segment_index"]) == [0, 0, 0, 0]
     assert bool(got["is_boundary"].iloc[0]) is True
     assert not got["is_boundary"].iloc[1:].any()
+
+
+def test_spread_returns_a_streaming_frame_unchanged(spark, corpus_path):
+    """A streaming frame has no partition count to probe before it runs,
+    so ``spread`` hands it back as it is instead of planning it."""
+    from universal_pdf_extractor_spark.parallel import spread
+
+    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(corpus_path)
+    assert stream.isStreaming
+    assert spread(stream) is stream

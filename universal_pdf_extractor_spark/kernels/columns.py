@@ -9,6 +9,9 @@ midpoint-to-next-peak] with the first band clamped to 0.  Zero peaks
 fall back to a single full-width column; fewer than 5 tokens yield no
 columns at all.
 
+The histogram counts the starts of ``gap_groups``, the one >=2-char
+word-group split, which the segment kernel uses too.
+
 Columns are plain dicts: {column_index, x_start, x_end, role}.
 """
 
@@ -24,26 +27,39 @@ PEAK_DISTANCE = 4
 SMOOTH_SIGMA = 1.5
 
 
+def gap_groups(tokens: list[dict]) -> list[list[dict]]:
+    """A line's tokens split into word groups at >=2-char gaps.
+
+    Token ``start``/``end`` are char offsets into the turn text, so a
+    gap of >= 2 between consecutive tokens is a multi-space run in the
+    source: the character-grid analogue of pdfplumber's word merging
+    and of its text-strategy vertical splits (orchestrator.py:820-827).
+    """
+    groups: list[list[dict]] = []
+    prev_end = None
+    for tok in tokens:
+        if prev_end is None or tok["start"] - prev_end >= 2:
+            groups.append([tok])
+        else:
+            groups[-1].append(tok)
+        prev_end = tok["end"]
+    return groups
+
+
 def detect_columns(lines: list[dict]) -> list[dict]:
     """Histogram/peak column detection over a segment's lines."""
     if not lines:
         return []
 
-    # Histogram over word-GROUP starts (line start, or preceded by a
-    # >=2-char gap), not raw token starts.  pdfplumber's extract_words
-    # already merges glyphs/words across small gaps before the
-    # reference histograms them (table_extractor.py:110-143 sees word
-    # starts); in monospace transcript text, single-space-separated
-    # tokens inside one field sit at corpus-stable offsets and would
-    # each mint a spurious sub-column peak ("May" always at char 3).
-    x_positions = []
-    for line in lines:
-        prev_end = None
-        for tok in line["tokens"]:
-            start = tok.get("start")
-            if prev_end is None or start is None or start - prev_end >= 2:
-                x_positions.append(tok["x0"])
-            prev_end = tok.get("end", prev_end)
+    # Histogram over word-GROUP starts, not raw token starts.
+    # pdfplumber's extract_words already merges glyphs/words across
+    # small gaps before the reference histograms them
+    # (table_extractor.py:110-143 sees word starts); in monospace
+    # transcript text, single-space-separated tokens inside one field
+    # sit at corpus-stable offsets and would each mint a spurious
+    # sub-column peak ("May" always at char 3).
+    x_positions = [group[0]["x0"] for line in lines
+                   for group in gap_groups(line["tokens"])]
     if len(x_positions) < 5:
         return []
 
@@ -136,8 +152,6 @@ def assign_line_to_cells(line: dict, columns: list[dict],
         # group (e.g. the year of an overflowing date), not to whatever
         # column center happens to be nearest
         if (not contained and prev_tok is not None
-                and token.get("start") is not None
-                and prev_tok.get("end") is not None
                 and token["start"] - prev_tok["end"] <= 1):
             col = prev_col
         cell_tokens.setdefault(col, []).append(token)
@@ -153,7 +167,7 @@ def assign_line_to_cells(line: dict, columns: list[dict],
             "text": " ".join(t["text"] for t in toks),
             "column_index": col_idx,
             "turn_idx": turn_idx,
-            "start": toks[0].get("start"),
-            "end": toks[-1].get("end"),
+            "start": toks[0]["start"],
+            "end": toks[-1]["end"],
         })
     return cells

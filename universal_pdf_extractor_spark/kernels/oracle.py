@@ -6,10 +6,15 @@ orchestrator does per document, app/pipeline/orchestrator.py:168-432).
 The e2e equality tests compare the distributed pipeline's output
 against this oracle per (conv_id, turn_idx) — the north-rule gate.
 The oracle builds each segment's lines with the stage's own
-``layout.segment_lines``, so those tests check everything after that
-function.  A change to its geometry shows only in the golden
-files, in its parity test (tests/test_layout.py) and in a comparison
-with the previous version's outputs.
+``layout.segment_lines`` and analyses them with the stage's own
+``segment_extract.analyse_segment`` (dates resolve against
+``dates.DEFAULT_TODAY`` in both), so those tests check the stages
+around these two functions, not the functions themselves.  A change
+to either shows only in the golden files, in the DuckDB
+``transcripts_records_*`` oracles, in the kernel tests
+(tests/test_layout.py, tests/test_table_structure.py,
+tests/test_fallback_tiers.py) and in a comparison with the previous
+version's outputs.
 
 Integrated-path parity notes (all mirrored by the Spark stages):
 - classification, provider detection and customer-info extraction all
@@ -36,7 +41,6 @@ Integrated-path parity notes (all mirrored by the Spark stages):
 
 from __future__ import annotations
 
-from datetime import date
 from decimal import Decimal
 from typing import Optional
 
@@ -49,7 +53,6 @@ from .classify import (
     score_document,
 )
 from .customer import extract_customer_info
-from .dates import DEFAULT_TODAY
 from .layout import segment_lines, turn_view
 from .segment_extract import analyse_segment
 
@@ -113,8 +116,7 @@ def score_conversation(records: list[dict],
     return result
 
 
-def process_conversation(turns: list[tuple[int, Optional[str]]],
-                         today: date = DEFAULT_TODAY) -> dict:
+def process_conversation(turns: list[tuple[int, Optional[str]]]) -> dict:
     """Full oracle for one conversation.
 
     ``turns``: [(turn_idx, text)] sorted by turn_idx.
@@ -151,7 +153,7 @@ def process_conversation(turns: list[tuple[int, Optional[str]]],
     for seg_idx in range(n_segments):
         seg_turns = [turn for turn, s in zip(turns, seg_per_turn)
                      if s == seg_idx]
-        result = analyse_segment(segment_lines(seg_turns), today=today)
+        result = analyse_segment(segment_lines(seg_turns))
         segments.append({
             "segment_index": seg_idx,
             "opening_balance": result["opening_balance"],

@@ -11,6 +11,8 @@ Row rules, applied over a segment's lines in reading order:
   4. neither -> merged iff vertically adjacent
      (gap <= 1.8 x previous line height)
   5. orphan lines (no current row) are skipped
+
+``add_evidence`` builds every evidence span, the fallback tiers' too.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ from typing import Optional
 
 from .amounts import is_amount_like, parse_amount
 from .columns import assign_line_to_cells
-from .dates import DEFAULT_TODAY, is_date_like, parse_date
+from .dates import is_date_like, parse_date
 from .patterns import HEADER_KEYWORDS, is_balance_marker
 
 HEADER_SCAN_LINES = 10
@@ -148,6 +150,19 @@ def extract_header_texts(line: dict, columns: list[dict]) -> list[str]:
     return header
 
 
+def add_evidence(evidence: list[dict], field: str, turn_idx: int,
+                 first: dict, last: Optional[dict] = None) -> None:
+    """Append one per-field provenance span (transaction_evidence
+    analogue, tables.py:388-420): from ``first``'s start to ``last``'s
+    end (``first``'s when no ``last``), the char offsets of a cell or
+    token run into the original text of turn ``turn_idx``.  An empty
+    cell (``start`` None) adds none."""
+    if first["start"] is not None:
+        evidence.append({"field": field, "turn_idx": turn_idx,
+                         "start": first["start"],
+                         "end": (last or first)["end"]})
+
+
 # evidence-emitting roles and their span field names (hoisted: the
 # per-cell dict literal and tuple were rebuilt on every call)
 _EVIDENCE_ROLES = frozenset(
@@ -156,7 +171,7 @@ _EVIDENCE_FIELD = {r: ("amount" if r == "SINGLE_AMOUNT" else r.lower())
                    for r in _EVIDENCE_ROLES}
 
 
-def extract_fields_from_row(row: dict, roles: dict[int, str], today=DEFAULT_TODAY) -> dict:
+def extract_fields_from_row(row: dict, roles: dict[int, str]) -> dict:
     """Project a reconstructed row into typed fields by column role.
 
     Cells are deduplicated per column (first occurrence wins); DEBIT /
@@ -172,21 +187,8 @@ def extract_fields_from_row(row: dict, roles: dict[int, str], today=DEFAULT_TODA
         "direction": "UNKNOWN", "direction_source": "",
         "amount_confidence": 0.8, "date_confidence": 0.8,
         "direction_confidence": 0.5,
-        # per-field provenance spans (transaction_evidence analogue,
-        # tables.py:388-420): (field, turn_idx, start, end) per
-        # consumed cell, offsets into the original turn text
-        "evidence": [],
+        "evidence": [],  # one add_evidence span per consumed cell
     }
-
-    def _evidence(field: str, cell: dict) -> None:
-        if cell.get("start") is None:
-            return
-        result["evidence"].append({
-            "field": field,
-            "turn_idx": int(cell.get("turn_idx") or 0),
-            "start": int(cell["start"]),
-            "end": int(cell["end"]),
-        })
 
     seen_cols: set[int] = set()
     unique_cells = []
@@ -199,11 +201,12 @@ def extract_fields_from_row(row: dict, roles: dict[int, str], today=DEFAULT_TODA
         role = roles.get(cell["column_index"], "UNKNOWN")
         text = cell["text"].strip()
         if text and role in _EVIDENCE_ROLES:
-            _evidence(_EVIDENCE_FIELD[role], cell)
+            add_evidence(result["evidence"], _EVIDENCE_FIELD[role],
+                         cell["turn_idx"] or 0, cell)
 
         if role == "DATE":
             result["raw_date"] = text
-            dp = parse_date(text, today=today)
+            dp = parse_date(text)
             if dp.parsed_date:
                 result["parsed_date"] = dp.parsed_date
                 result["date_confidence"] = dp.confidence

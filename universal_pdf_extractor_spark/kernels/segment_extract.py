@@ -9,6 +9,13 @@ closing balance from marker rows, direction solving, merge, and the
 no-amount/blank-description quality gate
 (app/pipeline/orchestrator.py:367-385).
 
+Segments that path cannot parse fall back to the reference's table
+cascade (orchestrator.py:569-578, 793-1330): the text-grid and
+delimiter tiers (pdfplumber, tabula) share one row loop,
+``_table_records``; the token-pattern tier (camelot) has its own.
+Shared rules have one definition each: ``columns.gap_groups``,
+``semantic.normalise_header`` and ``rows.add_evidence``.
+
 DOCUMENTED DIVERGENCE from the reference orchestrator: the reference
 passes its field dicts straight into ``solve_directions`` although the
 solver contract reads different keys (``amount``, ``running_balance``,
@@ -26,22 +33,31 @@ runs; the solver kernel itself is parity-exact.
 
 from __future__ import annotations
 
-from datetime import date
+import re
 from decimal import Decimal
+from functools import partial
 from typing import Optional
 
 from .amounts import parse_amount
-from .columns import detect_columns
-from .dates import DEFAULT_TODAY, parse_date
+from .columns import assign_token_to_column, detect_columns, gap_groups
+from .dates import parse_date
 from .patterns import is_summary_row
 from .rows import (
+    add_evidence,
     detect_header_line,
     extract_fields_from_row,
     extract_header_texts,
     precompute_cells,
     reconstruct_rows,
 )
-from .semantic import AMOUNT_ROLES, ROLE_BALANCE, ROLE_DATE, assign_column_roles
+from .semantic import (
+    AMOUNT_ROLES,
+    ROLE_BALANCE,
+    ROLE_DATE,
+    assign_column_roles,
+    match_header,
+    normalise_header,
+)
 from .solver import solve_directions
 
 # ── text-grid fallback (the transcripts analogue of the reference's
@@ -56,40 +72,18 @@ _FB_WITHDRAWN_KW = ["withdrawn", "debit", "money out", "paid out", "withdrawal",
 _FB_BALANCE_KW = ["balance"]
 _FB_AMOUNT_KW = ["amount"]
 
-import re as _re
-
-_FB_CCY_PREFIX_RE = _re.compile(r"\([a-z]{3}\)\s*")
-_FB_CCY_SYMBOL_RE = _re.compile("[" + chr(163) + chr(36) + chr(8364) + r"]\s*")
-
 
 def _grid_cells(line: dict) -> list[dict]:
-    """Split a tokenized line into cells on >=2-char gaps.
-
-    Token ``start``/``end`` are char offsets into the original turn
-    text, so a gap of >= 2 between consecutive tokens is exactly a
-    multi-space run in the source — the character-grid analogue of
-    pdfplumber's text-strategy vertical splits (snap/join tolerance,
-    orchestrator.py:820-827).
-    """
-    cells: list[dict] = []
-    cur: list[dict] = []
-    prev_end = None
-    for t in line["tokens"]:
-        if prev_end is not None and t["start"] - prev_end >= 2:
-            cells.append(cur)
-            cur = []
-        cur.append(t)
-        prev_end = t["end"]
-    if cur:
-        cells.append(cur)
+    """A tokenized line's cells: its >=2-char gap groups
+    (``columns.gap_groups``), pdfplumber's text-strategy cells."""
     return [
         {
             "text": " ".join(t["text"] for t in c),
             "x_mid": (c[0]["x0"] + c[-1]["x1"]) / 2.0,
-            "start": c[0].get("start"),
-            "end": c[-1].get("end"),
+            "start": c[0]["start"],
+            "end": c[-1]["end"],
         }
-        for c in cells
+        for c in gap_groups(line["tokens"])
     ]
 
 
@@ -97,11 +91,7 @@ def _map_grid_columns(header_cells: list[dict]) -> dict:
     """Header cells -> column roles (orchestrator.py:1336-1377)."""
     result = {"date_col": None, "desc_col": None, "amount_cols": []}
     for i, cell in enumerate(header_cells):
-        h = cell["text"].lower().strip()
-        if not h:
-            continue
-        h = _FB_CCY_PREFIX_RE.sub("", h).strip()
-        h = _FB_CCY_SYMBOL_RE.sub("", h).strip()
+        h = normalise_header(cell["text"])
         if not h:
             continue
         if any(kw in h for kw in _FB_DATE_KW) and result["date_col"] is None:
@@ -119,17 +109,7 @@ def _map_grid_columns(header_cells: list[dict]) -> dict:
     return result
 
 
-def _grid_col_map_valid(col_map: dict) -> bool:
-    """Reference acceptance rule (orchestrator.py:845-850): date column
-    plus at least one non-balance amount column."""
-    return bool(
-        col_map.get("amount_cols")
-        and col_map.get("date_col") is not None
-        and any(ac["role"] != "balance" for ac in col_map["amount_cols"])
-    )
-
-
-def _assign_cells(header_cells: list[dict], row_cells: list[dict]) -> list[str]:
+def _assign_cells(header_cells: list[dict], row_cells: list[dict]) -> list[dict]:
     """Assignment of data cells to header columns.
 
     pdfplumber hands the reference pre-aligned table columns; the text
@@ -149,7 +129,7 @@ def _assign_cells(header_cells: list[dict], row_cells: list[dict]) -> list[str]:
             out[j] = dict(cell)
         else:
             out[j]["text"] += " " + cell["text"]
-            out[j]["end"] = cell.get("end", out[j]["end"])
+            out[j]["end"] = cell["end"]
     return [c if c is not None else {"text": "", "start": None, "end": None}
             for c in out]
 
@@ -160,32 +140,25 @@ _BF_CF_KW = ["brought forward", "carried forward", "b/f", "c/f"]
 
 
 def _cells_to_fields(row_cells: list[dict], col_map: dict, last_date,
-                     today: date, turn: int):
+                     turn: int):
     """Shared cells -> (date, desc, amount, direction, balance) field
-    projection used by every fallback tier (the common body of the
-    reference's pdfplumber/tabula/camelot row loops,
-    orchestrator.py:860-930 / 1056-1110 / 1240-1281): date parse with
-    last-date carry, role-driven amount/direction (paid_in ->
-    CREDIT, withdrawn -> DEBIT, balance -> running balance, amount ->
-    sign inference), with per-field evidence spans."""
+    projection of the table tiers (the common body of the reference's
+    pdfplumber/tabula row loops, orchestrator.py:860-930 /
+    1056-1110): date parse with last-date carry, role-driven
+    amount/direction (paid_in -> CREDIT, withdrawn -> DEBIT, balance
+    -> running balance, amount -> sign inference), with per-field
+    evidence spans."""
     evidence: list[dict] = []
-
-    def _ev(field: str, cell: dict) -> None:
-        if cell.get("start") is not None:
-            evidence.append({"field": field, "turn_idx": turn,
-                             "start": int(cell["start"]),
-                             "end": int(cell["end"])})
-
     date_val = None
     dc = col_map.get("date_col")
     if dc is not None and dc < len(row_cells):
         date_cell = row_cells[dc]
         if date_cell["text"]:
-            parsed = parse_date(date_cell["text"], today=today)
+            parsed = parse_date(date_cell["text"])
             if parsed.parsed_date:
                 date_val = parsed.parsed_date
                 last_date = date_val
-                _ev("date", date_cell)
+                add_evidence(evidence, "date", turn, date_cell)
     if date_val is None and last_date:
         date_val = last_date
 
@@ -194,7 +167,7 @@ def _cells_to_fields(row_cells: list[dict], col_map: dict, last_date,
         desc_cell = row_cells[col_map["desc_col"]]
         desc = desc_cell["text"]
         if desc:
-            _ev("description", desc_cell)
+            add_evidence(evidence, "description", turn, desc_cell)
 
     amount = None
     direction = "UNKNOWN"
@@ -208,21 +181,21 @@ def _cells_to_fields(row_cells: list[dict], col_map: dict, last_date,
             if role == "paid_in":
                 amount = abs(ap.amount)
                 direction = "CREDIT"
-                _ev("credit", row_cells[idx])
+                add_evidence(evidence, "credit", turn, row_cells[idx])
             elif role == "withdrawn":
                 amount = abs(ap.amount)
                 direction = "DEBIT"
-                _ev("debit", row_cells[idx])
+                add_evidence(evidence, "debit", turn, row_cells[idx])
             elif role == "balance":
                 balance = ap.amount
-                _ev("balance", row_cells[idx])
+                add_evidence(evidence, "balance", turn, row_cells[idx])
             elif role == "amount" and amount is None:
                 amount = abs(ap.amount)
                 if ap.amount < 0:
                     direction = "DEBIT"
                 elif ap.amount > 0:
                     direction = "CREDIT"
-                _ev("amount", row_cells[idx])
+                add_evidence(evidence, "amount", turn, row_cells[idx])
     return date_val, last_date, desc, amount, direction, balance, evidence
 
 
@@ -237,15 +210,16 @@ FALLBACK_SOURCES = ("text_grid_table", "delim_table", "row_pattern",
 
 def _fallback_record(row_index: int, ln: dict, date_val, desc: str, amount,
                      direction: str, balance, evidence: list[dict],
-                     source: str, conf_amount: float, conf_date_hi: float,
-                     conf_dir_hi: float, conf_dir_lo: float) -> dict:
-    """Fallback transaction row with the tier's fixed confidences
-    (orchestrator.py:957-962 pdfplumber, :1155-1159 tabula,
-    :1322-1326 camelot) and balance_confirmed=False."""
+                     source: str, conf: tuple) -> dict:
+    """Fallback transaction row with balance_confirmed=False and the
+    tier's fixed confidences ``conf``: (amount, dated, directed,
+    undirected), orchestrator.py:957-962 pdfplumber, :1155-1159
+    tabula, :1322-1326 camelot; an undated row gets 0.30."""
+    conf_amount, conf_date, conf_dir, conf_dir_unknown = conf
     return {
         "row_index": row_index,
-        "turn_idx": int(ln.get("turn_idx", 0)),
-        "line_indices": [ln.get("line_index", 0)],
+        "turn_idx": ln["turn_idx"],
+        "line_indices": [ln["line_index"]],
         "posted_date": date_val,
         "description_raw": desc[:500] if desc else "",
         "description_clean": (desc[:500] if desc else "").strip(),
@@ -257,8 +231,8 @@ def _fallback_record(row_index: int, ln: dict, date_val, desc: str, amount,
         "balance_confirmed": False,
         "balance_tolerance_used": Decimal("0").quantize(Decimal("0.0001")),
         "confidence_amount": conf_amount,
-        "confidence_date": conf_date_hi if date_val else 0.30,
-        "confidence_direction": conf_dir_hi if direction != "UNKNOWN" else conf_dir_lo,
+        "confidence_date": conf_date if date_val else 0.30,
+        "confidence_direction": conf_dir if direction != "UNKNOWN" else conf_dir_unknown,
         "evidence": evidence,
     }
 
@@ -271,51 +245,13 @@ def _scan_grid_header(grid: list[tuple]) -> tuple:
     (orchestrator.py:838-858); the text grid has no cropping step, so
     the header scan walks the segment."""
     for probe, (_, probe_cells) in enumerate(grid):
-        candidate = _map_grid_columns(probe_cells)
-        if _grid_col_map_valid(candidate):
-            return probe_cells, candidate, probe + 1
+        col_map = _map_grid_columns(probe_cells)
+        # the reference's acceptance rule (orchestrator.py:845-850): a
+        # date column plus at least one non-balance amount column
+        if col_map["date_col"] is not None and any(
+                ac["role"] != "balance" for ac in col_map["amount_cols"]):
+            return probe_cells, col_map, probe + 1
     return None, None, None
-
-
-def _fallback_grid_records(lines: list[dict], today: date) -> tuple[list[dict], dict]:
-    """Tier 1: multi-space grid parse when column detection fails.
-
-    Mirrors the reference pdfplumber fallback row loop
-    (orchestrator.py:838-930): header mapped by keywords, last-date
-    carry for dateless rows, rows without an amount or matching
-    is_summary_row skipped, fixed confidences (0.80 amount, 0.80/0.30
-    date, 0.90/0.40 direction, orchestrator.py:957-962).
-    """
-    grid = [(ln, _grid_cells(ln)) for ln in lines]
-    grid = [(ln, cells) for ln, cells in grid if cells]
-    if len(grid) < 2:
-        return [], {}
-
-    header_cells, col_map, data_start = _scan_grid_header(grid)
-    if col_map is None:
-        return [], {}
-
-    records: list[dict] = []
-    last_date = None
-    for ln, cells in grid[data_start:]:
-        row_cells = _assign_cells(header_cells, cells)
-        turn = int(ln.get("turn_idx", 0))
-        date_val, last_date, desc, amount, direction, balance, evidence = \
-            _cells_to_fields(row_cells, col_map, last_date, today, turn)
-        if amount is None:
-            continue
-        full_row_text = " ".join(c["text"] for c in cells)
-        if is_summary_row(desc) or is_summary_row(full_row_text):
-            continue
-        records.append(_fallback_record(
-            len(records), ln, date_val, desc, amount, direction, balance,
-            evidence, "text_grid_table", 0.80, 0.80, 0.90, 0.40))
-    return records, {"column_count": len(header_cells),
-                     "header_line": data_start - 1,
-                     "column_mapping": col_map}
-
-
-_DELIM_RE = _re.compile(r"[|;]")
 
 
 def _split_columns_by_header(columns: list[dict], header_line: dict) -> list[dict]:
@@ -332,9 +268,6 @@ def _split_columns_by_header(columns: list[dict], header_line: dict) -> list[dic
     per-row gap cells handle ragged data better than header-projected
     windows would.
     """
-    from .columns import assign_token_to_column
-    from .semantic import AMOUNT_ROLES, match_header
-
     if len(columns) < 2:
         return columns
 
@@ -342,20 +275,8 @@ def _split_columns_by_header(columns: list[dict], header_line: dict) -> list[dic
     # group lands on one column by its span center — a header phrase
     # straddling a detected boundary ("Paid In" half-in, half-out)
     # must not be torn apart by per-token assignment
-    word_groups: list[list[dict]] = []
-    prev_tok = None
-    for tok in header_line["tokens"]:
-        if (word_groups and prev_tok is not None
-                and tok.get("start") is not None
-                and prev_tok.get("end") is not None
-                and tok["start"] - prev_tok["end"] < 2):
-            word_groups[-1].append(tok)
-        else:
-            word_groups.append([tok])
-        prev_tok = tok
-
     groups_per_col: dict[int, list[list[dict]]] = {}
-    for g in word_groups:
+    for g in gap_groups(header_line["tokens"]):
         span = {"x0": g[0]["x0"], "x1": g[-1]["x1"]}
         ci = assign_token_to_column(span, columns)
         groups_per_col.setdefault(ci, []).append(g)
@@ -394,13 +315,7 @@ def _split_columns_by_header(columns: list[dict], header_line: dict) -> list[dic
     return out
 
 
-def _has_internal_gap(line: dict) -> bool:
-    """True iff any consecutive token pair is separated by >= 2 chars
-    (i.e. the raw line has an internal multi-space run the grid
-    splitter could use)."""
-    toks = line["tokens"]
-    return any(toks[k + 1]["start"] - toks[k]["end"] >= 2
-               for k in range(len(toks) - 1))
+_DELIM_RE = re.compile(r"[|;]")
 
 
 def _delim_cells(line: dict) -> Optional[list[dict]]:
@@ -440,18 +355,21 @@ def _delim_cells(line: dict) -> Optional[list[dict]]:
             for c in cells]
 
 
-def _fallback_delim_records(lines: list[dict], today: date) -> tuple[list[dict], dict]:
-    """Tier 2 (tabula analogue, orchestrator.py:982-1173): delimiter-
-    split parse for pipe/semicolon tables the multi-space grid cannot
-    segment (single-space-padded delimiters defeat the >=2-gap split).
-    Cell-to-column mapping is positional with bounds checks, exactly
-    the reference's guarded ``idx < len(cells)`` frame indexing;
-    b/f-c/f marker rows are skipped by keyword
-    (orchestrator.py:1073-1074); confidences 0.82 amount, 0.82/0.30
-    date, 0.90/0.40 direction (orchestrator.py:1155-1159).
+def _table_records(lines: list[dict], split, align, skip_bf_cf: bool,
+                   source: str, conf: tuple) -> tuple[list[dict], dict]:
+    """The table tiers' one row loop (the reference's pdfplumber and
+    tabula fallback loops, orchestrator.py:838-930 / 1056-1110).
+
+    ``split`` cuts a line into cells (falsy: not a table line), the
+    first line whose cells map to a valid column set is the header,
+    and ``align`` lines each later row's cells up with the header's.
+    Dateless rows carry the last date; rows without an amount or
+    matching is_summary_row are skipped.  With ``skip_bf_cf``, b/f-c/f
+    marker rows are skipped by keyword before their cells are read, so
+    their dates never carry (orchestrator.py:1073-1074).  ``conf`` is
+    the tier's ``_fallback_record`` confidences.
     """
-    grid = [(ln, _delim_cells(ln)) for ln in lines]
-    grid = [(ln, cells) for ln, cells in grid if cells]
+    grid = [(ln, cells) for ln in lines if (cells := split(ln))]
     if len(grid) < 2:
         return [], {}
 
@@ -462,28 +380,42 @@ def _fallback_delim_records(lines: list[dict], today: date) -> tuple[list[dict],
     records: list[dict] = []
     last_date = None
     for ln, cells in grid[data_start:]:
-        row_lower = " ".join(c["text"] for c in cells).lower()
-        if any(kw in row_lower for kw in _BF_CF_KW):
+        row_text = " ".join(c["text"] for c in cells)
+        if skip_bf_cf and any(kw in row_text.lower() for kw in _BF_CF_KW):
             continue
-        turn = int(ln.get("turn_idx", 0))
         date_val, last_date, desc, amount, direction, balance, evidence = \
-            _cells_to_fields(cells, col_map, last_date, today, turn)
-        if amount is None:
-            continue
-        if is_summary_row(desc) or is_summary_row(" ".join(c["text"] for c in cells)):
+            _cells_to_fields(align(header_cells, cells), col_map, last_date,
+                             ln["turn_idx"])
+        if amount is None or is_summary_row(desc) or is_summary_row(row_text):
             continue
         records.append(_fallback_record(
             len(records), ln, date_val, desc, amount, direction, balance,
-            evidence, "delim_table", 0.82, 0.82, 0.90, 0.40))
+            evidence, source, conf))
     return records, {"column_count": len(header_cells),
                      "header_line": data_start - 1,
                      "column_mapping": col_map}
 
 
+# Tier 1 (pdfplumber analogue): >=2-space grid cells re-aligned to the
+# header by x; confidences orchestrator.py:957-962.
+_fallback_grid_records = partial(
+    _table_records, split=_grid_cells, align=_assign_cells, skip_bf_cf=False,
+    source="text_grid_table", conf=(0.80, 0.80, 0.90, 0.40))
+# Tier 2 (tabula analogue, orchestrator.py:982-1173): delimiter cells
+# for the pipe/semicolon tables whose single-space-padded delimiters
+# defeat the >=2-gap split, mapped positionally like tabula's aligned
+# frames (the reference's guarded ``idx < len(cells)`` indexing);
+# confidences orchestrator.py:1155-1159.
+_fallback_delim_records = partial(
+    _table_records, split=_delim_cells,
+    align=lambda header_cells, cells: cells, skip_bf_cf=True,
+    source="delim_table", conf=(0.82, 0.82, 0.90, 0.40))
+
+
 # strictly money-shaped token (mandatory pence digits): the pattern
 # tier has no column geometry, so bare integers (house numbers,
 # merchant ids) must not qualify as amounts
-_PATTERN_MONEY_RE = _re.compile(
+_PATTERN_MONEY_RE = re.compile(
     "^\\(?-?[" + chr(163) + chr(36) + chr(8364)
     + r"]?(?:\d{1,3}(?:,\d{3})+|\d+)\.\d{2}\)?-?$")
 # camelot header gate: "date" + one table keyword (orchestrator.py:1333-1336)
@@ -491,7 +423,7 @@ _PATTERN_HEADER_KW = ["description", "paid in", "withdrawn", "balance",
                       "money in", "money out", "debit", "credit", "amount"]
 
 
-def _fallback_pattern_records(lines: list[dict], today: date) -> tuple[list[dict], dict]:
+def _fallback_pattern_records(lines: list[dict]) -> tuple[list[dict], dict]:
     """Tier 3 (camelot analogue, orchestrator.py:1190-1330): token-
     pattern row parse for single-space tables no splitter can segment.
     Engages only after a header line containing 'date' plus a table
@@ -511,7 +443,7 @@ def _fallback_pattern_records(lines: list[dict], today: date) -> tuple[list[dict
         if not header_found:
             if "date" in row_lower and any(kw in row_lower for kw in _PATTERN_HEADER_KW):
                 header_found = True
-                header_line = ln.get("line_index", 0)
+                header_line = ln["line_index"]
             continue
         if any(kw in row_lower for kw in _BF_CF_KW):
             continue
@@ -523,7 +455,7 @@ def _fallback_pattern_records(lines: list[dict], today: date) -> tuple[list[dict
             i -= 1
         if not tail:
             continue
-        turn = int(ln.get("turn_idx", 0))
+        turn = ln["turn_idx"]
         evidence: list[dict] = []
 
         # leading date: grow the candidate one token at a time and keep
@@ -535,24 +467,19 @@ def _fallback_pattern_records(lines: list[dict], today: date) -> tuple[list[dict
         date_val = None
         date_end = 0
         for j in range(1, min(3, i + 1) + 1):
-            parsed = parse_date(" ".join(t["text"] for t in toks[:j]),
-                                today=today).parsed_date
+            parsed = parse_date(" ".join(t["text"] for t in toks[:j])).parsed_date
             if parsed is not None and parsed != date_val:
                 date_val = parsed
                 date_end = j
             elif date_val is not None:
                 break
         if date_val is not None:
-            evidence.append({"field": "date", "turn_idx": turn,
-                             "start": int(toks[0]["start"]),
-                             "end": int(toks[date_end - 1]["end"])})
+            add_evidence(evidence, "date", turn, toks[0], toks[date_end - 1])
 
         desc_toks = toks[date_end:i + 1]
         desc = " ".join(t["text"] for t in desc_toks)
         if desc_toks:
-            evidence.append({"field": "description", "turn_idx": turn,
-                             "start": int(desc_toks[0]["start"]),
-                             "end": int(desc_toks[-1]["end"])})
+            add_evidence(evidence, "description", turn, desc_toks[0], desc_toks[-1])
 
         tail = tail[::-1]  # left-to-right: [amount] or [amount, balance]
         amount_tok = tail[0]
@@ -561,23 +488,19 @@ def _fallback_pattern_records(lines: list[dict], today: date) -> tuple[list[dict
             continue
         amount = abs(ap.amount)
         direction = "DEBIT" if ap.amount < 0 else ("CREDIT" if ap.amount > 0 else "UNKNOWN")
-        evidence.append({"field": "amount", "turn_idx": turn,
-                         "start": int(amount_tok["start"]),
-                         "end": int(amount_tok["end"])})
+        add_evidence(evidence, "amount", turn, amount_tok)
         balance = None
         if len(tail) == 2:
             bp = parse_amount(tail[1]["text"])
             if bp.amount is not None:
                 balance = bp.amount
-                evidence.append({"field": "balance", "turn_idx": turn,
-                                 "start": int(tail[1]["start"]),
-                                 "end": int(tail[1]["end"])})
+                add_evidence(evidence, "balance", turn, tail[1])
 
         if is_summary_row(desc) or is_summary_row(ln["text"]):
             continue
         records.append(_fallback_record(
             len(records), ln, date_val, desc, amount, direction, balance,
-            evidence, "row_pattern", 0.75, 0.75, 0.85, 0.40))
+            evidence, "row_pattern", (0.75, 0.75, 0.85, 0.40)))
     return records, {"column_count": None,
                      "header_line": header_line,
                      "column_mapping": None}
@@ -603,7 +526,7 @@ def _solver_view(fields: dict) -> dict:
     }
 
 
-def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
+def analyse_segment(lines: list[dict]) -> dict:
     """Segment lines -> {records, opening_balance, closing_balance}.
 
     ``lines`` come from ``layout.segment_lines``: x is already
@@ -660,7 +583,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
     delim_flags = [_DELIM_RE.search(ln["text"]) is not None for ln in lines]
     n_delim = sum(delim_flags)
     if n_delim * 2 > len(lines):
-        records, info = _fallback_delim_records(all_lines, today)
+        records, info = _fallback_delim_records(all_lines)
         if records:
             return _tier_result("delim_grid", records, info)
 
@@ -671,9 +594,9 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
     # header gate keeps chatter-dominant segments falling through.
     n_single = sum(
         1 for ln, has_delim in zip(lines, delim_flags)
-        if not has_delim and not _has_internal_gap(ln))
+        if not has_delim and len(gap_groups(ln["tokens"])) == 1)
     if n_single * 2 > len(lines):
-        records, info = _fallback_pattern_records(all_lines, today)
+        records, info = _fallback_pattern_records(all_lines)
         if records:
             return _tier_result("row_pattern", records, info)
 
@@ -693,7 +616,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         for tier_fn, tier_name in ((_fallback_grid_records, "text_grid"),
                                    (_fallback_delim_records, "delim_grid"),
                                    (_fallback_pattern_records, "row_pattern")):
-            records, info = tier_fn(all_lines, today)
+            records, info = tier_fn(all_lines)
             if records:
                 if tier_name != "text_grid":
                     tier_name += "_rescue"
@@ -747,7 +670,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
 
     raw_transactions = []
     for row_idx, row in enumerate(transaction_rows):
-        fields = extract_fields_from_row(row, roles, today=today)
+        fields = extract_fields_from_row(row, roles)
         fields["row_index"] = row_idx
         fields["_row"] = row
         raw_transactions.append(fields)
@@ -799,10 +722,9 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
             continue
 
         row = tx.pop("_row")
-        first_line = lines[row["line_indices"][0]] if row["line_indices"] else {}
         records.append({
             "row_index": tx["row_index"],
-            "turn_idx": int(first_line.get("turn_idx", 0)),
+            "turn_idx": lines[row["line_indices"][0]]["turn_idx"],
             "line_indices": row["line_indices"],
             "posted_date": tx["parsed_date"],
             "description_raw": description,

@@ -8,6 +8,9 @@ header keyword map with specificity overrides and duplicate-DATE ->
 VALUE_DATE, statistical thresholds, leftmost/widest-UNKNOWN
 fallbacks, and UNKNOWN-between-DATE-and-amounts -> DESCRIPTION.
 
+Headers are matched after ``normalise_header``, which the segment
+kernel's grid-tier column map uses too.
+
 Roles are plain strings from the reference ColumnRole enum.
 """
 
@@ -46,6 +49,8 @@ HEADER_MAP: list[tuple[str, list[str]]] = [
 
 _TEXTY_RE = re.compile(r"^[a-zA-Z\s\-\.]+$")
 _CURRENCY_STRIP_RE = re.compile(r"[£$€,\s]")
+_HEADER_CCY_PREFIX_RE = re.compile(r"\([a-z]{3}\)\s*")
+_HEADER_CCY_SYMBOL_RE = re.compile(r"[£$€]\s*")
 
 
 _EMPTY_STATS = {"date_rate": 0.0, "amount_rate": 0.0, "empty_rate": 0.0,
@@ -186,13 +191,18 @@ def _balance_chain_evidence(sample_rows: list[dict], candidate: int,
     return sum(b_mag) / len(b_mag) >= 2.0 * (sum(a_mag) / len(a_mag))
 
 
+def normalise_header(header_text: str) -> str:
+    """Header cell text as both header mappers match it (this module's
+    and the grid tier's, orchestrator.py:1336-1377): lower-cased,
+    without a ``(xxx)`` currency-code prefix or currency symbols; ''
+    when nothing else is left."""
+    h = _HEADER_CCY_PREFIX_RE.sub("", header_text.lower().strip()).strip()
+    return _HEADER_CCY_SYMBOL_RE.sub("", h).strip()
+
+
 def match_header(header_text: str) -> Optional[str]:
     """Single header cell -> role, with specificity overrides."""
-    h = header_text.lower().strip()
-    if not h:
-        return None
-    h = re.sub(r"\([a-z]{3}\)\s*", "", h).strip()
-    h = re.sub(r"[£$€]\s*", "", h).strip()
+    h = normalise_header(header_text)
     if not h:
         return None
     if "value" in h and "date" in h:

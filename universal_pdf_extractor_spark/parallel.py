@@ -45,11 +45,12 @@ def spread(df: DataFrame) -> DataFrame:
     count asks for, so Spark would drop that barrier's exchange as
     redundant and every branch reading it would recompute the subtree.
 
-    Batch frames only: the partition count comes from
-    ``df.rdd.getNumPartitions()``, which plans the frame physically and
-    raises on a streaming frame."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    A streaming frame is returned unchanged: the partition count comes
+    from ``df.rdd.getNumPartitions()``, which plans the frame physically
+    and raises on a streaming frame."""
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     # explicit partition COUNT (REPARTITION_BY_NUM): AQE's

@@ -106,6 +106,9 @@ COMBINED_STAGE_SCHEMA = StructType(
     + _DIAG_FIELDS + _SEGMENT_FIELDS)
 
 _COMBINED_COLUMNS = [f.name for f in COMBINED_STAGE_SCHEMA.fields]
+# each output row starts from it: pandas fills a missing key with float
+# NaN, which Arrow cannot place in Decimal / struct-typed columns
+_BLANK_ROW = dict.fromkeys(_COMBINED_COLUMNS)
 RECORD_COLUMNS = [f.name for f in RECORDS_STAGE_SCHEMA.fields]
 DIAG_COLUMNS = ["conv_id", "segment_index"] + [f.name for f in _DIAG_FIELDS]
 
@@ -157,25 +160,13 @@ def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
         closing = result["closing_balance"]
         closing_distinct = result["closing_balance_distinct"]
         for rec in result["records"]:
-            # one dict literal covering every combined column, explicit
-            # None for the diag-only ones: pandas fills missing keys
-            # with float NaN, which Arrow cannot place in Decimal /
-            # struct-typed columns
+            # rec's keys name their columns; the ones outside the
+            # schema (line_indices) are not selected
             out_rows.append({
+                **_BLANK_ROW, **rec,
                 "row_type": "record",
                 "conv_id": conv_id,
                 "segment_index": seg_idx,
-                "row_index": rec["row_index"],
-                "turn_idx": rec["turn_idx"],
-                "posted_date": rec["posted_date"],
-                "description_raw": rec["description_raw"],
-                "description_clean": rec["description_clean"],
-                "amount": rec["amount"],
-                "direction": rec["direction"],
-                "direction_source": rec["direction_source"],
-                "running_balance": rec["running_balance"],
-                "balance_confirmed": rec["balance_confirmed"],
-                "balance_tolerance_used": rec["balance_tolerance_used"],
                 "confidence_amount": _conf(rec["confidence_amount"]),
                 "confidence_date": _conf(rec["confidence_date"]),
                 "confidence_direction": _conf(rec["confidence_direction"]),
@@ -185,22 +176,12 @@ def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
                 "segment_opening_balance": opening,
                 "segment_closing_balance": closing,
                 "segment_closing_distinct": closing_distinct,
-                "engine": None,
-                "table_type": None,
-                "row_count": None,
-                "column_count": None,
-                "bbox_json": None,
-                "header_json": None,
-                "column_mapping_json": None,
-                "start_turn": None,
-                "end_turn": None,
-                "n_records": None,
             })
         # the segment's document_segments row: its turn range covers
         # every slim row, EMPTY turns included; balances only when the
         # segment yielded records
         n_records = len(result["records"])
-        out_rows.append(dict(dict.fromkeys(_COMBINED_COLUMNS),
+        out_rows.append(dict(_BLANK_ROW,
                              **_diag_row(conv_id, seg_idx,
                                          result["diagnostics"]),
                              row_type="diag", evidence=[],
