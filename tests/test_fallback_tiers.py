@@ -238,6 +238,19 @@ class TestDiagnostics:
         assert d["column_count"] == 4
         assert d["column_mapping"]["date_col"] == 0
 
+    def test_delim_header_line_index_is_rank_among_table_lines(self):
+        """The table tiers' header.line_index is the header's rank
+        among the lines the tier splits into cells, not its line
+        index: a preceding prose line does not move it.  The
+        transcripts_detected_tables_routing oracle pins this value
+        (its header_row counts the segment's delimiter-bearing lines
+        before the header)."""
+        lines = _lines("Here is my statement\n" + PIPE_TABLE)
+        assert lines[1]["text"].startswith("Date |")
+        d = analyse_segment(lines)["diagnostics"]
+        assert d["engine"] == "delim_grid"
+        assert d["header"] == {"line_index": 0}
+
 
 @pytest.mark.usefixtures("spark")
 class TestDetectedTablesStage:

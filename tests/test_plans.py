@@ -239,50 +239,39 @@ def test_filter_pushdown_reaches_scan(transcripts):
     assert "EqualTo(turn_idx,0)" in plan or "turn_idx" in plan.split("PushedFilters")[1][:120]
 
 
-def test_raster_stages_single_exchange_and_pruned(spark, tmp_path_factory):
-    """The raster path is embarrassingly parallel: exactly ONE
-    exchange (the deliberate post-limit repartition that undoes the
-    GlobalLimit single-partition collapse), and the preprocess stage
-    reads only (doc_id, payload, conf_micros) from the page snapshot —
-    ground-truth parameter columns never reach Python."""
-    import pandas as pd
-
-    from universal_pdf_extractor_spark.datapipe.raster import (
-        preprocess_pages,
-        render_pages,
-    )
+# each renderer, the per-page stage that reads its pages, the snapshot
+# columns that stage reads, and ground-truth columns it must not read
+@pytest.mark.parametrize("render, stage, reads, truth", [
+    ("render_pages", "preprocess_pages", ["payload", "conf_micros"],
+     ["rot_deg", "skew_milli"]),
+    ("render_table_pages", "extract_tables", ["payload"], ["gt_mode", "gt_x0"]),
+    ("render_skewed_table_pages", "deskew_and_extract", ["payload"],
+     ["gt_skew_milli", "gt_mode"]),
+], ids=["render_pages", "render_table_pages", "render_skewed_table_pages"])
+def test_raster_stages_single_exchange_and_pruned(
+        spark, tmp_path_factory, render, stage, reads, truth):
+    """The raster path is embarrassingly parallel: every renderer plans
+    exactly ONE exchange (the barrier's hash(doc_id) repartition that
+    undoes the GlobalLimit single-partition collapse), and the per-page
+    stage downstream is shuffle-free and reads only the columns it
+    needs from the page snapshot — ground-truth columns never reach
+    Python."""
+    from universal_pdf_extractor_spark.datapipe import raster
 
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [f"d{i}" for i in range(8)]}))
-    pages = render_pages(docs)
-    assert _plan(pages).count("Exchange") == 1
+    pages = getattr(raster, render)(docs)
+    plan = _plan(pages)
+    assert plan.count("Exchange") == 1
+    assert "hashpartitioning(doc_id" in plan
 
     path = str(tmp_path_factory.mktemp("raster") / "pages")
     pages.write.mode("overwrite").parquet(path)
-    out = preprocess_pages(spark.read.parquet(path))
-    plan = _plan(out)
+    plan = _plan(getattr(raster, stage)(spark.read.parquet(path)))
     assert plan.count("Exchange") == 0          # shuffle-free
     scan = [l for l in plan.splitlines() if "FileScan" in l][0]
-    assert "payload" in scan and "conf_micros" in scan
-    assert "rot_deg" not in scan and "skew_milli" not in scan
-
-
-def test_table_extract_shuffle_free_and_pruned(spark, tmp_path_factory):
-    import pandas as pd
-
-    from universal_pdf_extractor_spark.datapipe.raster import (
-        extract_tables,
-        render_table_pages,
-    )
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [f"d{i}" for i in range(8)]}))
-    path = str(tmp_path_factory.mktemp("rtables") / "pages")
-    render_table_pages(docs).write.mode("overwrite").parquet(path)
-    plan = _plan(extract_tables(spark.read.parquet(path)))
-    assert plan.count("Exchange") == 0
-    scan = [l for l in plan.splitlines() if "FileScan" in l][0]
-    assert "payload" in scan and "gt_mode" not in scan
+    assert all(c in scan for c in reads)
+    assert not [c for c in truth if c in scan]
 
 
 def test_review_stats_single_partial_agg_exchange(spark):

@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..parallel import barrier, spread
+from ..parallel import barrier
+from . import spread_documents
 
 MERSENNE_PRIME = (1 << 31) - 1  # 31-bit field: a*h+b stays far below int64 under ANSI mode
 
@@ -47,6 +48,9 @@ def hash60(col):
 
 
 SIMHASH_BITS = 60  # hash60 provides 60 uniform bits (4 x 15-bit blocks)
+SHINGLE_WORDS = 3  # words per shingle
+NUM_HASHES = 64    # minhash permutations
+LSH_BANDS = 16     # minhash bands of NUM_HASHES // LSH_BANDS values each
 
 
 def normalize_text(col):
@@ -54,8 +58,8 @@ def normalize_text(col):
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def shingles_of_words(words, n: int = 3):
-    """Shingle expression over an already-split words array.
+def shingles_of_words(words):
+    """SHINGLE_WORDS-word shingle expression over an already-split words array.
 
     Callers materialize the words array in its OWN projection first:
     this expression references ``words`` three times (size probe,
@@ -64,6 +68,7 @@ def shingles_of_words(words, n: int = 3):
     cost (measured 0.42s -> 0.23s over 5k docs).  CollapseProject
     keeps the staging projection because the alias is referenced more
     than once."""
+    n = SHINGLE_WORDS
     idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
     return F.array_distinct(
         F.when(F.size(words) >= n,
@@ -72,32 +77,21 @@ def shingles_of_words(words, n: int = 3):
     )
 
 
-def _spread_docs(documents: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, text) behind ``spread``: the per-document work chained
-    onto it parallelizes even when the input is one small file."""
-    return spread(documents.select(F.col(id_col).alias("doc_id"),
-                                   F.col(text_col).alias("text")))
-
-
-def _shingled(documents: DataFrame, n: int, id_col: str,
-              text_col: str) -> DataFrame:
-    """(doc_id, shingles): the distinct word n-shingles of each
+def _shingled(documents: DataFrame) -> DataFrame:
+    """(doc_id, shingles): the distinct word shingles of each
     document, with the words staged in their own projection (see
     shingles_of_words)."""
-    return _spread_docs(documents, id_col, text_col).select(
+    return spread_documents(documents).select(
         F.col("doc_id"),
         F.split(normalize_text(F.col("text")), " ").alias("_words"),
     ).select(
         F.col("doc_id"),
-        shingles_of_words(F.col("_words"), n).alias("shingles"),
+        shingles_of_words(F.col("_words")).alias("shingles"),
     )
 
 
 def ngram_jaccard_pairs(documents: DataFrame,
-                        threshold: float = 0.8,
-                        n: int = 3,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+                        threshold: float = 0.8) -> DataFrame:
     """Near-dup pairs (a, b, jaccard) with a < b and jaccard >= threshold.
 
     Prefix-filtered set-similarity join (the PPJoin family's lossless
@@ -129,7 +123,7 @@ def ngram_jaccard_pairs(documents: DataFrame,
     # n_shingles is derived above the barrier: the df counts do not
     # read it, and column pruning would otherwise cut it from that
     # branch only, leaving its subtree unequal to the others
-    docs = barrier(_shingled(documents, n, id_col, text_col)
+    docs = barrier(_shingled(documents)
                    .where(F.col("doc_id").isNotNull()), "doc_id") \
         .withColumn("n_shingles", F.size("shingles"))
 
@@ -212,13 +206,14 @@ def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     label; each round takes the min over neighbours; the fixpoint
     assigns every member its component's minimum doc_id — a
     deterministic canonical choice independent of iteration order.
-    Rounds are whole distributed join+agg passes (O(diameter) of the
-    largest component); `max_iterations` is a safety valve only —
-    raises RuntimeError instead of returning non-converged (wrong)
-    labels if a component's diameter exceeds it.  At cluster scale
-    swap in the large-star/small-star variant with checkpointing
-    every few rounds — the per-round plan here is already that shape
-    (join on label keys, never text).
+    Rounds are whole distributed join+agg passes (joins on label keys,
+    never text), and a label moves one edge per round: an n-node path
+    needs n rounds, counting the round that finds no change, so the
+    default ``max_iterations=20`` already raises on a 21-node path.
+    The cap is a real limit, not a safety valve: hitting it raises
+    RuntimeError instead of returning non-converged (wrong) labels.
+    ROADMAP direction 3 replaces this loop with large-star/small-star,
+    which needs O(log n) rounds.
     """
     edges = (pairs.select("a", "b")
              .union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -262,29 +257,25 @@ def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
                     (F.col("doc_id") == F.col("label")).alias("is_keeper")))
 
 
-def minhash_signatures(documents: DataFrame,
-                       num_hashes: int = 64,
-                       n: int = 3,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """(doc_id, signature[num_hashes]) via affine permutations of
+def minhash_signatures(documents: DataFrame) -> DataFrame:
+    """(doc_id, signature[NUM_HASHES]) via affine permutations of
     hash60(shingle): signature[i] is the min over the document's
     shingles of pmod(h*a_i + b_i, p), with h = pmod(hash60(shingle), p),
     a_i = 2i+1, b_i = pmod(i*0x9E3779B9 + 0x85EBCA6B, p) and p the
-    Mersenne prime 2^31-1.  A null text gives num_hashes nulls.
+    Mersenne prime 2^31-1.  A null text gives NUM_HASHES nulls.
 
-    ``id_col`` must be unique: rows are grouped by it, so documents
+    ``doc_id`` must be unique: rows are grouped by it, so documents
     that share an id get one signature over their pooled shingles."""
     p = F.lit(MERSENNE_PRIME)
     # hash60 once per shingle, in its own projection BELOW the
     # permutation Generate: in the generator's select Spark evaluates
     # it above the Generate, once per permutation
-    hashed = _shingled(documents, n, id_col, text_col).select(
+    hashed = _shingled(documents).select(
         "doc_id", F.explode_outer("shingles").alias("shingle"),
     ).select("doc_id", F.pmod(hash60(F.col("shingle")), p).alias("h"))
     # one row per (shingle, permutation i) and one MIN per (doc_id, i),
     # partially aggregated before the exchange, so the generated code
-    # is the same for any num_hashes: one literal MIN aggregate per
+    # is the same for any NUM_HASHES: one literal MIN aggregate per
     # permutation, each inlining hash60, grows the aggregate's methods
     # past HotSpot's 8,000-byte HugeMethodLimit, and such methods run
     # interpreted.  MIN ignores nulls, so a null text's lone
@@ -293,7 +284,7 @@ def minhash_signatures(documents: DataFrame,
     perm = F.pmod(F.col("h") * (2 * i + 1)
                   + F.pmod(i * F.lit(0x9E3779B9) + F.lit(0x85EBCA6B), p), p)
     mins = (hashed.select("doc_id", "h",
-                          F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1)))
+                          F.explode(F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)))
                           .alias("i"))
             .groupBy("doc_id", "i").agg(F.min(perm).alias("m")))
     return mins.groupBy("doc_id").agg(
@@ -302,20 +293,15 @@ def minhash_signatures(documents: DataFrame,
 
 
 def minhash_lsh_pairs(documents: DataFrame,
-                      num_hashes: int = 64,
-                      bands: int = 16,
-                      n: int = 3,
-                      threshold: float = 0.7,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+                      threshold: float = 0.7) -> DataFrame:
     """Candidate pairs via banded LSH, verified by signature similarity.
 
-    bands * rows_per_band == num_hashes; a pair is a candidate if any
-    band matches; est_jaccard = matching minhashes / num_hashes.
-    ``id_col`` must be unique (see minhash_signatures).
+    LSH_BANDS * rows_per_band == NUM_HASHES; a pair is a candidate if
+    any band matches; est_jaccard = matching minhashes / NUM_HASHES.
+    ``doc_id`` must be unique (see minhash_signatures).
     """
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(documents, num_hashes, n, id_col, text_col)
+    rows_per_band = NUM_HASHES // LSH_BANDS
+    sigs = minhash_signatures(documents)
     # materialization barrier: the exchange pins the signature
     # projection BELOW it, so (a) downstream band-key extracts read the
     # computed array instead of inlining the md5 pipeline per extract
@@ -332,7 +318,7 @@ def minhash_lsh_pairs(documents: DataFrame,
     # keys instead of per-row string building.  A null signature
     # value nulls its key, so such docs never join.  One row per
     # (doc, band), the signature indexed by the band column: the code
-    # does not grow with ``bands``.
+    # does not grow with LSH_BANDS.
     band = F.col("band")
     n_keys = (rows_per_band + 1) // 2
     key_names = [f"k{j}" for j in range(n_keys)]
@@ -345,7 +331,7 @@ def minhash_lsh_pairs(documents: DataFrame,
             for j in range(0, rows_per_band, 2)]
     banded = sigs.select(
         "doc_id", "signature",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        F.explode(F.sequence(F.lit(0), F.lit(LSH_BANDS - 1))).alias("band"),
     ).select("doc_id", "signature", "band", *keys)
 
     left = banded.alias("l")
@@ -359,14 +345,12 @@ def minhash_lsh_pairs(documents: DataFrame,
     )
     est = F.size(F.filter(F.zip_with("sa", "sb", lambda x, y: x == y), lambda m: m))
     return (candidates
-            .withColumn("est_jaccard", est / F.lit(num_hashes))
+            .withColumn("est_jaccard", est / F.lit(NUM_HASHES))
             .where(F.col("est_jaccard") >= threshold)
             .select("a", "b", F.round("est_jaccard", 6).alias("est_jaccard")))
 
 
-def simhash_fingerprints(documents: DataFrame,
-                         id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     """60-bit SimHash over word tokens (unit weights).
 
     bit_j(fingerprint) = 1 iff more than half of the document's tokens
@@ -375,11 +359,11 @@ def simhash_fingerprints(documents: DataFrame,
     are unchanged.  n_tokens is the token count, -1 for a null text
     (whose fingerprint is 0).
 
-    ``id_col`` must be unique: rows are grouped by it, so documents
+    ``doc_id`` must be unique: rows are grouped by it, so documents
     that share an id get one fingerprint over their pooled tokens.
     """
     words = F.split(normalize_text(F.col("text")), " ")
-    hashed = _spread_docs(documents, id_col, text_col).select(
+    hashed = spread_documents(documents).select(
         F.col("doc_id"),
         F.explode_outer(F.transform(words, lambda w: hash60(w))).alias("h"),
     )
@@ -413,18 +397,15 @@ def simhash_fingerprints(documents: DataFrame,
 
 
 def simhash_near_dups(documents: DataFrame,
-                      max_hamming: int = 3,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+                      max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash: block on 4 x 15-bit sub-fingerprints
     (pigeonhole: hamming<=3 pairs share at least one exact block),
-    verify hamming distance exactly.  ``id_col`` must be unique (see
+    verify hamming distance exactly.  ``doc_id`` must be unique (see
     simhash_fingerprints)."""
     # barrier after the fingerprint fold: the self-join's two sides and
     # the 4-way block explode all reuse ONE fingerprint computation via
     # ReusedExchange instead of re-deriving the per-bit counts
-    fps = barrier(simhash_fingerprints(documents, id_col, text_col),
-                  "doc_id")
+    fps = barrier(simhash_fingerprints(documents), "doc_id")
     blocked = fps.select(
         "doc_id", "simhash",
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("block"),

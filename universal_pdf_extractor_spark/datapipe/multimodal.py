@@ -64,6 +64,7 @@ FEATURE_SCHEMA = StructType([
 IMG_W, IMG_H = 16, 8
 AUDIO_N = 256
 WAV_RATE = 8000
+N_FRAMES = 8      # frames sampled per signal by extract_features
 
 
 # ── BMP (24-bit uncompressed) ────────────────────────────────────────
@@ -119,10 +120,11 @@ def decode_bmp(payload: bytes) -> Optional[np.ndarray]:
 
 # ── WAV (PCM16 mono) ─────────────────────────────────────────────────
 
-def encode_wav(samples: np.ndarray, rate: int = WAV_RATE) -> bytes:
-    """int16 samples -> RIFF/WAVE PCM16 mono bytes."""
+def encode_wav(samples: np.ndarray) -> bytes:
+    """int16 samples -> RIFF/WAVE PCM16 mono bytes at WAV_RATE."""
     data = samples.astype("<i2").tobytes()
-    fmt = struct.pack("<4sIHHIIHH", b"fmt ", 16, 1, 1, rate, rate * 2, 2, 16)
+    fmt = struct.pack("<4sIHHIIHH", b"fmt ", 16, 1, 1, WAV_RATE, WAV_RATE * 2,
+                      2, 16)
     body = fmt + struct.pack("<4sI", b"data", len(data)) + data
     return struct.pack("<4sI4s", b"RIFF", 4 + len(body), b"WAVE") + body
 
@@ -188,8 +190,9 @@ def sample_frames(signal: np.ndarray, n_frames: int = 8) -> np.ndarray:
     return signal[idx]
 
 
-def extract_features(media: DataFrame, n_frames: int = 8) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
+def extract_features(media: DataFrame) -> DataFrame:
+    """mapInPandas feature extraction over binary payloads (N_FRAMES
+    sampled frames per signal).
 
     Arrow ships each batch of binaries to Python once; decode is
     vectorized numpy per item (header parse + one reshape — no Python
@@ -214,7 +217,7 @@ def extract_features(media: DataFrame, n_frames: int = 8) -> DataFrame:
                     height[i], width[i] = shape
                 n_samples[i] = len(sig)
                 signal_sum[i] = int(sig.sum())
-                fr = sample_frames(sig, n_frames)
+                fr = sample_frames(sig, N_FRAMES)
                 frames_sampled[i] = len(fr)
                 frame_sum[i] = int(fr.sum())
 
@@ -248,15 +251,15 @@ PIX_A, PIX_Y, PIX_X, PIX_C = 9973, 131, 7, 31
 AUD_A, AUD_I = 7919, 104729
 
 
-def media_pixels(media_id: int, w: int = IMG_W, h: int = IMG_H) -> np.ndarray:
-    y, x, c = np.meshgrid(np.arange(h), np.arange(w), np.arange(3),
+def media_pixels(media_id: int) -> np.ndarray:
+    y, x, c = np.meshgrid(np.arange(IMG_H), np.arange(IMG_W), np.arange(3),
                           indexing="ij")
     return ((media_id * PIX_A + y * PIX_Y + x * PIX_X + c * PIX_C) % 256) \
         .astype(np.uint8)
 
 
-def media_samples(media_id: int, n: int = AUDIO_N) -> np.ndarray:
-    i = np.arange(n, dtype=np.int64)
+def media_samples(media_id: int) -> np.ndarray:
+    i = np.arange(AUDIO_N, dtype=np.int64)
     return (((media_id * AUD_A + i * AUD_I) % 65536) - 32768).astype(np.int16)
 
 

@@ -53,7 +53,7 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator, Optional, Tuple
+from typing import Callable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -68,6 +68,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..parallel import barrier
 from .multimodal import decode_bmp, encode_bmp
 
 # ── page geometry / parameter grids (shared with the SQL oracle) ────
@@ -79,6 +80,8 @@ SKEW_MAX_MILLI = 15000             # ±15° search range (renderer.py:141)
 CONF_BASES = (900000, 780000, 600000, 400000)   # micros: none/B/C/D buckets
 # affine parameter mixers (same spirit as multimodal.PIX_A family)
 RR_A, RS_A, RC_A, RW_A, RH_A, RL_A = 2654435761, 40503, 69621, 362437, 104729, 7919
+RENDER_LIMIT = 1024                # documents rendered per call
+CLAHE_TILES = 8                    # tiles per axis
 
 PAGES_SCHEMA = StructType([
     StructField("doc_id", StringType(), False),
@@ -175,10 +178,11 @@ def _col_shifts(w: int, milli: int) -> np.ndarray:
     return np.rint(t * xs).astype(np.int64)
 
 
-def shear(img: np.ndarray, milli: int, fill: int = 255) -> np.ndarray:
-    """Apply the integer-column shear (the synthesis direction)."""
+def shear(img: np.ndarray, milli: int) -> np.ndarray:
+    """Apply the integer-column shear (the synthesis direction); pixels
+    shifted in are white."""
     h, w = img.shape
-    out = np.full_like(img, fill)
+    out = np.full_like(img, 255)
     shifts = _col_shifts(w, milli)
     for s in np.unique(shifts):
         cols = shifts == s
@@ -189,10 +193,15 @@ def shear(img: np.ndarray, milli: int, fill: int = 255) -> np.ndarray:
     return out
 
 
-def unshear(img: np.ndarray, milli: int, fill: int = 255) -> np.ndarray:
+def unshear(img: np.ndarray, milli: int) -> np.ndarray:
     """Inverse of shear (the correction direction): exact on any ink
     that stayed in-frame, which the synth margins guarantee."""
-    return shear(img, -milli, fill)
+    return shear(img, -milli)
+
+
+def _gray_bmp(img: np.ndarray) -> bytes:
+    """A grayscale page as 24-bit BMP bytes (r == g == b)."""
+    return encode_bmp(np.ascontiguousarray(np.repeat(img[:, :, None], 3, axis=2)))
 
 
 def render_page(seed: int) -> Tuple[bytes, dict]:
@@ -202,41 +211,48 @@ def render_page(seed: int) -> Tuple[bytes, dict]:
     img = synth_upright(seed, p["base_w"], p["base_h"])
     img = shear(img, p["skew_milli"])
     img = np.rot90(img, p["rot_deg"] // 90)
-    rgb = np.repeat(img[:, :, None], 3, axis=2)
     p["height"], p["width"] = img.shape
-    return encode_bmp(np.ascontiguousarray(rgb)), p
+    return _gray_bmp(img), p
 
 
-def render_pages(docs: DataFrame, limit: int = 1024,
-                 id_col: str = "doc_id") -> DataFrame:
-    """S2 analogue (renderer.py:37-73): documents → one rendered page
-    row each (page bitmaps as a binary column + geometry metadata).
+def _render(docs: DataFrame, limit: int, schema: StructType,
+            page_row: Callable[[str, int], tuple]) -> DataFrame:
+    """The renderers' one driver: the first ``limit`` documents by
+    doc_id, one ``schema`` row each from ``page_row(doc_id, seed)``.
 
     Deterministic: the seed is a stable function of the doc_id bytes,
     so re-rendering after a resume produces identical payloads.
 
     ``limit`` collapses the plan to ONE partition (GlobalLimit), which
-    would serialize the expensive render/preprocess UDFs — repartition
-    the (tiny, keys-only) limited frame back out so the raster work
-    runs at full parallelism."""
-    sc = docs.sparkSession.sparkContext
-    slim = (docs.select(id_col).orderBy(id_col).limit(limit)
-            .repartition(sc.defaultParallelism, id_col))
+    would serialize the expensive render/preprocess UDFs — the
+    ``barrier`` spreads the (tiny, keys-only) limited frame back out
+    so the raster work runs at full parallelism."""
+    slim = barrier(docs.select("doc_id").orderBy("doc_id").limit(limit), "doc_id")
+    columns = schema.fieldNames()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id in pdf[id_col].tolist():
+            for doc_id in pdf["doc_id"].tolist():
                 seed = int.from_bytes(
                     hashlib.md5(str(doc_id).encode()).digest()[:6], "big")
-                payload, p = render_page(seed)
-                rows.append((str(doc_id), 0, payload, p["width"], p["height"],
-                             PAGE_DPI, p["rot_deg"], p["skew_milli"],
-                             p["conf_micros"], p["base_w"], p["base_h"]))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in PAGES_SCHEMA.fields])
+                rows.append(page_row(str(doc_id), seed))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return slim.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return slim.mapInPandas(gen, schema=schema)
+
+
+def _page_row(doc_id: str, seed: int) -> tuple:
+    payload, p = render_page(seed)
+    return (doc_id, 0, payload, p["width"], p["height"], PAGE_DPI,
+            p["rot_deg"], p["skew_milli"], p["conf_micros"],
+            p["base_w"], p["base_h"])
+
+
+def render_pages(docs: DataFrame, limit: int = RENDER_LIMIT) -> DataFrame:
+    """S2 analogue (renderer.py:37-73): documents → one rendered page
+    row each (page bitmaps as a binary column + geometry metadata)."""
+    return _render(docs, limit, PAGES_SCHEMA, _page_row)
 
 
 # ── R1: orientation (renderer.py:78-100) ────────────────────────────
@@ -324,12 +340,22 @@ def fix_skew(img: np.ndarray, milli: int) -> np.ndarray:
     return unshear(img, milli)
 
 
+def _deskew(gray: np.ndarray) -> Tuple[np.ndarray, int, bool]:
+    """(page, detected skew, applied): the skew is corrected only when
+    0.5 < |angle| < 15 (renderer.py:141)."""
+    milli = detect_skew_milli(gray)
+    applied = 500 < abs(milli) < 15000
+    return (fix_skew(gray, milli) if applied else gray), milli, applied
+
+
 # ── R3 kernels (renderer.py:166-216, cv2 primitives in numpy) ──────
 
-def clahe(gray: np.ndarray, clip_limit: float, tiles: int = 8) -> np.ndarray:
-    """Contrast-limited adaptive histogram equalisation with bilinear
-    interpolation between the tile mappings (the standard CLAHE
-    algorithm; cv2.createCLAHE analogue)."""
+def clahe(gray: np.ndarray, clip_limit: float) -> np.ndarray:
+    """Contrast-limited adaptive histogram equalisation over
+    CLAHE_TILES x CLAHE_TILES tiles with bilinear interpolation between
+    the tile mappings (the standard CLAHE algorithm; cv2.createCLAHE
+    analogue)."""
+    tiles = CLAHE_TILES
     h, w = gray.shape
     ty = np.linspace(0, h, tiles + 1).astype(int)
     tx = np.linspace(0, w, tiles + 1).astype(int)
@@ -511,10 +537,7 @@ def preprocess_page_array(gray: np.ndarray, mean_confidence: float) -> dict:
     rotation_applied = bool(rot_deg != 0 and conf > 0.5)    # renderer.py:90
     if rotation_applied:
         gray = fix_orientation(gray, rot_deg)
-    milli = detect_skew_milli(gray)
-    skew_applied = 500 < abs(milli) < 15000                 # renderer.py:141
-    if skew_applied:
-        gray = fix_skew(gray, milli)
+    gray, milli, skew_applied = _deskew(gray)
     if mean_confidence < 0.85:
         gray, profile = apply_enhancement(gray, mean_confidence)
     else:
@@ -561,6 +584,31 @@ TABLE_SCHEMA = StructType([
     StructField("bbox_y1", IntegerType(), True),
     StructField("n_cells_filled", IntegerType(), True),
 ])
+
+# rendered table pages: payload + the draw plan's ground truth (oracle only)
+_TABLE_TRUTH_FIELDS = [
+    StructField("gt_mode", StringType(), False),
+    StructField("gt_rows", IntegerType(), False),
+    StructField("gt_cols", IntegerType(), False),
+    StructField("gt_filled", IntegerType(), False),
+    StructField("gt_x0", IntegerType(), False),
+    StructField("gt_y0", IntegerType(), False),
+    StructField("gt_x1", IntegerType(), False),
+    StructField("gt_y1", IntegerType(), False),
+]
+TABLE_PAGES_SCHEMA = StructType(
+    [StructField("doc_id", StringType(), False),
+     StructField("payload", BinaryType(), False)] + _TABLE_TRUTH_FIELDS)
+SKEWED_TABLE_PAGES_SCHEMA = StructType(
+    TABLE_PAGES_SCHEMA.fields[:2]
+    + [StructField("gt_skew_milli", LongType(), False),
+       StructField("gt_skew_applied", BooleanType(), False)]
+    + _TABLE_TRUTH_FIELDS)
+DESKEW_TABLE_SCHEMA = StructType(
+    [StructField("doc_id", StringType(), False),
+     StructField("skew_milli", LongType(), True),
+     StructField("skew_applied", BooleanType(), True)]
+    + TABLE_SCHEMA.fields[1:])
 
 
 def table_params(seed: int) -> dict:
@@ -721,8 +769,29 @@ SKEWED_TBL_MAX_MILLI = 5000      # ±5°: max shift tan(5°)·w/2 = 12.6 px
                                  # < the table's h//8 >= 20 px margin
 
 
-def render_skewed_table_pages(docs: DataFrame, limit: int = 1024,
-                              id_col: str = "doc_id") -> DataFrame:
+def _table_truth(p: dict) -> tuple:
+    """synth_table_page's ground truth in _TABLE_TRUTH_FIELDS order."""
+    return (p["mode"], p["n_rows"], p["n_cols"], p["n_cells_filled"], *p["bbox"])
+
+
+def _table_page_row(doc_id: str, seed: int) -> tuple:
+    img, p = synth_table_page(seed)
+    return (doc_id, _gray_bmp(img)) + _table_truth(p)
+
+
+def _skewed_table_page_row(doc_id: str, seed: int) -> tuple:
+    img, p = synth_table_page(seed)
+    steps = SKEWED_TBL_MAX_MILLI // SKEW_STEP_MILLI
+    milli = ((seed * RS_A) % (2 * steps + 1) - steps) * SKEW_STEP_MILLI
+    if milli != 0:
+        milli = canonical_skew_milli(img, milli)
+    if abs(milli) <= 500:
+        milli = 0
+    sheared = shear(img, milli) if milli else img
+    return (doc_id, _gray_bmp(sheared), milli, milli != 0) + _table_truth(p)
+
+
+def render_skewed_table_pages(docs: DataFrame) -> DataFrame:
     """Composed-pipeline input (R2 ∘ S7): table pages sheared by a
     seeded skew in ±5° (0.25° grid).  Ground truth is canonicalised
     against the page's ink support (`canonical_skew_milli`); skews at
@@ -730,150 +799,68 @@ def render_skewed_table_pages(docs: DataFrame, limit: int = 1024,
     are synthesised as 0 — an uncorrected sub-gate shear would break
     the ruling-line spans, which mirrors the reference leaving such
     pages untouched."""
-    sc = docs.sparkSession.sparkContext
-    slim = (docs.select(id_col).orderBy(id_col).limit(limit)
-            .repartition(sc.defaultParallelism, id_col))
+    return _render(docs, RENDER_LIMIT, SKEWED_TABLE_PAGES_SCHEMA,
+                   _skewed_table_page_row)
 
-    schema = StructType([
-        StructField("doc_id", StringType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("gt_skew_milli", LongType(), False),
-        StructField("gt_skew_applied", BooleanType(), False),
-        StructField("gt_mode", StringType(), False),
-        StructField("gt_rows", IntegerType(), False),
-        StructField("gt_cols", IntegerType(), False),
-        StructField("gt_filled", IntegerType(), False),
-        StructField("gt_x0", IntegerType(), False),
-        StructField("gt_y0", IntegerType(), False),
-        StructField("gt_x1", IntegerType(), False),
-        StructField("gt_y1", IntegerType(), False),
-    ])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def render_table_pages(docs: DataFrame) -> DataFrame:
+    """Documents → one synthetic table page each (binary BMP payload +
+    ground-truth geometry for the oracle), full parallelism."""
+    return _render(docs, RENDER_LIMIT, TABLE_PAGES_SCHEMA, _table_page_row)
+
+
+def _per_page(pages: DataFrame, schema: StructType,
+              page_fields: Callable[..., tuple], *inputs: str) -> DataFrame:
+    """The per-page stages' one driver: a shuffle-free mapInPandas that
+    reads only (doc_id, payload, *inputs), decodes each BMP payload and
+    emits doc_id followed by ``page_fields(gray, *input values)``; a
+    null or undecodable payload gives nulls.  Pages are gray by
+    construction (r == g == b), so the red channel is the page."""
+    slim = pages.select("doc_id", "payload", *inputs)
+    columns = schema.fieldNames()
+    nulls = (None,) * (len(columns) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id in pdf[id_col].tolist():
-                seed = int.from_bytes(
-                    hashlib.md5(str(doc_id).encode()).digest()[:6], "big")
-                img, p = synth_table_page(seed)
-                steps = SKEWED_TBL_MAX_MILLI // SKEW_STEP_MILLI
-                milli = ((seed * RS_A) % (2 * steps + 1) - steps) \
-                    * SKEW_STEP_MILLI
-                if milli != 0:
-                    milli = canonical_skew_milli(img, milli)
-                if abs(milli) <= 500:
-                    milli = 0
-                sheared = shear(img, milli) if milli else img
-                rgb = np.repeat(sheared[:, :, None], 3, axis=2)
-                bx0, by0, bx1, by1 = p["bbox"]
-                rows.append((str(doc_id),
-                             encode_bmp(np.ascontiguousarray(rgb)),
-                             milli, milli != 0,
-                             p["mode"], p["n_rows"], p["n_cols"],
-                             p["n_cells_filled"], bx0, by0, bx1, by1))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            for doc_id, payload, *values in zip(
+                    pdf["doc_id"], pdf["payload"], *(pdf[c] for c in inputs)):
+                px = decode_bmp(bytes(payload)) if payload is not None else None
+                rows.append((doc_id,) + (nulls if px is None
+                                         else page_fields(px[:, :, 0], *values)))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return slim.mapInPandas(gen, schema=schema)
+    return slim.mapInPandas(run, schema=schema)
 
 
-DESKEW_TABLE_SCHEMA = StructType(
-    [StructField("doc_id", StringType(), False),
-     StructField("skew_milli", LongType(), True),
-     StructField("skew_applied", BooleanType(), True)]
-    + TABLE_SCHEMA.fields[1:])
+def _table_fields(gray: np.ndarray) -> tuple:
+    """detect_table's result in TABLE_SCHEMA order."""
+    m = detect_table(gray)
+    return (m["mode"], m["n_rows"], m["n_cols"], *m["bbox"], m["n_cells_filled"])
+
+
+def _deskewed_table_fields(gray: np.ndarray) -> tuple:
+    gray, milli, applied = _deskew(gray)
+    return (milli, applied) + _table_fields(gray)
+
+
+def _preprocess_fields(gray: np.ndarray, conf_micros) -> tuple:
+    m = preprocess_page_array(gray, int(conf_micros) / 1e6)
+    return tuple(m[name] for name in PREPROC_SCHEMA.fieldNames()[1:])
 
 
 def deskew_and_extract(pages: DataFrame) -> DataFrame:
     """R2 ∘ S7 as ONE shuffle-free mapInPandas stage: detect the
     shear, correct it under the reference gate, then run the table
     tiers on the corrected pixels.  Reads only (doc_id, payload)."""
-    slim = pages.select("doc_id", "payload")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_bmp(bytes(payload)) if payload is not None else None
-                if px is None:
-                    rows.append((doc_id,) + (None,) * 10)
-                    continue
-                gray = px[:, :, 0]
-                milli = detect_skew_milli(gray)
-                applied = 500 < abs(milli) < 15000     # renderer.py:141
-                if applied:
-                    gray = fix_skew(gray, milli)
-                m = detect_table(gray)
-                bx0, by0, bx1, by1 = m["bbox"]
-                rows.append((doc_id, milli, applied, m["mode"],
-                             m["n_rows"], m["n_cols"],
-                             bx0, by0, bx1, by1, m["n_cells_filled"]))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DESKEW_TABLE_SCHEMA.fields])
-
-    return slim.mapInPandas(run, schema=DESKEW_TABLE_SCHEMA)
-
-
-def render_table_pages(docs: DataFrame, limit: int = 1024,
-                       id_col: str = "doc_id") -> DataFrame:
-    """Documents → one synthetic table page each (binary BMP payload +
-    ground-truth geometry for the oracle), full parallelism."""
-    sc = docs.sparkSession.sparkContext
-    slim = (docs.select(id_col).orderBy(id_col).limit(limit)
-            .repartition(sc.defaultParallelism, id_col))
-
-    schema = StructType([
-        StructField("doc_id", StringType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("gt_mode", StringType(), False),
-        StructField("gt_rows", IntegerType(), False),
-        StructField("gt_cols", IntegerType(), False),
-        StructField("gt_filled", IntegerType(), False),
-        StructField("gt_x0", IntegerType(), False),
-        StructField("gt_y0", IntegerType(), False),
-        StructField("gt_x1", IntegerType(), False),
-        StructField("gt_y1", IntegerType(), False),
-    ])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col].tolist():
-                seed = int.from_bytes(
-                    hashlib.md5(str(doc_id).encode()).digest()[:6], "big")
-                img, p = synth_table_page(seed)
-                rgb = np.repeat(img[:, :, None], 3, axis=2)
-                bx0, by0, bx1, by1 = p["bbox"]
-                rows.append((str(doc_id), encode_bmp(np.ascontiguousarray(rgb)),
-                             p["mode"], p["n_rows"], p["n_cols"],
-                             p["n_cells_filled"], bx0, by0, bx1, by1))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return slim.mapInPandas(gen, schema=schema)
+    return _per_page(pages, DESKEW_TABLE_SCHEMA, _deskewed_table_fields)
 
 
 def extract_tables(pages: DataFrame) -> DataFrame:
     """S7 raster tiers as one shuffle-free mapInPandas stage: BMP in,
     detected table geometry out.  Reads ONLY (doc_id, payload) —
     never the ground-truth columns."""
-    slim = pages.select("doc_id", "payload")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = decode_bmp(bytes(payload)) if payload is not None else None
-                if px is None:
-                    rows.append((doc_id, None, None, None,
-                                 None, None, None, None, None))
-                    continue
-                m = detect_table(px[:, :, 0])
-                bx0, by0, bx1, by1 = m["bbox"]
-                rows.append((doc_id, m["mode"], m["n_rows"], m["n_cols"],
-                             bx0, by0, bx1, by1, m["n_cells_filled"]))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in TABLE_SCHEMA.fields])
-
-    return slim.mapInPandas(run, schema=TABLE_SCHEMA)
+    return _per_page(pages, TABLE_SCHEMA, _table_fields)
 
 
 def preprocess_pages(pages: DataFrame) -> DataFrame:
@@ -881,27 +868,4 @@ def preprocess_pages(pages: DataFrame) -> DataFrame:
     per-page preprocessing metrics out.  Reads ONLY (doc_id, payload,
     conf_micros) — detection works on pixels, never on the snapshot's
     ground-truth parameter columns."""
-    slim = pages.select("doc_id", "payload", "conf_micros")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, conf_micros in zip(
-                    pdf["doc_id"], pdf["payload"], pdf["conf_micros"]):
-                px = decode_bmp(bytes(payload)) if payload is not None else None
-                if px is None:
-                    rows.append((doc_id, None, None, None, None, None,
-                                 None, None, None, None, None))
-                    continue
-                gray = px[:, :, 0]                  # r==g==b by construction
-                m = preprocess_page_array(gray, int(conf_micros) / 1e6)
-                rows.append((doc_id, m["width"], m["height"],
-                             m["orientation_detected"],
-                             m["orientation_conf_milli"],
-                             m["rotation_applied"], m["skew_milli"],
-                             m["skew_applied"], m["profile"],
-                             m["out_sha256"], m["ink_ratio_micros"]))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in PREPROC_SCHEMA.fields])
-
-    return slim.mapInPandas(run, schema=PREPROC_SCHEMA)
+    return _per_page(pages, PREPROC_SCHEMA, _preprocess_fields, "conf_micros")

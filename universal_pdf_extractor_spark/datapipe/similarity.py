@@ -9,8 +9,11 @@
   sharing a bucket in any of ``tables`` hash tables.  Hyperplanes are
   seeded deterministically (no wall-clock, no Python RNG state).
 - ivf_topk: inverted-file variant — k-means-lite with deterministic
-  seed centroids (first n_centroids vectors), one Lloyd refinement,
-  probe the nearest ``n_probe`` centroids per query.
+  seed centroids (first IVF_CENTROIDS vectors), one Lloyd refinement,
+  probe the nearest IVF_PROBE centroids per query.
+
+Inputs: embeddings ``(vec_id, embedding)`` and queries
+``(query_id, embedding)``.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from pyspark.sql import functions as F  # noqa: N812
 
 
 IVF_QUANT = 1 << 24  # fixed-point scale for order-independent Lloyd sums
+IVF_CENTROIDS = 16
+IVF_PROBE = 4       # centroids probed per query
 
 
 def _dot(a, b):
@@ -39,36 +44,48 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# norms are precomputed per side BEFORE any join: cosine_col would
+# otherwise re-run the O(dim) norm fold once per joined pair (the
+# corpus norm |queries| times, the query norm |corpus| times).
+# Identical floats: same fold over the same array, just evaluated once.
+
+def _corpus(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, vec, vnorm) of the embeddings."""
+    return embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec"),
+    ).withColumn("vnorm", _norm(F.col("vec")))
+
+
+def _queries(queries: DataFrame) -> DataFrame:
+    """(query_id, qvec, qnorm) of the queries."""
+    return queries.select(
+        "query_id", F.col("embedding").cast("array<double>").alias("qvec"),
+    ).withColumn("qnorm", _norm(F.col("qvec")))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Each query's k best (query_id, vec_id, cosine, rank) among the
+    candidate ``pairs`` (query_id, qvec, qnorm, vec_id, vec, vnorm),
+    self-pairs excluded, ranked by (cosine desc, vec_id asc): a total,
+    deterministic order."""
+    scored = (pairs.where(F.col("vec_id") != F.col("query_id"))
+              .withColumn("cosine", _dot(F.col("vec"), F.col("qvec"))
+                          / (F.col("vnorm") * F.col("qnorm"))))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"))
+
+
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame,
-                     k: int = 10,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     query_id_col: str = "query_id") -> DataFrame:
+                     k: int = 10) -> DataFrame:
     """Exact top-k: crossJoin(broadcast(queries)) -> rank window.
 
     Queries are broadcast (small side); the corpus scan parallelizes
     per partition and the only shuffle is the per-query top-k window
     over k*|queries| rows after local ranking.
     """
-    # norms are precomputed per side BEFORE the join: cosine_col would
-    # otherwise re-run the O(dim) norm fold once per joined pair (the
-    # corpus norm |queries| times, the query norm |corpus| times).
-    # Identical floats: same fold over the same array, just evaluated
-    # once.
-    q = F.broadcast(queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumn("qnorm", _norm(F.col("qvec"))))
-    corpus = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("vnorm", _norm(F.col("vec")))
-    scored = corpus.crossJoin(q).where(F.col("vec_id") != F.col("query_id")).withColumn(
-        "cosine", _dot(F.col("vec"), F.col("qvec")) / (F.col("vnorm") * F.col("qnorm")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"))
+    return _top_k(_corpus(embeddings).crossJoin(F.broadcast(_queries(queries))), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -93,8 +110,7 @@ def _bucket_col(vec_col, planes: list[list[float]]):
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame,
              k: int = 10, n_planes: int = 8, tables: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", dim: int = 64) -> DataFrame:
+             dim: int = 64) -> DataFrame:
     """Random-hyperplane LSH top-k (approximate).
 
     Collision in ANY of ``tables`` banded sign-buckets makes a
@@ -102,12 +118,8 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame,
     brute_force_topk.  At corpus scale the candidate join replaces the
     cross join: cost ~ corpus * tables / 2^n_planes per query bucket.
     """
-    corpus = embeddings.select(F.col(id_col).alias("vec_id"),
-                               F.col(vec_col).cast("array<double>").alias("vec")) \
-                       .withColumn("vnorm", _norm(F.col("vec")))
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qvec")) \
-               .withColumn("qnorm", _norm(F.col("qvec")))
+    corpus = _corpus(embeddings)
+    q = _queries(queries)
 
     corpus_buckets = []
     query_buckets = []
@@ -130,31 +142,20 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame,
     candidates = (c.join(F.broadcast(qb), ["table", "bucket"])
                   .select("query_id", "qvec", "qnorm", "vec_id", "vec", "vnorm")
                   .dropDuplicates(["query_id", "vec_id"]))
-    scored = (candidates.where(F.col("vec_id") != F.col("query_id"))
-              .withColumn("cosine", _dot(F.col("vec"), F.col("qvec"))
-                          / (F.col("vnorm") * F.col("qnorm"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"))
+    return _top_k(candidates, k)
 
 
 def ivf_topk(embeddings: DataFrame, queries: DataFrame,
-             k: int = 10, n_centroids: int = 16, n_probe: int = 4,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id") -> DataFrame:
+             k: int = 10) -> DataFrame:
     """IVF top-k: deterministic seed centroids (lowest vec_ids), one
     Lloyd step computed distributively, then probe-limited scoring."""
-    corpus = embeddings.select(F.col(id_col).alias("vec_id"),
-                               F.col(vec_col).cast("array<double>").alias("vec")) \
-                       .withColumn("vnorm", _norm(F.col("vec")))
-    seeds = corpus.orderBy("vec_id").limit(n_centroids) \
+    corpus = _corpus(embeddings)
+    seeds = corpus.orderBy("vec_id").limit(IVF_CENTROIDS) \
                   .select(F.col("vec_id").alias("centroid_id"),
                           F.col("vec").alias("cvec"),
                           F.col("vnorm").alias("cnorm"))
 
-    # assignment to nearest seed, then mean per cluster (one Lloyd step);
-    # per-side norms precomputed once instead of per crossJoined pair
+    # assignment to nearest seed, then mean per cluster (one Lloyd step)
     assigned = (corpus.crossJoin(F.broadcast(seeds))
                 .withColumn("cos", _dot(F.col("vec"), F.col("cvec"))
                             / (F.col("vnorm") * F.col("cnorm"))))
@@ -186,22 +187,12 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame,
     inv = inv.withColumn("rnk", F.row_number().over(w)).where("rnk = 1") \
              .select("vec_id", "vec", "vnorm", "centroid_id")
 
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("qvec")) \
-               .withColumn("qnorm", _norm(F.col("qvec")))
-    q_probe = (q.crossJoin(F.broadcast(centroids))
+    q_probe = (_queries(queries).crossJoin(F.broadcast(centroids))
                .withColumn("cos", _dot(F.col("qvec"), F.col("cvec"))
                            / (F.col("qnorm") * F.col("cnorm"))))
     wq = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("centroid_id"))
     q_probe = (q_probe.withColumn("rnk", F.row_number().over(wq))
-               .where(F.col("rnk") <= n_probe)
+               .where(F.col("rnk") <= IVF_PROBE)
                .select("query_id", "qvec", "qnorm", "centroid_id"))
 
-    scored = (inv.join(F.broadcast(q_probe), "centroid_id")
-              .where(F.col("vec_id") != F.col("query_id"))
-              .withColumn("cosine", _dot(F.col("vec"), F.col("qvec"))
-                          / (F.col("vnorm") * F.col("qnorm"))))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(wr))
-            .where(F.col("rank") <= k)
-            .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank"))
+    return _top_k(inv.join(F.broadcast(q_probe), "centroid_id"), k)

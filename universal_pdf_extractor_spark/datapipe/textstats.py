@@ -11,14 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..parallel import barrier, spread
-
-
-def _slim(documents: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Project to (id, text) and apply the scan-parallelism floor so
-    the per-document expression work parallelizes even when the input
-    is a single small file (guide §2; no-op on real corpora)."""
-    return spread(documents.select(id_col, text_col))
+from ..parallel import barrier
+from . import spread_documents
+from .dedup import hash60
 
 # tiny per-language stopword profiles for the n-gram/stopword heuristic
 LANG_PROFILES = {
@@ -35,6 +30,9 @@ EN_STOPWORDS = LANG_PROFILES["en"] + ["on", "with", "as", "this", "was", "are"]
 ROLLING_MOD = (1 << 31) - 1
 ROLLING_BASE = 131
 
+# duplicate_lines' doc-derived salt: partial rows per hot line
+DUP_LINE_SALT_BUCKETS = 64
+
 
 def tokens_col(text_col):
     """Whitespace tokenization (empty string -> empty array)."""
@@ -43,13 +41,12 @@ def tokens_col(text_col):
             .otherwise(F.split(trimmed, " "))
 
 
-def token_count(documents: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def token_count(documents: DataFrame) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate
     (ceil(chars/4) per token, the common 4-chars-per-token rule)."""
-    toks = tokens_col(F.col(text_col))
-    return _slim(documents, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
+    toks = tokens_col(F.col("text"))
+    return spread_documents(documents).select(
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.aggregate(toks, F.lit(0).cast("long"),
                     lambda acc, t: acc + F.ceil(F.length(t) / 4.0).cast("long"))
@@ -57,14 +54,13 @@ def token_count(documents: DataFrame, id_col: str = "doc_id",
     )
 
 
-def quality_scores(documents: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def quality_scores(documents: DataFrame) -> DataFrame:
     """Length / punctuation / stopword / uppercase quality signals.
 
     Columns: n_chars, n_tokens, mean_token_len, punct_ratio,
     stopword_ratio, upper_ratio, digit_ratio, quality_score in [0,1].
     """
-    t = F.col(text_col)
+    t = F.col("text")
     toks = tokens_col(t)
     n_chars = F.length(t).cast("double")
     n_tokens = F.size(toks).cast("double")
@@ -89,8 +85,8 @@ def quality_scores(documents: DataFrame, id_col: str = "doc_id",
         + (1.0 - F.least(punct_ratio * 4.0, F.lit(1.0))) * 0.2
         + (1.0 - F.least(digit_ratio * 4.0, F.lit(1.0))) * 0.2
     )
-    return _slim(documents, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
+    return spread_documents(documents).select(
+        F.col("doc_id"),
         n_chars.cast("long").alias("n_chars"),
         n_tokens.cast("long").alias("n_tokens"),
         F.round(mean_token_len, 6).alias("mean_token_len"),
@@ -102,10 +98,9 @@ def quality_scores(documents: DataFrame, id_col: str = "doc_id",
     )
 
 
-def language_id(documents: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def language_id(documents: DataFrame) -> DataFrame:
     """Stopword-profile language guess (argmax hit-rate, 'und' if 0)."""
-    toks = F.transform(tokens_col(F.col(text_col)), lambda x: F.lower(x))
+    toks = F.transform(tokens_col(F.col("text")), lambda x: F.lower(x))
     safe_tokens = F.greatest(F.size(toks).cast("double"), F.lit(1.0))
     candidates = []
     for order, (lang, words) in enumerate(LANG_PROFILES.items()):
@@ -115,8 +110,8 @@ def language_id(documents: DataFrame, id_col: str = "doc_id",
                                    F.lit(-order).alias("neg_order"),
                                    F.lit(lang).alias("lang")))
     best = F.greatest(*candidates)
-    return _slim(documents, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
+    return spread_documents(documents).select(
+        F.col("doc_id"),
         F.when(best["rate"] > 0, best["lang"]).otherwise(F.lit("und")).alias("lang_guess"),
         F.round(best["rate"], 6).alias("stopword_hit_rate"),
     )
@@ -130,8 +125,7 @@ def _norm_lines(text_col):
         lambda l: l != "")
 
 
-def repetition_scores(documents: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def repetition_scores(documents: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (public quality rules):
 
     - dup_line_frac / dup_line_char_frac: fraction of duplicate lines
@@ -143,16 +137,14 @@ def repetition_scores(documents: DataFrame, id_col: str = "doc_id",
       bounded integers, never gram text; scales where per-doc O(n^2)
       array scans would not).
     """
-    from .dedup import hash60
-
-    t = F.col(text_col)
+    t = F.col("text")
     # stage the normalized-lines array in its own projection: the
     # stats below reference it five times (size, char fold, and a
     # nested duplicate filter), and inlining the split+normalize chain
     # per reference multiplies the projection cost; CollapseProject
     # keeps the staging projection because the alias is multi-referenced
-    staged = _slim(documents, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
+    staged = spread_documents(documents).select(
+        F.col("doc_id"),
         _norm_lines(t).alias("_lines"),
         tokens_col(F.lower(t)).alias("_toks"))
     lines = F.col("_lines")
@@ -232,13 +224,12 @@ PII_RULES = [
 ]
 
 
-def pii_scan(documents: DataFrame, id_col: str = "doc_id",
-             text_col: str = "text") -> DataFrame:
+def pii_scan(documents: DataFrame) -> DataFrame:
     """PII detection + redaction over the documents table (the scrub
     pass a training pipeline runs before publication): per-class match
     counts and the fully-redacted text, all native regexp ops."""
-    cur = F.col(text_col)
-    cols = [F.col(id_col).alias("doc_id")]
+    cur = F.col("text")
+    cols = [F.col("doc_id")]
     counts = []
     for name, pattern, repl in PII_RULES:
         cnt = F.size(F.regexp_extract_all(cur, F.lit(pattern), F.lit(0))).cast("long")
@@ -253,13 +244,10 @@ def pii_scan(documents: DataFrame, id_col: str = "doc_id",
     for c in counts[1:]:
         total = total + c
     cols.append((total > 0).alias("has_pii"))
-    return _slim(documents, id_col, text_col).select(*cols)
+    return spread_documents(documents).select(*cols)
 
 
-def duplicate_lines(documents: DataFrame, min_docs: int = 2,
-                    id_col: str = "doc_id",
-                    text_col: str = "text",
-                    salt_buckets: int = 64) -> DataFrame:
+def duplicate_lines(documents: DataFrame, min_docs: int = 2) -> DataFrame:
     """Corpus-level duplicate-line discovery (the CCNet/RefinedWeb
     boilerplate-removal primitive): normalized lines shared by >=
     min_docs documents, with document and occurrence counts.
@@ -268,20 +256,18 @@ def duplicate_lines(documents: DataFrame, min_docs: int = 2,
     EVERY document, so its line_hash is a textbook hot key.  The
     aggregation is two-phase with a doc-derived salt — partial
     per-(line_hash, salt) counts, then a final merge over at most
-    ``salt_buckets`` rows per line.  Because the salt is a pure
+    DUP_LINE_SALT_BUCKETS rows per line.  Because the salt is a pure
     function of doc_id, the partial DISTINCT-doc counts partition the
     doc set and sum exactly; occurrence counts always sum.  Shuffle
     keys are (hash60(line), salt) integers, never line text.
     """
-    from .dedup import hash60
-
-    lines = _slim(documents, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(_norm_lines(F.col(text_col))).alias("line"))
+    lines = spread_documents(documents).select(
+        F.col("doc_id"),
+        F.explode(_norm_lines(F.col("text"))).alias("line"))
     partial = (lines
                .groupBy(hash60(F.col("line")).alias("line_hash"),
                         F.pmod(F.xxhash64(F.col("doc_id")),
-                               F.lit(salt_buckets)).alias("_salt"))
+                               F.lit(DUP_LINE_SALT_BUCKETS)).alias("_salt"))
                .agg(F.min("line").alias("line"),
                     F.countDistinct("doc_id").alias("nd"),
                     F.count(F.lit(1)).alias("no")))
@@ -293,8 +279,7 @@ def duplicate_lines(documents: DataFrame, min_docs: int = 2,
             .where(F.col("n_docs") >= min_docs))
 
 
-def fingerprints(documents: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def fingerprints(documents: DataFrame) -> DataFrame:
     """Polynomial rolling hash over normalized tokens (no UDF).
 
     fold: h <- (h * BASE + (hash60(token) mod M)) mod M, in token
@@ -302,18 +287,16 @@ def fingerprints(documents: DataFrame, id_col: str = "doc_id",
     md5 prefix) rather than xxhash64 so the whole fold is reproducible
     in ANSI SQL and the driver's DuckDB oracle checks it exactly.
     """
-    from .dedup import hash60
-
-    toks = tokens_col(F.lower(F.col(text_col)))
+    toks = tokens_col(F.lower(F.col("text")))
     rolling = F.aggregate(
         toks, F.lit(0).cast("long"),
         lambda acc, t: F.pmod(acc * F.lit(ROLLING_BASE)
                               + F.pmod(hash60(t), F.lit(ROLLING_MOD)),
                               F.lit(ROLLING_MOD)),
     )
-    return _slim(documents, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
+    return spread_documents(documents).select(
+        F.col("doc_id"),
         rolling.alias("fingerprint"),
-        F.sha2(F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))), 256)
+        F.sha2(F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), 256)
          .alias("content_sha256"),
     )

@@ -62,7 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from .datapipe import dedup, similarity, textstats
+from .datapipe import dedup, similarity, spread_documents, textstats
 from .io.fixtures import n_convs_for_sf, transcripts_sdf
 from .kernels.patterns import (
     ACCOUNT_HEADER_RLIKE,
@@ -297,8 +297,7 @@ def boilerplate_strip_docs(spark, sf_dir):
     normalization + boilerplate suppression, all JVM-side.  Whitespace
     is the oracle's (RE2) \\s, [\\t\\n\\f\\r ]: the JVM's \\s also takes
     \\x0b, which would strip lines and join words the oracle keeps."""
-    from .parallel import spread
-    docs = spread(_read(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = spread_documents(_read(spark, sf_dir, "documents"))
     space = r"[\t\n\f\r ]"
     norm = F.filter(
         F.transform(F.split(F.col("text"), "\n"),

@@ -60,9 +60,9 @@ def route_to_review(conversations: DataFrame) -> DataFrame:
                  .otherwise(F.lit(PRIORITY_DEFAULT)).cast("int")))
 
 
-def pending_reviews(items: DataFrame, limit: int = 50, offset: int = 0,
-                    order_col: str = "conv_id") -> DataFrame:
-    """PENDING items ordered by (priority, order_col), paginated
+def pending_reviews(items: DataFrame, limit: int = 50,
+                    offset: int = 0) -> DataFrame:
+    """PENDING items ordered by (priority, conv_id), paginated
     (queue.py:55-69).  Emits a 1-based ``rank`` column (global queue
     position) with rows offset < rank <= offset + limit.
 
@@ -71,7 +71,7 @@ def pending_reviews(items: DataFrame, limit: int = 50, offset: int = 0,
     offset+limit candidates, the driver merges; the subsequent
     row_number window runs on that <=offset+limit-row prefix only.
     """
-    keys = [F.col("priority").asc(), F.col(order_col).asc()]
+    keys = [F.col("priority").asc(), F.col("conv_id").asc()]
     prefix = (items.where(F.col("status") == PENDING)
               .orderBy(*keys).limit(offset + limit))
     w = Window.orderBy(*keys)

@@ -14,6 +14,9 @@ DataFrame (parquet at rest), always broadcast — template counts are
 O(providers x versions), never corpus-sized.  Matching is a broadcast
 join + jaccard on token sets; latest-version selection is a
 row_number window over the dimension.
+
+Input: documents ``(doc_id, source, text)``, ``source`` naming the
+provider.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.patterns import HEADER_KEYWORDS
 
+ACCEPT_SCORE = 0.5   # fingerprints.py match acceptance
+
 
 def _token_set(text_col):
     return F.array_distinct(F.split(
@@ -30,9 +35,6 @@ def _token_set(text_col):
 
 
 def build_template_store(documents: DataFrame,
-                         id_col: str = "doc_id",
-                         provider_col: str = "source",
-                         text_col: str = "text",
                          versions_per_template: int = 2) -> DataFrame:
     """Learn a versioned template dimension from a corpus.
 
@@ -43,24 +45,24 @@ def build_template_store(documents: DataFrame,
     keywords present in the fingerprint), quirks, sample_count,
     is_active.
     """
-    w = Window.partitionBy(provider_col).orderBy(id_col)
+    w = Window.partitionBy("source").orderBy("doc_id")
     kw = F.array(*[F.lit(k) for k in sorted(HEADER_KEYWORDS)])
-    counts = documents.groupBy(provider_col).agg(
+    counts = documents.groupBy("source").agg(
         F.count(F.lit(1)).alias("sample_count"))
     return (documents
             .withColumn("version_number", F.row_number().over(w))
             .where(F.col("version_number") <= versions_per_template)
-            .join(F.broadcast(counts), provider_col)
+            .join(F.broadcast(counts), "source")
             .select(
-                F.col(provider_col).alias("template_name"),
-                F.col(provider_col).alias("provider_name"),
+                F.col("source").alias("template_name"),
+                F.col("source").alias("provider_name"),
                 F.lit("BANK_STATEMENT").alias("doc_family"),
                 F.lit(True).alias("is_active"),
                 F.col("version_number").cast("int").alias("version_number"),
-                _token_set(F.col(text_col)).alias("fingerprint_tokens"),
+                _token_set(F.col("text")).alias("fingerprint_tokens"),
                 # column_mapping analogue: header keywords the
                 # fingerprint exhibits, in dictionary order
-                F.array_intersect(kw, _token_set(F.col(text_col)))
+                F.array_intersect(kw, _token_set(F.col("text")))
                  .alias("column_mapping"),
                 F.create_map().cast("map<string,string>").alias("quirks"),
                 F.col("sample_count").cast("int").alias("sample_count"),
@@ -75,20 +77,16 @@ def latest_template_versions(store: DataFrame) -> DataFrame:
             .where("_rn = 1").drop("_rn"))
 
 
-def match_to_templates(documents: DataFrame, store: DataFrame,
-                       id_col: str = "doc_id",
-                       text_col: str = "text",
-                       accept_threshold: float = 0.5) -> DataFrame:
+def match_to_templates(documents: DataFrame, store: DataFrame) -> DataFrame:
     """Best-template match per document (fingerprints.py:287-357).
 
     score = 0.3 + 0.7 * jaccard(document tokens, latest fingerprint);
     best template per document (ties -> template_name asc), accepted
-    at >= ``accept_threshold``.
+    at >= ACCEPT_SCORE.
     """
     latest = F.broadcast(latest_template_versions(store).select(
         "template_name", "version_number", "fingerprint_tokens"))
-    docs = documents.select(F.col(id_col).alias("doc_id"),
-                            _token_set(F.col(text_col)).alias("tokens"))
+    docs = documents.select("doc_id", _token_set(F.col("text")).alias("tokens"))
     inter = F.size(F.array_intersect("tokens", "fingerprint_tokens"))
     union = F.size("tokens") + F.size("fingerprint_tokens") - inter
     scored = (docs.crossJoin(latest)
@@ -98,7 +96,7 @@ def match_to_templates(documents: DataFrame, store: DataFrame,
                                                  F.asc("template_name"))
     return (scored.withColumn("_rn", F.row_number().over(wbest))
             .where("_rn = 1")
-            .where(0.3 + 0.7 * F.col("jac") >= accept_threshold)
+            .where(0.3 + 0.7 * F.col("jac") >= ACCEPT_SCORE)
             .select("doc_id", "template_name",
                     F.col("version_number").alias("matched_version"), "score"))
 

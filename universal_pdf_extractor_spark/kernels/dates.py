@@ -228,10 +228,9 @@ def is_date_like_batch(values: pd.Series) -> pd.Series:
 
 
 def parse_date_batch(values: pd.Series,
-                     period_start: Optional[date] = None,
-                     period_end: Optional[date] = None,
                      today: date = DEFAULT_TODAY) -> pd.Series:
-    """Vectorized parse_date -> Series[date|None].
+    """Vectorized parse_date -> Series[date|None], with no statement
+    period.
 
     The dominant statement format (strict dd/mm/yyyy) takes a fully
     vectorized ``pd.to_datetime`` fast path; everything else (named
@@ -254,5 +253,5 @@ def parse_date_batch(values: pd.Series,
     rest = ~fast & (s != "")
     if rest.any():
         out.loc[rest] = s[rest].map(
-            lambda x: parse_date(x, period_start, period_end, today).parsed_date)
+            lambda x: parse_date(x, today=today).parsed_date)
     return out

@@ -18,14 +18,15 @@ from __future__ import annotations
 import numpy as np
 
 
-def gaussian_smooth_1d(values: np.ndarray, sigma: float = 1.5, truncate: float = 4.0) -> np.ndarray:
-    """Order-0 1-D gaussian filter, mode='reflect' (scipy-compatible).
+def gaussian_smooth_1d(values: np.ndarray, sigma: float = 1.5) -> np.ndarray:
+    """Order-0 1-D gaussian filter, mode='reflect', truncate=4.0
+    (scipy-compatible).
 
     scipy ndimage 'reflect' == numpy pad 'symmetric':
     (d c b a | a b c d | d c b a).
     """
     x = np.asarray(values, dtype=np.float64)
-    radius = int(truncate * sigma + 0.5)
+    radius = int(4.0 * sigma + 0.5)
     coords = np.arange(-radius, radius + 1, dtype=np.float64)
     weights = np.exp(-0.5 * (coords / sigma) ** 2)
     weights /= weights.sum()

@@ -368,6 +368,12 @@ def _table_records(lines: list[dict], split, align, skip_bf_cf: bool,
     marker rows are skipped by keyword before their cells are read, so
     their dates never carry (orchestrator.py:1073-1074).  ``conf`` is
     the tier's ``_fallback_record`` confidences.
+
+    ``header_line`` (the diagnostics' ``header.line_index``) is the
+    header's 0-based rank among the lines ``split`` accepts, not its
+    line index: a prose line before the table does not count.  The
+    delimiter tier's detected_tables oracle pins this meaning
+    (``_delim_geometry_sql``'s header_row).
     """
     grid = [(ln, cells) for ln in lines if (cells := split(ln))]
     if len(grid) < 2:
